@@ -79,7 +79,10 @@ def test_etl_first_run_writes_report_and_meta(spark, roots):
 
     reports = glob.glob(f"{trg_root}/report1/*.parquet")
     assert len(reports) == 1
-    report = {r["Date"]: r for r in spark.read.parquet(reports[0]).collect()}
+    rows = spark.read.parquet(reports[0]).collect()
+    # one ISIN: the LAG window leaves its days in date order
+    assert [r["Date"] for r in rows] == [day(3), day(2), day(1), day(0)]
+    report = {r["Date"]: r for r in rows}
     # warm-up day day(4) seeds the LAG but is NOT emitted (ref :203-206)
     assert len(report) == 4
     assert day(4) not in report
@@ -116,6 +119,48 @@ def test_etl_second_run_is_incremental_noop(spark, roots):
     assert second.meta_update_list == []
     assert second.run() is True  # load() skips the write on empty input
     assert set(glob.glob(f"{trg_root}/report1/*")) == first_reports
+
+
+@pytest.mark.parametrize("drop_out", ["null_prices", "before_cutoff"])
+def test_etl_run_with_no_report_rows_still_appends_meta(spark, tmp_path, drop_out):
+    """Every scanned row drops out of the report (NULL prices are dropped;
+    rows before the cutoff only seed the LAG): no report object is
+    written, but the processed dates still land in the meta file."""
+    src_root, trg_root = tmp_path / "source", tmp_path / "target"
+    offsets = range(5) if drop_out == "null_prices" else [4]  # day(4): warm-up only
+    for off in offsets:
+        d = day(off)
+        price = "" if drop_out == "null_prices" else "20.19"
+        line = f"AT0000A0E9W5,SANT,EUR,common_stock,{d},12:00,{price},20.33,18.20,18.45,877,100"
+        (src_root / d).mkdir(parents=True)
+        (src_root / d / f"{d}_BINS_XETR12.csv").write_text("\n".join([CSV_HEADER, line]))
+    etl = make_etl(spark, (str(src_root), str(trg_root)))
+
+    assert etl.run() is True
+    assert glob.glob(f"{trg_root}/report1/*") == []
+    meta = spark.read.options(header=True).csv(f"{trg_root}/meta/report1_meta.csv")
+    assert sorted(r.source_date for r in meta.collect()) == sorted(etl.meta_update_list)
+    assert etl.meta_update_list == [day(3), day(2), day(1), day(0)]
+
+
+def test_noop_run_without_csv_schema(spark, roots):
+    """A run with nothing to extract and no declared CSV schema still
+    builds its (empty) report frame and writes nothing."""
+    src_root, trg_root = roots
+    assert make_etl(spark, roots).run() is True
+    before = sorted(glob.glob(f"{trg_root}/**", recursive=True))
+    noop = Report1ETL(
+        spark,
+        FileSystemConnector(spark, src_root),
+        FileSystemConnector(spark, trg_root),
+        "meta/report1_meta.csv",
+        SourceConfig(src_first_extract_date=day(3)),
+        TargetConfig(),
+        csv_schema=None,
+    )
+    assert noop.extract_date_list == []
+    assert noop.run() is True
+    assert sorted(glob.glob(f"{trg_root}/**", recursive=True)) == before
 
 
 def test_cli_runs_from_yaml(spark, roots, tmp_path):

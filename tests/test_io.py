@@ -65,6 +65,71 @@ def test_write_single_object(conn, df2, tmp_path):
     assert back.count() == 2
 
 
+def _jobs_started(spark, group: str, action) -> int:
+    """Spark jobs ``action()`` starts, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _two_shuffle_frame(spark):
+    # an aggregate over one key, then a window over another: two exchanges,
+    # the shape of the report1 lineage
+    from pyspark.sql import Window
+
+    agg = (
+        spark.range(0, 2000, 1, numPartitions=4)
+        .groupBy((F.col("id") % 50).alias("k"))
+        .agg(F.sum("id").alias("s"))
+    )
+    return agg.withColumn(
+        "prev", F.lag("s").over(Window.partitionBy(F.col("k") % 5).orderBy("k"))
+    )
+
+
+@pytest.mark.parametrize("file_format", ["parquet", "csv"])
+def test_write_single_object_evaluates_frame_once(conn, spark, tmp_path, file_format):
+    """The single-object write starts exactly the jobs of a plain
+    ``coalesce(1).write`` of the same frame: no emptiness probe recomputes
+    the lineage before the real write."""
+    df = _two_shuffle_frame(spark)
+    plain = _jobs_started(
+        spark,
+        f"plain-{file_format}",
+        lambda: df.coalesce(1).write.format(file_format).save(str(tmp_path / "plain")),
+    )
+    single = _jobs_started(
+        spark,
+        f"single-{file_format}",
+        lambda: conn.write_single_object(df, f"report/r.{file_format}", file_format),
+    )
+    assert plain >= 1
+    assert single == plain
+    assert (tmp_path / f"report/r.{file_format}").is_file()
+
+
+@pytest.mark.parametrize("file_format", ["parquet", "csv"])
+def test_write_single_object_empty_frame_leaves_no_trace(conn, spark, tmp_path, file_format):
+    """Zero rows → None, no key and no ``._spark_tmp`` left behind; an
+    existing key is left exactly as it was."""
+    empty = _two_shuffle_frame(spark).filter(F.col("k") < 0)
+    key = f"report/r.{file_format}"
+    assert conn.write_single_object(empty, key, file_format) is None
+    assert not (tmp_path / key).exists()
+    assert not (tmp_path / f"{key}._spark_tmp").exists()
+
+    assert conn.write_single_object(_two_shuffle_frame(spark), key, file_format) is True
+    before = (tmp_path / key).read_bytes()
+    assert conn.write_single_object(empty, key, file_format) is None
+    assert (tmp_path / key).read_bytes() == before
+    assert not (tmp_path / f"{key}._spark_tmp").exists()
+
+
 def test_multi_path_scan_unions(conn, df2):
     # ref extract(): many csv objects → ONE frame (xetra_transformer.py:118-123)
     conn.write(df2, "d1/part", "csv")

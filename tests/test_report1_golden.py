@@ -68,10 +68,18 @@ def test_output_schema(spark, src_df):
 
 
 def test_empty_input_short_circuits(spark):
+    """Empty input yields an empty frame with the report's columns (the
+    transform stays lazy; no probe decides the shape)."""
     empty = spark.createDataFrame([], SCHEMA)
     result = transform_report1(
         empty, SourceConfig(), TargetConfig(), extract_date="2021-04-17"
     )
+    assert result.columns == [
+        "ISIN", "Date",
+        "opening_price_eur", "closing_price_eur",
+        "minimum_price_eur", "maximum_price_eur",
+        "daily_traded_volume", "change_prev_closing_%",
+    ]
     assert result.count() == 0
 
 

@@ -65,11 +65,13 @@ def test_containment_prune_keeps_hot_gram_dominated_pairs(spark):
         assert set(k) <= {1, 2}, f"unexpected pair {k}"
 
 
-@pytest.mark.parametrize("with_nulls", [False, True])
+@pytest.mark.parametrize("with_nulls", [False, True, "null_group"])
 def test_spearman_distinct_rank_equals_row_window(spark, with_nulls):
     """The round-11 two-pass rank (distinct-value cumsum + join-back)
     must be integer-identical to the original row-window formulation
-    2·rank() + count(ties) − 3, for ties AND null values."""
+    2·rank() + count(ties) − 3, for ties AND null values — and it must
+    keep a NULL group, which the row window partitions like any other
+    (an equi-join on the group key would drop its rows)."""
     from pyspark.sql import Window
 
     from trading_data_pipeline_spark.operators.stattests_queries import (
@@ -88,6 +90,8 @@ def test_spearman_distinct_rank_equals_row_window(spark, with_nulls):
     ]
     if with_nulls:
         rows += [("g1", None, 4), ("g1", None, 2), ("g2", None, None)]
+    if with_nulls == "null_group":
+        rows += [(None, 5, 1), (None, 6, 3), (None, 6, 2), (None, None, 7)]
     df = spark.createDataFrame(rows, "g string, x long, y long")
 
     got = {
@@ -137,16 +141,24 @@ def test_spearman_distinct_rank_equals_row_window(spark, with_nulls):
             "g", F.col("n").alias("n"), _q(rho, RHO_SCALE).alias("rho")
         ).collect()
     }
+    if with_nulls == "null_group":
+        assert None in want and want[None][0] == 4
     assert got == want
 
 
 def test_keyed_fanout_clamps_to_core_band(spark):
     from trading_data_pipeline_spark.plans.parallelism import keyed_fanout
 
-    par = spark.sparkContext.defaultParallelism
-    one = spark.range(0, 10, 1, numPartitions=1)
-    wide = spark.range(0, 10_000, 1, numPartitions=8 * par)
-    mid = spark.range(0, 1000, 1, numPartitions=max(2, par // 2))
-    assert keyed_fanout(one) == max(par, 8)  # floor: never below cores
-    assert keyed_fanout(wide) == 8 * par  # ceiling: 8x cores
-    assert keyed_fanout(mid) == max(par, min(8 * par, 8 * max(2, par // 2)))
+    # the session fixture runs local[8]: the band is [8, 64]
+    assert spark.sparkContext.defaultParallelism == 8
+
+    def splits(n):
+        return spark.range(0, 1000, 1, numPartitions=n)
+
+    assert keyed_fanout(splits(1)) == 8  # floor: 8 x 1 = 8 = cores
+    assert keyed_fanout(splits(3)) == 24  # inside the band: 8 x 3
+    assert keyed_fanout(splits(8)) == 64  # 8 x 8 meets the ceiling
+    assert keyed_fanout(splits(200)) == 64  # ceiling: 8 x cores
+    assert keyed_fanout(splits(3), per_split=2) == 8  # 6 lifted to the floor
+    assert keyed_fanout(splits(5), per_split=2) == 10
+    assert keyed_fanout(splits(50), per_split=2) == 16  # ceiling: 2 x cores

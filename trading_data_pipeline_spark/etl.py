@@ -6,7 +6,10 @@ Lifecycle (ref SURVEY.md §3 EP1): resolve incremental dates from the meta
 file → extract (one multi-file CSV scan over the pruned date prefixes) →
 transform (pure DataFrame chain, operators/report1.py) → load (parquet
 sink + meta append). Everything before the sink is lazy; the only actions
-are the two writes.
+are the two writes. Neither probes its frame for emptiness first: the
+report write observes its own row count and skips the object on zero rows
+(``FileSystemConnector.write_single_object``), and a run with no dates to
+extract skips the report write outright. Each phase logs its time.
 
 Scale: the date resolution is the manual partition-pruning the reference
 does (xetra_transformer.py:112-116) — Spark receives only the pruned path
@@ -19,6 +22,7 @@ giving ``extract`` the explicit list.
 from __future__ import annotations
 
 import logging
+import time
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,33 +79,50 @@ class Report1ETL:
         """One Spark scan over every file of every extract date
         (ref :104-125 — but a single distributed read instead of a
         sequential per-file read + concat loop)."""
+        t0 = time.perf_counter()
         files = [
             f
             for date in self.extract_date_list
             for f in self.src_conn.list_files_in_prefix(date)
         ]
-        logger.info("extracting %d files for %d dates", len(files), len(self.extract_date_list))
         if not files:
-            return self.spark.createDataFrame([], self.csv_schema or "ISIN string")
-        return self.src_conn.read_csv(files, schema=self.csv_schema)
+            # an inferred schema has nothing to infer from: fall back to the
+            # Xetra layout the default SourceConfig reads
+            df = self.spark.createDataFrame([], self.csv_schema or CSV_SCHEMA_XETRA)
+        else:
+            df = self.src_conn.read_csv(files, schema=self.csv_schema)
+        logger.info(
+            "extract: %d files for %d dates in %.3f s",
+            len(files), len(self.extract_date_list), time.perf_counter() - t0,
+        )
+        return df
 
     def transform(self, df: DataFrame) -> DataFrame:
-        return transform_report1(df, self.src, self.trg, self.extract_date)
+        t0 = time.perf_counter()
+        report = transform_report1(df, self.src, self.trg, self.extract_date)
+        logger.info("transform: report frame built in %.3f s", time.perf_counter() - t0)
+        return report
 
     def load(self, report: DataFrame) -> bool:
         """Write the report + append processed dates to the meta file
-        (ref :210-232). Returns True (ref load always returns True)."""
-        key = (
-            self.trg.trg_key
-            + datetime.today().strftime(self.trg.trg_key_date_format)
-            + "."
-            + self.trg.trg_format
-        )
-        self.trg_conn.write_single_object(report, key, self.trg.trg_format)
-        logger.info("report written to %s", key)
+        (ref :210-232). Returns True (ref load always returns True).
+
+        With no dates to extract nothing was scanned, so the report is
+        empty by construction and its write is skipped."""
+        t0 = time.perf_counter()
+        if self.extract_date_list:
+            key = (
+                self.trg.trg_key
+                + datetime.today().strftime(self.trg.trg_key_date_format)
+                + "."
+                + self.trg.trg_format
+            )
+            if self.trg_conn.write_single_object(report, key, self.trg.trg_format):
+                logger.info("report written to %s", key)
         if self.meta_update_list:
             update_meta_file(self.trg_conn, self.meta_key, self.meta_update_list)
             logger.info("meta file updated with %d dates", len(self.meta_update_list))
+        logger.info("load: %.3f s", time.perf_counter() - t0)
         return True
 
     def run(self) -> bool:

@@ -53,9 +53,12 @@ def transform_report1(
 
     ``extract_date``: ISO date string; rows strictly before it are dropped
     from the output (they only seed the LAG), ref :203-206.
+
+    Lazy throughout: an empty input yields an empty, report-shaped frame
+    (ref :136-140 short-circuits with an ``isEmpty()`` probe instead, which
+    here would scan the CSVs once more before the write).
     """
-    if not df.columns or df.isEmpty():
-        # ref :136-140 — empty extract short-circuits the transform
+    if not df.columns:
         return df
 
     order_cols = [src.src_col_time, *(tiebreak_cols or [])]

@@ -247,18 +247,19 @@ def spearman(
             )
         )
 
-    # eqNullSafe: the row window ranked NULL values (first in asc); an
-    # equi-join would silently drop those rows instead.
+    # eqNullSafe on both keys: the row window ranked NULL values (first in
+    # asc) and kept the NULL group; an equi-join would silently drop those
+    # rows instead.
     rx_t, ry_t = rank_table("x"), rank_table("y")
     r = (
         d.join(
             rx_t,
-            (F.col("g") == F.col("_rg")) & F.col("x").eqNullSafe(F.col("_rv")),
+            F.col("g").eqNullSafe(F.col("_rg")) & F.col("x").eqNullSafe(F.col("_rv")),
         )
         .drop("_rg", "_rv")
         .join(
             ry_t,
-            (F.col("g") == F.col("_rg")) & F.col("y").eqNullSafe(F.col("_rv")),
+            F.col("g").eqNullSafe(F.col("_rg")) & F.col("y").eqNullSafe(F.col("_rv")),
         )
         .drop("_rg", "_rv")
     )

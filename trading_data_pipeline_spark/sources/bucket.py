@@ -183,14 +183,18 @@ class BucketConnector:
                 "partition_by is meaningless for a single-object PUT; use "
                 "FileSystemConnector.write for partitioned layouts"
             )
-        if not df.columns or df.isEmpty():
+        if not df.columns:
             return None
-        if df.limit(self.max_rows + 1).count() > self.max_rows:
+        # one evaluation: the capped collect is both the emptiness check and
+        # the max_rows guard (at most max_rows + 1 rows are collected)
+        pdf = df.limit(self.max_rows + 1).toPandas()
+        if pdf.empty:
+            return None
+        if len(pdf) > self.max_rows:
             raise ValueError(
                 f"refusing to collect > max_rows={self.max_rows} rows for a "
                 "single-object PUT; bulk sinks belong to FileSystemConnector"
             )
-        pdf = df.toPandas()
         if file_format == "csv":
             body = pdf.to_csv(index=False).encode("utf-8")
         else:

@@ -18,14 +18,24 @@ Scale design:
   reproduces the reference's single-key output contract
   (xetra_transformer.py:216-221) via coalesce(1) + FS rename — only for
   report-sized outputs.
+- Each single-object write evaluates its frame exactly once: emptiness
+  comes from the row count the write itself observes, not from an
+  ``isEmpty()`` probe that would recompute the whole lineage (CSV scan and
+  every shuffle) before the real write. ``write`` keeps its probe — a
+  directory or append sink cannot be undone after the fact.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import logging
+
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..exceptions import WrongFormatException
+
+logger = logging.getLogger(__name__)
 
 SUPPORTED_FORMATS = ("csv", "parquet", "json", "orc", "xml")  # json/orc/xml: extensions
 # (the reference supports only csv/parquet — s3.py:96-103; anything else
@@ -173,34 +183,27 @@ class FileSystemConnector:
         return f"{self.root}/{p}"
 
     # -- writes (ref s3.py:84-107) -----------------------------------------
-    def write(
-        self,
-        df: DataFrame,
-        key: str,
-        file_format: str,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-    ) -> bool | None:
-        """Write ``df`` under ``root/key`` as csv or parquet.
-
-        Mirrors the reference's semantics exactly:
-        - empty frame → skip the write, return None (s3.py:93-95; uses
-          ``isEmpty()`` — a LocalLimit(1) probe, not a full count)
-        - unsupported format → WrongFormatException (s3.py:104-107)
-        - csv branch (s3.py:96-99), parquet branch (s3.py:100-103)
-        Partitioned parquet (``partition_by``) is the 100 TB layout the
-        reference's date-prefix key scheme approximates by hand.
-        """
+    @staticmethod
+    def _check_format(file_format: str) -> None:
         if file_format not in SUPPORTED_FORMATS:
             raise WrongFormatException(
                 f"{file_format} is not supported; use one of {SUPPORTED_FORMATS}"
             )
-        if not df.columns or df.isEmpty():
-            return None
+
+    @staticmethod
+    def _save(
+        df: DataFrame,
+        target: str,
+        file_format: str,
+        mode: str = "overwrite",
+        partition_by: list[str] | None = None,
+    ) -> None:
+        """The one format dispatch behind every write: saves ``df`` to
+        ``target`` with no emptiness probe (callers decide about empty
+        frames)."""
         writer = df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        target = self._abs(key)
         if file_format == "csv":
             writer.option("header", True).csv(target)
         elif file_format == "json":
@@ -213,32 +216,69 @@ class FileSystemConnector:
             ).save(target)
         else:
             writer.parquet(target)
+
+    def write(
+        self,
+        df: DataFrame,
+        key: str,
+        file_format: str,
+        mode: str = "overwrite",
+        partition_by: list[str] | None = None,
+    ) -> bool | None:
+        """Write ``df`` under ``root/key`` as csv or parquet.
+
+        Mirrors the reference's semantics exactly:
+        - empty frame → skip the write, return None (s3.py:93-95; uses
+          ``isEmpty()`` — a LocalLimit(1) probe, not a full count — because
+          a directory or append sink cannot be undone after the fact)
+        - unsupported format → WrongFormatException (s3.py:104-107)
+        - csv branch (s3.py:96-99), parquet branch (s3.py:100-103)
+        Partitioned parquet (``partition_by``) is the 100 TB layout the
+        reference's date-prefix key scheme approximates by hand.
+        """
+        self._check_format(file_format)
+        if not df.columns or df.isEmpty():
+            return None
+        self._save(df, self._abs(key), file_format, mode, partition_by)
         return True
 
     def write_single_object(self, df: DataFrame, key: str, file_format: str) -> bool | None:
         """Single-object output key, matching the reference's
         ``<trg_key><timestamp>.<fmt>`` contract (xetra_transformer.py:216-221).
 
-        Spark sinks are directories; this coalesces to one task and renames
-        the part file to ``key``. ONLY for report-sized output — it
-        serializes the final write to a single task by design.
+        Spark sinks are directories; this coalesces to one task, writes to
+        ``key._spark_tmp`` and renames the part file to ``key``. ONLY for
+        report-sized output — it serializes the final write to a single
+        task by design.
+
+        The frame is evaluated once: the write observes its own row count.
+        Zero rows → the tmp dir is deleted and None returned, so an
+        existing ``key`` is left untouched (the reference's empty-write
+        skip, s3.py:93-95).
         """
-        if file_format not in SUPPORTED_FORMATS:
-            raise WrongFormatException(
-                f"{file_format} is not supported; use one of {SUPPORTED_FORMATS}"
-            )
-        if not df.columns or df.isEmpty():
+        self._check_format(file_format)
+        if not df.columns:
             return None
         tmp_dir = self._abs(key) + "._spark_tmp"
-        self.write(df.coalesce(1), key + "._spark_tmp", file_format)
+        obs = Observation()
+        self._save(
+            df.observe(obs, F.count(F.lit(1)).alias("rows")).coalesce(1),
+            tmp_dir,
+            file_format,
+        )
         fs, tmp_path, jvm = self._fs(tmp_dir)
+        rows = obs.get["rows"]
+        if rows == 0:
+            fs.delete(tmp_path, True)
+            logger.info("no rows to write; %s left untouched", key)
+            return None
         part = None
         for st in fs.listStatus(tmp_path):
             name = st.getPath().getName()
             if name.startswith("part-"):
                 part = st.getPath()
                 break
-        if part is None:  # pragma: no cover — write() above always emits one
+        if part is None:  # pragma: no cover — a non-empty save always emits one
             raise WrongFormatException(f"no part file produced under {tmp_dir}")
         dest = jvm.org.apache.hadoop.fs.Path(self._abs(key))
         # Overwrite-rename via FileContext.rename(OVERWRITE). Truly atomic
@@ -272,6 +312,7 @@ class FileSystemConnector:
         if not fs.exists(dest):
             raise IOError(f"single-object write left no file at {dest}")
         fs.delete(tmp_path, True)
+        logger.info("wrote %d rows to %s", rows, key)
         return True
 
     # -- maintenance ---------------------------------------------------------

@@ -21,3 +21,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def jobs_started(spark):
+    """``jobs_started(group, action)``: the Spark jobs ``action()``
+    starts, counted through a job group."""
+
+    def count(group: str, action) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

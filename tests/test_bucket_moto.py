@@ -165,10 +165,8 @@ def test_meta_protocol_over_bucket(spark, buckets):
     assert cutoff2 == day(1) and day(2) not in dates2[1:]
     # appends preserve earlier rows
     assert update_meta_file(conn, meta_key, [day(1), day(0)]) is True
-    meta = conn.read_csv_raw(meta_key)
-    assert sorted(r.source_date for r in meta.collect()) == sorted(
-        [day(3), day(2), day(1), day(0)]
-    )
+    meta = pd.read_csv(io.BytesIO(conn.read_bytes(meta_key)), dtype=str)
+    assert sorted(meta["source_date"]) == sorted([day(3), day(2), day(1), day(0)])
     cutoff3, dates3 = return_date_list(conn, day(3), meta_key)
     assert cutoff3 == "2200-01-01" and dates3 == []
     # drift guard: foreign columns in the stored object must raise
@@ -221,8 +219,8 @@ def test_int_etl_report1_over_buckets(spark, buckets, src):
     assert report[day(2)]["change_prev_closing_%"] == 1.83
     assert report[day(1)]["change_prev_closing_%"] == 14.58
 
-    meta = trg.read_csv_raw("meta/report1_meta.csv")
-    got_dates = sorted(r.source_date for r in meta.collect())
+    meta = pd.read_csv(io.BytesIO(trg.read_bytes("meta/report1_meta.csv")), dtype=str)
+    got_dates = sorted(meta["source_date"])
     assert got_dates == sorted([day(3), day(2), day(1), day(0)])
 
     # second construction: sentinel cutoff, run() is a no-op write-wise

@@ -121,6 +121,27 @@ def test_etl_second_run_is_incremental_noop(spark, roots):
     assert set(glob.glob(f"{trg_root}/report1/*")) == first_reports
 
 
+def test_etl_meta_work_starts_no_spark_job(spark, roots, jobs_started):
+    """Only the report write starts Spark jobs: a no-op run (construction
+    included) starts none, and an incremental run starts at most the
+    report write's three (two shuffles and the write). With the meta
+    table read and written through Spark these were 2 and 7."""
+    from trading_data_pipeline_spark.meta import update_meta_file
+
+    src_root, trg_root = roots
+    trg = FileSystemConnector(spark, trg_root)
+    update_meta_file(trg, "meta/report1_meta.csv", [day(3), day(2), day(1)])
+
+    def run():
+        etl = make_etl(spark, roots)
+        assert etl.extract_date_list == [day(1), day(0)]
+        etl.run()
+
+    assert jobs_started("etl-incremental", run) <= 3
+    assert glob.glob(f"{trg_root}/report1/*.parquet")
+    assert jobs_started("etl-noop", lambda: make_etl(spark, roots).run()) == 0
+
+
 @pytest.mark.parametrize("drop_out", ["null_prices", "before_cutoff"])
 def test_etl_run_with_no_report_rows_still_appends_meta(spark, tmp_path, drop_out):
     """Every scanned row drops out of the report (NULL prices are dropped;

@@ -65,18 +65,6 @@ def test_write_single_object(conn, df2, tmp_path):
     assert back.count() == 2
 
 
-def _jobs_started(spark, group: str, action) -> int:
-    """Spark jobs ``action()`` starts, counted through a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _two_shuffle_frame(spark):
     # an aggregate over one key, then a window over another: two exchanges,
     # the shape of the report1 lineage
@@ -93,18 +81,18 @@ def _two_shuffle_frame(spark):
 
 
 @pytest.mark.parametrize("file_format", ["parquet", "csv"])
-def test_write_single_object_evaluates_frame_once(conn, spark, tmp_path, file_format):
+def test_write_single_object_evaluates_frame_once(
+    conn, spark, tmp_path, file_format, jobs_started
+):
     """The single-object write starts exactly the jobs of a plain
     ``coalesce(1).write`` of the same frame: no emptiness probe recomputes
     the lineage before the real write."""
     df = _two_shuffle_frame(spark)
-    plain = _jobs_started(
-        spark,
+    plain = jobs_started(
         f"plain-{file_format}",
         lambda: df.coalesce(1).write.format(file_format).save(str(tmp_path / "plain")),
     )
-    single = _jobs_started(
-        spark,
+    single = jobs_started(
         f"single-{file_format}",
         lambda: conn.write_single_object(df, f"report/r.{file_format}", file_format),
     )
@@ -128,6 +116,27 @@ def test_write_single_object_empty_frame_leaves_no_trace(conn, spark, tmp_path, 
     assert conn.write_single_object(empty, key, file_format) is None
     assert (tmp_path / key).read_bytes() == before
     assert not (tmp_path / f"{key}._spark_tmp").exists()
+
+
+def test_write_bytes_replaces_key_and_leaves_no_tmp(conn, spark, tmp_path, jobs_started):
+    """Driver-side byte writes: a second write replaces the first, no
+    ``._spark_tmp`` is left behind, and neither the writes nor the reads
+    start a Spark job."""
+    key = "meta/m.csv"
+    got = []
+
+    def write_twice_and_read():
+        conn.write_bytes(key, b"a,b\n1,2\n")
+        conn.write_bytes(key, b"a,b\n3,4\n")
+        got.append(conn.read_bytes(key))
+
+    assert jobs_started("write-bytes", write_twice_and_read) == 0
+    assert got == [b"a,b\n3,4\n"]
+    assert (tmp_path / key).read_bytes() == b"a,b\n3,4\n"
+    assert not (tmp_path / f"{key}._spark_tmp").exists()
+    # Spark reads the published object like any other CSV
+    back = conn.read_csv(key, schema="a int, b int")
+    assert [tuple(r) for r in back.collect()] == [(3, 4)]
 
 
 def test_multi_path_scan_unions(conn, df2):

@@ -5,7 +5,9 @@ pass and pins the property that makes the rewrite EXACT:
 
 - containment's count-only candidate prune (I_ub = c_ab + min(h_a, h_b))
   must never drop a true pair whose shared shingles are mostly HOT
-  (df > max_df) — the false-negative trap if the hot term is ever lost;
+  (df > max_df) — the false-negative trap if the hot term is ever lost —
+  nor a pair whose raw ratio sits just below the threshold but rounds
+  up to it (the output's 4-place rounding is the semantics);
 - spearman's distinct-value rank tables must reproduce the row-window
   mid-ranks exactly, including NULL values (ranked first, ascending) and
   ties — pinned by computing the OLD row-window formulation inline;
@@ -63,6 +65,36 @@ def test_containment_prune_keeps_hot_gram_dominated_pairs(spark):
     # reaches containment |shared| / min < 0.8)
     for k in got:
         assert set(k) <= {1, 2}, f"unexpected pair {k}"
+
+
+def test_containment_prune_keeps_pairs_that_round_up_to_threshold(spark):
+    """Doc 1 has 4009 trigrams, 3608 of them shared with doc 2: the raw
+    containment 3608/4009 = 0.899975 is below t = 0.9, but the output
+    rounds it to 0.9 and the final filter keeps it. The candidate prune
+    must be at least as loose as that filter — a prune at t·min
+    (3608 < 3608.1) dropped this true pair."""
+    from trading_data_pipeline_spark.operators.dedup import (
+        containment_pairs,
+    )
+
+    words = [f"a{i}" for i in range(4011)]
+    texts = {
+        1: " ".join(words),
+        2: " ".join(words[:3610] + [f"b{i}" for i in range(501)]),
+    }
+    a, b = _trigrams(texts[1]), _trigrams(texts[2])
+    assert (len(a), len(b), len(a & b)) == (4009, 4109, 3608)
+    raw = len(a & b) / min(len(a), len(b))
+    assert 0.9 - 5e-5 <= raw < 0.9 and round(raw, 4) == 0.9
+    docs = spark.createDataFrame(
+        [(i, t, "en", "s", len(t)) for i, t in texts.items()],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    got = [
+        (r.doc_a, r.doc_b, r.containment)
+        for r in containment_pairs(docs, min_containment=0.9).collect()
+    ]
+    assert got == [(1, 2, 0.9)]
 
 
 @pytest.mark.parametrize("with_nulls", [False, True, "null_group"])

@@ -16,18 +16,27 @@ that records which source dates were already processed. Two operations:
   is scanned but never re-emitted or re-appended to the meta file; sentinel
   ``2200-01-01`` + empty list when nothing is missing (meta_process.py:61-125).
 
-Design: the date arithmetic is pure driver-side Python (the spine is at most
-a few thousand elements — SURVEY.md §2 row 21); the table I/O goes through
-Spark so the same code works on s3a:// at scale. The set-difference is the
-same anti-join the engine exposes as ``q_anti_join_dates``.
+Design: the meta table grows with processed days, not with data — a few
+KB after years — so all of it runs on the driver and starts no Spark job.
+The object moves as bytes through the connector (``read_bytes`` /
+``write_bytes``) and is parsed and formatted with pandas, as the reference
+does over boto3. ``FileSystemConnector`` moves those bytes through the
+Hadoop FileSystem it uses for everything else, so the same code works on
+``s3a://`` and ``hdfs://``; ``BucketConnector`` does a GET and a PUT. The
+date arithmetic is plain Python over a spine of at most a few thousand
+dates (SURVEY.md §2 row 21).
+
+A meta object that cannot be the protocol's state — empty, without a
+``source_date`` column, or with a date that does not parse — raises
+``WrongMetaFileException`` from both operations.
 """
 
 from __future__ import annotations
 
 from datetime import date, datetime, timedelta
+from io import BytesIO
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pandas as pd
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .exceptions import WrongMetaFileException
@@ -37,7 +46,6 @@ META_DATE_COL = "source_date"  # ref constants.py:24-26
 META_PROCESS_COL = "datetime_of_processing"
 META_DATE_FORMAT = "%Y-%m-%d"  # ref constants.py:22
 META_PROCESS_FORMAT = "%Y-%m-%d %H:%M:%S"  # ref constants.py:23
-META_FILE_FORMAT = "csv"
 
 META_SCHEMA = StructType(
     [
@@ -47,19 +55,34 @@ META_SCHEMA = StructType(
 )
 
 
-def _read_meta(connector: FileSystemConnector, meta_key: str) -> DataFrame | None:
-    """Read the meta table; None when it doesn't exist yet (first run).
+def _read_meta(connector: FileSystemConnector, meta_key: str) -> pd.DataFrame | None:
+    """The meta table as written (every column a string); None when it
+    doesn't exist yet (first run — ref meta_process.py:52-54,116-118,
+    boto3 NoSuchKey → empty meta).
 
-    Ref meta_process.py:52-54,116-118 — boto3 NoSuchKey → empty meta.
+    The header is kept as written: the schema-drift guard must see the
+    file's real columns (ref meta_process.py:47-50).
     """
     if not connector.exists(meta_key):
         return None
-    # Read the header AS WRITTEN (no imposed schema, no inference → all
-    # strings): the schema-drift guard must see the file's real columns
-    # (ref meta_process.py:47-50 compares actual vs expected column sets).
-    # Goes through the connector duck-type so the same protocol runs over
-    # a directory tree (FileSystemConnector) or a bucket (BucketConnector).
-    return connector.read_csv_raw(meta_key)
+    try:
+        meta = pd.read_csv(
+            BytesIO(connector.read_bytes(meta_key)), dtype=str, keep_default_na=False
+        )
+    except (pd.errors.EmptyDataError, pd.errors.ParserError) as exc:
+        raise WrongMetaFileException(f"meta file {meta_key} is not a CSV table: {exc}") from exc
+    if META_DATE_COL not in meta.columns:
+        raise WrongMetaFileException(
+            f"meta file {meta_key} has no {META_DATE_COL} column: {list(meta.columns)}"
+        )
+    return meta
+
+
+def _processed_dates(meta: pd.DataFrame, meta_key: str) -> set[date]:
+    try:
+        return {datetime.strptime(d, META_DATE_FORMAT).date() for d in meta[META_DATE_COL]}
+    except ValueError as exc:
+        raise WrongMetaFileException(f"meta file {meta_key}: {exc}") from exc
 
 
 def update_meta_file(
@@ -71,26 +94,26 @@ def update_meta_file(
     """Append processed dates to the meta file (ref meta_process.py:20-59).
 
     Schema drift in the existing file raises WrongMetaFileException
-    (column-multiset comparison, :47-50). The whole file is rewritten —
-    correct for a tiny state table; at scale this would be a Delta-style
-    transactional append.
+    (column-multiset comparison, :47-50), as does a file whose dates do
+    not parse. The whole file is rewritten — correct for a tiny state
+    table; at scale this would be a Delta-style transactional append.
     """
     if not extract_date_list:
         return True
-    spark = connector.spark
     stamp = (now or datetime.today()).strftime(META_PROCESS_FORMAT)
-    new_df = spark.createDataFrame(
-        [(d, stamp) for d in extract_date_list], META_SCHEMA
-    )
-    old_df = _read_meta(connector, meta_key)
-    if old_df is not None:
-        if sorted(old_df.columns) != sorted(new_df.columns):
+    meta = pd.DataFrame({META_DATE_COL: extract_date_list, META_PROCESS_COL: stamp})
+    old = _read_meta(connector, meta_key)
+    if old is not None:
+        if sorted(old.columns) != sorted(meta.columns):
             raise WrongMetaFileException(
-                f"meta file columns {old_df.columns} != expected {new_df.columns}"
+                f"meta file columns {list(old.columns)} != expected {list(meta.columns)}"
             )
-        new_df = old_df.unionByName(new_df)
+        _processed_dates(old, meta_key)
+        meta = pd.concat([old, meta[old.columns]], ignore_index=True)
     # single CSV object, matching the reference's one-key meta layout
-    connector.write_single_object(new_df, meta_key, META_FILE_FORMAT)
+    connector.write_bytes(
+        meta_key, meta.to_csv(index=False, lineterminator="\n").encode("utf-8")
+    )
     return True
 
 
@@ -119,8 +142,8 @@ def return_date_list(
     empty list (:108-115).
     """
     spine = date_spine(first_date, today)
-    meta_df = _read_meta(connector, meta_key)
-    if meta_df is None:
+    meta = _read_meta(connector, meta_key)
+    if meta is None:
         # ref :118 returns first_date itself; the list still starts a day
         # early. Re-format through strptime so a parseable-but-unpadded
         # config date ('2021-4-16') yields the same normalized form as the
@@ -131,10 +154,7 @@ def return_date_list(
         )
         return normalized, [d.strftime(META_DATE_FORMAT) for d in spine]
     else:
-        processed = {
-            datetime.strptime(r[0], META_DATE_FORMAT).date()
-            for r in meta_df.select(F.col(META_DATE_COL)).collect()
-        }
+        processed = _processed_dates(meta, meta_key)
         missing = sorted(set(spine[1:]) - processed)
         if not missing:
             return "2200-01-01", []

@@ -1117,14 +1117,23 @@ def containment_pairs(
         F.col("_h").alias("_hb"),
     )
     i_ub = F.col("_cab") + F.least(F.col("_ha"), F.col("_hb"))
-    # ε admits exact-boundary pairs under float t·min — pruning bounds
-    # may only ever be loose, the exact verify below decides.
+    # The operator's semantics is the ROUNDED ratio: the final filter
+    # keeps round(I/min, 4) ≥ t. HALF_UP rounding to 4 places raises a
+    # value by at most 5e-5, so round(I/min, 4) ≥ t implies
+    # I_ub ≥ I ≥ (t − 5e-5)·min, and pruning below that drops only pairs
+    # the filter drops too. A prune at t·min would lose true pairs whose
+    # raw ratio lies in [t − 5e-5, t) — e.g. I = 3608 of min = 4009 at
+    # t = 0.9 (ratio 0.899975, rounded 0.9). ε absorbs the float error of
+    # the product and of round's decimal view of the double ratio (both
+    # ~1e-16·min) — pruning bounds may only ever be loose, the exact
+    # verify below decides.
     cand = (
         cand.join(st_a.hint("shuffle_hash"), "doc_a")
         .join(st_b.hint("shuffle_hash"), "doc_b")
         .filter(
             i_ub
-            >= F.lit(min_containment) * F.least("_na", "_nb") - F.lit(1e-9)
+            >= F.lit(min_containment - 5e-5) * F.least("_na", "_nb")
+            - F.lit(1e-9)
         )
         .select("doc_a", "doc_b")
         .repartition(fanout, "doc_a")

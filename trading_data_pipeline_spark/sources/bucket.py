@@ -46,9 +46,10 @@ class BucketConnector:
 
     Duck-type-compatible with ``FileSystemConnector`` for every surface the
     meta protocol and :class:`~..etl.Report1ETL` use (``list_files_in_prefix``,
-    ``read_csv``, ``exists``, ``read_csv_raw``, ``write``,
+    ``read_csv``, ``exists``, ``read_bytes``, ``write_bytes``, ``write``,
     ``write_single_object``), so the same ETL runs unchanged against a
-    directory tree or a bucket.
+    directory tree or a bucket. ``read_bytes`` / ``write_bytes`` are a
+    plain GET and an atomic PUT.
     """
 
     def __init__(
@@ -87,7 +88,7 @@ class BucketConnector:
             raise
 
     # -- reads (ref s3.py:65-82) -------------------------------------------
-    def _get_bytes(self, key: str) -> bytes:
+    def read_bytes(self, key: str) -> bytes:
         return self._s3.Object(self.bucket_name, key).get()["Body"].read()
 
     def read_csv(
@@ -108,7 +109,7 @@ class BucketConnector:
             schema = StructType.fromDDL(schema)
         frames = []
         for key in keys:
-            text = self._get_bytes(key).decode(encoding)
+            text = self.read_bytes(key).decode(encoding)
             frames.append(
                 pd.read_csv(
                     io.StringIO(text), sep=sep, header=0 if header else None
@@ -129,24 +130,11 @@ class BucketConnector:
             return self.spark.createDataFrame(pdf, schema)
         return self.spark.createDataFrame(pdf)
 
-    def read_csv_raw(self, key: str) -> DataFrame:
-        """Header-as-written, all-string read — the meta protocol's
-        schema-drift guard needs the file's REAL columns
-        (ref meta_process.py:47-50)."""
-        text = self._get_bytes(key).decode("utf-8")
-        pdf = pd.read_csv(io.StringIO(text), dtype=str)
-        return self.spark.createDataFrame(
-            pdf,
-            StructType.fromDDL(
-                ", ".join(f"`{c}` string" for c in pdf.columns)
-            ),
-        )
-
     def read_parquet(self, keys: str | list[str]) -> DataFrame:
         if isinstance(keys, str):
             keys = [keys]
         frames = [
-            pd.read_parquet(io.BytesIO(self._get_bytes(k))) for k in keys
+            pd.read_parquet(io.BytesIO(self.read_bytes(k))) for k in keys
         ]
         pdf = pd.concat(frames, ignore_index=True)
         if len(pdf) > self.max_rows:
@@ -201,8 +189,11 @@ class BucketConnector:
             buf = io.BytesIO()
             pdf.to_parquet(buf, index=False)
             body = buf.getvalue()
-        self._bucket.put_object(Body=body, Key=key)
+        self.write_bytes(key, body)
         return True
+
+    def write_bytes(self, key: str, body: bytes) -> None:
+        self._bucket.put_object(Body=body, Key=key)
 
     # single-object output IS this connector's native write
     write_single_object = write

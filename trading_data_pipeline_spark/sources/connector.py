@@ -23,6 +23,13 @@ Scale design:
   ``isEmpty()`` probe that would recompute the whole lineage (CSV scan and
   every shuffle) before the real write. ``write`` keeps its probe — a
   directory or append sink cannot be undone after the fact.
+- State-sized objects (the meta file) move as bytes on the driver:
+  ``read_bytes`` / ``write_bytes`` go through the same Hadoop FileSystem
+  (so ``s3a://`` and ``hdfs://`` work unchanged) and start no Spark job.
+  ``write_bytes`` stages ``key._spark_tmp/part-00000`` and publishes it
+  with ``_publish`` — the one rename path ``write_single_object`` uses
+  too, so both writers leave the same layout and have the same crash
+  semantics.
 """
 
 from __future__ import annotations
@@ -103,11 +110,15 @@ class FileSystemConnector:
         return fs.exists(path)
 
     # -- reads (ref s3.py:65-82) -------------------------------------------
-    def read_csv_raw(self, key: str) -> DataFrame:
-        """Header-as-written, all-string CSV read (no imposed schema, no
-        inference) — the meta protocol's schema-drift guard must see the
-        file's real columns (ref meta_process.py:47-50)."""
-        return self.spark.read.options(header=True).csv(self._abs(key))
+    def read_bytes(self, key: str) -> bytes:
+        """The whole object at ``root/key``, read on the driver — for
+        state-sized objects only (the meta file); no Spark job."""
+        fs, path, _ = self._fs(self._abs(key))
+        stream = fs.open(path)
+        try:
+            return stream.readAllBytes()
+        finally:
+            stream.close()
 
     def read_csv(
         self,
@@ -247,9 +258,9 @@ class FileSystemConnector:
         ``<trg_key><timestamp>.<fmt>`` contract (xetra_transformer.py:216-221).
 
         Spark sinks are directories; this coalesces to one task, writes to
-        ``key._spark_tmp`` and renames the part file to ``key``. ONLY for
-        report-sized output — it serializes the final write to a single
-        task by design.
+        ``key._spark_tmp`` and publishes the part file as ``key``
+        (``_publish``). ONLY for report-sized output — it serializes the
+        final write to a single task by design.
 
         The frame is evaluated once: the write observes its own row count.
         Zero rows → the tmp dir is deleted and None returned, so an
@@ -266,7 +277,7 @@ class FileSystemConnector:
             tmp_dir,
             file_format,
         )
-        fs, tmp_path, jvm = self._fs(tmp_dir)
+        fs, tmp_path, _ = self._fs(tmp_dir)
         rows = obs.get["rows"]
         if rows == 0:
             fs.delete(tmp_path, True)
@@ -280,7 +291,29 @@ class FileSystemConnector:
                 break
         if part is None:  # pragma: no cover — a non-empty save always emits one
             raise WrongFormatException(f"no part file produced under {tmp_dir}")
-        dest = jvm.org.apache.hadoop.fs.Path(self._abs(key))
+        self._publish(part, key)
+        logger.info("wrote %d rows to %s", rows, key)
+        return True
+
+    def write_bytes(self, key: str, body: bytes) -> None:
+        """Replace the object at ``root/key`` with ``body``, written on the
+        driver — for state-sized objects only (the meta file); no Spark
+        job. Staged as ``key._spark_tmp/part-00000`` and published like a
+        single-object write."""
+        fs, part, _ = self._fs(self._abs(key) + "._spark_tmp/part-00000")
+        stream = fs.create(part, True)
+        try:
+            stream.write(body)
+        finally:
+            stream.close()
+        self._publish(part, key)
+
+    def _publish(self, part, key: str) -> None:
+        """Move the staged file ``part`` to ``root/key``, replacing any
+        existing object, then delete the staging directory that held it.
+        The one rename path behind ``write_single_object`` and
+        ``write_bytes``."""
+        fs, dest, jvm = self._fs(self._abs(key))
         # Overwrite-rename via FileContext.rename(OVERWRITE). Truly atomic
         # ONLY on HDFS (renameInternal is one namenode op); the default
         # AbstractFileSystem path (LocalFs/ChecksumFs, S3A via
@@ -311,9 +344,7 @@ class FileSystemConnector:
                 raise IOError(f"rename {part} -> {dest} returned false") from exc
         if not fs.exists(dest):
             raise IOError(f"single-object write left no file at {dest}")
-        fs.delete(tmp_path, True)
-        logger.info("wrote %d rows to %s", rows, key)
-        return True
+        fs.delete(part.getParent(), True)
 
     # -- maintenance ---------------------------------------------------------
     ORPHAN_SUFFIXES = ("._staging", "._spark_tmp", "._old")

@@ -134,12 +134,12 @@ def read_stream_table(spark, path: str) -> DataFrame:
 
 
 def _meta_dates(connector: FileSystemConnector, meta_key: str) -> set[str]:
-    from ..meta import _read_meta
+    from ..meta import META_DATE_COL, _read_meta
 
     meta = _read_meta(connector, meta_key)
     if meta is None:
         return set()
-    return {r[0] for r in meta.select("source_date").collect()}
+    return set(meta[META_DATE_COL])
 
 
 # --------------------------------------------------------- CDC upsert sink

@@ -111,6 +111,15 @@ def test_read_csv_many_keys_one_dataframe(spark, buckets, src):
     assert {r.Time for r in df.collect()} == {"07:00", "08:00", "09:00"}
 
 
+def test_read_csv_prefixes_skips_missing_prefixes(spark, buckets, src):
+    """Same contract as ``FileSystemConnector.read_csv_prefixes``: one
+    frame over every object of the prefixes that hold any, None when
+    none does."""
+    df = src.read_csv_prefixes([day(3), "no-such-prefix/", day(1)], schema=CSV_SCHEMA_9)
+    assert sorted(r.Time for r in df.collect()) == ["07:00", "08:00", "09:00", "13:00", "14:00"]
+    assert src.read_csv_prefixes(["no-such-prefix/", day(9)], schema=CSV_SCHEMA_9) is None
+
+
 def test_write_round_trips_and_put_overwrites(spark, buckets):
     conn = BucketConnector(spark, TRG_BUCKET)
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")

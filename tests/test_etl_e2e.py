@@ -54,14 +54,14 @@ def roots(tmp_path):
     return str(src_root), str(trg_root)
 
 
-def make_etl(spark, roots):
+def make_etl(spark, roots, first_offset: int = 3):
     src_root, trg_root = roots
     return Report1ETL(
         spark,
         FileSystemConnector(spark, src_root),
         FileSystemConnector(spark, trg_root),
         "meta/report1_meta.csv",
-        SourceConfig(src_first_extract_date=day(3)),
+        SourceConfig(src_first_extract_date=day(first_offset)),
         TargetConfig(),
     )
 
@@ -79,25 +79,25 @@ def test_etl_first_run_writes_report_and_meta(spark, roots):
 
     reports = glob.glob(f"{trg_root}/report1/*.parquet")
     assert len(reports) == 1
-    rows = spark.read.parquet(reports[0]).collect()
-    # one ISIN: the LAG window leaves its days in date order
-    assert [r["Date"] for r in rows] == [day(3), day(2), day(1), day(0)]
-    report = {r["Date"]: r for r in rows}
-    # warm-up day day(4) seeds the LAG but is NOT emitted (ref :203-206)
-    assert len(report) == 4
-    assert day(4) not in report
-    # day(3)'s pct change is seeded by the warm-up day's opening:
-    # (18.27 - 20.19) / 20.19 * 100 = -9.51
-    assert report[day(3)]["change_prev_closing_%"] == -9.51
-    # golden OHLC + pct-change values (reference golden frame, re-dated)
-    r2 = report[day(2)]
-    assert (
-        r2["opening_price_eur"], r2["closing_price_eur"],
-        r2["minimum_price_eur"], r2["maximum_price_eur"],
-        r2["daily_traded_volume"], r2["change_prev_closing_%"],
-    ) == (20.21, 18.27, 18.21, 21.34, 1088, 10.62)
-    assert report[day(1)]["change_prev_closing_%"] == 1.83
-    assert report[day(0)]["change_prev_closing_%"] == 14.58
+    df = spark.read.parquet(reports[0])
+    assert df.schema.simpleString() == (
+        "struct<ISIN:string,Date:string,opening_price_eur:double,"
+        "closing_price_eur:double,minimum_price_eur:double,"
+        "maximum_price_eur:double,daily_traded_volume:bigint,"
+        "change_prev_closing_%:double>"
+    )
+    # one ISIN: the LAG window leaves its days in date order. The warm-up
+    # day day(4) seeds the LAG but is NOT emitted (ref :203-206): day(3)'s
+    # pct change is seeded by its opening, (18.27 - 20.19) / 20.19 * 100 =
+    # -9.51. Golden OHLC + pct-change values (reference golden frame,
+    # re-dated).
+    isin = "AT0000A0E9W5"
+    assert [tuple(r) for r in df.collect()] == [
+        (isin, day(3), 18.27, 18.27, 18.27, 21.34, 987, -9.51),
+        (isin, day(2), 20.21, 18.27, 18.21, 21.34, 1088, 10.62),
+        (isin, day(1), 20.58, 19.27, 18.89, 21.14, 10286, 1.83),
+        (isin, day(0), 23.58, 24.22, 22.21, 25.01, 3586, 14.58),
+    ]
 
     # only dates >= the cutoff land in meta — the warm-up day never does,
     # so a later gap restart re-derives it instead of duplicating it
@@ -142,6 +142,46 @@ def test_etl_meta_work_starts_no_spark_job(spark, roots, jobs_started):
     assert jobs_started("etl-noop", lambda: make_etl(spark, roots).run()) == 0
 
 
+def test_backfill_extract_starts_no_spark_job(spark, tmp_path, jobs_started):
+    """A backfill over 40-44 source files in 10-11 date directories (no
+    directory on weekend days) builds its scan with no Spark job: the
+    driver globs the date prefixes once and Spark lists the few matched
+    directories itself. Handing Spark the file paths instead (more than
+    the 32-path parallel-listing threshold) starts a listing job."""
+    src_root, trg_root = tmp_path / "source", tmp_path / "target"
+    trading_days = [day(off) for off in range(15) if date.fromisoformat(day(off)).weekday() < 5]
+    for d in trading_days:
+        for hour in range(4):
+            line = f"AT0000A0E9W5,SANT,EUR,common_stock,{d},{hour:02d}:00,20.0,21.0,19.0,20.5,100,1"
+            (src_root / d).mkdir(parents=True, exist_ok=True)
+            (src_root / d / f"{d}_BINS_XETR{hour:02d}.csv").write_text("\n".join([CSV_HEADER, line]))
+    etl = make_etl(spark, (str(src_root), str(trg_root)), first_offset=13)
+    assert etl.extract_date_list == [day(off) for off in range(14, -1, -1)]
+    assert 4 * len(trading_days) >= 33 and len(trading_days) <= 32
+    assert len(trading_days) < len(etl.extract_date_list)  # weekends hold no prefix
+
+    frames = []
+    assert jobs_started("etl-extract", lambda: frames.append(etl.extract())) == 0
+    assert frames[0].count() == 4 * len(trading_days)
+
+
+def test_noop_run_never_builds_the_report(spark, roots, monkeypatch):
+    """With nothing to extract, run() goes straight to load: no scan and
+    no report frame is built."""
+    import trading_data_pipeline_spark.etl as etl_mod
+
+    assert make_etl(spark, roots).run() is True
+
+    def fail(*args, **kwargs):
+        raise AssertionError("no-op run built a report")
+
+    monkeypatch.setattr(etl_mod, "transform_report1", fail)
+    noop = make_etl(spark, roots)
+    monkeypatch.setattr(noop.src_conn, "read_csv_prefixes", fail)
+    assert noop.extract_date_list == []
+    assert noop.run() is True
+
+
 @pytest.mark.parametrize("drop_out", ["null_prices", "before_cutoff"])
 def test_etl_run_with_no_report_rows_still_appends_meta(spark, tmp_path, drop_out):
     """Every scanned row drops out of the report (NULL prices are dropped;
@@ -165,8 +205,9 @@ def test_etl_run_with_no_report_rows_still_appends_meta(spark, tmp_path, drop_ou
 
 
 def test_noop_run_without_csv_schema(spark, roots):
-    """A run with nothing to extract and no declared CSV schema still
-    builds its (empty) report frame and writes nothing."""
+    """A run with nothing to extract and no declared CSV schema writes
+    nothing, and its extract and transform called on their own still
+    build an empty report frame."""
     src_root, trg_root = roots
     assert make_etl(spark, roots).run() is True
     before = sorted(glob.glob(f"{trg_root}/**", recursive=True))
@@ -182,6 +223,7 @@ def test_noop_run_without_csv_schema(spark, roots):
     assert noop.extract_date_list == []
     assert noop.run() is True
     assert sorted(glob.glob(f"{trg_root}/**", recursive=True)) == before
+    assert noop.transform(noop.extract()).isEmpty()
 
 
 def test_cli_runs_from_yaml(spark, roots, tmp_path):

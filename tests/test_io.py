@@ -56,6 +56,55 @@ def test_list_files_in_prefix(conn, df2, tmp_path):
     assert conn.list_files_in_prefix("2021-04-99") == []
 
 
+def _write_csv(path, *values):
+    path.parent.mkdir(parents=True, exist_ok=True)
+    path.write_text("\n".join(["v", *values]) + "\n")
+
+
+def test_read_csv_prefixes_reads_what_the_prefixes_hold(conn, tmp_path):
+    """One scan over the existing prefixes: a file in a nested
+    subdirectory is read (a plain directory read drops it, so this fails
+    without ``recursiveFileLookup``), a ``_SUCCESS`` marker adds no rows,
+    a missing prefix is skipped, a prefix outside the list is not read,
+    and with no existing prefix there is no frame."""
+    _write_csv(tmp_path / "2021-04-15" / "a.csv", "a1", "a2")
+    _write_csv(tmp_path / "2021-04-15" / "late" / "b.csv", "b1")
+    (tmp_path / "2021-04-15" / "_SUCCESS").write_text("")
+    _write_csv(tmp_path / "2021-04-16" / "c.csv", "c1")
+    _write_csv(tmp_path / "2021-04-17" / "d.csv", "d1")
+
+    df = conn.read_csv_prefixes(["2021-04-15", "2021-04-16", "2021-04-18"], schema="v string")
+    assert sorted(r.v for r in df.collect()) == ["a1", "a2", "b1", "c1"]
+    assert conn.read_csv_prefixes(["2021-04-18", "2021-04-19"], schema="v string") is None
+    assert conn.read_csv_prefixes([], schema="v string") is None
+
+
+def test_read_csv_prefixes_matches_prefixes_literally(spark, tmp_path):
+    """Glob metacharacters in a prefix (and in the root) match only
+    themselves: ``2021-04-1[56]`` reads neither ``2021-04-15`` nor
+    ``2021-04-16``, ``*`` matches nothing, and ``a,b`` is one prefix."""
+    root = tmp_path / "r{o}[o]t"
+    for sub in ("2021-04-15", "2021-04-16", "2021-04-1[56]", "a", "b", "a,b", "x{y}"):
+        _write_csv(root / sub / "f.csv", f'"{sub}"')
+    conn = FileSystemConnector(spark, str(root))
+
+    def read(*prefixes):
+        df = conn.read_csv_prefixes(list(prefixes), schema="v string")
+        return None if df is None else sorted(r.v for r in df.collect())
+
+    assert read("2021-04-1[56]") == ["2021-04-1[56]"]
+    assert read("a,b") == ["a,b"]
+    assert read("x{y}", "2021-04-15") == ["2021-04-15", "x{y}"]
+    assert read("2021-04-1*") is None
+
+
+def test_read_csv_prefixes_infers_schema_like_read_csv(conn, tmp_path):
+    _write_csv(tmp_path / "2021-04-15" / "a.csv", "1", "2")
+    df = conn.read_csv_prefixes(["2021-04-15"])
+    assert df.schema.simpleString() == conn.read_csv("2021-04-15/a.csv").schema.simpleString()
+    assert sorted(r.v for r in df.collect()) == [1, 2]
+
+
 def test_write_single_object(conn, df2, tmp_path):
     # ref xetra_transformer.py:216-221 writes ONE object per report
     assert conn.write_single_object(df2, "report/r1.csv", "csv") is True

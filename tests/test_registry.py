@@ -87,9 +87,8 @@ def test_operator_index_is_current():
 
 def test_round11_window_is_applied():
     """Round 11 is LIVE: _PRIORITY must be the staged round-11 list (the
-    soundness of that list — 50 names, canaries first, no duplicates, no
-    overlap with round 10 — is pinned by
-    test_round10_window_list_is_sound below)."""
+    soundness of that list — 50 names, canaries first, no duplicates —
+    is pinned by test_round11_window_proposal_is_sound below)."""
     from trading_data_pipeline_spark.registry import (
         _PRIORITY,
         _PRIORITY_ROUND11,
@@ -129,114 +128,14 @@ def test_no_oracle_column_is_duckdb_hugeint():
     assert not offenders, f"driver-hash-hostile oracle column types: {offenders}"
 
 
-
-def test_round9_window_staged_list_is_sound():
-    """_PRIORITY_ROUND9 is the (now LIVE) round-9 driver window: every
-    name registered, exactly 50, canaries first, no duplicates, no
-    overlap with the round-8 window, and every slot after the canaries
-    must be a NEVER-driver-verified op: the 32 round-7 session
-    additions plus 16 round-8 additions pulled forward from round-10
-    staging (round-8 verdict task 2: never-verified debt ≤ 64 after
-    round 9 ⇒ 48 never-verified slots)."""
-    from trading_data_pipeline_spark.registry import (
-        _PRIORITY_ROUND8,
-        _PRIORITY_ROUND9,
-    )
-
-    qs = all_queries()
-    unknown = [n for n in _PRIORITY_ROUND9 if n not in qs]
-    assert not unknown, f"round-9 window names not registered: {unknown}"
-    assert len(_PRIORITY_ROUND9) == 50, len(_PRIORITY_ROUND9)
-    assert len(set(_PRIORITY_ROUND9)) == 50, "duplicate names"
-    assert _PRIORITY_ROUND9[:2] == ("q_report1", "q_dedup_near")
-    overlap = set(_PRIORITY_ROUND9[2:]) & set(_PRIORITY_ROUND8)
-    assert not overlap, f"slots wasted on round-8-covered queries: {sorted(overlap)}"
-    new_ops = {
-        # round-7 session additions (E141–E173)
-        "q_stochastic", "q_mfi", "q_dollar_bars", "q_sortino", "q_vpin",
-        "q_rolling_beta", "q_repetition", "q_simpson_diversity",
-        "q_xml_ingest", "q_sink_xml", "q_fixed_effects",
-        "q_variance_ratio", "q_macd", "q_ewma_vol", "q_pipe_sql",
-        "q_flow_persistence", "q_tcloseness", "q_cosine_calibration",
-        "q_centroid_similarity", "q_audience_overlap", "q_round_lots",
-        "q_freshness", "q_volume_profile", "q_moments", "q_gap_risk",
-        "q_tier_migration", "q_tail_dependence", "q_ab_cuped",
-        "q_kendall_tau", "q_interarrival", "q_markout", "q_return_split",
-        # round-8 additions pulled forward (E174–E179, E182–E190)
-        "q_ndcg", "q_triple_barrier", "q_mann_whitney",
-        "q_volume_concentration", "q_srm_check", "q_label_balance",
-        "q_donchian", "q_acf_profile", "q_xsec_momentum",
-        "q_pairs_signal", "q_embedding_norms", "q_imbalance_profile",
-        "q_exec_shortfall", "q_pack_efficiency", "q_power_analysis",
-        "q_var_backtest",
-    }
-    assert set(_PRIORITY_ROUND9[2:]) == new_ops, (
-        "round-9 window must be exactly the 48 never-verified ops"
-    )
-
-
-def test_round10_window_list_is_sound():
-    """_PRIORITY_ROUND10 is the (now LIVE) round-10 driver window,
-    restructured at round-10 open per the round-9 verdict task 2 ("burn
-    never-verified debt faster"): every name registered, exactly 50,
-    canaries first, no duplicates, no overlap with the round-9 window,
-    and every slot after the canaries is either q_rolling_corr (the one
-    round-8 addition round 9 could not absorb), the plan-changed
-    q_hard_negatives re-verify, or one of 46 NEVER-driver-verified
-    round-8 additions (E193-E238) pulled forward from round-11
-    staging — never-verified displaces re-verification, the
-    round-7-verdict-approved swap."""
-    from trading_data_pipeline_spark.registry import (
-        _PRIORITY_ROUND9,
-        _PRIORITY_ROUND10,
-    )
-
-    qs = all_queries()
-    unknown = [n for n in _PRIORITY_ROUND10 if n not in qs]
-    assert not unknown, f"round-10 window names not registered: {unknown}"
-    assert len(_PRIORITY_ROUND10) == 50, len(_PRIORITY_ROUND10)
-    assert len(set(_PRIORITY_ROUND10)) == 50, "duplicate names"
-    assert _PRIORITY_ROUND10[:2] == ("q_report1", "q_dedup_near")
-    overlap = set(_PRIORITY_ROUND10[2:]) & set(_PRIORITY_ROUND9)
-    assert not overlap, f"slots wasted on round-9-covered queries: {sorted(overlap)}"
-    expected = {
-        "q_rolling_corr", "q_hard_negatives",
-        # early round-8 session additions (E193-E208), never verified
-        "q_omega_ratio", "q_hill_tail", "q_kupiec_pof", "q_ulcer_index",
-        "q_calmar", "q_williams_r", "q_aroon", "q_cci", "q_vortex",
-        "q_chaikin", "q_ichimoku", "q_kruskal_wallis",
-        "q_brown_forsythe", "q_cramers_v", "q_jackknife_sharpe",
-        "q_runs_test",
-        # late round-8 session additions (E209-E238), never verified
-        "q_gopher_rules", "q_prefix_dedup", "q_psi", "q_mutual_info",
-        "q_brier", "q_zipf_fit", "q_token_entropy",
-        "q_parkinson", "q_garman_klass", "q_rogers_satchell",
-        "q_yang_zhang", "q_corwin_schultz",
-        "q_jarque_bera", "q_ljung_box", "q_durbin_watson", "q_anova",
-        "q_welch_t", "q_cohens_kappa", "q_bartlett",
-        "q_adx", "q_ultimate_osc", "q_keltner", "q_force_index",
-        "q_ease_of_movement",
-        "q_hurst", "q_granger", "q_quantile_binning",
-        "q_bipower", "q_mann_kendall", "q_adf",
-    }
-    assert set(_PRIORITY_ROUND10[2:]) == expected, (
-        "round-10 window must be q_rolling_corr + q_hard_negatives + "
-        "the 46 pulled-forward never-verified ops"
-    )
-
-
 def test_round11_window_proposal_is_sound():
-    """_PRIORITY_ROUND11 is the round-11 staged driver window — validated
-    now so renames can't silently break the rotation: every name
-    registered, exactly 50, canaries first, no duplicates, no overlap
-    with the round-10 window, and it must contain every remaining
-    never-driver-verified op (q_ece, q_hodges_lehmann, and the
+    """_PRIORITY_ROUND11 is the live driver window — validated so renames
+    can't silently break the rotation: every name registered, exactly
+    50, canaries first, no duplicates, and it must contain every
+    remaining never-driver-verified op (q_ece, q_hodges_lehmann, and the
     batch-14..16 additions pulled forward from the old round-12
     staging) so never-verified debt reaches zero at round 11."""
-    from trading_data_pipeline_spark.registry import (
-        _PRIORITY_ROUND10,
-        _PRIORITY_ROUND11,
-    )
+    from trading_data_pipeline_spark.registry import _PRIORITY_ROUND11
 
     qs = all_queries()
     unknown = [n for n in _PRIORITY_ROUND11 if n not in qs]
@@ -244,8 +143,6 @@ def test_round11_window_proposal_is_sound():
     assert len(_PRIORITY_ROUND11) == 50, len(_PRIORITY_ROUND11)
     assert len(set(_PRIORITY_ROUND11)) == 50, "duplicate names"
     assert _PRIORITY_ROUND11[:2] == ("q_report1", "q_dedup_near")
-    overlap = set(_PRIORITY_ROUND11[2:]) & set(_PRIORITY_ROUND10)
-    assert not overlap, f"slots wasted on round-10-covered queries: {sorted(overlap)}"
     new_ops = {
         # never-driver-verified remainder from the round-10 pull-forward
         "q_ece", "q_hodges_lehmann",

@@ -3,20 +3,25 @@ reference's ``XetraETL`` + ``run.py`` (xetra/transformers/
 xetra_transformer.py:74-244, run.py:17-57).
 
 Lifecycle (ref SURVEY.md §3 EP1): resolve incremental dates from the meta
-file → extract (one multi-file CSV scan over the pruned date prefixes) →
-transform (pure DataFrame chain, operators/report1.py) → load (parquet
-sink + meta append). Everything before the sink is lazy; the only actions
-are the two writes. Neither probes its frame for emptiness first: the
-report write observes its own row count and skips the object on zero rows
+file → extract (one glob over the pruned date prefixes, one CSV scan of
+the matched directories) → transform (pure DataFrame chain,
+operators/report1.py) → load (parquet sink + meta append). Everything
+before the sink is lazy; the only actions are the two writes. Neither
+probes its frame for emptiness first: the report write observes its own
+row count and skips the object on zero rows
 (``FileSystemConnector.write_single_object``), and a run with no dates to
-extract skips the report write outright. Each phase logs its time.
+extract skips extract, transform and the report write outright. Each
+phase logs its time.
 
 Scale: the date resolution is the manual partition-pruning the reference
-does (xetra_transformer.py:112-116) — Spark receives only the pruned path
-list, so a backfill over years of history still reads just the missing
-days. With a Hive-partitioned layout (``.../date=YYYY-MM-DD/``) the same
-pruning falls out of a ``filter`` instead; both paths are supported by
-giving ``extract`` the explicit list.
+does (xetra_transformer.py:112-116) — Spark receives only the pruned date
+directories, so a backfill over years of history still reads just the
+missing days. The reference lists each prefix and reads each file
+(xetra_transformer.py:104-125); here the driver makes one ``globStatus``
+call for all prefixes and Spark lists the matched directories inside the
+scan, so no file is listed twice and no py4j call is made per file. With
+a Hive-partitioned layout (``.../date=YYYY-MM-DD/``) the same pruning
+falls out of a ``filter`` instead.
 """
 
 from __future__ import annotations
@@ -76,24 +81,20 @@ class Report1ETL:
         ]
 
     def extract(self) -> DataFrame:
-        """One Spark scan over every file of every extract date
-        (ref :104-125 — but a single distributed read instead of a
-        sequential per-file read + concat loop)."""
+        """One Spark scan over every file under every extract date prefix
+        (ref :104-125 — but one glob and a single distributed read instead
+        of a per-prefix listing and a sequential per-file read + concat
+        loop). Dates with no source prefix (weekends, holidays) are
+        skipped; with none at all the frame is empty."""
         t0 = time.perf_counter()
-        files = [
-            f
-            for date in self.extract_date_list
-            for f in self.src_conn.list_files_in_prefix(date)
-        ]
-        if not files:
+        df = self.src_conn.read_csv_prefixes(self.extract_date_list, schema=self.csv_schema)
+        if df is None:
             # an inferred schema has nothing to infer from: fall back to the
             # Xetra layout the default SourceConfig reads
             df = self.spark.createDataFrame([], self.csv_schema or CSV_SCHEMA_XETRA)
-        else:
-            df = self.src_conn.read_csv(files, schema=self.csv_schema)
         logger.info(
-            "extract: %d files for %d dates in %.3f s",
-            len(files), len(self.extract_date_list), time.perf_counter() - t0,
+            "extract: scan of %d date prefixes built in %.3f s",
+            len(self.extract_date_list), time.perf_counter() - t0,
         )
         return df
 
@@ -103,12 +104,13 @@ class Report1ETL:
         logger.info("transform: report frame built in %.3f s", time.perf_counter() - t0)
         return report
 
-    def load(self, report: DataFrame) -> bool:
+    def load(self, report: DataFrame | None) -> bool:
         """Write the report + append processed dates to the meta file
         (ref :210-232). Returns True (ref load always returns True).
 
         With no dates to extract nothing was scanned, so the report is
-        empty by construction and its write is skipped."""
+        empty by construction (``run`` passes None) and its write is
+        skipped."""
         t0 = time.perf_counter()
         if self.extract_date_list:
             key = (
@@ -126,7 +128,10 @@ class Report1ETL:
         return True
 
     def run(self) -> bool:
-        """extract → transform → load (ref etl_report1, :234-244)."""
+        """extract → transform → load (ref etl_report1, :234-244). With no
+        dates to extract there is no report to build: straight to load."""
+        if not self.extract_date_list:
+            return self.load(None)
         return self.load(self.transform(self.extract()))
 
 

@@ -81,246 +81,18 @@ def register(name: str, oracle: str | None, doc: str = ""):
 # multimodal, curation, as-of) into that window; everything not listed
 # follows in module-registration order and is still covered by the local
 # oracle harness (``tools/parity.py``) and pytest.
-# Round-5 window. After round 4, every query registered before round 4
-# has at least one green driver row (r1-r4 windows jointly cover all
-# 119). This window pins, in order: the two flagship canaries, then
-# EVERY query that has never had a driver row — the round-4 batch-1/2
-# additions, TPC-H batch 6, the corpus/lake ops, and the 13 queries
-# added in round 5 itself (bloom join, lake maintenance, EWMA, quality
-# scoring, as-of variants, hard negatives, PageRank, bucketed join,
-# LATERAL top-n). Bench-headline re-verification slots rotate out this
-# round (each of those has 3+ green rows across r1-r4).
-_PRIORITY_ROUND5: tuple[str, ...] = (
-    # flagship canaries (continuity: one green row per round)
-    "q_report1", "q_dedup_near",
-    # round-4 additions — never driver-verified yet
-    "q_approx_percentile", "q_ann_batch", "q_char_entropy", "q_tfidf_exact",
-    # round-5: TPC-H batch 6 (suite now complete, Q1-Q22)
-    "q_tpch_q2", "q_tpch_q11", "q_tpch_q12", "q_tpch_q16",
-    "q_tpch_q20", "q_tpch_q21",
-    # round-5: corpus curation + hopping window + lake maintenance
-    "q_boilerplate", "q_token_rarity", "q_domain_mix", "q_hopping_window",
-    "q_salted_join", "q_upsert_merge", "q_zorder_stats",
-    "q_chunk_documents",
-    # round-5 additions (this session) — never driver-verified
-    "q_bloom_join", "q_scan_binary", "q_compaction", "q_cdc_apply",
-    "q_ewma", "q_quality_score", "q_score_rank_norm",
-    "q_asof_tolerance", "q_asof_forward", "q_hard_negatives",
-    "q_pagerank", "q_bucketed_join", "q_lateral_topn",
-    "q_rebalance_sample", "q_winsorize", "q_autocorr",
-    "q_type_transitions", "q_active_users",
-    # round-5 batch 2 (the remaining additions — q_sequence_pattern,
-    # q_incremental_agg, q_schema_evolution, q_topic_clusters,
-    # q_data_quality, q_wap_publish, q_pit_join, q_feature_hash,
-    # q_jaccard_prefix_join, q_fuzzy_join — follow in registration
-    # order after the window and get pinned next round, same pattern
-    # round 4 used for its batch-2)
-    # round-5 batch 3/4 also await next-round pinning: q_max_drawdown,
-    # q_vwap_bars, q_mad_outliers, q_rfm, q_ab_test, q_basket_pairs,
-    # q_cooccurrence, q_triangle_count, q_file_stats, q_hll_rollup,
-    # q_theta_overlap, q_kll_quantiles, q_pruned_scan, q_attribution,
-    # q_first_touch, q_corr_matrix, q_market_beta, q_gini,
-    # q_drift_tvd, q_time_to_convert, q_snapshot_diff, q_semijoin_selectivity, q_bfs_levels,
-    # q_share_of_parent, q_pps_sample
-    "q_skyline",
-    # SURVEY §2 report1 micro-family + io/meta protocol (q_project /
-    # q_dropna / q_rename / q_round / q_filter_date rotate out this
-    # round — each has green rows from r1-r3; round-5 ops take their
-    # slots)
-    "q_sink_orc",
-    # round-5 batch 2: event analytics + embedding/corpus maintenance
-    # (q_window_first / q_window_last / q_groupby_agg / q_date_spine /
-    # q_anti_join_dates rotate out — each has green rows from r1-r3)
-    "q_zscore_outliers", "q_funnel", "q_retention_cohort",
-    "q_quantize_embeddings", "q_chunk_dedup",
-    "q_sessionize", "q_profile", "q_scd2_merge", "q_inverted_index",
-    "q_forward_fill",
-    # (q_lit_frame / q_checked_union / q_scan_partition / q_scan_csv /
-    # q_sink_parquet rotate out — green rows in r1-r3)
-)
-
-# ROUND-6 WINDOW (apply at the start of round 6 — do NOT apply
-# mid-round-5; the driver grades round 5 against the list above).
-# Checked by tests/test_registry.py: every name exists, exactly 50,
-# canaries first, zero overlap with queries the round-5 window already
-# covers. At round-6 open, set ``_PRIORITY = _PRIORITY_ROUND6``.
-_PRIORITY_ROUND6: tuple[str, ...] = (
-    # flagship canaries (continuity: one green row per round)
-    "q_report1", "q_dedup_near",
-    # batch 2
-    "q_sequence_pattern", "q_incremental_agg", "q_schema_evolution",
-    "q_topic_clusters", "q_data_quality", "q_wap_publish", "q_pit_join",
-    "q_feature_hash", "q_jaccard_prefix_join", "q_fuzzy_join",
-    # batch 3
-    "q_max_drawdown", "q_vwap_bars", "q_mad_outliers", "q_rfm",
-    "q_ab_test", "q_basket_pairs", "q_cooccurrence", "q_triangle_count",
-    "q_file_stats", "q_hll_rollup", "q_theta_overlap", "q_kll_quantiles",
-    # batch 4/5
-    "q_pruned_scan", "q_attribution", "q_first_touch", "q_corr_matrix",
-    "q_market_beta", "q_gini", "q_drift_tvd", "q_time_to_convert",
-    # batch 6/7
-    "q_snapshot_diff", "q_semijoin_selectivity", "q_bfs_levels",
-    "q_share_of_parent", "q_pps_sample",
-    # round-6 additions
-    "q_interpolate", "q_salted_agg", "q_random_projection", "q_kcore",
-    "q_streaks", "q_changepoint", "q_benford", "q_auc", "q_decile_lift",
-    "q_containment", "q_table_checksum",
-    # first two round-7 overflow names promoted to fill the 50 exactly
-    "q_knn_eval", "q_stratified_exact",
-)
-# ROUND-7 WINDOW (apply at the start of round 7 — do NOT apply
-# mid-round-6). Validated NOW by tests/test_registry.py (names exist,
-# exactly 50, canaries first, no overlap with the round-6 window).
-# Composition: canaries; the 15 queries never driver-verified through
-# round 6; the 23 round-6 session additions (E70–E92); the 5 r5-red
-# HUGEINT-oracle queries whose fix needs a green driver row on record;
-# the 5 operators added late in round 6 (E115–E119) — these take the
-# slots originally staged for bench-headline re-verification: the
-# headline five each have 3+ green rows in r1–r5 AND run in every
-# BENCH_rN, while E115–E119 have no driver row at all, so the swap is
-# strictly more verification coverage.
-# At round-7 open, set ``_PRIORITY = _PRIORITY_ROUND7``.
-_PRIORITY_ROUND7: tuple[str, ...] = (
-    "q_report1", "q_dedup_near",
-    # never driver-verified through round 6
-    "q_seasonal_profile", "q_dedup_delta", "q_sql_interface",
-    "q_python_source", "q_phash_dedup", "q_skew_audit", "q_interval_join",
-    "q_variant_json", "q_udtf_runs", "q_dpp_join", "q_time_rollup",
-    "q_target_encode", "q_kanonymity", "q_walk_forward",
-    "q_quantile_normalize",
-    # round-6 session additions (E70–E92)
-    "q_bollinger", "q_rsi", "q_candle_patterns", "q_drawdown_duration",
-    "q_bigram_lm", "q_source_overlap", "q_doc_length_hist",
-    "q_node_jaccard", "q_label_propagation", "q_centroid_classify",
-    "q_referential_integrity", "q_functional_dependency", "q_recursive_cte",
-    "q_atr", "q_obv", "q_turnover_hhi", "q_grouped_mode", "q_outlier_iqr",
-    "q_gap_top", "q_degree_hist", "q_tail_tokens", "q_embedding_drift",
-    "q_principal_component",
-    # r5-red HUGEINT-oracle queries: fixed in round 6, need a green row
-    "q_tpch_q12", "q_boilerplate", "q_domain_mix", "q_chunk_dedup",
-    "q_sessionize",
-    # round-6 late additions (E115–E119), never driver-verified
-    "q_bm25", "q_retrieval_eval", "q_fertility", "q_pq_encode",
-    "q_entity_canonical",
-)
-# ROUND-8 WINDOW (apply at the start of round 8 — do NOT apply earlier).
-# Validated NOW by tests/test_registry.py (names exist, exactly 50,
-# canaries first, no overlap with the round-7 window). Composition:
-# canaries; the 28 round-6 operators (E94–E128 + privacy/eval/session
-# additions) that round 7's already-full window could not absorb; then
-# 20 re-verification slots — the 5 bench headliners displaced from the
-# round-7 staging plus the report1 micro-family and io/meta protocol
-# queries whose newest green rows date to r1–r3.
-# At round-8 open, set ``_PRIORITY = _PRIORITY_ROUND8``.
-_PRIORITY_ROUND8: tuple[str, ...] = (
-    "q_report1", "q_dedup_near",
-    # round-6 late registrations, never driver-verified through round 7
-    "q_realized_vol", "q_roll_spread", "q_kyle_lambda", "q_amihud",
-    "q_leadlag_corr", "q_weighted_median", "q_ks_test", "q_chi_square",
-    "q_spearman", "q_ttr", "q_token_coverage", "q_ngram_novelty",
-    "q_encoding_qc", "q_readability", "q_silhouette", "q_kmeans_step",
-    "q_var_es", "q_sharpe", "q_event_study", "q_semantic_dedup",
-    "q_hybrid_rrf", "q_mixture_weights", "q_diff_in_diff",
-    "q_cdc_chunks", "q_ldiversity", "q_langid_eval", "q_lateness_audit",
-    "q_ann_recall",
-    # re-verification: bench headliners displaced from round-7 staging
-    "q_tpch_q1", "q_join_multi", "q_tumbling_window", "q_asof_join",
-    "q_topk_cosine",
-    # round-6 latest registrations (E129–E134), never driver-verified
-    "q_seasonal_decompose", "q_burstiness", "q_simpsons_audit",
-    "q_churn_flow", "q_banding_recall", "q_dataset_card", "q_sql_udf",
-    "q_theil_sen", "q_twap", "q_mixture_sample", "q_minmax_scale",
-    # re-verification: report1 micro-family (newest green rows r1–r3)
-    "q_project", "q_dropna", "q_rename", "q_round",
-)
-
-# ROUND-9 WINDOW (LIVE). Validated by tests/test_registry.py (names
-# exist, exactly 50, canaries first, no duplicates, no overlap with the
-# round-8 window). Composition: canaries; the 32 round-7 session
-# additions (E141–E173); then 16 of the 17 round-8 session additions
-# E174–E179/E182–E190 pulled FORWARD from the round-10 staging — the
-# round-8 verdict's task-2 done-criterion is never-verified ≤ 64 after
-# round 9, which needs 48 never-verified slots, not 32. The 16
-# re-verification slots originally staged here (q_hard_negatives after
-# its IVF-routing plan change, plus 15 relational/io/meta basics with
-# r1–r3 green rows) move to round 10: never-verified ops beat another
-# green row for an already-verified plan (the round-7-verdict-approved
-# swap).
-_PRIORITY_ROUND9: tuple[str, ...] = (
-    "q_report1", "q_dedup_near",
-    # round-7 session additions, never driver-verified
-    "q_stochastic", "q_mfi", "q_dollar_bars", "q_sortino", "q_vpin",
-    "q_rolling_beta", "q_repetition", "q_simpson_diversity",
-    "q_xml_ingest", "q_sink_xml", "q_fixed_effects", "q_variance_ratio",
-    "q_macd", "q_ewma_vol", "q_pipe_sql", "q_flow_persistence",
-    "q_tcloseness", "q_cosine_calibration", "q_centroid_similarity",
-    "q_audience_overlap", "q_round_lots", "q_freshness",
-    "q_volume_profile", "q_moments", "q_gap_risk", "q_tier_migration",
-    "q_tail_dependence", "q_ab_cuped", "q_kendall_tau", "q_interarrival",
-    "q_markout", "q_return_split",
-    # round-8 session additions (E174–E179, E182–E190), never
-    # driver-verified — pulled forward from the round-10 staging
-    "q_ndcg", "q_triple_barrier", "q_mann_whitney",
-    "q_volume_concentration", "q_srm_check", "q_label_balance",
-    "q_donchian", "q_acf_profile", "q_xsec_momentum", "q_pairs_signal",
-    "q_embedding_norms", "q_imbalance_profile", "q_exec_shortfall",
-    "q_pack_efficiency", "q_power_analysis", "q_var_backtest",
-)
-
-
-# ROUND-10 WINDOW (LIVE — applied at round-10 open). Validated by
-# tests/test_registry.py (names exist, exactly 50, canaries first, no
-# duplicates, no overlap with the round-9 window). Composition per the
-# round-9 verdict task 2 ("burn never-verified debt faster than the
-# current staging does"): canaries; q_rolling_corr (E192, the one
-# round-8 addition the widened round-9 window could not absorb);
-# q_hard_negatives (its registered plan changed to the IVF routing in
-# round 7 — its green row predates that plan); then 46 never-driver-
-# verified round-8 session additions (E193–E238) pulled forward from
-# the round-11 staging — never-verified ops displace re-verification,
-# the round-7-verdict-approved swap. The 15 relational/io/meta basics
-# and the round-2/3 re-verification slots this displaces re-stage in
-# the round-11/12 rotation below. After this window runs,
-# never-driver-verified debt is 64 - 47 = 17 (2 round-11 remainder +
-# 15 old round-12 batch), all absorbed by the round-11 window ⇒ debt
-# reaches 0 after round 11, one round earlier than the prior staging.
-_PRIORITY_ROUND10: tuple[str, ...] = (
-    "q_report1", "q_dedup_near",
-    # round-8 addition not absorbed by the round-9 window
-    "q_rolling_corr",
-    # re-verify: registered plan changed in round 7 (IVF routing)
-    "q_hard_negatives",
-    # never-driver-verified early round-8 session additions (E193-E208)
-    "q_omega_ratio", "q_hill_tail", "q_kupiec_pof", "q_ulcer_index",
-    "q_calmar", "q_williams_r", "q_aroon", "q_cci", "q_vortex",
-    "q_chaikin", "q_ichimoku", "q_kruskal_wallis", "q_brown_forsythe",
-    "q_cramers_v", "q_jackknife_sharpe", "q_runs_test",
-    # never-driver-verified late round-8 session additions (E209-E238)
-    "q_gopher_rules", "q_prefix_dedup", "q_psi", "q_mutual_info",
-    "q_brier", "q_zipf_fit", "q_token_entropy",
-    "q_parkinson", "q_garman_klass", "q_rogers_satchell",
-    "q_yang_zhang", "q_corwin_schultz",
-    "q_jarque_bera", "q_ljung_box", "q_durbin_watson", "q_anova",
-    "q_welch_t", "q_cohens_kappa", "q_bartlett",
-    "q_adx", "q_ultimate_osc", "q_keltner", "q_force_index",
-    "q_ease_of_movement",
-    "q_hurst", "q_granger", "q_quantile_binning",
-    "q_bipower", "q_mann_kendall", "q_adf",
-)
-
-# ROUND-11 WINDOW (apply at the start of round 11 — do NOT apply
-# earlier). Validated NOW by tests/test_registry.py (names exist,
-# exactly 50, canaries first, no duplicates, no overlap with the
-# round-10 window). Composition: canaries; the 2 never-driver-verified
-# round-8 additions the widened round-10 window could not absorb
-# (q_ece, q_hodges_lehmann); the 15 never-driver-verified batch-14..16
-# additions pulled forward from the old round-12 staging
-# (q_bootstrap_ci … q_theil_index) — after this window runs,
+#
+# ROUND-11 WINDOW (LIVE). Validated by tests/test_registry.py (names
+# exist, exactly 50, canaries first, no duplicates, every remaining
+# never-driver-verified op present). Composition: canaries; the 2
+# never-driver-verified round-8 additions the widened round-10 window
+# could not absorb (q_ece, q_hodges_lehmann); the 15 never-driver-
+# verified batch-14..16 additions pulled forward from the old round-12
+# staging (q_bootstrap_ci … q_theil_index) — after this window runs,
 # never-driver-verified debt is ZERO; then 31 re-verification slots:
 # the 15 relational/io/meta basics displaced from round 10 (newest
 # green rows r1–r3), the 15 queries whose newest green row dates to
 # round 2, and q_asof_pandas (round-3 green, first of that cohort).
-# At round-11 open, set ``_PRIORITY = _PRIORITY_ROUND11``.
 _PRIORITY_ROUND11: tuple[str, ...] = (
     "q_report1", "q_dedup_near",
     # never-driver-verified remainder from the round-10 pull-forward
@@ -384,8 +156,9 @@ _PRIORITY_ROUND12: tuple[str, ...] = (
 )
 
 # ACTIVE round-11 driver window (applied at round-11 open per the
-# staged plan above; earlier lists are kept for the no-wasted-slot
-# check). After this window runs, never-driver-verified debt is ZERO.
+# staged plan above; earlier rounds' driver rows are in
+# CORRECTNESS_r*.json). After this window runs, never-driver-verified
+# debt is ZERO.
 _PRIORITY: tuple[str, ...] = _PRIORITY_ROUND11
 
 

@@ -45,10 +45,12 @@ class BucketConnector:
     """List/read/write state-sized objects in one bucket via the S3 API.
 
     Duck-type-compatible with ``FileSystemConnector`` for every surface the
-    meta protocol and :class:`~..etl.Report1ETL` use (``list_files_in_prefix``,
-    ``read_csv``, ``exists``, ``read_bytes``, ``write_bytes``, ``write``,
-    ``write_single_object``), so the same ETL runs unchanged against a
-    directory tree or a bucket. ``read_bytes`` / ``write_bytes`` are a
+    meta protocol and :class:`~..etl.Report1ETL` use (``read_csv_prefixes``,
+    ``list_files_in_prefix``, ``read_csv``, ``exists``, ``read_bytes``,
+    ``write_bytes``, ``write``, ``write_single_object``), so the same ETL
+    runs unchanged against a directory tree or a bucket.
+    ``read_csv_prefixes`` is a server-side listing per prefix and one
+    ``read_csv`` of the keys found; ``read_bytes`` / ``write_bytes`` are a
     plain GET and an atomic PUT.
     """
 
@@ -88,6 +90,14 @@ class BucketConnector:
             raise
 
     # -- reads (ref s3.py:65-82) -------------------------------------------
+    def read_csv_prefixes(
+        self, prefixes: list[str], schema: StructType | str | None = None
+    ) -> DataFrame | None:
+        """Every CSV object under each of ``prefixes`` as ONE frame, or
+        None when no prefix holds an object."""
+        keys = [k for p in prefixes for k in self.list_files_in_prefix(p)]
+        return self.read_csv(keys, schema=schema) if keys else None
+
     def read_bytes(self, key: str) -> bytes:
         return self._s3.Object(self.bucket_name, key).get()["Body"].read()
 

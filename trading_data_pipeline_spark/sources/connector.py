@@ -8,12 +8,20 @@ same surface works over any Hadoop-supported scheme (``file://``, ``s3a://``,
 executors do the reads in parallel instead of the driver streaming bytes.
 
 Scale design:
-- ``list_files_in_prefix`` exists for protocol parity (the reference's
-  incremental extract needs explicit key lists), but the preferred 100 TB
-  path is passing the whole path list (or a partitioned root + filter) to a
-  single ``read_csv``/``read_parquet`` call so Spark plans one distributed
-  scan with partition pruning — never a driver-side loop of single-file
-  reads (ref's extract loop, xetra_transformer.py:118-123).
+- The Report1 ETL reads its date prefixes with ``read_csv_prefixes``: ONE
+  driver-side ``globStatus`` over ``root/{p1,p2,...}`` finds the prefixes
+  that exist, and ONE Spark CSV scan over the matched directories lists
+  and reads their files (``recursiveFileLookup``, so nested files count
+  as the recursive ``listFiles`` walk did). Nothing lists a file twice
+  and no py4j call is made per file; above
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+  directories Spark lists them in a distributed job, which is the right
+  shape at 100 TB.
+- ``list_files_in_prefix`` stays as the reference's protocol surface
+  (``bucket.objects.filter(Prefix=...)``, s3.py:52-63) that the s3a and
+  moto tests cover; no ETL path calls it. Never feed its output to a
+  driver-side loop of single-file reads (ref's extract loop,
+  xetra_transformer.py:118-123).
 - Writes are directory sinks (one file per task). ``write_single_object``
   reproduces the reference's single-key output contract
   (xetra_transformer.py:216-221) via coalesce(1) + FS rename — only for
@@ -35,6 +43,7 @@ Scale design:
 from __future__ import annotations
 
 import logging
+import re
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +74,12 @@ def _is_unsupported_filesystem(exc: Exception) -> bool:
             return True
         java_exc = java_exc.getCause()
     return False
+
+
+def _glob_escape(s: str) -> str:
+    """``s`` with every Hadoop glob metacharacter backslash-escaped, so a
+    ``globStatus`` pattern built from it matches ``s`` literally."""
+    return re.sub(r"([\\{}\[\]*?,])", r"\\\1", s)
 
 
 class FileSystemConnector:
@@ -136,14 +151,51 @@ class FileSystemConnector:
         Explicit ``schema`` is strongly preferred at scale — ``inferSchema``
         triggers an extra pass over the data.
         """
-        reader = self.spark.read.options(header=header, sep=sep, encoding=encoding)
-        if schema is not None:
-            reader = reader.schema(schema)
-        else:
-            reader = reader.option("inferSchema", True)
         if isinstance(paths, str):
             paths = [paths]
+        reader = self._csv_reader(schema, sep, encoding, header)
         return reader.csv([self._abs(p) for p in paths])
+
+    def read_csv_prefixes(
+        self, prefixes: list[str], schema: StructType | str | None = None
+    ) -> DataFrame | None:
+        """One CSV scan over every file under the ``root/<prefix>`` paths
+        that exist, or None when no prefix exists.
+
+        The existing prefixes come from a single ``globStatus`` call on
+        ``root/{p1,p2,...}``; glob metacharacters in the root and the
+        prefixes are escaped, so each prefix matches only itself. Spark
+        then lists the matched directories as part of the scan, with
+        ``recursiveFileLookup`` so a file in a nested subdirectory is
+        read. Like any Spark directory read it skips names starting with
+        ``_`` or ``.`` (``_SUCCESS`` markers, ``.crc`` files).
+        """
+        if not prefixes:
+            return None
+        pattern = "%s/{%s}" % (
+            _glob_escape(self.root),
+            ",".join(_glob_escape(p.strip("/")) for p in prefixes),
+        )
+        fs, path, _ = self._fs(pattern)
+        matched = fs.globStatus(path) or []
+        logger.info("%d of %d prefixes matched under %s", len(matched), len(prefixes), self.root)
+        if not matched:
+            return None
+        reader = self._csv_reader(schema).option("recursiveFileLookup", True)
+        # Spark globs any path holding a metacharacter: escape it again
+        return reader.csv(sorted(_glob_escape(st.getPath().toString()) for st in matched))
+
+    def _csv_reader(
+        self,
+        schema: StructType | str | None,
+        sep: str = ",",
+        encoding: str = "UTF-8",
+        header: bool = True,
+    ):
+        reader = self.spark.read.options(header=header, sep=sep, encoding=encoding)
+        if schema is not None:
+            return reader.schema(schema)
+        return reader.option("inferSchema", True)
 
     def read_parquet(self, paths: str | list[str]) -> DataFrame:
         if isinstance(paths, str):
@@ -187,8 +239,6 @@ class FileSystemConnector:
         # Hadoop returns scheme URIs both as "file:///x" and "file:/x" —
         # treat any "scheme:/" prefix (or an absolute local path) as already
         # resolved.
-        import re
-
         if p.startswith("/") or re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:/", p):
             return p
         return f"{self.root}/{p}"

@@ -8,10 +8,10 @@ import json
 
 from pyspark.sql import functions as F
 
+from trading_data_pipeline_spark.operators.bars import daily_ohlcv
 from trading_data_pipeline_spark.operators.indicators2_queries import (
     dollar_bars,
     mfi,
-    ohlc_bars,
     stochastic,
 )
 from trading_data_pipeline_spark.operators.risk_queries import sortino
@@ -47,7 +47,7 @@ def test_ohlc_bars_first_last_min_max(spark):
         [(1, 1, 10.0, 5), (2, 1, 14.0, 2), (3, 1, 8.0, 1), (4, 1, 12.0, 2),
          (5, 2, 20.0, 1)],
     )
-    bars = {r.day.day: r for r in ohlc_bars(ev).collect()}
+    bars = {r.day.day: r for r in daily_ohlcv(ev).collect()}
     b1 = bars[1]
     assert (b1.o_c, b1.h_c, b1.l_c, b1.c_c, b1.vol) == (
         1000, 1400, 800, 1200, 10

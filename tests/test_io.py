@@ -196,6 +196,25 @@ def test_multi_path_scan_unions(conn, df2):
     assert both.count() == 4
 
 
+@pytest.mark.parametrize("fmt", ["csv", "parquet", "json", "xml", "orc"])
+def test_readers_take_glob_metacharacter_keys_literally(conn, spark, fmt):
+    """A key holding ``{ }`` or ``[ ]`` names one object, not a pattern:
+    every reader returns exactly that key's rows. Unescaped, Spark would
+    read ``d-15`` and ``d-16`` for ``d-1[56]``, and ``xy`` for ``x{y}``."""
+    rows = {"d-1[56]": 99, "d-15": 15, "d-16": 16, "x{y}": 7, "xy": 8}
+    for key, v in rows.items():
+        conn.write(spark.createDataFrame([(v,)], "v int"), key, fmt)
+    read = {
+        "csv": lambda k: conn.read_csv(k, schema="v int"),
+        "parquet": conn.read_parquet,
+        "json": lambda k: conn.read_json(k, schema="v int"),
+        "xml": lambda k: conn.read_xml(k, schema="v int"),
+        "orc": conn.read_orc,
+    }[fmt]
+    for key in ("d-1[56]", "x{y}"):
+        assert [r.v for r in read(key).collect()] == [rows[key]]
+
+
 def test_write_single_object_overwrites_atomically(conn, spark, tmp_path):
     """Rewriting an existing key must swap content without a window in
     which the key is absent (delete-then-rename would leave one; a

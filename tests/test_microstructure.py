@@ -25,9 +25,7 @@ def _ev(spark, rows, etype="click"):
 
 
 def test_daily_bars_close_vol_and_moves(spark):
-    from trading_data_pipeline_spark.operators.microstructure_queries import (
-        daily_bars,
-    )
+    from trading_data_pipeline_spark.operators.bars import daily_bars
 
     ev = _ev(
         spark,

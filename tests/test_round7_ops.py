@@ -750,9 +750,7 @@ def test_markout_trending_tape_is_positive(spark):
 def test_return_split_identity_with_close_to_close(spark, sf_dir):
     """overnight + intraday must equal the close-to-close total move per
     type (exact integer identity on the real table)."""
-    from trading_data_pipeline_spark.operators.microstructure_queries import (
-        daily_bars,
-    )
+    from trading_data_pipeline_spark.operators.bars import daily_bars
     from trading_data_pipeline_spark.operators.trading_queries import (
         return_split,
     )

@@ -121,6 +121,34 @@ def test_stream_sink_batch_replay_is_idempotent(spark, staged_events, tmp_path):
     assert out.count() == b0.count() + b1.count()
 
 
+def test_meta_sink_takes_emptiness_from_its_write(
+    spark, staged_events, tmp_path, jobs_started
+):
+    """The sink runs no emptiness probe of its own: the write's probe
+    decides. An empty batch writes no rows and leaves the meta file as it
+    was. A non-empty batch starts JOBS_PER_BATCH jobs: the write's probe,
+    the parquet write, and the distinct-dates collect, whose shuffle stage
+    AQE runs as a job of its own."""
+    from trading_data_pipeline_spark.sources.connector import FileSystemConnector
+    from trading_data_pipeline_spark.streaming.sinks import make_meta_sink
+
+    JOBS_PER_BATCH = 4
+    lake = tmp_path / "lake"
+    conn = FileSystemConnector(spark, str(lake))
+    sink = make_meta_sink(conn, "events_lake", "meta/events_meta.csv")
+    batch = spark.read.parquet(staged_events).withColumn(
+        "date", F.to_date("ts")
+    )
+    assert jobs_started("meta-sink", lambda: sink(batch, 0)) == JOBS_PER_BATCH
+    meta = (lake / "meta/events_meta.csv").read_bytes()
+
+    sink(batch.limit(0), 1)
+    assert (lake / "meta/events_meta.csv").read_bytes() == meta
+    assert not list((lake / "events_lake").glob("*/_batch_id=1"))
+    out = spark.read.parquet(str(lake / "events_lake"))
+    assert out.count() == batch.count()
+
+
 def test_stateful_running_totals_converge_to_batch(spark, staged_events):
     """applyInPandasWithState totals (update mode, last update per user)
     must converge to the batch groupBy aggregate."""

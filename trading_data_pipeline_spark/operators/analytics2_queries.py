@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
+from .bars import cents
 
 IQR_K = 1.5
 GAP_TOP_K = 3
@@ -83,8 +84,7 @@ def outlier_iqr(events: DataFrame, k: float = IQR_K) -> DataFrame:
     """Tukey-fence outliers per event type on exact integer cents:
     quartiles of integers interpolate onto exact binary fractions, the
     fences are ±k·IQR around them, and the counts are integers."""
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    vals = events.select("event_type", cents.alias("c"))
+    vals = events.select("event_type", cents().alias("c"))
     qs = vals.groupBy("event_type").agg(
         F.percentile("c", F.lit(0.25)).alias("q1"),
         F.percentile("c", F.lit(0.75)).alias("q3"),
@@ -393,7 +393,7 @@ def theil_sen(events: DataFrame) -> DataFrame:
         .groupBy("event_type", F.to_date("ts").alias("d"))
         .agg(
             F.sum(
-                F.floor(F.col("value") * 100 + 0.5).cast("long")
+                cents()
             ).alias("y")
         )
         .select(

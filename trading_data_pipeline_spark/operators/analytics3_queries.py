@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .microstructure_queries import _BARS_SQL, daily_bars
+from .bars import _BARS_SQL, daily_moves
 
 CUSUM_K = 100  # slack, cents
 CUSUM_H = 1000  # alarm threshold, cents
@@ -49,14 +49,6 @@ _MOVES_SQL = f"""{_BARS_SQL}, mv AS (
     )"""
 
 
-def _moves(events: DataFrame) -> DataFrame:
-    return (
-        daily_bars(events)
-        .filter(F.col("dc").isNotNull())
-        .select("event_type", "day", F.col("dc").alias("x"), "vol")
-    )
-
-
 # ------------------------------------------------------------------ CUSUM
 
 
@@ -68,7 +60,7 @@ def cusum(
     w = Window.partitionBy("event_type").orderBy("day")
     wc = w.rowsBetween(Window.unboundedPreceding, 0)
     d = (
-        _moves(events)
+        daily_moves(events)
         .withColumn("cp", F.sum(F.col("x") - k).over(wc))
         .withColumn("cn", F.sum(-F.col("x") - k).over(wc))
     )
@@ -155,7 +147,7 @@ def trimmed_mean(events: DataFrame) -> DataFrame:
     """10 %-each-side trimmed mean of daily moves per type: exact
     order-statistic bounds, exact integer sum over the kept band."""
     w = Window.partitionBy("event_type").orderBy("x", "day")
-    d = _moves(events).withColumn("rn", F.row_number().over(w))
+    d = daily_moves(events).withColumn("rn", F.row_number().over(w))
     cnt = d.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     lo = F.floor(F.col("n") * TRIM_PCT_NUM / TRIM_PCT_DEN)
     kept = d.join(F.broadcast(cnt), "event_type").filter(
@@ -300,7 +292,7 @@ def pastor_stambaugh(events: DataFrame) -> DataFrame:
     cross-moments (exact integer inputs)."""
     w = Window.partitionBy("event_type").orderBy("day")
     d = (
-        _moves(events)
+        daily_moves(events)
         .withColumn("y", F.lead("x").over(w))
         .filter(F.col("y").isNotNull())
         .select(

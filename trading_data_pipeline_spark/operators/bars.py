@@ -1,0 +1,156 @@
+"""Bars: the one definition of open/high/low/close in the package.
+
+The reference's whole computation is the per-instrument, per-day bar
+(xetra_transformer.py:148-185): open = first StartPrice by Time, close =
+last StartPrice by Time, min, max, summed volume. Every bar in the
+package — the Report1 ETL, q_report1, the daily bars the indicator, risk
+and microstructure queries run on, and dollar bars — is built by
+:func:`ohlc` below, and its DuckDB twin is ``_BARS_SQL``.
+
+Prices are fixed to integer cents (:func:`cents`, SQL ``_CENTS``) before
+any bar arithmetic, so every comparison and sum over bars is exact on
+both engines.
+
+Left on other forms, each for a reason:
+- ``trading_queries.bar_aggs`` uses ``min_by``/``max_by``: it is shared
+  verbatim with the streaming ``F.window`` aggregation, and streaming
+  cannot run window functions.
+- the ``min_by`` opens/closes in ``microstructure_queries`` are fused
+  with other per-day aggregates in one pass.
+- the ``_ohlc_frame`` micro-queries in ``report1_queries`` exist to
+  exercise the window operator itself.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import functions as F
+
+_CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
+
+# Daily bar CTE shared by the per-day estimators: integer-cent close
+# (last event in (ts, event_id) order — the report1 close contract) and
+# total traded size from props.$.k.
+_BARS_SQL = f"""
+    e AS (
+      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
+             {_CENTS} AS cents,
+             coalesce(json_extract_string(props, '$.k')::BIGINT, 0) AS q
+      FROM events
+    ), w AS (
+      SELECT *,
+             last_value(cents) OVER
+               (PARTITION BY event_type, day ORDER BY ts, event_id
+                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+               AS c
+      FROM e
+    ), bars AS (
+      SELECT event_type, day, min(c) AS c_c,
+             CAST(sum(q) AS BIGINT) AS vol
+      FROM w GROUP BY event_type, day
+    ), moves AS (
+      SELECT event_type, day, c_c, vol,
+             c_c - lag(c_c) OVER (PARTITION BY event_type ORDER BY day)
+               AS dc,
+             lag(c_c) OVER (PARTITION BY event_type ORDER BY day)
+               AS prev_c
+      FROM bars
+    )
+"""
+
+
+def cents(col: str = "value") -> Column:
+    """Integer cents ``floor(v·100 + 0.5)::long`` (SQL twin: ``_CENTS``)."""
+    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("long")
+
+
+def ohlc(
+    df: DataFrame,
+    keys: list[str],
+    order: list[str],
+    price: str,
+    *aggs: Column,
+    low: str | None = None,
+    high: str | None = None,
+) -> DataFrame:
+    """One bar per ``keys`` group: ``keys + (open, high, low, close, *aggs)``.
+
+    open/close are ``first``/``last`` of ``price`` over a ROWS UNBOUNDED
+    frame partitioned by ``keys`` and ordered by ``order``; one
+    ``groupBy(keys)`` then folds them with ``min`` next to
+    ``max(high or price)``, ``min(low or price)`` and ``aggs``. The
+    window's exchange on ``keys`` is reused by the groupBy, so a bar
+    costs one shuffle.
+
+    Exactness: the window value is constant within a group, and ``min``
+    of a constant returns it, so open/close are exactly the first/last
+    row's price. The result is deterministic only if ``order`` is unique
+    within a group — callers append ``event_id`` or tie-break columns.
+    A NULL price in the first (last) row gives a NULL open (close), as
+    DuckDB's ``first_value``/``last_value`` do. Catalyst prunes the
+    outputs a caller never reads, window functions and aggregates alike.
+    """
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    return (
+        df.withColumns(
+            {"_open": F.first(price).over(w), "_close": F.last(price).over(w)}
+        )
+        .groupBy(*keys)
+        .agg(
+            F.min("_open").alias("open"),
+            F.max(high or price).alias("high"),
+            F.min(low or price).alias("low"),
+            F.min("_close").alias("close"),
+            *aggs,
+        )
+    )
+
+
+def daily_ohlcv(events: DataFrame) -> DataFrame:
+    """(event_type, day, o_c, h_c, l_c, c_c, vol): integer-cent daily bar
+    of ``events`` in (ts, event_id) order, vol = Σ coalesce(props.$.k, 0)
+    — ONE (event_type, day) exchange."""
+    qty = F.coalesce(F.get_json_object("props", "$.k").cast("long"), F.lit(0))
+    day = events.select(
+        "event_type",
+        F.col("ts").cast("date").alias("day"),
+        "ts",
+        "event_id",
+        cents().alias("cents"),
+        qty.alias("q"),
+    )
+    return ohlc(
+        day, ["event_type", "day"], ["ts", "event_id"], "cents",
+        F.sum("q").alias("vol"),
+    ).withColumnsRenamed(
+        {"open": "o_c", "high": "h_c", "low": "l_c", "close": "c_c"}
+    )
+
+
+def daily_bars(events: DataFrame) -> DataFrame:
+    """(event_type, day, c_c, vol, dc, prev_c): daily close and volume
+    plus the day-over-day close change — :func:`daily_ohlcv`, then a
+    per-type window (SQL twin: ``_BARS_SQL``'s ``moves``)."""
+    wt = Window.partitionBy("event_type").orderBy("day")
+    return daily_ohlcv(events).select(
+        "event_type",
+        "day",
+        "c_c",
+        "vol",
+        (F.col("c_c") - F.lag("c_c").over(wt)).alias("dc"),
+        F.lag("c_c").over(wt).alias("prev_c"),
+    )
+
+
+def daily_moves(events: DataFrame) -> DataFrame:
+    """(event_type, day, x, vol): integer-cent daily close moves, the
+    first day of each type (no previous close) dropped."""
+    return (
+        daily_bars(events)
+        .filter(F.col("dc").isNotNull())
+        .select("event_type", "day", F.col("dc").alias("x"), "vol")
+    )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..plans.global_rank import global_cumsum, global_row_number
 from ..registry import load, register
+from .bars import cents
 
 N_SCORE_BUCKETS = 5
 MIN_PAIR_COUNT = 2  # keep pairs co-purchased in >= 2 orders
@@ -853,7 +854,7 @@ def diff_in_diff(events: DataFrame, split: str = DID_SPLIT) -> DataFrame:
             (F.col("ts") >= F.lit(split).cast("timestamp"))
             .cast("int")
             .alias("post"),
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
+            cents().alias("cents"),
         )
         .groupBy("treat", "post")
         .agg(F.sum("cents").alias("s"), F.count(F.lit(1)).alias("n"))
@@ -1534,9 +1535,8 @@ def power_analysis(events: DataFrame) -> DataFrame:
     totals; one sqrt chain at the end, degenerate (σ = 0 or n < 2)
     rows NULL. Two partial-agged exchanges (user rollup + 1-row
     stats)."""
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     users = (
-        events.select("user_id", cents.alias("c"))
+        events.select("user_id", cents().alias("c"))
         .groupBy("user_id")
         .agg(F.sum("c").alias("m"))
     )
@@ -1731,7 +1731,7 @@ def theil_index(events: DataFrame) -> DataFrame:
     (q_hill_tail precedent), ln(μ) in the final |types|-row chain."""
     d = events.select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("x"),
+        cents().alias("x"),
     ).filter(F.col("x") > 0)
     g = d.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("ng"),

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..plans import ensure_parallelism
 from ..registry import load, register
+from .bars import _CENTS, cents
 
 WC_MIN, WC_MAX = 20, 1000  # Gopher 50..100k scaled to the test corpus
 MWL_LO, MWL_HI = 3, 10
@@ -66,12 +67,7 @@ DF_NUM, DF_DEN = 39, 50  # "common" token: doc-freq ≥ 78 % of corpus
 BRIER_BINS = 5
 ZIPF_K = 100
 
-_CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 _STOP_SQL = "['the','a','of','and','to']"
-
-
-def _cents() -> F.Column:
-    return F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
 
 
 # --------------------------------------------------------- Gopher gate
@@ -247,7 +243,7 @@ def psi(events: DataFrame, bins: int = PSI_BINS) -> DataFrame:
     base = events.select(
         "event_type",
         (F.dayofmonth("ts") <= 15).cast("int").alias("fh"),
-        _cents().alias("c"),
+        cents().alias("c"),
     )
     rng = base.groupBy("event_type").agg(
         F.min("c").alias("mn"),
@@ -356,7 +352,7 @@ def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mutual_info(events: DataFrame, bins: int = MI_BINS) -> DataFrame:
     """MI + marginal entropies + NMI between event_type and the
     global equal-width value bin; exact integer contingency counts."""
-    base = events.select("event_type", _cents().alias("c"))
+    base = events.select("event_type", cents().alias("c"))
     rng = base.agg(
         F.min("c").alias("mn"),
         F.max("c").alias("mx"),

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .microstructure_queries import _BARS_SQL, _CENTS, daily_bars
+from .bars import _BARS_SQL, _CENTS, cents, daily_bars, daily_ohlcv, ohlc
 
 STOCH_N = 14   # %K lookback (days)
 STOCH_D = 3    # %D smoothing (days)
@@ -48,7 +48,7 @@ DB_THRESHOLD = 10_000_000  # dollar-bar size: cents of traded value
 SORTINO_SCALE = 10**8
 
 # Daily OHLC bars in integer cents + volume — the full-bar twin of
-# microstructure_queries._BARS_SQL (which only carries the close).
+# bars._BARS_SQL (which only carries the close).
 _OHLC_SQL = f"""
     e AS (
       SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
@@ -74,37 +74,6 @@ _OHLC_SQL = f"""
 """
 
 
-def ohlc_bars(events: DataFrame) -> DataFrame:
-    """(event_type, day, o_c, h_c, l_c, c_c, vol): integer-cent daily
-    OHLC + volume — one (event_type, day) exchange."""
-    qty = F.coalesce(
-        F.get_json_object("props", "$.k").cast("long"), F.lit(0)
-    )
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    wd = Window.partitionBy("event_type", "day").orderBy("ts", "event_id")
-    wdf = wd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return (
-        events.select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            cents.alias("cents"),
-            qty.alias("q"),
-        )
-        .withColumn("o", F.first("cents").over(wd))
-        .withColumn("c", F.last("cents").over(wdf))
-        .groupBy("event_type", "day")
-        .agg(
-            F.min("o").alias("o_c"),
-            F.max("cents").alias("h_c"),
-            F.min("cents").alias("l_c"),
-            F.min("c").alias("c_c"),
-            F.sum("q").alias("vol"),
-        )
-    )
-
-
 # ------------------------------------------------- stochastic oscillator
 
 def stochastic(
@@ -123,7 +92,7 @@ def stochastic(
     wr = Window.partitionBy("event_type").orderBy("day")
     wd = wr.rowsBetween(-(d - 1), 0)
     bars = (
-        ohlc_bars(events)
+        daily_ohlcv(events)
         .withColumn("ll", F.min("l_c").over(wf))
         .withColumn("hh", F.max("h_c").over(wf))
         .withColumn("rn", F.row_number().over(wr))
@@ -193,7 +162,7 @@ def mfi(events: DataFrame, n: int = MFI_N) -> DataFrame:
     wr = Window.partitionBy("event_type").orderBy("day")
     wf = wr.rowsBetween(-(n - 1), 0)
     bars = (
-        ohlc_bars(events)
+        daily_ohlcv(events)
         .withColumn("tp", F.col("h_c") + F.col("l_c") + F.col("c_c"))
         .withColumn("flow", F.col("tp") * F.col("vol"))
         .withColumn("dtp", F.col("tp") - F.lag("tp").over(wr))
@@ -279,7 +248,6 @@ def dollar_bars(
     is identified by the dollars accumulated BEFORE the trade, so the
     trade that crosses the threshold still belongs to the bar it
     closes. OHLC per bar in exact integer cents."""
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     qty = F.coalesce(
         F.get_json_object("props", "$.k").cast("long"), F.lit(0)
     )
@@ -288,8 +256,8 @@ def dollar_bars(
         F.col("ts").cast("date").alias("day"),
         "ts",
         "event_id",
-        cents.alias("cents"),
-        (cents * qty).alias("dollars"),
+        cents().alias("cents"),
+        (cents() * qty).alias("dollars"),
     )
     wday = (
         Window.partitionBy("event_type", "day")
@@ -317,35 +285,23 @@ def dollar_bars(
     # double path can misplace boundary trades past 2^53 cents), and
     # bit-identical to the streaming job's ``gcum // threshold``.
     bar = F.expr(f"CAST((gcum - dollars) DIV {int(threshold)} AS BIGINT)")
-    wbar = Window.partitionBy("event_type", "bar_id").orderBy(
-        "ts", "event_id"
+    bars = ohlc(
+        cum.withColumn("bar_id", bar),
+        ["event_type", "bar_id"],
+        ["ts", "event_id"],
+        "cents",
+        F.count(F.lit(1)).alias("n_trades"),
+        F.sum("dollars").alias("bar_dollars"),
     )
-    wbarf = wbar.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return (
-        cum.withColumn("bar_id", bar)
-        .withColumn("o", F.first("cents").over(wbar))
-        .withColumn("c", F.last("cents").over(wbarf))
-        .groupBy("event_type", "bar_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_trades"),
-            F.min("o").alias("open_c"),
-            F.max("cents").alias("high_c"),
-            F.min("cents").alias("low_c"),
-            F.min("c").alias("close_c"),
-            F.sum("dollars").alias("bar_dollars"),
-        )
-        .select(
-            "event_type",
-            "bar_id",
-            "n_trades",
-            (F.col("open_c") / 100.0).alias("open"),
-            (F.col("high_c") / 100.0).alias("high"),
-            (F.col("low_c") / 100.0).alias("low"),
-            (F.col("close_c") / 100.0).alias("close"),
-            "bar_dollars",
-        )
+    return bars.select(
+        "event_type",
+        "bar_id",
+        "n_trades",
+        *(
+            (F.col(c) / 100.0).alias(c)
+            for c in ("open", "high", "low", "close")
+        ),
+        "bar_dollars",
     )
 
 
@@ -550,8 +506,6 @@ def macd(
     double literals shared by both engines (no pow in either plan);
     rows without a full slow+signal history are dropped.
     """
-    from .microstructure_queries import daily_bars
-
     bars = daily_bars(events).select(
         "event_type", "day", (F.col("c_c") / 100.0).alias("close")
     )
@@ -581,8 +535,6 @@ def macd(
 
 
 def _macd_oracle() -> str:
-    from .microstructure_queries import _BARS_SQL
-
     wf, ws, wg = (
         _ema_weights(MACD_FAST),
         _ema_weights(MACD_SLOW),
@@ -637,8 +589,6 @@ def ewma_vol(
     are Python-computed double literals shared by both plans (no pow);
     dc² is an exact BIGINT before the literal dot product; one final
     sqrt. Rows without a full L-move history are dropped."""
-    from .microstructure_queries import daily_bars
-
     weights = [lam**i for i in range(L)]
     moves = daily_bars(events).filter(F.col("dc").isNotNull()).select(
         "event_type", "day", (F.col("dc") * F.col("dc")).alias("dc2")
@@ -657,8 +607,6 @@ def ewma_vol(
 
 
 def _ewma_oracle() -> str:
-    from .microstructure_queries import _BARS_SQL
-
     weights = [EWMA_LAM**i for i in range(EWMA_L)]
     return f"""
     WITH {_BARS_SQL}, m AS (
@@ -704,7 +652,7 @@ def donchian(events: DataFrame, n: int = DONCHIAN_N) -> DataFrame:
     .5 cents). Rows without a full lookback are dropped. One (type,
     day) rollup, then per-type windows over the calendar-bounded bar
     table."""
-    bars = ohlc_bars(events)
+    bars = daily_ohlcv(events)
     wt = Window.partitionBy("event_type").orderBy("day")
     wn = wt.rowsBetween(-n, -1)
     out = (

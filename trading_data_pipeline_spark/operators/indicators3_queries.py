@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
+from .bars import daily_ohlcv
 
 WR_N = 14
 AROON_N = 10
@@ -90,34 +91,8 @@ _OHLCV_SQL = """
 def _ohlcv(events: DataFrame) -> DataFrame:
     """(event_type, day, o_c, h_c, l_c, c_c, vol, rn): integer-cent
     daily OHLCV + per-type day index — ONE fact-sized exchange."""
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    qty = F.coalesce(
-        F.get_json_object("props", "$.k").cast("long"), F.lit(0)
-    )
-    wd = Window.partitionBy("event_type", "day").orderBy("ts", "event_id")
-    wdf = wd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    bars = (
-        events.select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            cents.alias("cents"),
-            qty.alias("qy"),
-        )
-        .withColumn("o", F.first("cents").over(wd))
-        .withColumn("c", F.last("cents").over(wdf))
-        .groupBy("event_type", "day")
-        .agg(
-            F.min("o").alias("o_c"),
-            F.max("cents").alias("h_c"),
-            F.min("cents").alias("l_c"),
-            F.min("c").alias("c_c"),
-            F.sum("qy").alias("vol"),
-        )
-    )
     wt = Window.partitionBy("event_type").orderBy("day")
-    return bars.withColumn("rn", F.row_number().over(wt))
+    return daily_ohlcv(events).withColumn("rn", F.row_number().over(wt))
 
 
 # ---------------------------------------------------------- Williams %R

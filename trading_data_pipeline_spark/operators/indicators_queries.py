@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
+from .bars import daily_ohlcv
 
 BOLL_N = 5  # rolling window (days)
 RSI_N = 14
@@ -64,23 +65,8 @@ _DAILY_CLOSE_SQL = """
 def daily_close(events: DataFrame) -> DataFrame:
     """(event_type, day, close_c): integer-cent daily close, last event in
     (ts, event_id) order — one exchange on (event_type, day)."""
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    wd = (
-        Window.partitionBy("event_type", "day")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    return (
-        events.select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            cents.alias("cents"),
-        )
-        .withColumn("c", F.last("cents").over(wd))
-        .groupBy("event_type", "day")
-        .agg(F.min("c").alias("close_c"))
+    return daily_ohlcv(events).select(
+        "event_type", "day", F.col("c_c").alias("close_c")
     )
 
 
@@ -234,27 +220,6 @@ def q_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def candle_patterns(events: DataFrame) -> DataFrame:
     """Doji / hammer / bullish-engulfing flags per daily OHLC bar, all in
     exact integer cents (doji avoids division: ``body·10 ≤ range``)."""
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    wd = Window.partitionBy("event_type", "day").orderBy("ts", "event_id")
-    wdf = wd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    bars = (
-        events.select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            cents.alias("cents"),
-        )
-        .withColumn("o", F.first("cents").over(wd))
-        .withColumn("c", F.last("cents").over(wdf))
-        .groupBy("event_type", "day")
-        .agg(
-            F.min("o").alias("o_c"),
-            F.max("cents").alias("h_c"),
-            F.min("cents").alias("l_c"),
-            F.min("c").alias("c_c"),
-        )
-    )
     wp = Window.partitionBy("event_type").orderBy("day")
     body = F.abs(F.col("c_c") - F.col("o_c"))
     rng = F.col("h_c") - F.col("l_c")
@@ -262,7 +227,7 @@ def candle_patterns(events: DataFrame) -> DataFrame:
     lower = F.least("o_c", "c_c") - F.col("l_c")
     prev_o, prev_c = F.lag("o_c").over(wp), F.lag("c_c").over(wp)
     return (
-        bars.withColumn("p_o", prev_o)
+        daily_ohlcv(events).withColumn("p_o", prev_o)
         .withColumn("p_c", prev_c)
         .select(
             "event_type",
@@ -427,31 +392,6 @@ def q_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
 ATR_N = 14
 
 
-def _daily_bars(events: DataFrame) -> DataFrame:
-    """(event_type, day, o_c, h_c, l_c, c_c) integer-cent daily OHLC."""
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    wd = Window.partitionBy("event_type", "day").orderBy("ts", "event_id")
-    wdf = wd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return (
-        events.select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            cents.alias("cents"),
-        )
-        .withColumn("o", F.first("cents").over(wd))
-        .withColumn("c", F.last("cents").over(wdf))
-        .groupBy("event_type", "day")
-        .agg(
-            F.min("o").alias("o_c"),
-            F.max("cents").alias("h_c"),
-            F.min("cents").alias("l_c"),
-            F.min("c").alias("c_c"),
-        )
-    )
-
-
 def atr(events: DataFrame, n: int = ATR_N) -> DataFrame:
     """Average True Range: TR = max(h−l, |h−prev_c|, |l−prev_c|) per daily
     bar, SMA over an ``n``-row frame — the volatility denominator every
@@ -466,7 +406,7 @@ def atr(events: DataFrame, n: int = ATR_N) -> DataFrame:
         F.abs(F.col("l_c") - prev_c),
     )
     d = (
-        _daily_bars(events)
+        daily_ohlcv(events)
         .withColumn("tr", tr)
         .withColumn("rn", F.row_number().over(wp))
         .filter(F.col("rn") >= 2)  # first bar has no prev close → no TR
@@ -537,30 +477,13 @@ def obv(events: DataFrame) -> DataFrame:
     over daily bars — the classic accumulation/distribution indicator.
     Volume is the JSON ``props.$.k`` trade size; all-integer running sum.
     """
-    qty = F.get_json_object("props", "$.k").cast("long")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    wd = Window.partitionBy("event_type", "day").orderBy("ts", "event_id")
-    wdf = wd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    bars = (
-        events.select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            cents.alias("cents"),
-            F.coalesce(qty, F.lit(0)).alias("q"),
-        )
-        .withColumn("c", F.last("cents").over(wdf))
-        .groupBy("event_type", "day")
-        .agg(F.min("c").alias("c_c"), F.sum("q").alias("vol"))
-    )
     wp = Window.partitionBy("event_type").orderBy("day")
     wrun = wp.rowsBetween(Window.unboundedPreceding, 0)
     signed = F.when(F.col("c_c") > F.lag("c_c").over(wp), F.col("vol")).when(
         F.col("c_c") < F.lag("c_c").over(wp), -F.col("vol")
     ).otherwise(F.lit(0))
     return (
-        bars.withColumn("sv", signed)
+        daily_ohlcv(events).withColumn("sv", signed)
         .withColumn("obv", F.sum("sv").over(wrun))
         .select("event_type", "day", (F.col("c_c") / 100.0).alias("close"),
                 "vol", "obv")

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
+from .bars import cents
 
 TMP_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -714,12 +715,11 @@ def table_checksum(orders: DataFrame) -> DataFrame:
     independent of row order AND partitioning — unlike any hash-of-
     concatenation scheme.
     """
-    cents = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
     row = F.concat_ws(
         "|",
         F.col("o_orderkey"),
         F.col("o_custkey"),
-        cents,
+        cents("o_totalprice"),
         F.col("o_orderdate").cast("date").cast("string"),
         F.col("o_orderpriority"),
     )

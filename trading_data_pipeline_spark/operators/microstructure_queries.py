@@ -37,8 +37,9 @@ division/sqrt chain whose operands are exact — IEEE-deterministic on
 both engines, no libm transcendentals anywhere.
 
 Scale design: every query collapses the event stream to daily bars with
-ONE (event_type, day)-keyed exchange (the report1 shape), then works on
-the ~10⁵×-smaller bar table in per-type windows. Integer sums assume
+ONE (event_type, day)-keyed exchange — ``bars.daily_bars`` (``bars.py``
+holds the one bar definition and its exactness argument) — then works
+on the ~10⁵×-smaller bar table in per-type windows. Integer sums assume
 |cents|·|volume| products < 2⁶³ — at larger magnitudes switch the sum
 columns to DECIMAL(38,0) (noted per query).
 """
@@ -50,79 +51,10 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
+from .bars import _BARS_SQL, _CENTS, cents, daily_bars
 
 AMIHUD_SCALE = 10**12  # fixed-point scale for per-day |ret|/vol ratios
 XCORR_SCALE = 10**8
-
-_CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
-
-# Daily bar CTE shared by the per-day estimators: integer-cent close
-# (last event in (ts, event_id) order — the report1 close contract) and
-# total traded size from props.$.k.
-_BARS_SQL = f"""
-    e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             {_CENTS} AS cents,
-             coalesce(json_extract_string(props, '$.k')::BIGINT, 0) AS q
-      FROM events
-    ), w AS (
-      SELECT *,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), bars AS (
-      SELECT event_type, day, min(c) AS c_c,
-             CAST(sum(q) AS BIGINT) AS vol
-      FROM w GROUP BY event_type, day
-    ), moves AS (
-      SELECT event_type, day, c_c, vol,
-             c_c - lag(c_c) OVER (PARTITION BY event_type ORDER BY day)
-               AS dc,
-             lag(c_c) OVER (PARTITION BY event_type ORDER BY day)
-               AS prev_c
-      FROM bars
-    )
-"""
-
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("long")
-
-
-def daily_bars(events: DataFrame) -> DataFrame:
-    """(event_type, day, c_c, vol, dc, prev_c): integer-cent daily close
-    + summed props.$.k size + day-over-day close change — ONE
-    (event_type, day) exchange, then a per-type window."""
-    qty = F.coalesce(
-        F.get_json_object("props", "$.k").cast("long"), F.lit(0)
-    )
-    wd = (
-        Window.partitionBy("event_type", "day")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    bars = (
-        events.select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            _cents().alias("cents"),
-            qty.alias("q"),
-        )
-        .withColumn("c", F.last("cents").over(wd))
-        .groupBy("event_type", "day")
-        .agg(F.min("c").alias("c_c"), F.sum("q").alias("vol"))
-    )
-    wt = Window.partitionBy("event_type").orderBy("day")
-    return bars.select(
-        "*",
-        (F.col("c_c") - F.lag("c_c").over(wt)).alias("dc"),
-        F.lag("c_c").over(wt).alias("prev_c"),
-    )
-
 
 def realized_vol(events: DataFrame) -> DataFrame:
     """Per-(type, day) realized volatility from intra-day tick moves:
@@ -135,7 +67,7 @@ def realized_vol(events: DataFrame) -> DataFrame:
             F.col("ts").cast("date").alias("day"),
             "ts",
             "event_id",
-            _cents().alias("cents"),
+            cents().alias("cents"),
         )
         .withColumn("d", F.col("cents") - F.lag("cents").over(wt))
         .filter(F.col("d").isNotNull())
@@ -435,7 +367,7 @@ def weighted_median(events: DataFrame) -> DataFrame:
         F.get_json_object("props", "$.k").cast("long"), F.lit(0)
     )
     cw = (
-        events.select("event_type", _cents().alias("cents"), qty.alias("q"))
+        events.select("event_type", cents().alias("cents"), qty.alias("q"))
         .groupBy("event_type", "cents")
         .agg(F.sum("q").alias("w"))
     )
@@ -511,13 +443,12 @@ def _tick_signed(
     columns); ``s`` is NULL for the evidence-free prefix of a type's
     stream, which callers filter.
     """
-    cents = _cents()
     cols = [
         "event_type",
         F.col("ts").cast("date").alias("day"),
         "ts",
         "event_id",
-        cents.alias("c"),
+        cents().alias("c"),
     ]
     if extra:
         cols += [e.alias(n) for n, e in extra.items()]

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
+from .bars import cents
 
 SESSION_GAP_MIN = 30
 
@@ -278,9 +279,8 @@ def benford_profile(df: DataFrame, value_col: str = "value") -> DataFrame:
     log10(1000) = 2.9999... on neither. One partial-aggregated groupBy
     into a 9-row frame; the total joins back as a broadcast scalar.
     """
-    cents = F.floor(F.col(value_col) * 100 + 0.5).cast("long")
     counts = (
-        df.select(cents.alias("_c"))
+        df.select(cents(value_col).alias("_c"))
         .filter(F.col("_c") > 0)
         .select(F.substring(F.col("_c").cast("string"), 1, 1).cast("int").alias("digit"))
         .groupBy("digit")

@@ -22,13 +22,12 @@ pipeline order — SURVEY.md §2.b/§2.c rows 9-20:
     divergence, SURVEY.md §7 risk register).
 
 Spark execution notes (100 TB design):
-- Steps 3+4 and 6 share the same partitioning key prefix (ISIN, Date): the
-  window exchange's hash partitioning is reused by the aggregation, so the
-  whole report needs exactly two shuffles (one over (ISIN, Date), one over
-  (ISIN) for the LAG). Catalyst plans it that way from this declarative
-  chain — verified via .explain in tests/test_plans.py.
-- first/last use an explicit unbounded frame: the default frame
-  (unboundedPreceding → currentRow) would make LAST a running-last.
+- Steps 3, 4 and 6 are one call to ``bars.ohlc``, the package's only bar
+  definition; its docstring carries the exactness argument (first/last
+  over an unbounded ROWS frame, folded by ``min``). Its window exchange on
+  (ISIN, Date) is reused by the aggregation, so the whole report needs
+  exactly two shuffles: that one and one over (ISIN) for the LAG —
+  tests/test_plans.py pins the count.
 - Determinism: ties on the order key are broken by ``tiebreak_cols`` (the
   reference inherits pandas stable file order, which is not reproducible on
   a distributed engine; fixtures have unique times so goldens are unaffected).
@@ -40,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import SourceConfig, TargetConfig
+from .bars import ohlc
 
 
 def transform_report1(
@@ -61,30 +61,21 @@ def transform_report1(
     if not df.columns:
         return df
 
-    order_cols = [src.src_col_time, *(tiebreak_cols or [])]
-    grp = Window.partitionBy(src.src_col_isin, src.src_col_date).orderBy(*order_cols)
-    frame = grp.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-
-    projected = df.select(*src.src_columns).na.drop("any")
-    with_oc = projected.withColumns(
-        {
-            trg.trg_col_op_price: F.first(src.src_col_start_price).over(frame),
-            trg.trg_col_clos_price: F.last(src.src_col_start_price).over(frame),
-        }
+    agg = ohlc(
+        df.select(*src.src_columns).na.drop("any"),
+        [src.src_col_isin, src.src_col_date],
+        [src.src_col_time, *(tiebreak_cols or [])],
+        src.src_col_start_price,
+        F.sum(src.src_col_traded_vol).alias(trg.trg_col_dail_trad_vol),
+        low=src.src_col_min_price,
+        high=src.src_col_max_price,
     ).withColumnsRenamed(
         {
-            src.src_col_min_price: trg.trg_col_min_price,
-            src.src_col_max_price: trg.trg_col_max_price,
-            src.src_col_traded_vol: trg.trg_col_dail_trad_vol,
+            "open": trg.trg_col_op_price,
+            "close": trg.trg_col_clos_price,
+            "low": trg.trg_col_min_price,
+            "high": trg.trg_col_max_price,
         }
-    )
-
-    agg = with_oc.groupBy(src.src_col_isin, src.src_col_date).agg(
-        F.min(trg.trg_col_op_price).alias(trg.trg_col_op_price),
-        F.min(trg.trg_col_clos_price).alias(trg.trg_col_clos_price),
-        F.min(trg.trg_col_min_price).alias(trg.trg_col_min_price),
-        F.max(trg.trg_col_max_price).alias(trg.trg_col_max_price),
-        F.sum(trg.trg_col_dail_trad_vol).alias(trg.trg_col_dail_trad_vol),
     )
 
     lag_w = Window.partitionBy(src.src_col_isin).orderBy(src.src_col_date)
@@ -129,43 +120,29 @@ def transform_report1(
 def report1_events(events: DataFrame) -> DataFrame:
     """Per-(user_id, day) OHLC + day-over-day opening pct change.
 
-    Same operator graph as transform_report1 (two shuffles: window over
-    (user_id, date) reused by the groupBy; LAG over (user_id)); order ties
-    broken deterministically by event_id.
+    The same ``bars.ohlc`` bar as transform_report1 (two shuffles: window
+    over (user_id, date) reused by the groupBy; LAG over (user_id)); order
+    ties broken deterministically by event_id.
     """
-    w = (
-        Window.partitionBy("user_id", "date")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    agg = (
-        events.withColumn("date", F.to_date("ts"))
-        .withColumn("opening", F.first("value").over(w))
-        .withColumn("closing", F.last("value").over(w))
-        .groupBy("user_id", "date")
-        .agg(
-            F.min("opening").alias("opening_price"),
-            F.min("closing").alias("closing_price"),
-            F.min("value").alias("minimum_price"),
-            F.max("value").alias("maximum_price"),
-            F.count(F.lit(1)).alias("traded_volume"),
-        )
+    agg = ohlc(
+        events.withColumn("date", F.to_date("ts")),
+        ["user_id", "date"],
+        ["ts", "event_id"],
+        "value",
+        F.count(F.lit(1)).alias("traded_volume"),
     )
     lag_w = Window.partitionBy("user_id").orderBy("date")
-    prev_open = F.lag("opening_price").over(lag_w)
+    prev_open = F.lag("open").over(lag_w)
     return agg.select(
         "user_id",
         "date",
-        F.round("opening_price", 2).alias("opening_price"),
-        F.round("closing_price", 2).alias("closing_price"),
-        F.round("minimum_price", 2).alias("minimum_price"),
-        F.round("maximum_price", 2).alias("maximum_price"),
+        F.round("open", 2).alias("opening_price"),
+        F.round("close", 2).alias("closing_price"),
+        F.round("low", 2).alias("minimum_price"),
+        F.round("high", 2).alias("maximum_price"),
         F.col("traded_volume"),
         F.round(
-            F.when(
-                prev_open != 0,
-                (F.col("opening_price") - prev_open) / prev_open * 100,
-            ),
+            F.when(prev_open != 0, (F.col("open") - prev_open) / prev_open * 100),
             2,
         ).alias("change_prev_pct"),
     )

@@ -34,8 +34,8 @@ the five classics that q_var_es / q_sharpe / q_sortino don't cover:
   the exact max-drawdown fraction.
 
 Scale design: everything runs on the (event_type, day) bar table built
-with ONE fact-sized exchange (`microstructure_queries.daily_bars`, the
-report1 shape); per-type windows then cover calendar-bounded rows
+with ONE fact-sized exchange (`bars.daily_bars`, the report1 shape);
+per-type windows then cover calendar-bounded rows
 (~10⁵× smaller than the stream at 100 TB). No libm call ever feeds
 another aggregate — ln/sqrt chains terminate each query and are
 quantized (floor(x·s+0.5)/s, functions/quantize.py).
@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .microstructure_queries import _BARS_SQL, daily_bars
+from .bars import _BARS_SQL, daily_bars
 from .risk_queries import _VB_SCORED_SQL, VB_ALPHA_DEN, VB_ALPHA_NUM, var_backtest
 
 RATIO_SCALE = 10**6

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..functions.vector import l2_norm
 from ..registry import load, register
-from .microstructure_queries import _BARS_SQL, daily_bars
+from .bars import _BARS_SQL, daily_moves
 
 RK_SCALE = 10**4
 RACHEV_NUM, RACHEV_DEN = 1, 10  # alpha = 10%
@@ -43,21 +43,13 @@ _MOVES_SQL = f"""{_BARS_SQL}, mv AS (
     )"""
 
 
-def _moves(events: DataFrame) -> DataFrame:
-    return (
-        daily_bars(events)
-        .filter(F.col("dc").isNotNull())
-        .select("event_type", "day", F.col("dc").alias("x"))
-    )
-
-
 # -------------------------------------------------------------- dual beta
 
 
 def dual_beta(events: DataFrame) -> DataFrame:
     """β on market-up vs market-down days; market = summed cross-type
     move per day. Exact conditional integer sums."""
-    mv = _moves(events)
+    mv = daily_moves(events)
     mkt = mv.groupBy("day").agg(F.sum("x").alias("m"))
     j = mv.join(F.broadcast(mkt), "day").filter(F.col("m") != 0)
     up = (F.col("m") > 0).cast("int")
@@ -130,7 +122,7 @@ def k_ratio(events: DataFrame) -> DataFrame:
     cumulative-move curve — exact integer sums until the final chain."""
     w = Window.partitionBy("event_type").orderBy("day")
     d = (
-        _moves(events)
+        daily_moves(events)
         .withColumn("t", F.row_number().over(w))
         .withColumn(
             "e", F.sum("x").over(w.rowsBetween(Window.unboundedPreceding, 0))
@@ -212,7 +204,7 @@ def rachev(events: DataFrame) -> DataFrame:
         F.col("x").desc(), "day"
     )
     d = (
-        _moves(events)
+        daily_moves(events)
         .withColumn("r_lo", F.row_number().over(w_asc))
         .withColumn("r_hi", F.row_number().over(w_dsc))
     )

@@ -29,14 +29,12 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .microstructure_queries import _BARS_SQL, daily_bars
+from .bars import _BARS_SQL, _CENTS, cents, daily_bars, daily_ohlcv
 
 VAR_PCT = 5  # tail percent — integer so k = ceil(pct·n/100) stays exact
 SHARPE_SCALE = 10**8
 HORIZONS = (1, 2, 3)
 BIG_TRADE_K = 90
-
-_CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 
 
 def var_es(events: DataFrame, pct: int = VAR_PCT) -> DataFrame:
@@ -155,7 +153,6 @@ def event_study(
     """
     from .microstructure_queries import _day_offset
 
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     qty = F.coalesce(
         F.get_json_object("props", "$.k").cast("long"), F.lit(0)
     )
@@ -164,7 +161,7 @@ def event_study(
         F.col("ts").cast("date").alias("day"),
         "ts",
         "event_id",
-        cents.alias("c"),
+        cents().alias("c"),
         (qty >= big_k).cast("int").alias("big"),
     )
     wday = Window.partitionBy("event_type", "day").orderBy("ts", "event_id")
@@ -407,11 +404,9 @@ def gap_risk(events: DataFrame) -> DataFrame:
     division per day), per-type rollup of frequency beyond
     ``GAP_BPS_FLAG``, mean |gap|, and the worst gap either way.
     """
-    from .indicators2_queries import ohlc_bars
-
     w = Window.partitionBy("event_type").orderBy("day")
     bars = (
-        ohlc_bars(events)
+        daily_ohlcv(events)
         .select("event_type", "day", "o_c", "c_c")
         .withColumn("prev_c", F.lag("c_c").over(w))
         .filter(F.col("prev_c").isNotNull())

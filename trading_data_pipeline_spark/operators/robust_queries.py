@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..registry import load, register
 from .graph_queries import TRIANGLE_COS, similarity_edges_for
-from .microstructure_queries import _BARS_SQL, daily_bars
+from .bars import _BARS_SQL, daily_moves
 
 RB_SCALE = 10**4
 BOOT_B = 100
@@ -59,27 +59,14 @@ _MOVES_SQL = f"""{_BARS_SQL}, mv AS (
     )"""
 
 
-def _moves(events: DataFrame) -> DataFrame:
-    w = Window.partitionBy("event_type").orderBy("day")
-    return (
-        daily_bars(events)
-        .filter(F.col("dc").isNotNull())
-        .select(
-            "event_type",
-            "day",
-            F.col("dc").alias("x"),
-        )
-        .withColumn("rid", F.row_number().over(w))
-    )
-
-
 # -------------------------------------------------------- Hodges–Lehmann
 
 
 def hodges_lehmann(events: DataFrame) -> DataFrame:
     """Median of Walsh averages per type — exact doubled-integer order
     statistics (lo+hi middle), calendar-bounded i ≤ j pair table."""
-    mv = _moves(events)
+    w = Window.partitionBy("event_type").orderBy("day")
+    mv = daily_moves(events).withColumn("rid", F.row_number().over(w))
     a, b = mv.alias("a"), mv.alias("b")
     walsh = a.join(
         b,
@@ -164,7 +151,8 @@ def bootstrap_ci(events: DataFrame, n_boot: int = BOOT_B) -> DataFrame:
     """Deterministic Poisson-bootstrap 95% CI for the mean daily move
     per type: portable LCG uniforms → Poisson(1) multiplicities →
     per-replicate exact integer sums → exact order-statistic band."""
-    mv = _moves(events)
+    w = Window.partitionBy("event_type").orderBy("day")
+    mv = daily_moves(events).withColumn("rid", F.row_number().over(w))
     reps = mv.select(
         "event_type",
         "x",

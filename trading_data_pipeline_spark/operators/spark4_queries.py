@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
+from .bars import cents
 
 TMP_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -363,12 +364,11 @@ def xml_ingest(events: DataFrame) -> DataFrame:
     codegen over the row — zero shuffle until the final aggregate's
     exchange; no Python boundary anywhere.
     """
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     payload = F.to_xml(
         F.struct(
             F.col("event_id"),
             F.col("event_type"),
-            cents.alias("cents"),
+            cents().alias("cents"),
         )
     )
     parsed = events.select(payload.alias("xml")).select(

@@ -47,12 +47,10 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..plans.global_rank import global_cumsum
 from ..registry import load, register
-from .microstructure_queries import _BARS_SQL, daily_bars
+from .bars import _BARS_SQL, _CENTS, cents, daily_bars
 
 CHI2_SCALE = 10**9
 JK_SCALE = 10**6
-
-_CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 
 
 # ----------------------------------------------------- Kruskal–Wallis
@@ -154,7 +152,7 @@ def kruskal_wallis(df: DataFrame, group_col: str, value_col) -> DataFrame:
 def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     return kruskal_wallis(
-        ev, "event_type", F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+        ev, "event_type", cents()
     )
 
 

@@ -33,7 +33,7 @@ exact integer/DECIMAL arithmetic until a single final double chain
 
 Scale notes: every test runs on the daily-bar table (ONE
 (event_type, day) exchange over the raw stream via
-microstructure_queries._BARS_SQL / daily_bars, then calendar-bounded
+bars._BARS_SQL / daily_bars, then calendar-bounded
 rows — the q_dollar_bars two-pass contract). Group count k ≈ |types|
 and n ≈ |calendar|, so the final double folds are over bounded rows.
 """
@@ -45,22 +45,13 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .microstructure_queries import _BARS_SQL, daily_bars
+from .bars import _BARS_SQL, daily_bars, daily_moves
 
 ST_SCALE = 10**4
 LB_LAGS = 5
 WELCH_A, WELCH_B = "purchase", "view"
 
 _DEC = "decimal(38,0)"
-
-
-def _moves(events: DataFrame) -> DataFrame:
-    """(event_type, day, x): integer-cent daily close moves."""
-    return (
-        daily_bars(events)
-        .filter(F.col("dc").isNotNull())
-        .select("event_type", "day", F.col("dc").alias("x"))
-    )
 
 
 _MOVES_SQL = f"""{_BARS_SQL}, mv AS (
@@ -73,7 +64,7 @@ _MOVES_SQL = f"""{_BARS_SQL}, mv AS (
 
 def jarque_bera(events: DataFrame) -> DataFrame:
     """JB per type from raw power sums; skew + excess kurtosis."""
-    d = _moves(events).select(
+    d = daily_moves(events).select(
         "event_type",
         "x",
         (F.col("x") * F.col("x")).alias("x2"),
@@ -163,7 +154,7 @@ def ljung_box(events: DataFrame, m: int = LB_LAGS) -> DataFrame:
     """Q = n(n+2)·Σ ρ_k²/(n−k): exact-integer autocorrelations via the
     n-scaled-deviation trick, lags as fixed window columns."""
     w = Window.partitionBy("event_type").orderBy("day")
-    d = _moves(events)
+    d = daily_moves(events)
     for k in range(1, m + 1):
         d = d.withColumn(f"lx{k}", F.lag("x", k).over(w))
     tot = d.groupBy("event_type").agg(
@@ -265,7 +256,7 @@ def durbin_watson(events: DataFrame) -> DataFrame:
     """DW = n²·Σ(Δx)²/Σ(n·x−S)² — both sides exact integers (the mean
     cancels in the first difference)."""
     w = Window.partitionBy("event_type").orderBy("day")
-    d = _moves(events).withColumn("dx", F.col("x") - F.lag("x").over(w))
+    d = daily_moves(events).withColumn("dx", F.col("x") - F.lag("x").over(w))
     tot = d.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("s"),
@@ -335,7 +326,7 @@ def q_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
 def anova(events: DataFrame) -> DataFrame:
     """One-way ANOVA F across types on daily moves from exact
     (n_j, Σx, Σx²) group sums."""
-    g = _moves(events).groupBy("event_type").agg(
+    g = daily_moves(events).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("nj"),
         F.sum(F.col("x").cast(_DEC)).alias("sj"),
         F.sum((F.col("x") * F.col("x")).cast(_DEC)).alias("ssj"),
@@ -404,7 +395,7 @@ def welch_t(
     """Welch's t + Welch–Satterthwaite dof + Cohen's d between two
     types' daily moves, from exact group sums."""
     g = (
-        _moves(events)
+        daily_moves(events)
         .filter(F.col("event_type").isin(a, b))
         .groupBy("event_type")
         .agg(
@@ -579,7 +570,7 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bartlett(events: DataFrame) -> DataFrame:
     """Bartlett's equal-variance T across types: variances as exact
     rationals of integer sums; ln in the final k-term chain only."""
-    g = _moves(events).groupBy("event_type").agg(
+    g = daily_moves(events).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("nj"),
         F.sum(F.col("x").cast(_DEC)).alias("sj"),
         F.sum((F.col("x") * F.col("x")).cast(_DEC)).alias("ssj"),

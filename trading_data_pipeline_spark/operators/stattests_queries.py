@@ -37,12 +37,10 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..plans.global_rank import global_cumsum
 from ..registry import load, register
-from .microstructure_queries import _BARS_SQL
+from .bars import _BARS_SQL, _CENTS, cents, daily_bars
 
 CHI2_SCALE = 10**9
 RHO_SCALE = 10**8
-
-_CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 
 
 def ks_test(
@@ -54,10 +52,9 @@ def ks_test(
 ) -> DataFrame:
     """Two-sample KS over integer-cent values of two groups. Returns one
     row (n_a, n_b, d_num, ks) with ks = max|cum_a·n_b − cum_b·n_a|/(n_a·n_b)."""
-    cents = F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("long")
     counts = (
         df.filter(F.col(group_col).isin([group_a, group_b]))
-        .select(F.col(group_col).alias("g"), cents.alias("c"))
+        .select(F.col(group_col).alias("g"), cents(value_col).alias("c"))
         .groupBy("c")
         .agg(
             F.sum(F.when(F.col("g") == group_a, 1).otherwise(0)).alias("a"),
@@ -334,9 +331,10 @@ def spearman(
     "BIGINT-exact; one division, two IEEE sqrts, quantized 1e-8",
 )
 def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     qty = F.coalesce(F.get_json_object("props", "$.k").cast("long"), F.lit(0))
-    return spearman(load(spark, sf_dir, "events"), "event_type", cents, qty)
+    return spearman(
+        load(spark, sf_dir, "events"), "event_type", cents(), qty
+    )
 
 
 # ---------------------------------------------------- variance-ratio F
@@ -354,9 +352,8 @@ def variance_ratio(events: DataFrame) -> DataFrame:
     engines share the single final division). Variances first reduce to
     the |types|-row aggregate, so the pair join is vocabulary-bounded.
     """
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     agg = (
-        events.select("event_type", cents.alias("c"))
+        events.select("event_type", cents().alias("c"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -460,8 +457,6 @@ def kendall_tau(events: DataFrame) -> DataFrame:
     the moves reduce to the (type, day) bar table.
     """
     from pyspark.sql import Window  # noqa: F401  (parity with siblings)
-
-    from .microstructure_queries import daily_bars
 
     mv = daily_bars(events).filter(F.col("dc").isNotNull()).select(
         "event_type", "day", "dc"
@@ -582,9 +577,8 @@ def mann_whitney(events: DataFrame) -> DataFrame:
     pair table. The per-pair cumsum windows over the merged histogram —
     never over raw events.
     """
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     hist = (
-        events.select("event_type", cents.alias("c"))
+        events.select("event_type", cents().alias("c"))
         .groupBy("event_type", "c")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
+from .bars import cents, daily_bars, daily_ohlcv
 
 BAR_SECONDS = 900  # 15-minute bars
 MAD_K = 4.4478  # 3 * 1.4826 (normal-consistency factor)
@@ -204,8 +205,7 @@ def mad_outliers(events: DataFrame) -> DataFrame:
     uses, making both engines bit-identical. Two aggregate passes over
     the same grouping key plus one broadcast-sized join back.
     """
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("long")
-    base = events.select("event_type", cents.alias("_c"))
+    base = events.select("event_type", cents().alias("_c"))
     med = base.groupBy("event_type").agg(
         F.expr("median(_c)").alias("_med_c"), F.count(F.lit(1)).alias("n")
     )
@@ -536,7 +536,7 @@ def seasonal_decompose(events: DataFrame) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.floor(F.col("value") * 100 + 0.5).cast("long")
+                cents()
             ).alias("y")
         )
     )
@@ -652,7 +652,7 @@ def twap(events: DataFrame) -> DataFrame:
         F.to_date("ts").alias("d"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("tus"),
         "event_id",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
+        cents().alias("cents"),
     )
     w = Window.partitionBy("event_type", "d").orderBy("tus", "event_id")
     spans = ev.withColumn(
@@ -721,13 +721,12 @@ def volume_profile(events: DataFrame, bucket_c: int = VP_BUCKET_C) -> DataFrame:
     table (bounded by price range / bucket width)."""
     from pyspark.sql import Window
 
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     qty = F.coalesce(
         F.get_json_object("props", "$.k").cast("long"), F.lit(0)
     )
     base = events.select(
         "event_type",
-        (F.floor(cents / F.lit(float(bucket_c))) * bucket_c).cast("long").alias(
+        (F.floor(cents() / F.lit(float(bucket_c))) * bucket_c).cast("long").alias(
             "price_bucket_c"
         ),
         qty.alias("q"),
@@ -799,13 +798,9 @@ def return_split(events: DataFrame) -> DataFrame:
     cents summed per type (the identity overnight + intraday =
     close-to-close is asserted in tests); means are one division each.
     """
-    from pyspark.sql import Window
-
-    from .indicators2_queries import ohlc_bars
-
     w = Window.partitionBy("event_type").orderBy("day")
     bars = (
-        ohlc_bars(events)
+        daily_ohlcv(events)
         .select("event_type", "day", "o_c", "c_c")
         .withColumn("prev_c", F.lag("c_c").over(w))
         .filter(F.col("prev_c").isNotNull())
@@ -899,8 +894,6 @@ def triple_barrier(events: DataFrame, h: int = TB_HORIZON) -> DataFrame:
     than ``h`` label against the bars that exist; the final bar per
     type (no future) is dropped.
     """
-    from .microstructure_queries import daily_bars
-
     bars = daily_bars(events).select("event_type", "day", "c_c")
     wt = Window.partitionBy("event_type").orderBy("day")
     b = bars.withColumn("rn", F.row_number().over(wt))
@@ -1029,8 +1022,6 @@ def xsec_momentum(events: DataFrame, r: int = XSEC_R) -> DataFrame:
     cent moves over the calendar-bounded bar table; the daily rank
     window holds |types| rows per day. Days without full formation
     history are dropped; ties rank by type name (deterministic)."""
-    from .microstructure_queries import daily_bars
-
     bars = daily_bars(events).filter(F.col("dc").isNotNull())
     wt = Window.partitionBy("event_type").orderBy("day")
     wr = wt.rowsBetween(-(r - 1), 0)
@@ -1115,8 +1106,6 @@ def pairs_signal(
     rows; z is one final double chain, degenerate (constant-spread)
     series NULL. Everything after the (type, day) rollup is
     calendar-bounded."""
-    from .microstructure_queries import daily_bars
-
     bars = daily_bars(events).select("event_type", "day", "c_c")
     a = bars.filter(F.col("event_type") == type_a).select(
         "day", F.col("c_c").alias("ca")
@@ -1254,7 +1243,6 @@ def exec_shortfall(events: DataFrame) -> DataFrame:
     (Σc·q − arrival·Σq)·10⁴ / (arrival·Σq) is ONE division of exact
     BIGINTs, quantized to 0.01 bps. One (user, day) partial-agged
     exchange; zero-volume or zero-arrival days drop."""
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     qty = F.coalesce(
         F.get_json_object("props", "$.k").cast("long"), F.lit(0)
     )
@@ -1263,7 +1251,7 @@ def exec_shortfall(events: DataFrame) -> DataFrame:
         F.col("ts").cast("date").alias("day"),
         "ts",
         "event_id",
-        cents.alias("c"),
+        cents().alias("c"),
         qty.alias("q"),
     )
     agg = base.groupBy("user_id", "day").agg(

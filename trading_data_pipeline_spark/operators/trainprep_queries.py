@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
+from .bars import cents
 
 TE_SMOOTHING = 10  # pseudo-count mass of the global mean
 K_ANON = 20        # minimum cell size before a tuple is "at risk"
@@ -357,9 +358,8 @@ def minmax_scale(events: DataFrame) -> DataFrame:
     total at any scale; flagged by plan_audit's low-cardinality-window
     check). The stream itself never sorts.
     """
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("long")
     base = events.filter(F.col("value").isNotNull()).select(
-        "event_id", "event_type", cents.alias("_c")
+        "event_id", "event_type", cents().alias("_c")
     )
     bounds = base.groupBy("event_type").agg(
         F.min("_c").alias("_mn"), F.max("_c").alias("_mx")
@@ -430,12 +430,11 @@ def fixed_effects_demean(events: DataFrame) -> DataFrame:
     grand-mean scalar — the q_seasonal_profile shape; the event stream
     itself never shuffles.
     """
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     base = events.select(
         "event_id",
         "user_id",
         F.col("ts").cast("date").alias("day"),
-        cents.alias("c"),
+        cents().alias("c"),
     )
     by_user = base.groupBy("user_id").agg(
         F.sum("c").alias("su"), F.count(F.lit(1)).alias("nu")

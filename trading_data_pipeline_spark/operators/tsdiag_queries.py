@@ -40,26 +40,17 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..plans.global_rank import global_cumsum
 from ..registry import load, register
-from .microstructure_queries import _BARS_SQL, daily_bars
+from .bars import _BARS_SQL, _CENTS, cents, daily_bars, daily_moves
 
 HURST_B1, HURST_B2 = 8, 16
 GR_Y, GR_X = "purchase", "view"
 BIN_B = 10
 TS_SCALE = 10**4
 
-_CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 
 _MOVES_SQL = f"""{_BARS_SQL}, mv AS (
       SELECT event_type, day, dc AS x FROM moves WHERE dc IS NOT NULL
     )"""
-
-
-def _moves(events: DataFrame) -> DataFrame:
-    return (
-        daily_bars(events)
-        .filter(F.col("dc").isNotNull())
-        .select("event_type", "day", F.col("dc").alias("x"))
-    )
 
 
 # ------------------------------------------------------------------ Hurst
@@ -101,7 +92,7 @@ def _rs_mean(moves: DataFrame, b: int) -> DataFrame:
 
 def hurst(events: DataFrame, b1: int = HURST_B1, b2: int = HURST_B2):
     """Two-point R/S Hurst exponent per type."""
-    mv = _moves(events)
+    mv = daily_moves(events)
     a = _rs_mean(mv, b1).join(_rs_mean(mv, b2), "event_type")
     h = (F.log(F.col(f"rs_{b2}")) - F.log(F.col(f"rs_{b1}"))) / F.lit(
         math.log(b2) - math.log(b1)
@@ -179,7 +170,7 @@ def q_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
 def granger(events: DataFrame, y: str = GR_Y, x: str = GR_X) -> DataFrame:
     """Lag-1 Granger F: y_t ~ y_{t-1} vs y_t ~ y_{t-1} + x_{t-1},
     closed-form OLS from centered cross-moments."""
-    mv = _moves(events)
+    mv = daily_moves(events)
     ym = mv.filter(F.col("event_type") == y).select(
         "day", F.col("x").alias("yv")
     )
@@ -296,7 +287,7 @@ def quantile_binning(events: DataFrame, b: int = BIN_B) -> DataFrame:
     distinct-value grid + exact global cumulative; a value's bin is
     the bin of its first rank (ties stay together)."""
     grid = events.select(
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c")
+        cents().alias("c")
     ).groupBy("c").agg(F.count(F.lit(1)).alias("cnt"))
     cum, n = global_cumsum(grid, ["c"], "cnt")
     binned = cum.select(

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
+from .bars import _BARS_SQL, daily_bars
 from .indicators3_queries import _OHLCV_SQL, _ohlcv
 
 VOL_SCALE = 10**6
@@ -387,8 +388,6 @@ def q_corwin_schultz(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------- bipower variation / jumps
-
-from .microstructure_queries import _BARS_SQL, daily_bars  # noqa: E402
 
 BPV_MU1SQ_INV = math.pi / 2.0  # 1/mu_1^2, mu_1 = sqrt(2/pi)
 

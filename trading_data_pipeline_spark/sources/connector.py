@@ -151,10 +151,8 @@ class FileSystemConnector:
         Explicit ``schema`` is strongly preferred at scale — ``inferSchema``
         triggers an extra pass over the data.
         """
-        if isinstance(paths, str):
-            paths = [paths]
         reader = self._csv_reader(schema, sep, encoding, header)
-        return reader.csv([self._abs(p) for p in paths])
+        return reader.csv(self._literal_paths(paths))
 
     def read_csv_prefixes(
         self, prefixes: list[str], schema: StructType | str | None = None
@@ -182,8 +180,9 @@ class FileSystemConnector:
         if not matched:
             return None
         reader = self._csv_reader(schema).option("recursiveFileLookup", True)
-        # Spark globs any path holding a metacharacter: escape it again
-        return reader.csv(sorted(_glob_escape(st.getPath().toString()) for st in matched))
+        return reader.csv(
+            self._literal_paths(sorted(st.getPath().toString() for st in matched))
+        )
 
     def _csv_reader(
         self,
@@ -198,9 +197,7 @@ class FileSystemConnector:
         return reader.option("inferSchema", True)
 
     def read_parquet(self, paths: str | list[str]) -> DataFrame:
-        if isinstance(paths, str):
-            paths = [paths]
-        return self.spark.read.parquet(*[self._abs(p) for p in paths])
+        return self.spark.read.parquet(*self._literal_paths(paths))
 
     def read_json(
         self, paths: str | list[str], schema: StructType | str | None = None
@@ -210,9 +207,7 @@ class FileSystemConnector:
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        if isinstance(paths, str):
-            paths = [paths]
-        return reader.json([self._abs(p) for p in paths])
+        return reader.json(self._literal_paths(paths))
 
     def read_xml(
         self, paths: str | list[str], schema: StructType | str | None = None
@@ -223,17 +218,21 @@ class FileSystemConnector:
         reader = self.spark.read.format("xml").option("rowTag", "row")
         if schema is not None:
             reader = reader.schema(schema)
-        if isinstance(paths, str):
-            paths = [paths]
-        return reader.load([self._abs(p) for p in paths])
+        return reader.load(self._literal_paths(paths))
 
     def read_orc(self, paths: str | list[str]) -> DataFrame:
         """ORC scan (engine extension — bundled with Spark, columnar with
         the same predicate-pushdown/column-pruning properties as parquet;
         the interchange format for Hive-era lakes)."""
+        return self.spark.read.orc(*self._literal_paths(paths))
+
+    def _literal_paths(self, paths: str | list[str]) -> list[str]:
+        """Absolute, glob-escaped reader paths: Spark glob-expands any path
+        holding ``{ } [ ] * ? \\``, so an unescaped key such as
+        ``2021-04-1[56]`` would read other keys' files instead of its own."""
         if isinstance(paths, str):
             paths = [paths]
-        return self.spark.read.orc(*[self._abs(p) for p in paths])
+        return [_glob_escape(self._abs(p)) for p in paths]
 
     def _abs(self, p: str) -> str:
         # Hadoop returns scheme URIs both as "file:///x" and "file:/x" —

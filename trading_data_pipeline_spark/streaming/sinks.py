@@ -96,15 +96,15 @@ def make_meta_sink(
     from ..meta import update_meta_file
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         cached = batch_df.withColumn("_batch_id", F.lit(batch_id)).persist()
         prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         try:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            connector.write(cached, data_key, "parquet", mode="overwrite",
-                            partition_by=["date", "_batch_id"])
+            # the write's own emptiness probe: None = empty batch, no meta
+            if connector.write(cached, data_key, "parquet", mode="overwrite",
+                               partition_by=["date", "_batch_id"]) is None:
+                return
             dates = sorted(
                 r.date.isoformat() for r in cached.select("date").distinct().collect()
             )
@@ -227,6 +227,7 @@ def make_cdc_sink(path: str, key: str, order_cols: list[str], op_col: str = "op"
     from ..operators.lake_queries import apply_changelog
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
+        # an empty batch would still rewrite and re-swap the whole snapshot
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
@@ -326,6 +327,7 @@ def make_drift_monitor(
     ]
 
     def monitor(batch_df: DataFrame, batch_id: int) -> None:
+        # an empty batch would write n_events = 0 rows for every reference type
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession

@@ -103,6 +103,35 @@ def test_range_join_bucketed_equals_naive(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+@pytest.mark.parametrize("m_bits, k", [(64, 1), (1 << 17, 5)])
+def test_bloom_pruned_join_equals_plain_inner_join(spark, m_bits, k):
+    """The Bloom pre-filter never drops a matching fact row and the closing
+    equi-join removes its false positives: the result is the plain inner
+    join's row multiset. Fact keys repeat, most are absent from the
+    selective dim, and one is NULL; a 64-bit, one-hash filter lets false
+    positives through."""
+    from collections import Counter
+
+    from trading_data_pipeline_spark.plans.bloom import (
+        bloom_bitmap, bloom_pruned_join, with_bloom_filter,
+    )
+
+    fact = spark.createDataFrame(
+        [(None, -1)] + [(i % 200, i) for i in range(800)], "k long, v long"
+    )
+    dim = spark.createDataFrame(
+        [(3, "a"), (7, "b"), (41, "c"), (1000, "d")], "dk long, name string"
+    )
+    cols = ["k", "v", "dk", "name"]
+    want = Counter(map(tuple, fact.join(dim, fact["k"] == dim["dk"]).select(cols).collect()))
+    got = bloom_pruned_join(fact, dim, "k", "dk", m_bits=m_bits, k=k).select(cols)
+    assert Counter(map(tuple, got.collect())) == want
+    assert sum(want.values()) == 3 * 4
+    if m_bits == 64:
+        passed = with_bloom_filter(fact, bloom_bitmap(dim, "dk", m_bits, k), "k", m_bits, k)
+        assert passed.count() > sum(want.values())  # false positives to remove
+
+
 def test_global_ntile_matches_window_ntile_on_random_data(spark):
     """Property: the two-pass bucketed ntile must agree bit-for-bit with
     Spark's own single-partition ntile window (the semantics oracle) on

@@ -126,8 +126,8 @@ def with_bloom_filter(
     The bitmap ships as ONE row broadcast-joined onto the fact, so the
     array value materializes once per executor instead of once per row
     (a list-literal probe re-creates the m_bits/64-element array inside
-    codegen for every row — the measured-in-tools/stress_bloom.py
-    anti-path).
+    codegen for every row — the anti-path measured in BASELINE.md's
+    "Bloom-pruning stress" section).
     """
     spark = fact.sparkSession
     bm_df = spark.createDataFrame([(bitmap,)], "__bloom_words array<bigint>")
@@ -147,14 +147,15 @@ def bloom_pruned_join(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    how: str = "inner",
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
 ) -> DataFrame:
-    """``fact JOIN dim`` with a dim-built Bloom pre-filter on the fact
-    scan. Result is EXACTLY the plain join (the closing equi-join removes
-    Bloom false positives); the pre-filter only thins the fact exchange.
+    """``fact INNER JOIN dim`` with a dim-built Bloom pre-filter on the
+    fact scan. Result is EXACTLY the plain inner join (the closing
+    equi-join removes Bloom false positives); the pre-filter only thins
+    the fact exchange. Inner only: the pre-filter drops every fact row
+    whose key is not in the dim, which a left, full or anti join must keep.
     """
     bitmap = bloom_bitmap(dim, dim_key, m_bits, k)
     pruned = with_bloom_filter(fact, bitmap, fact_key, m_bits, k)
-    return pruned.join(dim, pruned[fact_key] == dim[dim_key], how)
+    return pruned.join(dim, pruned[fact_key] == dim[dim_key])

@@ -124,15 +124,22 @@ _PRIORITY_ROUND11: tuple[str, ...] = (
 # ROUND-12 WINDOW (apply at the start of round 12 — do NOT apply
 # earlier). Validated NOW by tests/test_registry.py (names exist,
 # exactly 50, canaries first, no duplicates, no overlap with the
-# round-11 window). Composition: canaries; then 48 pure
-# re-verification slots with the OLDEST last-green driver rows — the
-# remaining 15 round-3 greens displaced from the old round-10 staging,
-# the 15 round-3 greens from the old round-12 staging, and the 18
-# round-4 greens (through q_median). No never-verified slots remain:
-# debt reaches 0 at round 11 under the round-10/11 windows above.
+# round-11 window). Composition: canaries; the 5 queries whose
+# semantics changed in round 11 (q_spearman, q_containment,
+# q_basket_pairs, q_source_overlap, q_jaccard_prefix_join), which the
+# round-11 window did not hold; then 43 pure re-verification slots with
+# the OLDEST last-green driver rows — the remaining 15 round-3 greens
+# displaced from the old round-10 staging, the 15 round-3 greens from
+# the old round-12 staging, and 13 of the round-4 greens (the five
+# round-4 greens before q_median gave their slots to the changed
+# queries). No never-verified slots remain: debt reaches 0 at round 11
+# under the round-10/11 windows above.
 # At round-12 open, set ``_PRIORITY = _PRIORITY_ROUND12``.
 _PRIORITY_ROUND12: tuple[str, ...] = (
     "q_report1", "q_dedup_near",
+    # changed in round 11, outside the round-11 window
+    "q_spearman", "q_containment", "q_basket_pairs", "q_source_overlap",
+    "q_jaccard_prefix_join",
     # re-verification: newest green rows date to round 3 (displaced
     # from the old round-10 staging by the never-verified pull-forward)
     "q_contamination", "q_curation_pipeline",
@@ -150,9 +157,7 @@ _PRIORITY_ROUND12: tuple[str, ...] = (
     "q_ann_ivf", "q_ann_lsh", "q_argminmax", "q_array_funcs",
     "q_bitwise_agg", "q_collect_sorted", "q_conditional_agg",
     "q_cross_join", "q_curation_full", "q_date_trunc",
-    "q_dedup_clusters", "q_exists_subquery", "q_heavy_hitters",
-    "q_histogram", "q_join_outer", "q_lead_nth", "q_map_funcs",
-    "q_median",
+    "q_dedup_clusters", "q_exists_subquery", "q_median",
 )
 
 # ACTIVE round-11 driver window (applied at round-11 open per the

@@ -5,7 +5,11 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# The scripts in tools/ are importable by the tests, but appended: a
+# script named like a standard-library module must not shadow it.
+sys.path.append(os.path.join(REPO, "tools"))
 
 from trading_data_pipeline_spark.session import build_session  # noqa: E402
 

@@ -1,19 +1,32 @@
 """``bars.ohlc`` against a sort-then-first/last brute force on adversarial
-inputs, and the plan evidence that a bar output nobody reads costs
-nothing."""
+inputs, the daily bar's DuckDB twin against its Spark form, the check
+that no oracle writes its own daily bar, and the plan evidence that a
+bar output nobody reads costs nothing."""
 
 from __future__ import annotations
 
+import datetime as dt
 import re
+import uuid
 
+import duckdb
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+import pyarrow as pa
+import pyarrow.parquet as pq
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from trading_data_pipeline_spark.operators.bars import ohlc
+from trading_data_pipeline_spark.operators.bars import (
+    _BARS_SQL,
+    _MOVES_SQL,
+    daily_bars,
+    daily_moves,
+    daily_ohlcv,
+    ohlc,
+)
 from trading_data_pipeline_spark.operators.indicators_queries import daily_close
-from trading_data_pipeline_spark.registry import load
+from trading_data_pipeline_spark.registry import all_queries, load
 
 COLS = ["k", "ts", "event_id", "price", "lo", "hi", "q"]
 SCHEMA = (
@@ -91,6 +104,115 @@ def test_ohlc_of_empty_input_keeps_the_schema(spark):
     )
     assert bars.collect() == []
     assert bars.columns == ["k", "open", "high", "low", "close", "vol"]
+
+
+# The window that orders a day's events for its open and close.
+BAR_WINDOW = "PARTITION BY event_type, day ORDER BY ts, event_id"
+# Oracles that order a day's events without building a bar from them.
+NOT_BARS = {"q_realized_vol": "tick-to-tick moves within a day"}
+
+
+def _flat(sql: str) -> str:
+    return " ".join(sql.split())
+
+
+def test_oracles_take_the_daily_bar_from_bars():
+    """An oracle that orders a day's events by (ts, event_id) builds a
+    daily bar, and must take it from ``_BARS_SQL``: a copy of the window
+    anywhere else in its text is a second bar definition."""
+    bars_sql = _flat(_BARS_SQL)
+    users, copies = [], []
+    for name, spec in sorted(all_queries().items()):
+        sql = _flat(spec.oracle or "")
+        if BAR_WINDOW not in sql or name in NOT_BARS:
+            continue
+        users.append(name)
+        if bars_sql not in sql or BAR_WINDOW in sql.replace(bars_sql, ""):
+            copies.append(name)
+    assert copies == []
+    assert len(users) >= 70, users
+    for name in NOT_BARS:
+        sql = all_queries()[name].oracle
+        assert "first_value" not in sql and "last_value" not in sql, name
+
+
+EVENTS_COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
+# Half-cent boundaries: 1.005 * 100 is 100.49999999999999 in binary64,
+# so both engines must round it down to 100 cents and 0.015 up to 2.
+PRICES = [None, 0.0, 0.005, 0.015, 1.005, 2.675, 10.0, 99.995]
+PROPS = [None, "{}", '{"k": 0}', '{"k": 3}', '{"k": 12}']
+
+
+def _ev(eid, day, sec, etype, value, props):
+    ts = dt.datetime(2021, 4, 15 + day, 9, 0, sec)
+    return (eid, ts, 1, etype, value, props)
+
+
+# One day each of: a ts tie broken by event_id, NULL in the first row, NULL
+# in the last row, a single event, a missing or NULL props.$.k.
+ADVERSARIAL = [
+    _ev(1, 0, 0, "a", 1.005, '{"k": 3}'),
+    _ev(0, 0, 0, "a", 0.005, "{}"),
+    _ev(2, 0, 1, "a", 2.675, None),
+    _ev(3, 1, 0, "a", None, '{"k": 12}'),
+    _ev(4, 1, 1, "a", 0.015, '{"k": 0}'),
+    _ev(5, 2, 0, "a", 99.995, '{"k": 3}'),
+    _ev(6, 2, 1, "a", None, "{}"),
+    _ev(7, 0, 1, "b", 10.0, None),
+]
+
+
+@st.composite
+def events_rows(draw):
+    """Two types over three days, ts from two seconds a day so ties are
+    common and event_id (a permutation) decides them."""
+    n = draw(st.integers(0, 14))
+    return [
+        _ev(
+            eid,
+            draw(st.integers(0, 2)),
+            draw(st.integers(0, 1)),
+            draw(st.sampled_from(["a", "b"])),
+            draw(st.sampled_from(PRICES)),
+            draw(st.sampled_from(PROPS)),
+        )
+        for eid in draw(st.permutations(range(n)))
+    ]
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(rows=events_rows())
+@example(rows=ADVERSARIAL)
+@example(rows=[])
+def test_bars_sql_equals_daily_bars(spark, sf_dir, tmp_path, rows):
+    """``_BARS_SQL``/``_MOVES_SQL`` on DuckDB and ``daily_ohlcv``/
+    ``daily_bars``/``daily_moves`` on Spark read the same parquet file
+    (the test data's schema) and return the same rows."""
+    d = tmp_path / uuid.uuid4().hex
+    d.mkdir()
+    schema = pq.read_schema(f"{sf_dir}/events.parquet").remove_metadata()
+    table = pa.Table.from_pandas(
+        pd.DataFrame(rows, columns=EVENTS_COLS), schema=schema,
+        preserve_index=False,
+    )
+    pq.write_table(table, d / "events.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{d}/events.parquet')"
+    )
+    events = load(spark, str(d), "events")
+    for frame, ctes, cte, cols in (
+        (daily_ohlcv, _BARS_SQL, "bars", "event_type, day, o_c, h_c, l_c, c_c, vol"),
+        (daily_bars, _BARS_SQL, "moves", "event_type, day, c_c, vol, dc, prev_c"),
+        (daily_moves, _MOVES_SQL, "mv", "event_type, day, x, vol"),
+    ):
+        got = frame(events).select(*cols.split(", ")).collect()
+        want = con.execute(f"WITH {ctes} SELECT {cols} FROM {cte}").fetchall()
+        assert sorted(map(tuple, got)) == sorted(want), frame.__name__
 
 
 def test_unused_bar_outputs_are_pruned(spark, sf_dir):

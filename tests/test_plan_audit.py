@@ -18,21 +18,19 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "tools"))
-
-from plan_audit import (  # noqa: E402
+from plan_audit import (
     LOWCARD_WINDOW_ALLOWLIST,
     PRODUCT_JOIN_ALLOWLIST,
     audit_plan,
     lowcard_windows,
 )
 
-from trading_data_pipeline_spark.registry import all_queries  # noqa: E402
+from trading_data_pipeline_spark.registry import all_queries
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")

@@ -6,15 +6,10 @@ make the plan shape part of the contract."""
 
 from __future__ import annotations
 
-import os
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
 from trading_data_pipeline_spark.registry import all_queries, load
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def plan_of(df) -> str:
@@ -226,7 +221,6 @@ def test_sequence_packing_two_pass_shape(spark, sf_dir, queries):
     plan = plan_of(queries["q_sequence_packing"].fn(spark, sf_dir))
     assert "Exchange SinglePartition" not in plan, plan
     assert plan.count("Exchange hashpartitioning") <= 4, plan
-    sys.path.insert(0, os.path.join(REPO, "tools"))
     from plan_audit import lowcard_windows
 
     assert not lowcard_windows(plan), plan
@@ -778,7 +772,6 @@ def test_quantile_normalize_two_pass_shape(spark, sf_dir, queries):
     plan = plan_of(queries["q_quantile_normalize"].fn(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") <= 4, plan
     assert "Exchange SinglePartition" not in plan, plan
-    sys.path.insert(0, os.path.join(REPO, "tools"))
     from plan_audit import lowcard_windows
 
     assert not lowcard_windows(plan), plan

@@ -1168,27 +1168,8 @@ def test_vwap_stream_fallback_equals_batch(spark, staged_events):
 
     want = _vwap_batch_truth(spark, staged_events)
     got_df = run_to_completion(
-        vwap_stream(stream_events(spark, staged_events), use_tws=False),
+        vwap_stream(stream_events(spark, staged_events)),
         "t_vwap_fb", "update", spark,
-    )
-    assert _latest_per_key(got_df.collect()) == want and want
-
-
-def test_vwap_stream_tws_equals_batch(spark, staged_events):
-    """transformWithStateInPandas path — runs only where the runtime has
-    google.protobuf (the TWS state-server protocol dependency)."""
-    from trading_data_pipeline_spark.streaming.stateful import (
-        has_tws_support,
-        vwap_stream,
-    )
-
-    if not has_tws_support():
-        pytest.skip("google.protobuf absent — transformWithStateInPandas "
-                    "driver worker cannot start on this runtime")
-    want = _vwap_batch_truth(spark, staged_events)
-    got_df = run_to_completion(
-        vwap_stream(stream_events(spark, staged_events), use_tws=True),
-        "t_vwap_tws", "update", spark,
     )
     assert _latest_per_key(got_df.collect()) == want and want
 

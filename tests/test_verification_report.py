@@ -4,9 +4,6 @@ has a driver row, sits in the live window, or sits in EXACTLY ONE staged
 future window; no red rows linger unaccounted."""
 
 import os
-import sys
-
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 REPO = os.path.join(os.path.dirname(__file__), "..")
 

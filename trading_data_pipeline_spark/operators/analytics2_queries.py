@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .bars import cents
+from .bars import _CENTS, cents
 
 IQR_K = 1.5
 GAP_TOP_K = 3
@@ -112,7 +112,7 @@ def outlier_iqr(events: DataFrame, k: float = IQR_K) -> DataFrame:
     f"""
     WITH v AS (
       SELECT event_type,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
+             {_CENTS} AS c
       FROM events
     ), q AS (
       SELECT event_type,
@@ -422,11 +422,11 @@ def theil_sen(events: DataFrame) -> DataFrame:
 
 @register(
     "q_theil_sen",
-    """
+    f"""
     WITH daily AS (
       SELECT event_type,
              date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-             CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+             CAST(sum({_CENTS}) AS BIGINT)
                AS y
       FROM events WHERE value IS NOT NULL
       GROUP BY event_type, CAST(ts AS DATE)

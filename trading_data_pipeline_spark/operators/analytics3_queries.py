@@ -35,18 +35,13 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .bars import _BARS_SQL, daily_moves
+from .bars import _MOVES_SQL, daily_moves
 
 CUSUM_K = 100  # slack, cents
 CUSUM_H = 1000  # alarm threshold, cents
 TRIM_PCT_NUM, TRIM_PCT_DEN = 1, 10  # 10% each side
 PS_Y = None  # per-type (no pair choice needed)
 AN_SCALE = 10**4
-
-_MOVES_SQL = f"""{_BARS_SQL}, mv AS (
-      SELECT event_type, day, dc AS x, vol FROM moves
-      WHERE dc IS NOT NULL
-    )"""
 
 
 # ------------------------------------------------------------------ CUSUM

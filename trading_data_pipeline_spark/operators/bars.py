@@ -5,11 +5,26 @@ The reference's whole computation is the per-instrument, per-day bar
 last StartPrice by Time, min, max, summed volume. Every bar in the
 package — the Report1 ETL, q_report1, the daily bars the indicator, risk
 and microstructure queries run on, and dollar bars — is built by
-:func:`ohlc` below, and its DuckDB twin is ``_BARS_SQL``.
+:func:`ohlc` below.
 
-Prices are fixed to integer cents (:func:`cents`, SQL ``_CENTS``) before
-any bar arithmetic, so every comparison and sum over bars is exact on
-both engines.
+The daily bar is defined once per engine, here, and the two definitions
+make the same three decisions: prices are fixed to integer cents
+(:func:`cents`, SQL ``_CENTS``) before any bar arithmetic, so every
+comparison and sum over bars is exact; open/close are the first/last
+price in (ts, event_id) order, NULL when that row's price is NULL; vol
+is the sum of ``coalesce(props.$.k, 0)``. Consumers may rely on these
+columns, and on no other:
+
+- :func:`daily_ohlcv` / ``_BARS_SQL``'s ``bars``:
+  (event_type, day, o_c, h_c, l_c, c_c, vol);
+- :func:`daily_bars` / ``moves``: (event_type, day, c_c, vol, dc, prev_c),
+  where ``dc`` is the close change from the type's previous day;
+- :func:`daily_moves` / ``_MOVES_SQL``'s ``mv``: (event_type, day, x, vol),
+  the rows with a previous day.
+
+Every DuckDB oracle that needs a daily bar starts ``WITH {_BARS_SQL}, …``
+or ``WITH {_MOVES_SQL}, …`` (tests/test_bars.py checks both that no
+oracle writes its own and that the two engines agree row for row).
 
 Left on other forms, each for a reason:
 - ``trading_queries.bar_aggs`` uses ``min_by``/``max_by``: it is shared
@@ -28,9 +43,8 @@ from pyspark.sql import functions as F
 
 _CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 
-# Daily bar CTE shared by the per-day estimators: integer-cent close
-# (last event in (ts, event_id) order — the report1 close contract) and
-# total traded size from props.$.k.
+# The daily bar, DuckDB side: ``bars`` is :func:`daily_ohlcv`, ``moves``
+# is :func:`daily_bars`.
 _BARS_SQL = f"""
     e AS (
       SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
@@ -39,13 +53,15 @@ _BARS_SQL = f"""
       FROM events
     ), w AS (
       SELECT *,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
+             first_value(cents) OVER d AS o,
+             last_value(cents) OVER d AS c
       FROM e
+      WINDOW d AS (PARTITION BY event_type, day ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
     ), bars AS (
-      SELECT event_type, day, min(c) AS c_c,
+      SELECT event_type, day,
+             min(o) AS o_c, max(cents) AS h_c,
+             min(cents) AS l_c, min(c) AS c_c,
              CAST(sum(q) AS BIGINT) AS vol
       FROM w GROUP BY event_type, day
     ), moves AS (
@@ -57,6 +73,12 @@ _BARS_SQL = f"""
       FROM bars
     )
 """
+
+# ``mv`` is :func:`daily_moves`.
+_MOVES_SQL = f"""{_BARS_SQL}, mv AS (
+      SELECT event_type, day, dc AS x, vol FROM moves
+      WHERE dc IS NOT NULL
+    )"""
 
 
 def cents(col: str = "value") -> Column:

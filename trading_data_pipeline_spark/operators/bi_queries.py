@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..plans.global_rank import global_cumsum, global_row_number
 from ..registry import load, register
-from .bars import cents
+from .bars import _CENTS, cents
 
 N_SCORE_BUCKETS = 5
 MIN_PAIR_COUNT = 2  # keep pairs co-purchased in >= 2 orders
@@ -899,7 +899,7 @@ def diff_in_diff(events: DataFrame, split: str = DID_SPLIT) -> DataFrame:
       SELECT CAST(user_id % 2 AS INT) AS treat,
              CASE WHEN ts >= TIMESTAMP '{DID_SPLIT}' THEN 1 ELSE 0 END
                AS post,
-             CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+             CAST(sum({_CENTS}) AS BIGINT)
                AS s,
              CAST(count(*) AS BIGINT) AS n
       FROM events WHERE value IS NOT NULL
@@ -1585,7 +1585,7 @@ def power_analysis(events: DataFrame) -> DataFrame:
     f"""
     WITH users AS (
       SELECT user_id,
-             CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
+             CAST(sum({_CENTS})
                   AS BIGINT) AS m
       FROM events GROUP BY user_id
     ), agg AS (
@@ -1764,9 +1764,9 @@ def theil_index(events: DataFrame) -> DataFrame:
 
 @register(
     "q_theil_index",
-    """
+    f"""
     WITH d AS (
-      SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS x
+      SELECT event_type, {_CENTS} AS x
       FROM events WHERE floor(value * 100 + 0.5) > 0
     ), g AS (
       SELECT event_type, CAST(count(*) AS BIGINT) AS ng,

@@ -47,32 +47,6 @@ MFI_N = 14
 DB_THRESHOLD = 10_000_000  # dollar-bar size: cents of traded value
 SORTINO_SCALE = 10**8
 
-# Daily OHLC bars in integer cents + volume — the full-bar twin of
-# bars._BARS_SQL (which only carries the close).
-_OHLC_SQL = f"""
-    e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             {_CENTS} AS cents,
-             coalesce(json_extract_string(props, '$.k')::BIGINT, 0) AS q
-      FROM events
-    ), w AS (
-      SELECT *,
-             first_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id) AS o,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), bars AS (
-      SELECT event_type, day,
-             min(o) AS o_c, max(cents) AS h_c,
-             min(cents) AS l_c, min(c) AS c_c,
-             CAST(sum(q) AS BIGINT) AS vol
-      FROM w GROUP BY event_type, day
-    )
-"""
-
 
 # ------------------------------------------------- stochastic oscillator
 
@@ -119,7 +93,7 @@ def stochastic(
 @register(
     "q_stochastic",
     f"""
-    WITH {_OHLC_SQL}, r AS (
+    WITH {_BARS_SQL}, r AS (
       SELECT event_type, day, c_c,
              min(l_c) OVER f AS ll, max(h_c) OVER f AS hh,
              row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
@@ -193,7 +167,7 @@ def mfi(events: DataFrame, n: int = MFI_N) -> DataFrame:
 @register(
     "q_mfi",
     f"""
-    WITH {_OHLC_SQL}, tp AS (
+    WITH {_BARS_SQL}, tp AS (
       SELECT event_type, day, h_c + l_c + c_c AS tp,
              (h_c + l_c + c_c) * vol AS flow
       FROM bars
@@ -676,7 +650,7 @@ def donchian(events: DataFrame, n: int = DONCHIAN_N) -> DataFrame:
 @register(
     "q_donchian",
     f"""
-    WITH {_OHLC_SQL}, r AS (
+    WITH {_BARS_SQL}, r AS (
       SELECT *,
              row_number() OVER w AS rn,
              max(h_c) OVER (w ROWS BETWEEN {DONCHIAN_N} PRECEDING
@@ -862,27 +836,7 @@ def rolling_corr(
 @register(
     "q_rolling_corr",
     f"""
-    WITH e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             {_CENTS} AS cents
-      FROM events
-      WHERE event_type IN ('{RCORR_A}', '{RCORR_B}')
-    ), w AS (
-      SELECT *,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), bars AS (
-      SELECT event_type, day, min(c) AS c_c
-      FROM w GROUP BY event_type, day
-    ), moves AS (
-      SELECT event_type, day,
-             c_c - lag(c_c) OVER (PARTITION BY event_type ORDER BY day)
-               AS dc
-      FROM bars
-    ), j AS (
+    WITH {_BARS_SQL}, j AS (
       SELECT a.day, a.dc AS x, b.dc AS y
       FROM moves a JOIN moves b ON a.day = b.day
       WHERE a.event_type = '{RCORR_A}' AND b.event_type = '{RCORR_B}'

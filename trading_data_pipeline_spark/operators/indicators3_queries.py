@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .bars import daily_ohlcv
+from .bars import _BARS_SQL, daily_ohlcv
 
 WR_N = 14
 AROON_N = 10
@@ -56,36 +56,6 @@ CMF_N = 10
 TENKAN, KIJUN, SENKOU_B, DISP = 5, 10, 15, 10
 CLV_SCALE = 10**6
 RN_BITS = 20  # Aroon (value, rn) encoding: code = value·2^20 + rn
-
-# Shared OHLCV daily-bar CTE: integer-cent OHLC (first/last in
-# (ts, event_id) order — the report1 contract) + props.$.k volume.
-_OHLCV_SQL = """
-    e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-             coalesce(json_extract_string(props, '$.k')::BIGINT, 0) AS qy
-      FROM events
-    ), w AS (
-      SELECT *,
-             first_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id) AS o,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), bars AS (
-      SELECT event_type, day,
-             min(o) AS o_c, max(cents) AS h_c,
-             min(cents) AS l_c, min(c) AS c_c,
-             CAST(sum(qy) AS BIGINT) AS vol
-      FROM w GROUP BY event_type, day
-    ), nbars AS (
-      SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY day)
-               AS rn
-      FROM bars
-    )
-"""
 
 
 def _ohlcv(events: DataFrame) -> DataFrame:
@@ -128,11 +98,12 @@ def williams_r(events: DataFrame, n: int = WR_N) -> DataFrame:
 @register(
     "q_williams_r",
     f"""
-    WITH {_OHLCV_SQL}, fr AS (
-      SELECT event_type, day, c_c, rn,
+    WITH {_BARS_SQL}, fr AS (
+      SELECT event_type, day, c_c,
+             row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn,
              CAST(max(h_c) OVER f AS BIGINT) AS hh,
              CAST(min(l_c) OVER f AS BIGINT) AS ll
-      FROM nbars
+      FROM bars
       WINDOW f AS (PARTITION BY event_type ORDER BY day
                    ROWS BETWEEN {WR_N - 1} PRECEDING AND CURRENT ROW)
     )
@@ -191,7 +162,10 @@ def aroon(events: DataFrame, n: int = AROON_N) -> DataFrame:
 @register(
     "q_aroon",
     f"""
-    WITH {_OHLCV_SQL}, enc AS (
+    WITH {_BARS_SQL}, nbars AS (
+      SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
+      FROM bars
+    ), enc AS (
       SELECT event_type, day, rn,
              CAST(max(h_c * {1 << RN_BITS} + rn) OVER f AS BIGINT)
                AS code_h,
@@ -272,9 +246,11 @@ def cci(events: DataFrame, n: int = CCI_N) -> DataFrame:
 @register(
     "q_cci",
     f"""
-    WITH {_OHLCV_SQL}, tp AS (
-      SELECT event_type, day, rn, h_c + l_c + c_c AS tp3
-      FROM nbars
+    WITH {_BARS_SQL}, tp AS (
+      SELECT event_type, day,
+             row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn,
+             h_c + l_c + c_c AS tp3
+      FROM bars
     ), anch AS (
       SELECT event_type, day AS a_day, rn AS a_rn, tp3 AS a_tp3,
              CAST(sum(tp3) OVER f AS BIGINT) AS sum3
@@ -348,14 +324,14 @@ def vortex(events: DataFrame, n: int = VX_N) -> DataFrame:
 @register(
     "q_vortex",
     f"""
-    WITH {_OHLCV_SQL}, vm AS (
-      SELECT event_type, day, rn,
+    WITH {_BARS_SQL}, vm AS (
+      SELECT event_type, day, row_number() OVER pw AS rn,
              abs(h_c - lag(l_c) OVER pw) AS vmp,
              abs(l_c - lag(h_c) OVER pw) AS vmm,
              greatest(h_c - l_c,
                       abs(h_c - lag(c_c) OVER pw),
                       abs(l_c - lag(c_c) OVER pw)) AS tr
-      FROM nbars
+      FROM bars
       WINDOW pw AS (PARTITION BY event_type ORDER BY day)
     ), s AS (
       SELECT event_type, day,
@@ -428,13 +404,14 @@ def chaikin(events: DataFrame, n: int = CMF_N) -> DataFrame:
 @register(
     "q_chaikin",
     f"""
-    WITH {_OHLCV_SQL}, clv AS (
-      SELECT event_type, day, rn, vol,
+    WITH {_BARS_SQL}, clv AS (
+      SELECT event_type, day, vol,
+             row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn,
              CASE WHEN h_c > l_c THEN
                (CASE WHEN 2 * c_c - h_c - l_c >= 0 THEN 1 ELSE -1 END)
                * (abs(2 * c_c - h_c - l_c) * {CLV_SCALE} // (h_c - l_c))
              ELSE 0 END * vol AS mfv
-      FROM nbars
+      FROM bars
     ), s AS (
       SELECT event_type, day, rn,
              CAST(sum(mfv) OVER r AS BIGINT) AS ad_fx,
@@ -503,12 +480,13 @@ def ichimoku(events: DataFrame) -> DataFrame:
 @register(
     "q_ichimoku",
     f"""
-    WITH {_OHLCV_SQL}, mids AS (
-      SELECT event_type, day, rn, c_c,
+    WITH {_BARS_SQL}, mids AS (
+      SELECT event_type, day, c_c,
+             row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn,
              CAST(max(h_c) OVER t + min(l_c) OVER t AS BIGINT) AS tenkan2,
              CAST(max(h_c) OVER k + min(l_c) OVER k AS BIGINT) AS kijun2,
              CAST(max(h_c) OVER s + min(l_c) OVER s AS BIGINT) AS sb2raw
-      FROM nbars
+      FROM bars
       WINDOW t AS (PARTITION BY event_type ORDER BY day
                    ROWS BETWEEN {TENKAN - 1} PRECEDING AND CURRENT ROW),
              k AS (PARTITION BY event_type ORDER BY day

@@ -37,8 +37,9 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
+from .bars import _BARS_SQL
 from .indicators2_queries import sum_left
-from .indicators3_queries import _OHLCV_SQL, _ohlcv
+from .indicators3_queries import _ohlcv
 
 ADX_N = 7  # classic 14 scaled to the 30-day test calendar
 UO_F, UO_M, UO_S = 5, 10, 20  # classic 7/14/28 scaled
@@ -110,12 +111,12 @@ def _dmtr(events: DataFrame) -> DataFrame:
     )
 
 
-_DMTR_SQL = f"""{_OHLCV_SQL}, pbars AS (
+_DMTR_SQL = f"""{_BARS_SQL}, pbars AS (
       SELECT event_type, day, h_c, l_c, c_c,
              lag(h_c) OVER (PARTITION BY event_type ORDER BY day) AS ph,
              lag(l_c) OVER (PARTITION BY event_type ORDER BY day) AS pl,
              lag(c_c) OVER (PARTITION BY event_type ORDER BY day) AS pc
-      FROM nbars
+      FROM bars
     ), dm AS (
       SELECT event_type, day,
              CASE WHEN h_c - ph > pl - l_c AND h_c - ph > 0
@@ -274,10 +275,10 @@ def ultimate_osc(
 @register(
     "q_ultimate_osc",
     f"""
-    WITH {_OHLCV_SQL}, pb AS (
+    WITH {_BARS_SQL}, pb AS (
       SELECT event_type, day, h_c, l_c, c_c,
              lag(c_c) OVER (PARTITION BY event_type ORDER BY day) AS pc
-      FROM nbars
+      FROM bars
     ), d AS (
       SELECT event_type, day,
              c_c - least(l_c, pc) AS bp,
@@ -351,11 +352,12 @@ def keltner(events: DataFrame, n: int = KELT_N) -> DataFrame:
 @register(
     "q_keltner",
     f"""
-    WITH {_OHLCV_SQL}, fr AS (
-      SELECT event_type, day, c_c, rn,
+    WITH {_BARS_SQL}, fr AS (
+      SELECT event_type, day, c_c,
+             row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn,
              CAST(sum(h_c + l_c + c_c) OVER f AS BIGINT) AS s_tp3,
              CAST(sum(h_c - l_c) OVER f AS BIGINT) AS s_rng
-      FROM nbars
+      FROM bars
       WINDOW f AS (PARTITION BY event_type ORDER BY day
                    ROWS BETWEEN {KELT_N - 1} PRECEDING AND CURRENT ROW)
     )
@@ -408,10 +410,10 @@ def force_index(events: DataFrame, n: int = FI_N) -> DataFrame:
 @register(
     "q_force_index",
     f"""
-    WITH {_OHLCV_SQL}, pb AS (
+    WITH {_BARS_SQL}, pb AS (
       SELECT event_type, day, c_c, vol,
              lag(c_c) OVER (PARTITION BY event_type ORDER BY day) AS pc
-      FROM nbars
+      FROM bars
     ), d AS (
       SELECT event_type, day, (c_c - pc) * vol AS fi,
              row_number() OVER (PARTITION BY event_type ORDER BY day)
@@ -472,11 +474,11 @@ def ease_of_movement(events: DataFrame, n: int = EOM_N) -> DataFrame:
 @register(
     "q_ease_of_movement",
     f"""
-    WITH {_OHLCV_SQL}, pb AS (
+    WITH {_BARS_SQL}, pb AS (
       SELECT event_type, day, h_c, l_c, vol,
              lag(h_c) OVER (PARTITION BY event_type ORDER BY day) AS ph,
              lag(l_c) OVER (PARTITION BY event_type ORDER BY day) AS pl
-      FROM nbars
+      FROM bars
     ), d AS (
       SELECT event_type, day,
              CAST((h_c + l_c - ph - pl) * (h_c - l_c) AS DOUBLE)

@@ -36,30 +36,10 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .bars import daily_ohlcv
+from .bars import _BARS_SQL, daily_ohlcv
 
 BOLL_N = 5  # rolling window (days)
 RSI_N = 14
-
-# Shared daily-close CTE (cents): close = last value in (ts, event_id)
-# order per (event_type, day) — the report1 close contract.
-_DAILY_CLOSE_SQL = """
-    e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-      FROM events
-    ), w AS (
-      SELECT *,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), daily AS (
-      SELECT event_type, day, min(c) AS close_c
-      FROM w GROUP BY event_type, day
-    )
-"""
 
 
 def daily_close(events: DataFrame) -> DataFrame:
@@ -115,12 +95,12 @@ def bollinger(events: DataFrame, n: int = BOLL_N) -> DataFrame:
 @register(
     "q_bollinger",
     f"""
-    WITH {_DAILY_CLOSE_SQL}, roll AS (
-      SELECT event_type, day, close_c,
-             CAST(sum(close_c) OVER f AS BIGINT) AS s1,
-             CAST(sum(close_c * close_c) OVER f AS BIGINT) AS s2,
+    WITH {_BARS_SQL}, roll AS (
+      SELECT event_type, day, c_c AS close_c,
+             CAST(sum(c_c) OVER f AS BIGINT) AS s1,
+             CAST(sum(c_c * c_c) OVER f AS BIGINT) AS s2,
              row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-      FROM daily
+      FROM bars
       WINDOW f AS (PARTITION BY event_type ORDER BY day
                    ROWS BETWEEN {BOLL_N} PRECEDING AND 1 PRECEDING)
     )
@@ -188,11 +168,11 @@ def rsi(events: DataFrame, n: int = RSI_N) -> DataFrame:
 @register(
     "q_rsi",
     f"""
-    WITH {_DAILY_CLOSE_SQL}, d AS (
-      SELECT event_type, day, close_c,
-             close_c - lag(close_c) OVER w AS delta,
+    WITH {_BARS_SQL}, d AS (
+      SELECT event_type, day, c_c AS close_c,
+             c_c - lag(c_c) OVER w AS delta,
              row_number() OVER w AS rn
-      FROM daily
+      FROM bars
       WINDOW w AS (PARTITION BY event_type ORDER BY day)
     ), g AS (
       SELECT event_type, day, close_c, rn,
@@ -253,26 +233,8 @@ def candle_patterns(events: DataFrame) -> DataFrame:
 
 @register(
     "q_candle_patterns",
-    """
-    WITH e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-      FROM events
-    ), w AS (
-      SELECT *,
-             first_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id) AS o,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), bars AS (
-      SELECT event_type, day,
-             min(o) AS o_c, max(cents) AS h_c,
-             min(cents) AS l_c, min(c) AS c_c
-      FROM w GROUP BY event_type, day
-    ), p AS (
+    f"""
+    WITH {_BARS_SQL}, p AS (
       SELECT *,
              lag(o_c) OVER pw AS p_o,
              lag(c_c) OVER pw AS p_c
@@ -425,25 +387,7 @@ def atr(events: DataFrame, n: int = ATR_N) -> DataFrame:
 @register(
     "q_atr",
     f"""
-    WITH e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-      FROM events
-    ), w AS (
-      SELECT *,
-             first_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id) AS o,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), bars AS (
-      SELECT event_type, day,
-             min(o) AS o_c, max(cents) AS h_c,
-             min(cents) AS l_c, min(c) AS c_c
-      FROM w GROUP BY event_type, day
-    ), tr AS (
+    WITH {_BARS_SQL}, tr AS (
       SELECT event_type, day,
              greatest(h_c - l_c,
                       abs(h_c - lag(c_c) OVER pw),
@@ -492,24 +436,8 @@ def obv(events: DataFrame) -> DataFrame:
 
 @register(
     "q_obv",
-    """
-    WITH e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-             coalesce(json_extract_string(props, '$.k')::BIGINT, 0) AS q
-      FROM events
-    ), w AS (
-      SELECT *,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), bars AS (
-      SELECT event_type, day, min(c) AS c_c,
-             CAST(sum(q) AS BIGINT) AS vol
-      FROM w GROUP BY event_type, day
-    ), sv AS (
+    f"""
+    WITH {_BARS_SQL}, sv AS (
       SELECT event_type, day, c_c, vol,
              CASE WHEN c_c > lag(c_c) OVER pw THEN vol
                   WHEN c_c < lag(c_c) OVER pw THEN -vol

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .bars import cents
+from .bars import _CENTS, cents
 
 SESSION_GAP_MIN = 30
 
@@ -310,9 +310,9 @@ def _benford_oracle() -> str:
     )
     return f"""
     WITH c AS (
-      SELECT CAST(substr(CAST(CAST(floor(value * 100 + 0.5) AS BIGINT)
+      SELECT CAST(substr(CAST({_CENTS}
                               AS VARCHAR), 1, 1) AS INTEGER) AS digit
-      FROM events WHERE CAST(floor(value * 100 + 0.5) AS BIGINT) > 0
+      FROM events WHERE {_CENTS} > 0
     ), g AS (
       SELECT digit, CAST(count(*) AS BIGINT) AS n FROM c GROUP BY digit
     ), t AS (SELECT sum(n) AS tot FROM g)

@@ -33,14 +33,10 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..functions.vector import l2_norm
 from ..registry import load, register
-from .bars import _BARS_SQL, daily_moves
+from .bars import _MOVES_SQL, daily_moves
 
 RK_SCALE = 10**4
 RACHEV_NUM, RACHEV_DEN = 1, 10  # alpha = 10%
-
-_MOVES_SQL = f"""{_BARS_SQL}, mv AS (
-      SELECT event_type, day, dc AS x FROM moves WHERE dc IS NOT NULL
-    )"""
 
 
 # -------------------------------------------------------------- dual beta

@@ -435,23 +435,7 @@ def gap_risk(events: DataFrame) -> DataFrame:
 @register(
     "q_gap_risk",
     f"""
-    WITH e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             {_CENTS} AS cents
-      FROM events
-    ), w AS (
-      SELECT *,
-             first_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id) AS o,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), bars AS (
-      SELECT event_type, day, min(o) AS o_c, min(c) AS c_c
-      FROM w GROUP BY event_type, day
-    ), gaps AS (
+    WITH {_BARS_SQL}, gaps AS (
       SELECT event_type,
              (o_c - lag(c_c) OVER pw) * 10000.0
                / lag(c_c) OVER pw AS gap_bps

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..registry import load, register
 from .graph_queries import TRIANGLE_COS, similarity_edges_for
-from .bars import _BARS_SQL, daily_moves
+from .bars import _MOVES_SQL, daily_moves
 
 RB_SCALE = 10**4
 BOOT_B = 100
@@ -50,13 +50,6 @@ _POIS_CDF = [
     int(math.floor(sum(math.exp(-1.0) / math.factorial(k) for k in range(j + 1)) * LCG_M))
     for j in range(5)
 ]
-
-_MOVES_SQL = f"""{_BARS_SQL}, mv AS (
-      SELECT event_type, day, dc AS x,
-             row_number() OVER (PARTITION BY event_type ORDER BY day)
-               AS rid
-      FROM moves WHERE dc IS NOT NULL
-    )"""
 
 
 # -------------------------------------------------------- Hodges–Lehmann
@@ -112,7 +105,7 @@ def hodges_lehmann(events: DataFrame) -> DataFrame:
     WITH {_MOVES_SQL}, walsh AS (
       SELECT a.event_type, a.x + b.x AS w2
       FROM mv a JOIN mv b
-        ON a.event_type = b.event_type AND a.rid <= b.rid
+        ON a.event_type = b.event_type AND a.day <= b.day
     ), ranked AS (
       SELECT event_type, w2,
              row_number() OVER (PARTITION BY event_type ORDER BY w2)
@@ -220,10 +213,14 @@ def _boot_oracle(n_boot: int) -> str:
         f"WHEN u < {_POIS_CDF[j]} THEN {j}" for j in range(5)
     ) + " ELSE 5 END"
     return f"""
-    WITH {_MOVES_SQL}, reps AS (
+    WITH {_MOVES_SQL}, ids AS (
+      SELECT event_type, x,
+             row_number() OVER (PARTITION BY event_type ORDER BY day) AS rid
+      FROM mv
+    ), reps AS (
       SELECT event_type, x, rid, r.range AS b,
              (rid * {LCG_A} + r.range * {LCG_B}) % {LCG_M} AS u
-      FROM mv, range({n_boot}) r
+      FROM ids, range({n_boot}) r
     ), means AS (
       SELECT event_type, b,
              CAST(sum(({mult_sql}) * x) AS DOUBLE)

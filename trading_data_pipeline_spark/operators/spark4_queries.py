@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .bars import cents
+from .bars import _CENTS, cents
 
 TMP_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -314,10 +314,10 @@ def q_sql_udf_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
     return spark.sql(
-        """
+        f"""
         SELECT value_band(value) AS band,
                CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+               CAST(sum({_CENTS}) AS BIGINT)
                  AS cents
         FROM events_sqludf
         GROUP BY value_band(value)
@@ -327,13 +327,13 @@ def q_sql_udf_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "q_sql_udf",
-    """
+    f"""
     SELECT CASE WHEN value IS NULL THEN 'null'
                 WHEN value < 10 THEN 'small'
                 WHEN value < 100 THEN 'medium'
                 ELSE 'large' END AS band,
            CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(sum({_CENTS}) AS BIGINT)
              AS cents
     FROM events
     GROUP BY 1
@@ -389,9 +389,9 @@ def xml_ingest(events: DataFrame) -> DataFrame:
 
 @register(
     "q_xml_ingest",
-    """
+    f"""
     SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(sum({_CENTS}) AS BIGINT)
              AS total_cents,
            CAST(max(event_id) AS BIGINT) AS max_event_id
     FROM events GROUP BY event_type
@@ -409,10 +409,10 @@ def q_xml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ SQL pipe syntax (4.1)
 
-PIPE_SQL = """
+PIPE_SQL = f"""
 FROM events
 |> WHERE value IS NOT NULL
-|> EXTEND CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+|> EXTEND {_CENTS} AS cents
 |> AGGREGATE CAST(count(*) AS BIGINT) AS n,
              CAST(sum(cents) AS BIGINT) AS total_cents,
              CAST(max(cents) AS BIGINT) AS max_cents
@@ -424,12 +424,12 @@ FROM events
 
 @register(
     "q_pipe_sql",
-    """
+    f"""
     SELECT event_type, user_id % 10 AS user_band,
            CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(sum({_CENTS}) AS BIGINT)
              AS total_cents,
-           CAST(max(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(max({_CENTS}) AS BIGINT)
              AS max_cents
     FROM events WHERE value IS NOT NULL
     GROUP BY event_type, user_id % 10

@@ -45,18 +45,13 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .bars import _BARS_SQL, daily_bars, daily_moves
+from .bars import _BARS_SQL, _MOVES_SQL, daily_bars, daily_moves
 
 ST_SCALE = 10**4
 LB_LAGS = 5
 WELCH_A, WELCH_B = "purchase", "view"
 
 _DEC = "decimal(38,0)"
-
-
-_MOVES_SQL = f"""{_BARS_SQL}, mv AS (
-      SELECT event_type, day, dc AS x FROM moves WHERE dc IS NOT NULL
-    )"""
 
 
 # ---------------------------------------------------------- Jarque–Bera

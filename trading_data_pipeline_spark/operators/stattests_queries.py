@@ -412,7 +412,7 @@ def variance_ratio(events: DataFrame) -> DataFrame:
              CAST(sum(c) AS BIGINT) AS sx,
              CAST(sum(c * c) AS BIGINT) AS sxx
       FROM (SELECT event_type,
-                   CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
+                   {_CENTS} AS c
             FROM events)
       GROUP BY event_type HAVING count(*) > 1
     )

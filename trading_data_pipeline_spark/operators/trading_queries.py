@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .bars import cents, daily_bars, daily_ohlcv
+from .bars import _BARS_SQL, _CENTS, cents, daily_bars, daily_ohlcv
 
 BAR_SECONDS = 900  # 15-minute bars
 MAD_K = 4.4478  # 3 * 1.4826 (normal-consistency factor)
@@ -235,7 +235,7 @@ def mad_outliers(events: DataFrame) -> DataFrame:
     f"""
     WITH c AS (
       SELECT event_type,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+             {_CENTS} AS cents
       FROM events
     ), m AS (
       SELECT event_type, median(cents) AS med_c, count(*) AS n
@@ -582,7 +582,7 @@ def seasonal_decompose(events: DataFrame) -> DataFrame:
     f"""
     WITH daily AS (
       SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+             CAST(sum({_CENTS}) AS BIGINT)
                AS y
       FROM events WHERE value IS NOT NULL
       GROUP BY 1, 2
@@ -676,11 +676,11 @@ def twap(events: DataFrame) -> DataFrame:
 
 @register(
     "q_twap",
-    """
+    f"""
     WITH ev AS (
       SELECT event_type, CAST(ts AS DATE) AS d,
              epoch_us(ts) AS tus, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+             {_CENTS} AS cents
       FROM events WHERE value IS NOT NULL
     ), spans AS (
       SELECT event_type, d, cents,
@@ -757,7 +757,7 @@ def volume_profile(events: DataFrame, bucket_c: int = VP_BUCKET_C) -> DataFrame:
     f"""
     WITH base AS (
       SELECT event_type,
-             CAST(floor(CAST(floor(value * 100 + 0.5) AS BIGINT)
+             CAST(floor({_CENTS}
                         / {VP_BUCKET_C}.0) AS BIGINT) * {VP_BUCKET_C}
                AS price_bucket_c,
              coalesce(json_extract_string(props, '$.k')::BIGINT, 0) AS q
@@ -823,23 +823,7 @@ def return_split(events: DataFrame) -> DataFrame:
 @register(
     "q_return_split",
     f"""
-    WITH e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             {{cents}} AS cents
-      FROM events
-    ), w AS (
-      SELECT *,
-             first_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id) AS o,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), bars AS (
-      SELECT event_type, day, min(o) AS o_c, min(c) AS c_c
-      FROM w GROUP BY event_type, day
-    ), legs AS (
+    WITH {_BARS_SQL}, legs AS (
       SELECT event_type,
              o_c - lag(c_c) OVER pw AS onc,
              c_c - o_c AS inc_
@@ -854,7 +838,7 @@ def return_split(events: DataFrame) -> DataFrame:
            floor(CAST(sum(inc_) AS BIGINT) / (count(*) * 100.0)
                  * 10000 + 0.5) / 10000 AS mean_intraday
     FROM legs WHERE onc IS NOT NULL GROUP BY event_type
-    """.format(cents="CAST(floor(value * 100 + 0.5) AS BIGINT)"),
+    """,
     doc="Overnight/intraday return decomposition per type: the daily "
     "close-to-close move split exactly into the untradeable overnight "
     "leg and the intraday leg (integer-cent identity, asserted in "
@@ -948,21 +932,7 @@ def triple_barrier(events: DataFrame, h: int = TB_HORIZON) -> DataFrame:
 @register(
     "q_triple_barrier",
     f"""
-    WITH e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-      FROM events
-    ), w AS (
-      SELECT *,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), bars AS (
-      SELECT event_type, day, min(c) AS c_c
-      FROM w GROUP BY event_type, day
-    ), b AS (
+    WITH {_BARS_SQL}, b AS (
       SELECT *, row_number() OVER
                (PARTITION BY event_type ORDER BY day) AS rn
       FROM bars
@@ -1044,25 +1014,7 @@ def xsec_momentum(events: DataFrame, r: int = XSEC_R) -> DataFrame:
 @register(
     "q_xsec_momentum",
     f"""
-    WITH e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-      FROM events
-    ), w AS (
-      SELECT *,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), bars AS (
-      SELECT event_type, day, min(c) AS c_c
-      FROM w GROUP BY event_type, day
-    ), moves AS (
-      SELECT event_type, day,
-             c_c - lag(c_c) OVER tw AS dc
-      FROM bars WINDOW tw AS (PARTITION BY event_type ORDER BY day)
-    ), formed AS (
+    WITH {_BARS_SQL}, formed AS (
       SELECT event_type, day,
              CAST(sum(dc) OVER (tw ROWS BETWEEN {XSEC_R - 1} PRECEDING
                                 AND CURRENT ROW) AS BIGINT) AS mom_c,
@@ -1165,22 +1117,7 @@ def pairs_signal(
 @register(
     "q_pairs_signal",
     f"""
-    WITH e AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-      FROM events
-      WHERE event_type IN ('{PAIRS_A}', '{PAIRS_B}')
-    ), w AS (
-      SELECT *,
-             last_value(cents) OVER
-               (PARTITION BY event_type, day ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-               AS c
-      FROM e
-    ), bars AS (
-      SELECT event_type, day, min(c) AS c_c
-      FROM w GROUP BY event_type, day
-    ), j AS (
+    WITH {_BARS_SQL}, j AS (
       SELECT a.day, a.c_c AS ca, b.c_c AS cb
       FROM bars a JOIN bars b ON a.day = b.day
       WHERE a.event_type = '{PAIRS_A}' AND b.event_type = '{PAIRS_B}'
@@ -1275,7 +1212,7 @@ def exec_shortfall(events: DataFrame) -> DataFrame:
     f"""
     WITH base AS (
       SELECT user_id, CAST(ts AS DATE) AS day, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS c,
+             {_CENTS} AS c,
              coalesce(json_extract_string(props, '$.k')::BIGINT, 0) AS q
       FROM events
     ), w AS (

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .bars import cents
+from .bars import _CENTS, cents
 
 TE_SMOOTHING = 10  # pseudo-count mass of the global mean
 K_ANON = 20        # minimum cell size before a tuple is "at risk"
@@ -384,10 +384,10 @@ def minmax_scale(events: DataFrame) -> DataFrame:
 
 @register(
     "q_minmax_scale",
-    """
+    f"""
     WITH c AS (
       SELECT event_id, event_type,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
+             {_CENTS} AS c
       FROM events WHERE value IS NOT NULL
     ), m AS (
       SELECT *, min(c) OVER (PARTITION BY event_type) AS mn,
@@ -469,7 +469,7 @@ def fixed_effects_demean(events: DataFrame) -> DataFrame:
     f"""
     WITH base AS (
       SELECT event_id, user_id, CAST(ts AS DATE) AS day,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
+             {_CENTS} AS c
       FROM events
     ), by_user AS (
       SELECT user_id, CAST(sum(c) AS BIGINT) AS su,

@@ -40,17 +40,12 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..plans.global_rank import global_cumsum
 from ..registry import load, register
-from .bars import _BARS_SQL, _CENTS, cents, daily_bars, daily_moves
+from .bars import _BARS_SQL, _CENTS, _MOVES_SQL, cents, daily_bars, daily_moves
 
 HURST_B1, HURST_B2 = 8, 16
 GR_Y, GR_X = "purchase", "view"
 BIN_B = 10
 TS_SCALE = 10**4
-
-
-_MOVES_SQL = f"""{_BARS_SQL}, mv AS (
-      SELECT event_type, day, dc AS x FROM moves WHERE dc IS NOT NULL
-    )"""
 
 
 # ------------------------------------------------------------------ Hurst

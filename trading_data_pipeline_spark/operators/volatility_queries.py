@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..registry import load, register
 from .bars import _BARS_SQL, daily_bars
-from .indicators3_queries import _OHLCV_SQL, _ohlcv
+from .indicators3_queries import _ohlcv
 
 VOL_SCALE = 10**6
 _LN2 = math.log(2.0)
@@ -67,8 +67,8 @@ def _with_prev(events: DataFrame) -> DataFrame:
     )
 
 
-_PREV_SQL = f"""{_OHLCV_SQL}, pos0 AS (
-      SELECT * FROM nbars WHERE l_c > 0
+_PREV_SQL = f"""{_BARS_SQL}, pos0 AS (
+      SELECT * FROM bars WHERE l_c > 0
     ), pb AS (
       SELECT *,
              lag(c_c) OVER (PARTITION BY event_type ORDER BY day) AS prev_c,
@@ -110,8 +110,8 @@ def parkinson(events: DataFrame) -> DataFrame:
 @register(
     "q_parkinson",
     f"""
-    WITH {_OHLCV_SQL}, pos AS (
-      SELECT * FROM nbars WHERE l_c > 0
+    WITH {_BARS_SQL}, pos AS (
+      SELECT * FROM bars WHERE l_c > 0
     )
     SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
            floor(sqrt(sum(ln(h_c / CAST(l_c AS DOUBLE))
@@ -158,8 +158,8 @@ def garman_klass(events: DataFrame) -> DataFrame:
 @register(
     "q_garman_klass",
     f"""
-    WITH {_OHLCV_SQL}, pos AS (
-      SELECT * FROM nbars WHERE l_c > 0
+    WITH {_BARS_SQL}, pos AS (
+      SELECT * FROM bars WHERE l_c > 0
     )
     SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
            floor(sqrt(sum(0.5 * ln(h_c / CAST(l_c AS DOUBLE))
@@ -220,8 +220,8 @@ def rogers_satchell(events: DataFrame) -> DataFrame:
 @register(
     "q_rogers_satchell",
     f"""
-    WITH {_OHLCV_SQL}, pos AS (
-      SELECT * FROM nbars WHERE l_c > 0
+    WITH {_BARS_SQL}, pos AS (
+      SELECT * FROM bars WHERE l_c > 0
     )
     SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
            floor(sqrt(sum({_RS_TERM_SQL}) / count(*)) * {VOL_SCALE} + 0.5)

@@ -561,42 +561,21 @@ def obv_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def has_tws_support() -> bool:
-    """transformWithStateInPandas needs google.protobuf at RUNTIME (the
-    state-server protocol is protobuf-encoded); stock containers without
-    it crash the driver worker at query start, so the capability is
-    probed here and vwap_stream picks its implementation explicitly."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def vwap_stream(events: DataFrame, use_tws: bool | None = None) -> DataFrame:
-    """Streaming cumulative VWAP per event type.
-
-    Two implementations with ONE output contract (update semantics: the
-    latest row per key is the current value; exact integer sums, one
-    division at emit so the final row is bit-identical to the batch
-    ``sum(cents·k)/sum(k)/100``):
-
-    - the Spark 4 ``transformWithStateInPandas`` form (typed ValueState
-      handle — the successor API), used when the runtime has
-      google.protobuf (see :func:`has_tws_support`);
-    - an ``applyInPandasWithState`` fallback with the same fold, for
-      protobuf-less runtimes like this container (both asserted
-      equivalent to batch in tests/test_streaming.py).
+def vwap_stream(events: DataFrame) -> DataFrame:
+    """Streaming cumulative VWAP per event type (update semantics: the
+    latest row per key is the current value). Exact integer sums, one
+    division at emit, so the final row is bit-identical to the batch
+    ``sum(cents·k)/sum(k)/100`` (asserted in tests/test_streaming.py).
     """
     import json
     import math
 
-    out_schema = (
-        "event_type string, n_events long, total_vol long, vwap double"
-    )
-
-    def fold_ints(pdfs, spv: int, sv: int, n: int):
+    def fold(
+        key: tuple,
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        spv, sv, n = state.get if state.exists else (0, 0, 0)
         for pdf in pdfs:
             for val, props in zip(pdf["value"], pdf["props"]):
                 c = int(math.floor(float(val) * 100 + 0.5))
@@ -607,10 +586,8 @@ def vwap_stream(events: DataFrame, use_tws: bool | None = None) -> DataFrame:
                 spv += c * q
                 sv += q
                 n += 1
-        return spv, sv, n
-
-    def emit(key, spv: int, sv: int, n: int) -> pd.DataFrame:
-        return pd.DataFrame(
+        state.update((spv, sv, n))
+        yield pd.DataFrame(
             {
                 "event_type": [key[0]],
                 "n_events": [n],
@@ -619,54 +596,11 @@ def vwap_stream(events: DataFrame, use_tws: bool | None = None) -> DataFrame:
             }
         )
 
-    if use_tws is None:
-        use_tws = has_tws_support()
-
-    if use_tws:
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        class VwapProcessor(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._acc = handle.getValueState(
-                    "acc", "spv long, sv long, n long"
-                )
-
-            def handleInputRows(self, key, rows, timerValues):
-                spv, sv, n = (
-                    tuple(self._acc.get())
-                    if self._acc.exists()
-                    else (0, 0, 0)
-                )
-                spv, sv, n = fold_ints(rows, spv, sv, n)
-                self._acc.update((spv, sv, n))
-                yield emit(key, spv, sv, n)
-
-            def close(self) -> None:
-                pass
-
-        return events.groupBy("event_type").transformWithStateInPandas(
-            statefulProcessor=VwapProcessor(),
-            outputStructType=out_schema,
-            outputMode="update",
-            timeMode="none",
-        )
-
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        spv, sv, n = state.get if state.exists else (0, 0, 0)
-        spv, sv, n = fold_ints(pdfs, spv, sv, n)
-        state.update((spv, sv, n))
-        yield emit(key, spv, sv, n)
-
     return events.groupBy("event_type").applyInPandasWithState(
         fold,
-        outputStructType=out_schema,
+        outputStructType=(
+            "event_type string, n_events long, total_vol long, vwap double"
+        ),
         stateStructType="spv long, sv long, n long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,

@@ -1,5 +1,6 @@
 """``bars.ohlc`` against a sort-then-first/last brute force on adversarial
-inputs, the daily bar's DuckDB twin against its Spark form, the check
+inputs, the daily bar's DuckDB twin against its Spark form (and the cent
+rule on Spark, DuckDB and pandas), the check
 that no oracle writes its own daily bar, and the plan evidence that a
 bar output nobody reads costs nothing."""
 
@@ -19,11 +20,14 @@ from pyspark.sql import functions as F
 
 from trading_data_pipeline_spark.operators.bars import (
     _BARS_SQL,
+    _CENTS,
     _MOVES_SQL,
+    cents,
     daily_bars,
     daily_moves,
     daily_ohlcv,
     ohlc,
+    pandas_cents,
 )
 from trading_data_pipeline_spark.operators.indicators_queries import daily_close
 from trading_data_pipeline_spark.registry import all_queries, load
@@ -138,8 +142,9 @@ def test_oracles_take_the_daily_bar_from_bars():
 
 EVENTS_COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
 # Half-cent boundaries: 1.005 * 100 is 100.49999999999999 in binary64,
-# so both engines must round it down to 100 cents and 0.015 up to 2.
-PRICES = [None, 0.0, 0.005, 0.015, 1.005, 2.675, 10.0, 99.995]
+# so every engine must round it down to 100 cents and 0.015 up to 2;
+# 0.125 * 100 is exactly 12.5 and rounds up to 13.
+PRICES = [None, 0.0, 0.005, 0.015, 0.125, 1.005, 2.675, 10.0, 99.995]
 PROPS = [None, "{}", '{"k": 0}', '{"k": 3}', '{"k": 12}']
 
 
@@ -191,7 +196,9 @@ def events_rows(draw):
 def test_bars_sql_equals_daily_bars(spark, sf_dir, tmp_path, rows):
     """``_BARS_SQL``/``_MOVES_SQL`` on DuckDB and ``daily_ohlcv``/
     ``daily_bars``/``daily_moves`` on Spark read the same parquet file
-    (the test data's schema) and return the same rows."""
+    (the test data's schema) and return the same rows; so do the cent
+    rule's three forms, ``_CENTS``, ``cents`` and ``pandas_cents`` (fed
+    the column as Arrow hands it to pandas, NULL as NaN)."""
     d = tmp_path / uuid.uuid4().hex
     d.mkdir()
     schema = pq.read_schema(f"{sf_dir}/events.parquet").remove_metadata()
@@ -213,6 +220,17 @@ def test_bars_sql_equals_daily_bars(spark, sf_dir, tmp_path, rows):
         got = frame(events).select(*cols.split(", ")).collect()
         want = con.execute(f"WITH {ctes} SELECT {cols} FROM {cte}").fetchall()
         assert sorted(map(tuple, got)) == sorted(want), frame.__name__
+    spark_c = events.select("event_id", cents().alias("c")).collect()
+    duck_c = con.execute(f"SELECT event_id, {_CENTS} FROM events").fetchall()
+    pandas_c = zip(
+        table.column("event_id").to_pylist(),
+        pandas_cents(table.column("value").to_pandas()),
+    )
+    assert (
+        sorted(map(tuple, spark_c))
+        == sorted(duck_c)
+        == sorted((e, None if pd.isna(c) else int(c)) for e, c in pandas_c)
+    )
 
 
 def test_unused_bar_outputs_are_pruned(spark, sf_dir):

@@ -3,11 +3,17 @@
 The unified-API claim this engine makes (one expression tree, batch AND
 streaming) is only real if tested: each test stages the events table as a
 file-source stream, runs the streaming form to completion (availableNow),
-and compares against the batch form on identical input.
+and compares against the batch form on identical input. The checks of
+the price-reading streams run again over ``staged_null_events``.
 """
 
 from __future__ import annotations
 
+import ast
+import re
+
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -29,6 +35,38 @@ def staged_events(spark, sf_dir, tmp_path_factory):
     return src
 
 
+def _null_prices(ev):
+    """``ev`` with ``value`` NULL on a deterministic subset: every event_id
+    divisible by 13, each type's first trade, each type's last trade of
+    every day of month divisible by 4, and each type's trade that closes
+    its first dollar bar at the default 10,000,000-cent size (on the
+    clean prices)."""
+    pdf = (
+        ev.select("event_id", "ts", "event_type", "value", "props")
+        .toPandas()
+        .sort_values(["ts", "event_id"])
+    )
+    pdf["day"] = pdf["ts"].dt.date
+    first = pdf.groupby("event_type").head(1)
+    day_last = pdf[pdf["ts"].dt.day % 4 == 0].groupby(["event_type", "day"]).tail(1)
+    k = pdf["props"].str.extract(r'"k":\s*(\d+)')[0].astype(float).fillna(0)
+    dollars = np.floor(pdf["value"] * 100 + 0.5) * k
+    crossed = dollars.groupby(pdf["event_type"]).cumsum() >= 10_000_000
+    closing = pdf[crossed].groupby("event_type").head(1)
+    ids = {int(i) for part in (first, day_last, closing) for i in part["event_id"]}
+    assert len(first) == len(closing) == 5 and len(day_last) >= 5
+    null = F.col("event_id").isin(sorted(ids)) | (F.col("event_id") % 13 == 0)
+    return ev.withColumn("value", F.when(~null, F.col("value")))
+
+
+@pytest.fixture(scope="module")
+def staged_null_events(spark, staged_events, tmp_path_factory):
+    """``staged_events`` through :func:`_null_prices`, staged the same way."""
+    src = str(tmp_path_factory.mktemp("stream_nulls") / "events")
+    _null_prices(spark.read.parquet(staged_events)).repartition(4).write.parquet(src)
+    return src
+
+
 def run_to_completion(stream_df, name: str, mode: str, spark):
     q = (
         stream_df.writeStream.format("memory")
@@ -39,6 +77,39 @@ def run_to_completion(stream_df, name: str, mode: str, spark):
     )
     assert q.awaitTermination(180), "stream did not finish in 180s"
     return spark.table(name)
+
+
+def replay_days(spark, ev, path: str, monitor, name: str, order_key=None):
+    """Stage ``ev`` as one parquet file per day of month, the days sorted
+    by ``order_key`` (calendar order by default), and stream the files one
+    per trigger through ``monitor`` into memory table ``name``. Returns
+    the emitted rows and, in micro-batch order, the files as pandas
+    frames."""
+    days = sorted(r.d for r in ev.select(F.dayofmonth("ts").alias("d")).distinct().collect())
+    order = sorted(days, key=order_key)
+    for i, d in enumerate(order):
+        (
+            ev.filter(F.dayofmonth("ts") == d)
+            .coalesce(1)
+            .write.mode("append" if i else "overwrite")
+            .parquet(f"{path}/f={i:03d}")
+        )
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{path}/*")
+    )
+    # each of the ~30 micro-batches costs about one task per state
+    # partition; the monitors' rows do not depend on the partition count
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        got = run_to_completion(monitor(stream), name, "append", spark)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return got.collect(), [
+        pd.read_parquet(f"{path}/f={i:03d}") for i in range(len(order))
+    ]
 
 
 def test_streaming_sessions_equal_batch(spark, staged_events):
@@ -1161,8 +1232,9 @@ def _latest_per_key(rows):
     return {k: tuple(v) for k, v in latest.items()}
 
 
-def test_vwap_stream_fallback_equals_batch(spark, staged_events):
-    """applyInPandasWithState path: last-emitted running VWAP per type is
+def test_stateful_vwap_stream_equals_batch(spark, staged_events):
+    """The running VWAP per type that ``stateful.vwap_stream`` keeps in
+    applyInPandasWithState state: its last emission per type is
     bit-identical to the batch integer-sum computation."""
     from trading_data_pipeline_spark.streaming.stateful import vwap_stream
 
@@ -1179,8 +1251,6 @@ def test_lateness_stream_matches_python_fold_over_batches(spark, sf_dir, tmp_pat
     micro-batch sequence: stage events into per-day files in a PERMUTED
     day order (so later batches genuinely carry earlier event times),
     run with maxFilesPerTrigger=1, and compare every (type, seq) row."""
-    from pyspark.sql import functions as F
-
     from trading_data_pipeline_spark.registry import load
     from trading_data_pipeline_spark.streaming.stateful import lateness_stream
 
@@ -1188,33 +1258,13 @@ def test_lateness_stream_matches_python_fold_over_batches(spark, sf_dir, tmp_pat
         "event_id", "ts", "event_type"
     )
     # permuted day staging: day (d*11+3) % 31 ordering scrambles time
-    days = [r.d for r in ev.select(F.dayofmonth("ts").alias("d")).distinct().collect()]
-    order = sorted(days, key=lambda d: (d * 11 + 3) % 31)
-    src = str(tmp_path / "staged")
-    for i, d in enumerate(order):
-        (
-            ev.filter(F.dayofmonth("ts") == d)
-            .coalesce(1)
-            .write.mode("append" if i else "overwrite")
-            .parquet(f"{src}/f={i:03d}")
-        )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
+    rows, frames = replay_days(
+        spark, ev, str(tmp_path / "staged"), lateness_stream, "late_mon",
+        order_key=lambda d: (d * 11 + 3) % 31,
     )
-    q = (
-        lateness_stream(stream)
-        .writeStream.format("memory")
-        .queryName("late_mon")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
     got = {
         (r.event_type, r.seq): (r.batch_n, r.batch_late, r.batch_max_late_us)
-        for r in spark.sql("SELECT * FROM late_mon").collect()
+        for r in rows
     }
 
     # pure-Python reference over the same file sequence
@@ -1223,8 +1273,7 @@ def test_lateness_stream_matches_python_fold_over_batches(spark, sf_dir, tmp_pat
     state: dict = {}
     seqs: dict = collections.defaultdict(int)
     expect = {}
-    for i in range(len(order)):
-        pdf = spark.read.parquet(f"{src}/f={i:03d}").toPandas()
+    for pdf in frames:
         for etype, grp in pdf.groupby("event_type"):
             tus = grp["ts"].astype("datetime64[us]").astype("int64")
             if etype in state:
@@ -1304,19 +1353,19 @@ def test_streaming_vpin_equal_batch_for_finalized_buckets(spark, staged_events):
     expect = set()
     for etype, grp in pdf.groupby("event_type"):
         buckets = []  # (bucket_id, n, buy, sell) finalized in order
-        last_c = sgn = cum = 0
-        has = False
+        sgn = cum = 0
+        last_c = None  # a NULL price is no tick evidence either side
         cur = None  # [bucket_id, n, buy, sell]
         for val, props in zip(grp["value"], grp["props"]):
-            cents = int(math.floor(float(val) * 100 + 0.5))
+            cents = None if math.isnan(val) else int(math.floor(val * 100 + 0.5))
             try:
                 q = int(_json.loads(props).get("k", 0) or 0)
             except (TypeError, ValueError, AttributeError):
                 q = 0
-            if has:
+            if cents is not None and last_c is not None:
                 d = cents - last_c
                 sgn = 1 if d > 0 else (-1 if d < 0 else sgn)
-            last_c, has = cents, True
+            last_c = cents
             if sgn == 0:
                 continue
             b = cum // v
@@ -1363,26 +1412,29 @@ def test_streaming_markouts_aggregate_to_batch_means(spark, staged_events):
         markout_stream(stream_events(spark, staged_events)),
         "t_markouts", "append", spark,
     )
-    acc: dict = collections.defaultdict(lambda: [0, 0])
+    # count(*) and sum(mv): a NULL mv counts and adds nothing
+    acc: dict = collections.defaultdict(lambda: [0, None])
     for r in got_df.collect():
         a = acc[(r.event_type, r.horizon)]
         a[0] += 1
-        a[1] += r.mv
+        if r.mv is not None:
+            a[1] = (a[1] or 0) + r.mv
     got = {
-        k: (n, math.floor(s / (n * 100.0) * 10000 + 0.5) / 10000)
+        k: (n, None if s is None else math.floor(s / (n * 100.0) * 10000 + 0.5) / 10000)
         for k, (n, s) in acc.items()
     }
     assert got == batch and batch
 
 
-def test_psi_stream_matches_python_fold_over_batches(spark, sf_dir, tmp_path):
+def test_psi_stream_matches_python_fold_over_batches(
+    spark, sf_dir, tmp_path, nulls=False
+):
     """Streaming PSI monitor ≡ a pure-Python fold over the same
     micro-batch sequence: per-day files replayed one per trigger; the
     first batch per type freezes the reference histogram, every later
-    batch's PSI must match the reference fold exactly (same ln chain)."""
+    batch's PSI must match the reference fold exactly (same ln chain).
+    A NULL price (``nulls``) counts in batch_n and in no bin."""
     import math
-
-    from pyspark.sql import functions as F
 
     from trading_data_pipeline_spark.registry import load
     from trading_data_pipeline_spark.streaming.stateful import (
@@ -1391,41 +1443,20 @@ def test_psi_stream_matches_python_fold_over_batches(spark, sf_dir, tmp_path):
         psi_stream,
     )
 
-    ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    days = [r.d for r in ev.select(F.dayofmonth("ts").alias("d")).distinct().collect()]
-    order = sorted(days)
-    src = str(tmp_path / "staged_psi")
-    for i, d in enumerate(order):
-        (
-            ev.filter(F.dayofmonth("ts") == d)
-            .coalesce(1)
-            .write.mode("append" if i else "overwrite")
-            .parquet(f"{src}/f={i:03d}")
-        )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
+    ev = load(spark, sf_dir, "events")
+    ev = (_null_prices(ev) if nulls else ev).select("event_id", "ts", "event_type", "value")
+    rows, frames = replay_days(
+        spark, ev, str(tmp_path / "staged_psi"), psi_stream, "psi_mon"
     )
-    q = (
-        psi_stream(stream)
-        .writeStream.format("memory")
-        .queryName("psi_mon")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.event_type, r.seq): (r.batch_n, r.ref_n, r.psi)
-        for r in spark.sql("SELECT * FROM psi_mon").collect()
-    }
+    got = {(r.event_type, r.seq): (r.batch_n, r.ref_n, r.psi) for r in rows}
 
     bins, width = 10, PSI_MX_C - PSI_MN_C + 1
 
     def hist(vals):
         h = [0] * bins
         for v in vals:
+            if math.isnan(v):
+                continue
             c = int(math.floor(v * 100 + 0.5))
             h[min(bins - 1, max(0, ((c - PSI_MN_C) * bins) // width))] += 1
         return h
@@ -1435,13 +1466,12 @@ def test_psi_stream_matches_python_fold_over_batches(spark, sf_dir, tmp_path):
     ref: dict = {}
     seqs: dict = collections.defaultdict(int)
     expect = {}
-    for i in range(len(order)):
-        pdf = spark.read.parquet(f"{src}/f={i:03d}").toPandas()
+    for pdf in frames:
         for etype, grp in pdf.groupby("event_type"):
             cur = hist(grp["value"].tolist())
             if etype not in ref:
                 ref[etype] = cur
-                expect[(etype, seqs[etype])] = (len(grp), len(grp), None)
+                expect[(etype, seqs[etype])] = (len(grp), sum(cur), None)
             else:
                 r = ref[etype]
                 nr, nc = sum(r), sum(cur)
@@ -1465,51 +1495,33 @@ def test_psi_stream_matches_python_fold_over_batches(spark, sf_dir, tmp_path):
             assert abs(gpsi - psi) < 1e-12, (k, gpsi, psi)
 
 
-def test_cusum_stream_matches_python_fold_over_batches(spark, sf_dir, tmp_path):
+def test_cusum_stream_matches_python_fold_over_batches(
+    spark, sf_dir, tmp_path, nulls=False
+):
     """Streaming CUSUM ≡ a pure-Python fold over the same micro-batch
     sequence (per-day files, one per trigger): per-(type, seq) alarm
     counts and end-of-batch S± must match exactly — the running-min
-    identity is integer arithmetic on both sides."""
+    identity is integer arithmetic on both sides. A NULL price
+    (``nulls``) counts in batch_n and makes no move."""
     import math
-
-    from pyspark.sql import functions as F
 
     from trading_data_pipeline_spark.registry import load
     from trading_data_pipeline_spark.streaming.stateful import cusum_stream
 
     K, H = 100, 1000
-    ev = load(spark, sf_dir, "events").select(
+    ev = load(spark, sf_dir, "events")
+    ev = (_null_prices(ev) if nulls else ev).select(
         "event_id", "ts", "event_type", "value"
     )
-    days = [r.d for r in ev.select(F.dayofmonth("ts").alias("d")).distinct().collect()]
-    order = sorted(days)
-    src = str(tmp_path / "staged_cusum")
-    for i, d in enumerate(order):
-        (
-            ev.filter(F.dayofmonth("ts") == d)
-            .coalesce(1)
-            .write.mode("append" if i else "overwrite")
-            .parquet(f"{src}/f={i:03d}")
-        )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
+    rows, frames = replay_days(
+        spark, ev, str(tmp_path / "staged_cusum"),
+        lambda s: cusum_stream(s, k=K, h=H), "cusum_mon",
     )
-    q = (
-        cusum_stream(stream, k=K, h=H)
-        .writeStream.format("memory")
-        .queryName("cusum_mon")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
     got = {
         (r.event_type, r.seq): (
             r.batch_n, r.alarms_up, r.alarms_down, r.s_up, r.s_down
         )
-        for r in spark.sql("SELECT * FROM cusum_mon").collect()
+        for r in rows
     }
 
     import collections
@@ -1517,12 +1529,8 @@ def test_cusum_stream_matches_python_fold_over_batches(spark, sf_dir, tmp_path):
     st: dict = {}
     seqs: dict = collections.defaultdict(int)
     expect = {}
-    for i in range(len(order)):
-        pdf = (
-            spark.read.parquet(f"{src}/f={i:03d}")
-            .toPandas()
-            .sort_values(["ts", "event_id"])
-        )
+    for pdf in frames:
+        pdf = pdf.sort_values(["ts", "event_id"])
         for etype, grp in pdf.groupby("event_type", sort=False):
             last_c, has, cp, mp, cn, mn = st.get(
                 etype, (0, 0, 0, 0, 0, 0)
@@ -1530,6 +1538,8 @@ def test_cusum_stream_matches_python_fold_over_batches(spark, sf_dir, tmp_path):
             au = ad = 0
             sp = sn = 0
             for val in grp["value"]:
+                if math.isnan(val):
+                    continue
                 cents = int(math.floor(float(val) * 100 + 0.5))
                 if not has:
                     last_c, has = cents, 1
@@ -1552,3 +1562,69 @@ def test_cusum_stream_matches_python_fold_over_batches(spark, sf_dir, tmp_path):
     assert set(got) == set(expect)
     for kk, v in expect.items():
         assert got[kk] == v, (kk, got[kk], v)
+
+
+# The stream≡batch checks of the price-reading streams, run again over
+# NULL prices. They are called here, not parametrised, so that their
+# clean-data runs keep their test ids.
+NULL_PRICE_CHECKS = {
+    "anomaly": test_streaming_anomaly_equals_batch,
+    "drawdown": test_streaming_drawdown_equals_batch,
+    "obv": test_streaming_obv_equals_batch_for_finalized_days,
+    "vwap_bars": test_streaming_vwap_bars_equal_batch,
+    "vwap": test_stateful_vwap_stream_equals_batch,
+    "dollar_bars": test_streaming_dollar_bars_equal_batch_for_finalized_bars,
+    "vpin": test_streaming_vpin_equal_batch_for_finalized_buckets,
+    "markout": test_streaming_markouts_aggregate_to_batch_means,
+}
+
+
+@pytest.mark.parametrize("stream", sorted(NULL_PRICE_CHECKS))
+def test_stream_over_null_prices_equals_batch(spark, staged_null_events, stream):
+    """Each stream runs to completion over ``staged_null_events`` and
+    equals its batch twin there, as on the clean events."""
+    NULL_PRICE_CHECKS[stream](spark, staged_null_events)
+
+
+@pytest.mark.parametrize(
+    "check",
+    [
+        test_psi_stream_matches_python_fold_over_batches,
+        test_cusum_stream_matches_python_fold_over_batches,
+    ],
+    ids=["psi", "cusum"],
+)
+def test_monitor_over_null_prices_matches_python_fold(spark, sf_dir, tmp_path, check):
+    """psi and cusum over the per-day replay of :func:`_null_prices`
+    events, against their Python folds."""
+    check(spark, sf_dir, tmp_path, nulls=True)
+
+
+def test_stateful_writes_each_rule_once():
+    """``streaming/stateful.py`` has one ``applyInPandasWithState`` call
+    (the harness), no floor cent rule of its own (that is
+    ``bars.pandas_cents``), the decimal cent rule only in
+    ``_decimal_cents`` and the props parse only in ``_qty``: a copy of
+    any of them fails here."""
+    from trading_data_pipeline_spark.streaming import stateful
+
+    with open(stateful.__file__, encoding="utf-8") as fh:
+        src = fh.read()
+    lines = src.splitlines()
+    spans = {
+        f.name: range(f.lineno - 1, f.end_lineno)
+        for f in ast.parse(src).body
+        if isinstance(f, ast.FunctionDef)
+    }
+
+    def outside(name: str) -> str:
+        return re.sub(r"\s+", "", "".join(
+            ln for i, ln in enumerate(lines) if i not in spans[name]
+        ))
+
+    assert src.count("applyInPandasWithState(") == 1
+    assert "*100+0.5" not in re.sub(r"\s+", "", src)
+    assert ".quantize(" not in outside("_decimal_cents")
+    assert ".quantize(" in src
+    assert "json.loads(" not in outside("_qty")
+    assert "json.loads(" in src

@@ -6,6 +6,9 @@ order-insensitive values (columns sorted by name, rows sorted by all
 columns). Catches hash mismatches before the driver does.
 
 Usage: python tools/parity.py [sf_dir] [query ...]
+
+With query names, only those run and the count is over them; an unknown
+name exits 2 before Spark starts.
 """
 
 from __future__ import annotations
@@ -147,13 +150,17 @@ def main() -> int:
     from trading_data_pipeline_spark.registry import all_queries
     from trading_data_pipeline_spark.session import build_session
 
+    specs = all_queries()
+    unknown = sorted(only - set(specs))
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
+    selected = sorted(only or specs)
     spark = build_session("parity")
     con = duckdb_con(sf_dir)
-    specs = all_queries()
     failed = []
-    for name, spec in sorted(specs.items()):
-        if only and name not in only:
-            continue
+    for name in selected:
+        spec = specs[name]
         t0 = time.time()
         try:
             sdf = spec.fn(spark, sf_dir).toPandas()
@@ -180,7 +187,7 @@ def main() -> int:
             failed.append(name)
         else:
             print(f"OK    {name}: {len(sdf)} rows [{time.time()-t0:.1f}s]")
-    print(f"\n{len(specs) - len(failed)}/{len(specs)} parity-clean" + (f"; FAILED: {failed}" if failed else ""))
+    print(f"\n{len(selected) - len(failed)}/{len(selected)} parity-clean" + (f"; FAILED: {failed}" if failed else ""))
     return 1 if failed else 0
 
 

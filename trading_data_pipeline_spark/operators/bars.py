@@ -38,8 +38,13 @@ Left on other forms, each for a reason:
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 _CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 
@@ -82,8 +87,18 @@ _MOVES_SQL = f"""{_BARS_SQL}, mv AS (
 
 
 def cents(col: str = "value") -> Column:
-    """Integer cents ``floor(v·100 + 0.5)::long`` (SQL twin: ``_CENTS``)."""
+    """Integer cents ``floor(v·100 + 0.5)::long`` (SQL twin: ``_CENTS``;
+    pandas twin, for the streams: :func:`pandas_cents`)."""
     return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("long")
+
+
+def pandas_cents(values: pd.Series) -> pd.Series:
+    """:func:`cents` for a pandas float column: ``Int64``, NULL kept as
+    ``<NA>``. Arrow hands a NULL double to pandas as NaN, so NaN is NULL
+    here."""
+    import numpy as np
+
+    return np.floor(values * 100 + 0.5).astype("Int64")
 
 
 def ohlc(

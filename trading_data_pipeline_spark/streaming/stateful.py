@@ -6,21 +6,121 @@ state across micro-batches — the escape hatch for semantics Spark's
 built-in stateful operators can't express (running per-entity aggregates
 emitted every batch, custom timeout policies, state machines).
 
+Every stream runs on one harness, :func:`_stateful`: it groups by the
+key, concatenates the key's frames of a micro-batch, sorts them by
+(ts, event_id) where the stream has an ordering contract, and calls the
+stream's ``fold(key, pdf, state)``.
+
+Prices become integer cents by one of two rules, each written once:
+
+- the floor rule ``floor(v·100 + 0.5)``, :func:`bars.pandas_cents` (the
+  pandas twin of the Spark ``bars.cents`` and the SQL ``_CENTS``), for the
+  streams whose batch twins build bars or tick signs on it;
+- the decimal rule, :func:`_decimal_cents` (Python ``Decimal`` HALF_UP),
+  for anomaly and drawdown, whose batch twins sum ``cast("decimal(18,2)")``.
+
+They disagree on ties: ``1.005 * 100`` is 100.49999999999999 in binary64,
+so 1.005 is 100 cents under the floor rule and 101 under the decimal rule.
+
+NULL prices: no stream fails on one; each does what its batch twin does.
+vwap counts the row in ``n_events`` and ``total_vol`` but not in Σcents·k;
+obv gives a day whose last trade is NULL a NULL close and no OBV step;
+dollar bars leave the row out of every bar (the batch assigns it a NULL
+``bar_id``); drawdown and anomaly follow the ``decimal(18,2)`` sum and
+count; vpin and markout follow ``_tick_signed`` (a NULL price is no tick
+evidence either side of it, and a markout with a NULL end is NULL). psi
+and cusum have no batch twin at their granularity: there the row counts
+in ``batch_n`` and adds nothing to the histogram or the move.
+
 Scale notes: state lives in the state store partitioned by the grouping
 key — the same hash partitioning as any shuffle, so a 1000-executor
 cluster holds 1/1000th of the keys per executor. State rows here are a
 handful of scalars per key (bounded), and timeouts (`GroupStateTimeout`)
-are how unbounded key spaces get evicted in production.
+are how unbounded key spaces get evicted in production. The folds call
+this package's helpers, so Python workers must be able to import it, as
+for the registered pandas UDFs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import json
+import math
+from collections.abc import Callable, Iterator
+from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..operators.bars import pandas_cents
+
+# The ordering contract of the state machines: sorted by (ts, event_id)
+# within a micro-batch; across batches the source must deliver each key's
+# events in event-time order (the per-key ordering a partitioned log gives).
+_BY_TIME = ["ts", "event_id"]
+_CENT = Decimal("0.01")
+
+
+def _stateful(
+    df: DataFrame,
+    key: str,
+    fold: Callable[[tuple, pd.DataFrame, GroupState], pd.DataFrame],
+    out_schema: str,
+    state_schema: str,
+    mode: str,
+    order: list[str] | None = None,
+) -> DataFrame:
+    """``df.groupBy(key)`` folded by ``fold(key, pdf, state)`` once per key
+    and micro-batch, ``pdf`` holding all of the key's rows of the batch
+    (sorted by ``order`` if given); the frame ``fold`` returns is emitted
+    in output mode ``mode``. No timeout: state lives as long as its key."""
+
+    def run(
+        k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        if order:
+            pdf = pdf.sort_values(order, kind="mergesort")
+        yield fold(k, pdf, state)
+
+    return df.groupBy(key).applyInPandasWithState(
+        run,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _decimal_cents(v) -> int | None:
+    """Integer cents of ``v`` by Python ``Decimal`` HALF_UP, None for NULL:
+    the batch ``cast("decimal(18,2)")``. 1.005 gives 101, where the floor
+    rule (:func:`bars.pandas_cents`) gives 100."""
+    if pd.isna(v):
+        return None
+    return int(Decimal(str(float(v))).quantize(_CENT, ROUND_HALF_UP) * 100)
+
+
+def _qty(props: pd.Series) -> pd.Series:
+    """Trade size ``props.$.k``, 0 where missing or unparsable: the pandas
+    twin of ``coalesce(get_json_object(props, '$.k')::long, 0)``."""
+
+    def k(p) -> int:
+        try:
+            return int(json.loads(p).get("k", 0) or 0)
+        except (TypeError, ValueError, AttributeError):
+            return 0
+
+    return props.map(k).astype("int64")
+
+
+def _ints(values: pd.Series) -> list:
+    """An Int64 column as Python ints, None where NULL: what the row loops
+    compare and the state store takes."""
+    return values.to_numpy(object, na_value=None).tolist()
+
 
 RUNNING_TOTALS_SCHEMA = "user_id long, n_events long, total_value double"
 RUNNING_TOTALS_STATE = "n long, total double"
@@ -35,34 +135,21 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     O(1) state per key. Use outputMode('update').
     """
 
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import math
-
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
+        n += len(pdf)
+        total += float(pdf["value"].fillna(0.0).sum())
         state.update((n, total))
         # repo quantization convention (floor(x*s+0.5)/s, half-up) — NOT
         # Python round(), whose half-even ties diverge from F.round
-        total_q = math.floor(total * 100 + 0.5) / 100
-        yield pd.DataFrame(
+        total_q = pandas_cents(pd.Series([total])).iloc[0] / 100
+        return pd.DataFrame(
             {"user_id": [key[0]], "n_events": [n], "total_value": [total_q]}
         )
 
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=RUNNING_TOTALS_SCHEMA,
-            stateStructType=RUNNING_TOTALS_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _stateful(
+        events, "user_id", fold, RUNNING_TOTALS_SCHEMA, RUNNING_TOTALS_STATE,
+        "update",
     )
 
 
@@ -77,40 +164,26 @@ def anomaly_stream(events: DataFrame, lookback: int = 20, flag: float = 3.0) -> 
     O(lookback) ring buffer in the state store.
 
     Bit-exact with the batch op (streaming≡batch test): values are
-    quantized to integer cents on arrival (Python ``Decimal`` HALF_UP
-    mirrors Spark's decimal(18,2) cast), the moments are O(1) running
-    integer sums (float(S)/100 is the correctly-rounded double of the
-    exact decimal sum — same bits as the batch cast), and the variance/z
-    expressions use the identical floating-point association.
+    quantized to integer cents on arrival (:func:`_decimal_cents` mirrors
+    Spark's decimal(18,2) cast), the moments are O(1) running integer
+    sums (float(S)/100 is the correctly-rounded double of the exact
+    decimal sum — same bits as the batch cast), and the variance/z
+    expressions use the identical floating-point association. A NULL
+    value fills its slot with 0: it counts in the frame and adds nothing
+    to the sums, as in the batch window's count(*) and sum; scored
+    itself, it gets a NULL zscore and is_outlier.
 
-    Ordering contract: events are sorted by (ts, event_id) WITHIN each
-    micro-batch; across batches the source must deliver each key's events
-    in event-time order (the per-key ordering a partitioned log gives).
-    Use outputMode('append') — each event is scored exactly once.
+    Ordering contract: see ``_BY_TIME``. Use outputMode('append') — each
+    event is scored exactly once.
     """
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
 
-    two_dp = Decimal("0.01")
-
-    def score(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        # buffer holds integer CENTS (exact in a double column): one
-        # Decimal quantization per event on ARRIVAL, O(1) running integer
-        # sums per score instead of re-deriving 20 Decimals per event.
-        # float(S)/100 and float(SS)/10000 are the correctly-rounded
-        # doubles of the exact rationals S/100, SS/10000 — bit-identical
-        # to the batch op's decimal-sum-then-cast (S < 2^53 by far).
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
+        # buffer holds integer CENTS (exact in a double column)
         buf = [int(b) for b in state.get[0]] if state.exists else []
         s_c = sum(buf)
         ss_c = sum(b * b for b in buf)
         out: dict[str, list] = {"event_id": [], "user_id": [], "zscore": [], "is_outlier": []}
-        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        for eid, val in zip(pdf["event_id"], pdf["value"]):
-            v = float(val)
+        for eid, v in zip(pdf["event_id"], pdf["value"]):
             if len(buf) == lookback:
                 s = float(s_c) / 100.0
                 ss = float(ss_c) / 10000.0
@@ -118,12 +191,14 @@ def anomaly_stream(events: DataFrame, lookback: int = 20, flag: float = 3.0) -> 
                 mean = s / k
                 var = (ss - (k * mean) * mean) / float(lookback - 1)
                 if var > 0:
-                    zq = math.floor((v - mean) / math.sqrt(var) * 1000 + 0.5) / 1000
+                    zq = None
+                    if not pd.isna(v):
+                        zq = math.floor((v - mean) / math.sqrt(var) * 1000 + 0.5) / 1000
                     out["event_id"].append(int(eid))
                     out["user_id"].append(int(key[0]))
                     out["zscore"].append(zq)
-                    out["is_outlier"].append(abs(zq) > flag)
-            cents = int(Decimal(str(v)).quantize(two_dp, ROUND_HALF_UP) * 100)
+                    out["is_outlier"].append(None if zq is None else abs(zq) > flag)
+            cents = _decimal_cents(v) or 0
             buf.append(cents)
             s_c += cents
             ss_c += cents * cents
@@ -132,17 +207,10 @@ def anomaly_stream(events: DataFrame, lookback: int = 20, flag: float = 3.0) -> 
                 s_c -= old
                 ss_c -= old * old
         state.update(([float(b) for b in buf],))
-        yield pd.DataFrame(out)
+        return pd.DataFrame(out)
 
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            score,
-            outputStructType=ANOMALY_SCHEMA,
-            stateStructType=ANOMALY_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _stateful(
+        events, "user_id", fold, ANOMALY_SCHEMA, ANOMALY_STATE, "append", _BY_TIME
     )
 
 
@@ -160,18 +228,12 @@ def funnel_stream(events: DataFrame) -> DataFrame:
     Emits each updated user's current stage per micro-batch (use
     outputMode('update')); the final state aggregates to exactly the
     batch operator's stage counts (streaming≡batch test). Timestamps are
-    held as epoch micros, ``-1`` = stage not reached. Same ordering
-    contract as ``anomaly_stream``: sorted within a batch, per-key
-    in-order delivery across batches.
+    held as epoch micros, ``-1`` = stage not reached. Ordering contract:
+    see ``_BY_TIME``.
     """
 
-    def step(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         t1, t2, t3 = state.get if state.exists else (_UNSET, _UNSET, _UNSET)
-        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
         ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
         for t, typ in zip(ts_us, pdf["event_type"]):
             if t1 == _UNSET:
@@ -185,19 +247,12 @@ def funnel_stream(events: DataFrame) -> DataFrame:
                     t3 = int(t)
         state.update((t1, t2, t3))
         stage = 3 if t3 != _UNSET else 2 if t2 != _UNSET else 1 if t1 != _UNSET else 0
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {"user_id": [key[0]], "stage": [stage], "t1": [t1], "t2": [t2], "t3": [t3]}
         )
 
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            step,
-            outputStructType=FUNNEL_SCHEMA,
-            stateStructType=FUNNEL_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _stateful(
+        events, "user_id", fold, FUNNEL_SCHEMA, FUNNEL_STATE, "update", _BY_TIME
     )
 
 
@@ -215,13 +270,8 @@ def sessionize_stream(events: DataFrame, gap_min: int = 30) -> DataFrame:
     """
     gap_us = gap_min * 60_000_000
 
-    def step(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         last_us, sess = state.get if state.exists else (None, 0)
-        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
         ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
         out_ids, out_sess = [], []
         for eid, t in zip(pdf["event_id"], ts_us):
@@ -231,7 +281,7 @@ def sessionize_stream(events: DataFrame, gap_min: int = 30) -> DataFrame:
             out_ids.append(int(eid))
             out_sess.append(sess)
         state.update((last_us, sess))
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "event_id": out_ids,
                 "user_id": [int(key[0])] * len(out_ids),
@@ -239,15 +289,9 @@ def sessionize_stream(events: DataFrame, gap_min: int = 30) -> DataFrame:
             }
         )
 
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            step,
-            outputStructType=SESSIONIZE_SCHEMA,
-            stateStructType=SESSIONIZE_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _stateful(
+        events, "user_id", fold, SESSIONIZE_SCHEMA, SESSIONIZE_STATE, "append",
+        _BY_TIME,
     )
 
 
@@ -264,49 +308,40 @@ def drawdown_stream(events: DataFrame) -> DataFrame:
     folded event by event; each micro-batch emits the user's current
     figures (outputMode('update')).
 
-    Exactness: one Decimal HALF_UP quantization per event on arrival
-    mirrors the batch decimal(18,2) cast; everything after is integer
+    Exactness: one :func:`_decimal_cents` per event on arrival mirrors
+    the batch decimal(18,2) cast; everything after is integer
     arithmetic, and cents/100.0 is the correctly-rounded double of the
-    exact decimal — bit-identical to the batch output. Ordering
-    contract: sorted by (ts, event_id) within each micro-batch; across
-    batches the source must deliver each key's events in event-time
-    order (the per-key guarantee a partitioned log gives).
+    exact decimal — bit-identical to the batch output. A NULL value
+    counts in ``n_events`` and moves nothing, as the batch decimal sum
+    skips it; a user with no value yet has NULL figures. Ordering
+    contract: see ``_BY_TIME``.
     """
-    from decimal import ROUND_HALF_UP, Decimal
 
-    two_dp = Decimal("0.01")
-
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         equity_c, peak_c, mdd_c, n = (
             state.get if state.exists else (0, None, 0, 0)
         )
-        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        for val in pdf["value"]:
-            cents = int(Decimal(str(float(val))).quantize(two_dp, ROUND_HALF_UP) * 100)
+        for cents in map(_decimal_cents, pdf["value"]):
+            n += 1
+            if cents is None:
+                continue
             equity_c += cents
             peak_c = equity_c if peak_c is None else max(peak_c, equity_c)
             mdd_c = max(mdd_c, peak_c - equity_c)
-            n += 1
         state.update((equity_c, peak_c, mdd_c, n))
-        yield pd.DataFrame(
+        priced = peak_c is not None
+        return pd.DataFrame(
             {
                 "user_id": [key[0]],
-                "max_drawdown": [mdd_c / 100.0],
-                "peak_equity": [peak_c / 100.0],
+                "max_drawdown": [mdd_c / 100.0 if priced else None],
+                "peak_equity": [peak_c / 100.0 if priced else None],
                 "n_events": [n],
             }
         )
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold,
-        outputStructType=DRAWDOWN_SCHEMA,
-        stateStructType=DRAWDOWN_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful(
+        events, "user_id", fold, DRAWDOWN_SCHEMA, DRAWDOWN_STATE, "update",
+        _BY_TIME,
     )
 
 
@@ -333,11 +368,7 @@ def heavy_hitters_stream(events: DataFrame, capacity: int = 50) -> DataFrame:
     update-mode memory sink) can select the latest.
     """
 
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         if state.exists:
             ids, cnts, errs, version = state.get
             summary = {
@@ -345,17 +376,16 @@ def heavy_hitters_stream(events: DataFrame, capacity: int = 50) -> DataFrame:
             }
         else:
             summary, version = {}, 0
-        for pdf in pdfs:
-            for uid, c in pdf["user_id"].value_counts().items():
-                uid, c = int(uid), int(c)
-                if uid in summary:
-                    summary[uid][0] += c
-                elif len(summary) < capacity:
-                    summary[uid] = [c, 0]
-                else:
-                    evict = min(summary, key=lambda k: summary[k][0])
-                    floor_c = summary.pop(evict)[0]
-                    summary[uid] = [floor_c + c, floor_c]
+        for uid, c in pdf["user_id"].value_counts().items():
+            uid, c = int(uid), int(c)
+            if uid in summary:
+                summary[uid][0] += c
+            elif len(summary) < capacity:
+                summary[uid] = [c, 0]
+            else:
+                evict = min(summary, key=lambda k: summary[k][0])
+                floor_c = summary.pop(evict)[0]
+                summary[uid] = [floor_c + c, floor_c]
         version += 1
         ids = sorted(summary)
         state.update(
@@ -366,7 +396,7 @@ def heavy_hitters_stream(events: DataFrame, capacity: int = 50) -> DataFrame:
                 version,
             )
         )
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "event_type": key[0],
                 "user_id": ids,
@@ -376,13 +406,7 @@ def heavy_hitters_stream(events: DataFrame, capacity: int = 50) -> DataFrame:
             }
         )
 
-    return events.groupBy("event_type").applyInPandasWithState(
-        fold,
-        outputStructType=HH_SCHEMA,
-        stateStructType=HH_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _stateful(events, "event_type", fold, HH_SCHEMA, HH_STATE, "update")
 
 
 NEARDUP_SCHEMA = "doc_id long, kept boolean, dup_of long, hamming int"
@@ -431,20 +455,14 @@ def neardup_stream(
 
     from ..operators.dedup import simhash_expr
 
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         if state.exists:
             ids, sigs = state.get
             ids, sigs = list(ids), list(sigs)
         else:
             ids, sigs = [], []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "doc_id"], kind="mergesort")
         out: dict[str, list] = {"doc_id": [], "kept": [], "dup_of": [], "hamming": []}
-        for doc_id, sig in zip(rows["doc_id"], rows["sig"]):
+        for doc_id, sig in zip(pdf["doc_id"], pdf["sig"]):
             doc_id, sig = int(doc_id), int(sig)
             hit_id, hit_d = None, None
             for kid, ksig in zip(ids, sigs):
@@ -463,26 +481,22 @@ def neardup_stream(
                 out["dup_of"].append(hit_id)
                 out["hamming"].append(hit_d)
         state.update((ids[-cap:], sigs[-cap:]))
-        yield pd.DataFrame(out)
+        return pd.DataFrame(out)
 
     banded = docs.select(
         "doc_id",
         "ts",
         simhash_expr("text", bits).alias("sig"),
     ).withColumn("band", F.shiftright("sig", bits - band_bits))
-    return banded.groupBy("band").applyInPandasWithState(
-        fold,
-        outputStructType=NEARDUP_SCHEMA,
-        stateStructType=NEARDUP_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful(
+        banded, "band", fold, NEARDUP_SCHEMA, NEARDUP_STATE, "append",
+        ["ts", "doc_id"],
     )
 
 
 OBV_SCHEMA = "event_type string, day date, close double, vol long, obv long"
 OBV_STATE = (
-    "cur_day long, day_close_c long, day_vol long, prev_close_c long, "
-    "has_prev boolean, obv long"
+    "cur_day long, day_close_c long, day_vol long, prev_close_c long, obv long"
 )
 
 
@@ -496,68 +510,50 @@ def obv_stream(events: DataFrame) -> DataFrame:
     matching the batch daily-bar semantics; the in-progress day stays
     pending until then).
 
-    Exactness: the same floor(value·100+0.5) cent fixing and JSON
-    ``props.$.k`` volume parse as the batch path, so every finalized day
-    is bit-identical to the batch q_obv row (asserted in
-    tests/test_streaming.py). Ordering contract as drawdown_stream:
-    (ts, event_id)-sorted within a micro-batch, per-key event-time order
-    across batches."""
-    import json
-    import math
+    Exactness: the same floor-rule cents and ``props.$.k`` volume as the
+    batch bar, so every finalized day is bit-identical to the batch
+    q_obv row (asserted in tests/test_streaming.py). A day whose last
+    trade has a NULL price has a NULL close, as in ``bars.ohlc``, and
+    no OBV step into or out of it. Ordering contract: see ``_BY_TIME``."""
+    import datetime as _dt
 
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import datetime as _dt
-
-        cur_day, day_close_c, day_vol, prev_close_c, has_prev, obv = (
-            state.get if state.exists else (-1, 0, 0, 0, False, 0)
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
+        cur_day, day_close_c, day_vol, prev_close_c, obv = (
+            state.get if state.exists else (-1, None, 0, None, 0)
         )
-        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
         out: dict[str, list] = {
             "event_type": [], "day": [], "close": [], "vol": [], "obv": []
         }
 
         def finalize():
-            nonlocal prev_close_c, has_prev, obv
-            if has_prev:
+            nonlocal prev_close_c, obv
+            if day_close_c is not None and prev_close_c is not None:
                 if day_close_c > prev_close_c:
                     obv += day_vol
                 elif day_close_c < prev_close_c:
                     obv -= day_vol
             out["event_type"].append(key[0])
             out["day"].append(_dt.date.fromordinal(cur_day))
-            out["close"].append(day_close_c / 100.0)
+            out["close"].append(None if day_close_c is None else day_close_c / 100.0)
             out["vol"].append(day_vol)
             out["obv"].append(obv)
-            prev_close_c, has_prev = day_close_c, True
+            prev_close_c = day_close_c
 
-        for ts, val, props in zip(pdf["ts"], pdf["value"], pdf["props"]):
+        prices = _ints(pandas_cents(pdf["value"]))
+        for ts, cents, q in zip(pdf["ts"], prices, _qty(pdf["props"])):
             d = ts.date().toordinal()
-            try:
-                q = int(json.loads(props).get("k", 0) or 0)
-            except (TypeError, ValueError, AttributeError):
-                q = 0
             if cur_day == -1:
                 cur_day = d
             elif d != cur_day:
                 finalize()
-                cur_day, day_close_c, day_vol = d, 0, 0
-            day_close_c = int(math.floor(float(val) * 100 + 0.5))
+                cur_day, day_vol = d, 0
+            day_close_c = cents
             day_vol += q
-        state.update(
-            (cur_day, day_close_c, day_vol, prev_close_c, has_prev, obv)
-        )
-        yield pd.DataFrame(out)
+        state.update((cur_day, day_close_c, day_vol, prev_close_c, obv))
+        return pd.DataFrame(out)
 
-    return events.groupBy("event_type").applyInPandasWithState(
-        fold,
-        outputStructType=OBV_SCHEMA,
-        stateStructType=OBV_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful(
+        events, "event_type", fold, OBV_SCHEMA, OBV_STATE, "append", _BY_TIME
     )
 
 
@@ -566,44 +562,35 @@ def vwap_stream(events: DataFrame) -> DataFrame:
     latest row per key is the current value). Exact integer sums, one
     division at emit, so the final row is bit-identical to the batch
     ``sum(cents·k)/sum(k)/100`` (asserted in tests/test_streaming.py).
+    A NULL price counts in ``n_events`` and ``total_vol`` but not in
+    Σcents·k; a type with no priced row yet has a NULL vwap.
     """
-    import json
-    import math
 
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        spv, sv, n = state.get if state.exists else (0, 0, 0)
-        for pdf in pdfs:
-            for val, props in zip(pdf["value"], pdf["props"]):
-                c = int(math.floor(float(val) * 100 + 0.5))
-                try:
-                    q = int(json.loads(props).get("k", 0) or 0)
-                except (TypeError, ValueError, AttributeError):
-                    q = 0
-                spv += c * q
-                sv += q
-                n += 1
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
+        spv, sv, n = state.get if state.exists else (None, 0, 0)
+        q = _qty(pdf["props"])
+        pv = (pandas_cents(pdf["value"]) * q).sum(min_count=1)
+        if not pd.isna(pv):
+            spv = (spv or 0) + int(pv)
+        sv += int(q.sum())
+        n += len(pdf)
         state.update((spv, sv, n))
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "event_type": [key[0]],
                 "n_events": [n],
                 "total_vol": [sv],
-                "vwap": [spv / (sv * 100.0) if sv else None],
+                "vwap": [spv / (sv * 100.0) if sv and spv is not None else None],
             }
         )
 
-    return events.groupBy("event_type").applyInPandasWithState(
+    return _stateful(
+        events,
+        "event_type",
         fold,
-        outputStructType=(
-            "event_type string, n_events long, total_vol long, vwap double"
-        ),
-        stateStructType="spv long, sv long, n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "event_type string, n_events long, total_vol long, vwap double",
+        "spv long, sv long, n long",
+        "update",
     )
 
 
@@ -635,13 +622,8 @@ def lateness_stream(events: DataFrame) -> DataFrame:
     the same batch boundaries is asserted in tests/test_streaming.py.
     """
 
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         max_tus, has, seq = state.get if state.exists else (0, 0, 0)
-        pdf = pd.concat(list(pdfs))
         tus = (pdf["ts"].astype("datetime64[us]").astype("int64")).to_numpy()
         if has:
             late = max_tus - tus
@@ -652,7 +634,7 @@ def lateness_stream(events: DataFrame) -> DataFrame:
             n_late, worst = 0, 0
         new_max = max(int(tus.max()), max_tus if has else int(tus.max()))
         state.update((new_max, 1, seq + 1))
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "event_type": [key[0]],
                 "seq": [seq],
@@ -663,13 +645,7 @@ def lateness_stream(events: DataFrame) -> DataFrame:
             }
         )
 
-    return events.groupBy("event_type").applyInPandasWithState(
-        fold,
-        outputStructType=LATE_SCHEMA,
-        stateStructType=LATE_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _stateful(events, "event_type", fold, LATE_SCHEMA, LATE_STATE, "append")
 
 
 # ---------------------------------------------------------- dollar bars
@@ -695,21 +671,15 @@ def dollar_bars_stream(events: DataFrame, threshold: int = 10_000_000) -> DataFr
     A bar is identified by the dollars accumulated BEFORE each trade
     (floor(gcum/threshold)), the same convention as the batch two-pass
     cumsum, so every finalized bar is bit-identical to the batch row
-    (asserted in tests/test_streaming.py). Ordering contract as
-    drawdown_stream: (ts, event_id)-sorted within a micro-batch,
-    per-key event-time order across batches."""
-    import json
-    import math
+    (asserted in tests/test_streaming.py). A trade with a NULL price has
+    NULL dollars, so the batch gives it a NULL ``bar_id``: it joins no
+    bar here and moves no running total. Ordering contract: see
+    ``_BY_TIME``."""
 
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         gcum, bar_id, o, h, l, c, n, dollars = (
             state.get if state.exists else (0, -1, 0, 0, 0, 0, 0, 0)
         )
-        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
         out: dict[str, list] = {
             "event_type": [], "bar_id": [], "n_trades": [], "open": [],
             "high": [], "low": [], "close": [], "bar_dollars": [],
@@ -725,12 +695,9 @@ def dollar_bars_stream(events: DataFrame, threshold: int = 10_000_000) -> DataFr
             out["close"].append(c / 100.0)
             out["bar_dollars"].append(dollars)
 
-        for val, props in zip(pdf["value"], pdf["props"]):
-            cents = int(math.floor(float(val) * 100 + 0.5))
-            try:
-                q = int(json.loads(props).get("k", 0) or 0)
-            except (TypeError, ValueError, AttributeError):
-                q = 0
+        for cents, q in zip(_ints(pandas_cents(pdf["value"])), _qty(pdf["props"])):
+            if cents is None:
+                continue
             d = cents * q
             b = gcum // threshold
             if b != bar_id:
@@ -744,14 +711,10 @@ def dollar_bars_stream(events: DataFrame, threshold: int = 10_000_000) -> DataFr
             dollars += d
             gcum += d
         state.update((gcum, bar_id, o, h, l, c, n, dollars))
-        yield pd.DataFrame(out)
+        return pd.DataFrame(out)
 
-    return events.groupBy("event_type").applyInPandasWithState(
-        fold,
-        outputStructType=DBAR_SCHEMA,
-        stateStructType=DBAR_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful(
+        events, "event_type", fold, DBAR_SCHEMA, DBAR_STATE, "append", _BY_TIME
     )
 
 
@@ -762,9 +725,18 @@ VPIN_SCHEMA = (
     "sell long, imb long, vpin double"
 )
 VPIN_STATE = (
-    "last_c long, has int, sgn int, cum long, cur_b long, n long, "
+    "last_c long, sgn int, cum long, cur_b long, n long, "
     "buy long, sell long, seq long, imbs array<long>, vols array<long>"
 )
+
+
+def _tick(sgn: int, last_c: int | None, cents: int | None) -> int:
+    """The tick rule of ``_tick_signed``: the sign of a nonzero price
+    change, else the carried sign. A NULL price on either side of the
+    change is no evidence."""
+    if cents is None or last_c is None or cents == last_c:
+        return sgn
+    return 1 if cents > last_c else -1
 
 
 def vpin_stream(events: DataFrame, v: int = 5000, k: int = 5) -> DataFrame:
@@ -781,28 +753,20 @@ def vpin_stream(events: DataFrame, v: int = 5000, k: int = 5) -> DataFrame:
 
     Rows before the first nonzero price change carry no tick evidence
     and are excluded from the volume clock on both paths; bucket
-    assignment is the same exact integer ``cum // v``. Ordering
-    contract as drawdown_stream: (ts, event_id)-sorted within a
-    micro-batch, per-key event-time order across batches.
+    assignment is the same exact integer ``cum // v``. A NULL-priced
+    trade takes the carried sign (:func:`_tick`). Ordering contract:
+    see ``_BY_TIME``.
     """
-    import json
-    import math
 
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         if state.exists:
-            (last_c, has, sgn, cum, cur_b, n, buy, sell, seq,
-             imbs, vols) = state.get
+            (last_c, sgn, cum, cur_b, n, buy, sell, seq, imbs, vols) = state.get
             imbs, vols = list(imbs), list(vols)
         else:
-            last_c, has, sgn, cum, cur_b, n, buy, sell, seq = (
-                0, 0, 0, 0, -1, 0, 0, 0, 0
+            last_c, sgn, cum, cur_b, n, buy, sell, seq = (
+                None, 0, 0, -1, 0, 0, 0, 0
             )
             imbs, vols = [], []
-        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
         out: dict[str, list] = {
             "event_type": [], "bucket_id": [], "n_trades": [], "buy": [],
             "sell": [], "imb": [], "vpin": [],
@@ -833,19 +797,8 @@ def vpin_stream(events: DataFrame, v: int = 5000, k: int = 5) -> DataFrame:
                 imbs.clear()
                 vols.clear()
 
-        for val, props in zip(pdf["value"], pdf["props"]):
-            cents = int(math.floor(float(val) * 100 + 0.5))
-            try:
-                q = int(json.loads(props).get("k", 0) or 0)
-            except (TypeError, ValueError, AttributeError):
-                q = 0
-            if has:
-                dc = cents - last_c
-                if dc > 0:
-                    sgn = 1
-                elif dc < 0:
-                    sgn = -1
-            last_c, has = cents, 1
+        for cents, q in zip(_ints(pandas_cents(pdf["value"])), _qty(pdf["props"])):
+            sgn, last_c = _tick(sgn, last_c, cents), cents
             if sgn == 0:
                 continue
             b = cum // v
@@ -859,27 +812,18 @@ def vpin_stream(events: DataFrame, v: int = 5000, k: int = 5) -> DataFrame:
             else:
                 sell += q
             cum += q
-        state.update(
-            (last_c, has, sgn, cum, cur_b, n, buy, sell, seq, imbs, vols)
-        )
-        yield pd.DataFrame(out)
+        state.update((last_c, sgn, cum, cur_b, n, buy, sell, seq, imbs, vols))
+        return pd.DataFrame(out)
 
-    return events.groupBy("event_type").applyInPandasWithState(
-        fold,
-        outputStructType=VPIN_SCHEMA,
-        stateStructType=VPIN_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful(
+        events, "event_type", fold, VPIN_SCHEMA, VPIN_STATE, "append", _BY_TIME
     )
 
 
 # -------------------------------------------------- streaming markouts
 
 MARKOUT_SCHEMA = "event_type string, horizon int, seq long, mv long"
-MARKOUT_STATE = (
-    "last_c long, has int, sgn int, seq long, cs array<long>, "
-    "ss array<long>"
-)
+MARKOUT_STATE = "last_c long, sgn int, seq long, cs array<long>, ss array<long>"
 
 
 def markout_stream(
@@ -897,58 +841,46 @@ def markout_stream(
     occupies its ring slot but emits nothing, matching the batch
     probe-side filter; trades at the end of the stream whose horizon
     never completes are never emitted, matching the batch inner join.
-    Aggregating the emitted rows per (type, horizon) reproduces the
-    batch q_markout means bit-for-bit (asserted in
-    tests/test_streaming.py). Ordering contract as drawdown_stream.
+    A NULL price at either end gives a NULL ``mv``, which the batch
+    counts in ``n_trades`` and leaves out of the sum. Aggregating the
+    emitted rows per (type, horizon) reproduces the batch q_markout
+    means bit-for-bit (asserted in tests/test_streaming.py). Ordering
+    contract: see ``_BY_TIME``.
     """
-    import math
-
     hmax = max(horizons)
 
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         if state.exists:
-            last_c, has, sgn, seq, cs, ss = state.get
+            last_c, sgn, seq, cs, ss = state.get
             cs, ss = list(cs), list(ss)
         else:
-            last_c, has, sgn, seq = 0, 0, 0, 0
+            last_c, sgn, seq = None, 0, 0
             cs, ss = [], []
-        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
         out: dict[str, list] = {
             "event_type": [], "horizon": [], "seq": [], "mv": [],
         }
-        for val in pdf["value"]:
-            cents = int(math.floor(float(val) * 100 + 0.5))
-            if has:
-                dc = cents - last_c
-                if dc > 0:
-                    sgn = 1
-                elif dc < 0:
-                    sgn = -1
-            last_c, has = cents, 1
+        for cents in _ints(pandas_cents(pdf["value"])):
+            sgn, last_c = _tick(sgn, last_c, cents), cents
             for h in horizons:
                 i = len(cs) - h
                 if i >= 0 and ss[i] != 0:
                     out["event_type"].append(key[0])
                     out["horizon"].append(h)
                     out["seq"].append(seq - h)
-                    out["mv"].append(ss[i] * (cents - cs[i]))
+                    out["mv"].append(
+                        None if cents is None or cs[i] is None
+                        else ss[i] * (cents - cs[i])
+                    )
             cs.append(cents)
             ss.append(sgn)
             del cs[:-hmax], ss[:-hmax]
             seq += 1
-        state.update((last_c, has, sgn, seq, cs, ss))
-        yield pd.DataFrame(out)
+        state.update((last_c, sgn, seq, cs, ss))
+        return pd.DataFrame(out)
 
-    return events.groupBy("event_type").applyInPandasWithState(
-        fold,
-        outputStructType=MARKOUT_SCHEMA,
-        stateStructType=MARKOUT_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful(
+        events, "event_type", fold, MARKOUT_SCHEMA, MARKOUT_STATE, "append",
+        _BY_TIME,
     )
 
 
@@ -957,7 +889,7 @@ def markout_stream(
 PSI_SCHEMA = (
     "event_type string, seq long, batch_n long, ref_n long, psi double"
 )
-PSI_STATE = "ref array<long>, frozen int, seq long"
+PSI_STATE = "ref array<long>, seq long"
 PSI_BINS_S = 10
 PSI_MN_C, PSI_MX_C = 0, 40_000  # integer-cent bin range (test data <= $400)
 
@@ -980,19 +912,16 @@ def psi_stream(
     equivalence against a pure-Python fold over the same batch
     boundaries is asserted in tests/test_streaming.py. ln enters only
     in the final per-bin chain (the batch PSI contract), so stream and
-    batch folds agree bit-for-bit on the same counts.
+    batch folds agree bit-for-bit on the same counts. A NULL price has
+    no batch twin at this granularity: it counts in ``batch_n`` and
+    adds nothing to the histogram (``ref_n`` is the histogram's size).
     """
-    import math as _math
-
     width = mx_c - mn_c + 1
 
-    def _hist(vals) -> list:
-        h = [0] * bins
-        for v in vals:
-            c = int(_math.floor(v * 100 + 0.5))
-            b = min(bins - 1, max(0, ((c - mn_c) * bins) // width))
-            h[b] += 1
-        return h
+    def _hist(values: pd.Series) -> list:
+        c = pandas_cents(values).dropna()
+        b = ((c - mn_c) * bins // width).clip(0, bins - 1)
+        return np.bincount(b.to_numpy("int64"), minlength=bins).tolist()
 
     def _psi(ref: list, cur: list) -> float:
         nr, nc = sum(ref), sum(cur)
@@ -1000,51 +929,26 @@ def psi_stream(
         for b in range(bins):
             p = (ref[b] + 1) / (nr + bins)
             q = (cur[b] + 1) / (nc + bins)
-            out += (p - q) * _math.log(p / q)
+            out += (p - q) * math.log(p / q)
         return out
 
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        ref, frozen, seq = (
-            state.get if state.exists else ([0] * bins, 0, 0)
-        )
-        ref = list(ref)
-        pdf = pd.concat(list(pdfs))
-        cur = _hist(pdf["value"].tolist())
-        if not frozen:
-            # first batch for this key: becomes the reference
-            state.update((cur, 1, seq + 1))
-            yield pd.DataFrame(
-                {
-                    "event_type": [key[0]],
-                    "seq": [seq],
-                    "batch_n": [len(pdf)],
-                    "ref_n": [len(pdf)],
-                    "psi": [None],
-                }
-            )
-            return
-        state.update((ref, 1, seq + 1))
-        yield pd.DataFrame(
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
+        ref, seq = state.get if state.exists else (None, 0)
+        cur = _hist(pdf["value"])
+        # the first batch for this key becomes the reference
+        ref, psi = (cur, None) if ref is None else (list(ref), _psi(ref, cur))
+        state.update((ref, seq + 1))
+        return pd.DataFrame(
             {
                 "event_type": [key[0]],
                 "seq": [seq],
                 "batch_n": [len(pdf)],
                 "ref_n": [sum(ref)],
-                "psi": [_psi(ref, cur)],
+                "psi": [psi],
             }
         )
 
-    return events.groupBy("event_type").applyInPandasWithState(
-        fold,
-        outputStructType=PSI_SCHEMA,
-        stateStructType=PSI_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _stateful(events, "event_type", fold, PSI_SCHEMA, PSI_STATE, "append")
 
 
 # ---------------------------------------------------------------- CUSUM
@@ -1053,9 +957,7 @@ CUSUM_SCHEMA = (
     "event_type string, seq long, batch_n long, alarms_up long, "
     "alarms_down long, s_up double, s_down double"
 )
-CUSUM_STATE = (
-    "last_c long, has int, cp long, mp long, cn long, mn long, seq long"
-)
+CUSUM_STATE = "last_c long, cp long, mp long, cn long, mn long, seq long"
 
 
 def cusum_stream(
@@ -1071,25 +973,20 @@ def cusum_stream(
 
     Deterministic given the micro-batch sequence; equivalence against
     a pure-Python fold over the same batch boundaries is asserted in
-    tests/test_streaming.py.
+    tests/test_streaming.py. A NULL price has no batch twin at this
+    granularity: it counts in ``batch_n`` and makes no move (the next
+    price moves against the last non-NULL one).
     """
-    import math as _math
 
-    def fold(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        last_c, has, cp, mp, cn, mn, seq = (
-            state.get if state.exists else (0, 0, 0, 0, 0, 0, 0)
+    def fold(key: tuple, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
+        last_c, cp, mp, cn, mn, seq = (
+            state.get if state.exists else (None, 0, 0, 0, 0, 0)
         )
-        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
         au = ad = 0
         sp = sn = 0
-        for val in pdf["value"]:
-            cents = int(_math.floor(float(val) * 100 + 0.5))
-            if not has:
-                last_c, has = cents, 1
+        for cents in pandas_cents(pdf["value"]).dropna().tolist():
+            if last_c is None:
+                last_c = cents
                 continue
             x = cents - last_c
             last_c = cents
@@ -1103,8 +1000,8 @@ def cusum_stream(
                 au += 1
             if sn > h:
                 ad += 1
-        state.update((last_c, has, cp, mp, cn, mn, seq + 1))
-        yield pd.DataFrame(
+        state.update((last_c, cp, mp, cn, mn, seq + 1))
+        return pd.DataFrame(
             {
                 "event_type": [key[0]],
                 "seq": [seq],
@@ -1116,10 +1013,4 @@ def cusum_stream(
             }
         )
 
-    return events.groupBy("event_type").applyInPandasWithState(
-        fold,
-        outputStructType=CUSUM_SCHEMA,
-        stateStructType=CUSUM_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _stateful(events, "event_type", fold, CUSUM_SCHEMA, CUSUM_STATE, "append")

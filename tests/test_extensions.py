@@ -13,7 +13,6 @@ from trading_data_pipeline_spark.operators.asof import (
 )
 from trading_data_pipeline_spark.operators.dedup import (
     exact_dedup,
-    minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash,
 )
@@ -60,29 +59,12 @@ def test_simhash_equal_for_token_multiset_dups(spark, docs):
     assert bad == 0
 
 
-def test_minhash_lsh_recall_vs_exact_jaccard(spark, docs):
-    """Every truly-near pair (exact unigram-shingle Jaccard ≥ 0.8) among
-    consecutive ids must be recalled by the LSH join at distance ≤ 0.5.
-    Unigram shingles because this corpus's duplicates are shuffled word
-    orders (word-set equal, n-gram disjoint)."""
-    ids = docs.select(F.col("doc_id").alias("doc_a"))
-    pairs = ids.select("doc_a", (F.col("doc_a") + 1).alias("doc_b"))
-    exact = ngram_jaccard_pairs(docs, pairs, n=1).filter(F.col("jaccard") >= 0.8)
-    truth = {(r.doc_a, r.doc_b) for r in exact.collect()}
-    if not truth:
-        pytest.skip("no near-dup pairs at this scale factor")
-    lsh = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_lsh_pairs(docs, n=1, max_distance=0.5).collect()
-    }
-    recall = len(truth & lsh) / len(truth)
-    assert recall >= 0.9, f"LSH recall {recall} over {len(truth)} true pairs"
-
-
 def test_banded_minhash_recall_vs_exact_jaccard(spark, docs):
-    """The hand-rolled banded MinHash (the one q_dedup_near ships) must also
-    recall ≥90% of true near pairs; its output is verify-joined so every
-    reported jaccard is exact — precision is 1.0 by construction."""
+    """The banded MinHash q_dedup_near ships must recall ≥90% of true near
+    pairs (exact unigram-shingle Jaccard ≥ 0.8 among consecutive ids:
+    this corpus's duplicates are shuffled word orders, word-set equal and
+    n-gram disjoint); its output is verify-joined so every reported
+    jaccard is exact — precision is 1.0 by construction."""
     from trading_data_pipeline_spark.operators.dedup import banded_minhash_pairs
 
     ids = docs.select(F.col("doc_id").alias("doc_a"))

@@ -1319,6 +1319,33 @@ def test_streaming_dollar_bars_equal_batch_for_finalized_bars(spark, staged_even
     assert got == want and want
 
 
+def test_dollar_bars_leave_null_prices_out(spark, staged_null_events):
+    """A NULL-priced trade has no dollars, so it belongs to no bar, as in
+    the stream: no ``bar_id`` is NULL, the bars equal those over the same
+    events with the NULL-priced rows removed, and the DuckDB oracle
+    returns the same rows."""
+    import duckdb
+
+    from trading_data_pipeline_spark.operators.indicators2_queries import (
+        dollar_bars,
+    )
+    from trading_data_pipeline_spark.registry import all_queries
+
+    ev = spark.read.parquet(staged_null_events)
+    assert ev.filter(F.col("value").isNull()).count() > 0
+    got = {tuple(r) for r in dollar_bars(ev).collect()}
+    assert all(r[1] is not None for r in got)
+    want = dollar_bars(ev.filter(F.col("value").isNotNull())).collect()
+    assert got == {tuple(r) for r in want} and got
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{staged_null_events}/*.parquet')"
+    )
+    oracle = con.execute(all_queries()["q_dollar_bars"].oracle).fetchall()
+    assert {tuple(r) for r in oracle} == got
+
+
 def test_streaming_vpin_equal_batch_for_finalized_buckets(spark, staged_events):
     """Streaming VPIN emits a bucket when a later bucket's first trade
     arrives; every emitted row must be bit-identical to the batch

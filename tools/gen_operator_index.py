@@ -26,17 +26,25 @@ instead.
 """
 
 
-def main() -> None:
-    qs = all_queries()
-    out = [HEADER]
-    for name, spec in qs.items():
+def rows() -> list[str]:
+    """One table row per registered query, in registry order."""
+    out = []
+    for name, spec in all_queries().items():
         check = "oracle" if spec.oracle is not None else "rows-only"
         doc = " ".join((spec.doc or "").split())
-        out.append(f"| `{name}` | {check} | {doc} |\n")
-    out.append(
-        f"\nTotal: {len(qs)} queries, "
-        f"{sum(1 for s in qs.values() if s.oracle is not None)} oracle-checked.\n"
-    )
+        out.append(f"| `{name}` | {check} | {doc} |")
+    return out
+
+
+def total_line() -> str:
+    qs = all_queries()
+    n_oracle = sum(1 for s in qs.values() if s.oracle is not None)
+    return f"Total: {len(qs)} queries, {n_oracle} oracle-checked."
+
+
+def main() -> None:
+    body = rows()
+    out = [HEADER, *(r + "\n" for r in body), f"\n{total_line()}\n"]
     dest = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "docs",
@@ -45,7 +53,7 @@ def main() -> None:
     os.makedirs(os.path.dirname(dest), exist_ok=True)
     with open(dest, "w") as f:
         f.write("".join(out))
-    print(f"wrote {dest}: {len(qs)} queries")
+    print(f"wrote {dest}: {len(body)} queries")
 
 
 if __name__ == "__main__":

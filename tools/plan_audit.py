@@ -21,6 +21,12 @@ artifact drift apart, so "someone added a row-UDF query" or "a rewrite
 doubled q_report1's shuffles" is caught in CI, not on the cluster.
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
+
+With query names, only those are re-audited: their entries replace the
+ones in ``PLANAUDIT.json`` (which must have been recorded at the same
+``sf_dir``), the summary is recomputed over the merged set, and every
+other entry stays as it was. An unknown name exits 2 before Spark
+starts.
 """
 
 from __future__ import annotations
@@ -253,10 +259,29 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     from trading_data_pipeline_spark.registry import all_queries
+
+    specs = all_queries()
+    unknown = sorted(only - set(specs))
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
+    prior = None
+    if only:
+        # Re-recording named queries merges them into the committed
+        # artifact, so it must describe the same tables.
+        with open(os.path.join(REPO, "PLANAUDIT.json")) as f:
+            prior = json.load(f)
+        if prior["summary"]["sf_dir"] != sf_dir:
+            print(
+                f"PLANAUDIT.json was recorded at {prior['summary']['sf_dir']}, "
+                f"not {sf_dir}",
+                file=sys.stderr,
+            )
+            return 2
+
     from trading_data_pipeline_spark.session import build_session
 
     spark = build_session("plan-audit")
-    specs = all_queries()
     results: dict[str, dict] = {}
     t_all = time.time()
     for name, spec in specs.items():
@@ -282,6 +307,12 @@ def main() -> int:
         print(f"{name:28s} shuffles={m.get('shuffles','-')} bcast={m.get('broadcasts','-')} "
               f"rowUDF={m.get('row_python_udf','-')} {flag}", flush=True)
 
+    wall_s = round(time.time() - t_all, 1)
+    if prior is not None:
+        # Every other entry stays as recorded; wall_s stays the last
+        # full sweep's.
+        results = {**prior["queries"], **results}
+        wall_s = prior["summary"]["wall_s"]
     ok = {k: v for k, v in results.items() if v.get("err") is None}
     summary = {
         "sf_dir": sf_dir,
@@ -298,7 +329,7 @@ def main() -> int:
             if v["lowcard_windows"] and k not in LOWCARD_WINDOW_ALLOWLIST
         ),
         "max_shuffles": max(((v["shuffles"], k) for k, v in ok.items()), default=(0, ""))[::-1],
-        "wall_s": round(time.time() - t_all, 1),
+        "wall_s": wall_s,
     }
     out = {"summary": summary, "queries": results}
     clean = (
@@ -307,19 +338,18 @@ def main() -> int:
         and not summary["cartesian_offenders"]
         and not summary["lowcard_window_offenders"]
     )
-    if not only:  # full sweep → refresh an artifact
-        # Never clobber the last CLEAN committed artifact with a failing
-        # sweep: violations land in PLANAUDIT.REJECTED.json for triage
-        # and the run exits non-zero.
-        name = "PLANAUDIT.json" if clean else "PLANAUDIT.REJECTED.json"
-        with open(os.path.join(REPO, name), "w") as f:
-            json.dump(out, f, indent=1, sort_keys=True)
-        if clean:
-            write_markdown(out)
-            # a stale rejection artifact must not outlive the fix
-            rejected = os.path.join(REPO, "PLANAUDIT.REJECTED.json")
-            if os.path.exists(rejected):
-                os.remove(rejected)
+    # Never clobber the last CLEAN committed artifact with a failing
+    # sweep: violations land in PLANAUDIT.REJECTED.json for triage and
+    # the run exits non-zero.
+    name = "PLANAUDIT.json" if clean else "PLANAUDIT.REJECTED.json"
+    with open(os.path.join(REPO, name), "w") as f:
+        json.dump(out, f, indent=1, sort_keys=True)
+    if clean:
+        write_markdown(out)
+        # a stale rejection artifact must not outlive the fix
+        rejected = os.path.join(REPO, "PLANAUDIT.REJECTED.json")
+        if os.path.exists(rejected):
+            os.remove(rejected)
     print(json.dumps(summary))
     return 0 if clean else 1
 

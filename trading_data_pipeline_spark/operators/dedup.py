@@ -1,28 +1,39 @@
 """Deduplication operators for LLM training-data pipelines.
 
-Five strategies, each a different cost/recall point (north-star list in
-BASELINE.json; patterns from PAPERS.md distributed-similarity papers):
+Per-document keys, one pass and at most one shuffle on the key:
 
 - :func:`exact_dedup` — hash groupBy on a canonical content key.
 - :func:`simhash` — 60-bit bit-vote fingerprint; near-dups differ in few
   bits (Hamming ball search downstream).
-- :func:`ngram_jaccard_pairs` — word n-gram shingle Jaccard for candidate
-  pairs.
-- :func:`minhash_lsh_pairs` — MinHash+LSH banding via MLlib: the sub-
-  quadratic 100 TB path (shingle → minhash sketch → band bucket join).
-- :func:`embedding_near_dup_pairs` — semantic near-dup via embedding cosine
-  within blocking keys.
 
-Scale notes: exact/simhash/fingerprint are single-pass + one shuffle on the
-key. Pairwise strategies are quadratic unless blocked — ``block_col``
-(label, language, LSH bucket) bounds the join fan-out; MinHashLSH's
-``approxSimilarityJoin`` does the same with hash bands. None of them
-collect to the driver.
+Pair joins, each in three stages — partition the corpus into candidate
+groups, prune candidates by a bound, verify the survivors exactly:
+
+- :func:`ngram_jaccard_pairs` — exact word n-gram shingle Jaccard of given
+  candidate pairs (verify only).
+- :func:`banded_minhash_pairs` — banded MinHash buckets, exact Jaccard
+  verify: the near-dup path ``q_dedup_near`` ships.
+- :func:`build_band_index` / :func:`delta_dedup_pairs` — the same bands
+  as a persisted corpus index that each new batch probes.
+- :func:`containment_pairs` — rare-shingle postings, a count-only prune,
+  exact containment verify.
+- :func:`jaccard_prefix_join` — EXACT all-pairs token Jaccard, with
+  pigeonhole (PTJ) or prefix-filter (PPJoin) candidates.
+- :func:`embedding_near_dup_pairs` — cosine within blocking keys.
+
+:func:`dup_clusters` turns any pair stream into connected components.
+
+The stages the shingle joins share are written once each:
+:func:`_shingle_table` (the per-doc shingle sets), :func:`_capped_lists`
+and :func:`_list_pairs` (capped posting lists and their in-list pairs),
+:func:`_overlap` (the set-overlap verify) and :func:`_token_codes` (the
+token recode of the exact join). No operator collects data to the
+driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans import ensure_parallelism
@@ -78,11 +89,8 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     ``(h >> (59-b)) & 1`` — hex digit ``b div 4``, MSB-first in nibble.
 
     Entirely per-row array arithmetic (higher-order functions over the
-    token array) — ZERO shuffle, one codegen'd pass over the scan. An
-    earlier version exploded tokens and hash-aggregated 60 vote sums per
-    doc; the shuffle made it the slowest query in the bench at sf0.1
-    (2.0 s → 0.6 s). At 100 TB the difference is categorical: fingerprints
-    stream out at scan speed with no exchange at all.
+    token array) — ZERO shuffle, one codegen'd pass over the scan, so
+    fingerprints stream out at scan speed with no exchange at all.
     """
     return ensure_parallelism(df).select(
         id_col, simhash_expr(text_col, bits).alias("simhash")
@@ -138,66 +146,12 @@ def ngram_jaccard_pairs(
 
     ``pair_df`` holds (doc_a, doc_b) candidates — produced by any blocking
     scheme (LSH buckets, simhash bands, consecutive ids for audits). The
-    shingle table is computed once and joined twice; set ops stay JVM-side
-    (array_intersect / array_union).
+    string shingle table is computed once and attached to both sides by
+    :func:`_overlap`.
     """
-    sh = ensure_parallelism(df.filter(F.size(F.split(text_col, " ")) >= n)).select(
-        F.col(id_col).alias("_id"), shingles(text_col, n).alias("sh")
-    )
-    a = sh.select(F.col("_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    return (
-        pair_df.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                4,
-            ).alias("jaccard"),
-        )
-    )
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hash_tables: int = 5,
-    max_distance: float = 0.5,
-    num_features: int = 1 << 18,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-dup pairs via MinHash + LSH banding (sub-quadratic).
-
-    shingle → HashingTF (binary) → MinHashLSH sketch → band-bucket self-join
-    with Jaccard-distance cutoff. This is the 100 TB near-dup path: the
-    candidate set is |bucket|² per band, not |corpus|².
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    base = df.filter(F.size(F.split(text_col, " ")) >= n).select(
-        id_col, shingles(text_col, n).alias("sh")
-    )
-    tf = HashingTF(
-        inputCol="sh", outputCol="features", numFeatures=num_features, binary=True
-    )
-    feat = tf.transform(base).filter(F.size("sh") > 0)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
-    )
-    model = lsh.fit(feat)
-    joined = model.approxSimilarityJoin(feat, feat, max_distance, distCol="jaccard_dist")
-    return (
-        joined.filter(F.col(f"datasetA.{id_col}") < F.col(f"datasetB.{id_col}"))
-        .select(
-            F.col(f"datasetA.{id_col}").alias("doc_a"),
-            F.col(f"datasetB.{id_col}").alias("doc_b"),
-            F.round("jaccard_dist", 4).alias("jaccard_dist"),
-        )
+    sh = _shingle_table(df, id_col, text_col, n, shingles)
+    return _overlap(pair_df, "doc_a", "doc_b", sh, sh, id_col).select(
+        "doc_a", "doc_b", _jaccard().alias("jaccard")
     )
 
 
@@ -214,7 +168,7 @@ def hashed_shingles(text: str | Column, n: int = 3) -> Column:
     The n-gram windows come from ``arrays_zip`` over n shifted SLICES of
     the token-hash array — NOT ``element_at`` indexing inside the
     per-index lambda: Catalyst inlines the ``tokh`` subexpression into
-    every ``element_at`` call, so the indexed form re-evaluated the
+    every ``element_at`` call, so the indexed form re-evaluates the
     full O(|doc|) token-hash transform per gram element — O(|doc|²)
     per document (measured 11× slower at sf0.1 for the 3-gram screen).
     The zip form evaluates ``tokh`` n times total. Docs shorter than
@@ -230,6 +184,155 @@ def hashed_shingles(text: str | Column, n: int = 3) -> Column:
         F.transform(z, lambda s: F.xxhash64(*[s[f"t{j}"] for j in range(n)]))
     )
 
+
+# ------------------------------------------------ shared pair-join stages
+
+def _shingle_table(
+    df: DataFrame, id_col: str, text_col: str, n: int, shingle=hashed_shingles
+) -> DataFrame:
+    """``(id_col, shh)``: every doc of at least ``n`` words with its
+    distinct shingle set (``shingle`` is :func:`hashed_shingles` or the
+    string :func:`shingles`). A NULL text has no size and drops out with
+    the short docs. Hashing every token dwarfs re-sending the text, so
+    the table is spread over all cores first."""
+    return ensure_parallelism(
+        df.filter(F.size(F.split(text_col, " ")) >= n)
+    ).select(id_col, shingle(text_col, n).alias("shh"))
+
+
+def _capped_lists(
+    rows: DataFrame, keys: list[str], id_col: str, cap: int | None
+) -> DataFrame:
+    """``keys`` + ``ids``: the sorted ids of each key in ``rows``, keys
+    with more than ``cap`` ids dropped (``None``: no cap).
+
+    The row_number cap at cap+1 compiles to WindowGroupLimit on the key
+    partitioning the groupBy needs anyway, so a hot key's rows are cut
+    map-side, before the exchange, and no aggregation buffer ever holds
+    more than cap+1 ids. A list cut at cap+1 fails the same size filter
+    the full list fails, so the kept lists are exactly the uncapped
+    ones."""
+    if cap is not None:
+        w = Window.partitionBy(*keys).orderBy(id_col)
+        rows = rows.withColumn("_rn", F.row_number().over(w)).filter(
+            F.col("_rn") <= cap + 1
+        )
+    lists = rows.groupBy(*keys).agg(
+        F.sort_array(F.collect_list(id_col)).alias("ids")
+    )
+    return lists if cap is None else lists.filter(F.size("ids") <= cap)
+
+
+def _list_pairs(lists: DataFrame) -> DataFrame:
+    """``(doc_a, doc_b)`` for every two ids of each :func:`_capped_lists`
+    list, ``doc_a < doc_b``: the ids of a list are sorted and distinct
+    (a doc has one key per band and each shingle once), so pairing every
+    id with the ids after it gives each in-list pair once. A pair that
+    shares k lists appears k times."""
+    ids = F.col("ids")
+    pairs = F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(ids, i + F.lit(2), F.size(ids)),
+                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+            ),
+        )
+    )
+    return (
+        lists.filter(F.size(ids) >= 2)
+        .select(F.explode(pairs).alias("p"))
+        .select("p.doc_a", "p.doc_b")
+    )
+
+
+def _overlap(
+    cand: DataFrame,
+    a: str,
+    b: str,
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+) -> DataFrame:
+    """``(a, b, na, nb, i)`` for the ``(a, b)`` candidate pairs: the set
+    sizes of ``a``'s row in the shingle table ``left`` and ``b``'s row in
+    ``right``, and i = |A∩B|.
+
+    Both attach joins are pinned ``shuffle_hash``, building the id-only
+    candidate stream in the first and the per-doc array table in the
+    second. Left to size estimates the planner broadcasts the array
+    table, which cannot fit at cluster scale (a multi-GB HashedRelation
+    at the default 8 GB heap at sf10); a sort-merge join would sort the
+    pair stream with the arrays attached. The joins key on the tables'
+    own id column, not on a renamed copy, so when ``left`` and ``right``
+    are one table its two array exchanges are the same plan and run
+    once (a reused exchange).
+
+    Both sets are distinct, so |A∪B| = na + nb − i exactly and one
+    ``array_intersect`` per pair is the whole verify. ``rand(42)*0.0`` is
+    exactly +0.0 (rand ∈ [0, 1)), so ``i`` equals the plain count; the
+    nondeterministic alias keeps a caller's filter on ``i`` out of the
+    join condition, where the intersect would run again per candidate
+    (join conditions get no subexpression elimination)."""
+    sa, sb = F.col("_l.shh"), F.col("_r.shh")
+    i = F.rand(42) * F.lit(0.0) + F.size(F.array_intersect(sa, sb))
+    return (
+        cand.hint("shuffle_hash")
+        .join(left.alias("_l"), F.col(a) == F.col(f"_l.{id_col}"))
+        .join(
+            right.alias("_r").hint("shuffle_hash"),
+            F.col(b) == F.col(f"_r.{id_col}"),
+        )
+        .select(
+            a, b, F.size(sa).alias("na"), F.size(sb).alias("nb"), i.alias("i")
+        )
+    )
+
+
+def _jaccard() -> Column:
+    """Jaccard of an :func:`_overlap` row, rounded to 4 places."""
+    i = F.col("i")
+    return F.round(i / (F.col("na") + F.col("nb") - i), 4)
+
+
+def _token_codes(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(id, code, df)``: each doc's distinct whitespace tokens recoded
+    to ``xxhash64`` longs, with each token's document frequency.
+
+    Set equality and intersection sizes carry over from tokens to codes
+    only if the recode is a bijection, so each code compares its least
+    and greatest token: ``assert_true`` is NULL when one spelling owns
+    the code, and a 64-bit collision between two spellings raises with
+    both instead of silently merging them (birthday bound ~2.7 % at a
+    10⁹-token vocabulary)."""
+    toks = docs.select(
+        F.col(id_col).alias("id"),
+        F.explode(F.array_distinct(F.split(text_col, " "))).alias("tok"),
+    )
+    codes = toks.groupBy(F.xxhash64("tok").alias("_jc")).agg(
+        F.count(F.lit(1)).alias("df"),
+        F.min("tok").alias("_lo"),
+        F.max("tok").alias("_hi"),
+    )
+    checked = F.when(
+        F.assert_true(
+            F.col("_lo") == F.col("_hi"),
+            F.concat(
+                F.lit("jaccard_prefix_join: xxhash64 token collision: "),
+                F.col("_lo"),
+                F.lit(" / "),
+                F.col("_hi"),
+            ),
+        ).isNull(),
+        F.col("_jc"),
+    )
+    codes = codes.select("_jc", checked.alias("code"), "df")
+    return toks.join(codes, F.xxhash64("tok") == F.col("_jc")).select(
+        "id", "code", "df"
+    )
+
+
+# ------------------------------------------------------- banded MinHash
 
 def band_buckets(
     sh: DataFrame,
@@ -283,24 +386,16 @@ def banded_minhash_pairs(
     """Near-dup pairs via hand-rolled banded MinHash — the 100 TB path.
 
     hashed shingle (:func:`hashed_shingles`, no string n-grams) →
-    k=bands·rows minhash signature (one ``array_min∘transform`` fold per
-    permutation, seeded ``xxhash64`` — all JVM-side, zero shuffles) →
-    band keys → ONE hash aggregation per (band, key) bucket with pairs
-    generated from the bucket's id array (higher-order functions, no
-    bucket self-join) → candidates verified with exact hashed-shingle
-    Jaccard, keep ≥ ``min_jaccard``.
-
-    Shuffle budget: one exchange for the bucket groupBy, one for the
-    candidate ``distinct``, two broadcast-or-shuffle joins for verify —
-    versus the naive window-cap + self-join + distinct formulation's four
-    wide exchanges of the full bucket table. At sf0.1 this is 11 s → ~3 s;
-    at cluster scale the removed exchanges are the whole ballgame.
+    k=bands·rows minhash signature (:func:`band_buckets`) → ONE hash
+    aggregation per (band, key) bucket, pairs generated from the
+    bucket's id list (higher-order functions, no bucket self-join) →
+    candidates verified with exact hashed-shingle Jaccard, keep the
+    pairs whose ROUNDED Jaccard is ≥ ``min_jaccard``.
 
     Candidate cost is Σ|bucket|² per band, not |corpus|². With r=2
     rows/band, b=9 bands the match probability is 1-(1-s²)⁹ — ≈97% recall
-    at s=0.5, near-0 below s=0.2. Unlike MLlib's ``approxSimilarityJoin``
-    there is no model fit, no sparse-vector materialization, and no UDF
-    distance in the hot path.
+    at s=0.5, near-0 below s=0.2. There is no model fit, no sparse-vector
+    materialization and no UDF distance in the hot path.
 
     ``max_bucket`` drops buckets larger than that many docs before pair
     generation — a cluster of m near-identical docs otherwise produces
@@ -310,59 +405,17 @@ def banded_minhash_pairs(
     boilerplate; pair the cap with exact dedup, don't rely on it alone.
     ``None`` disables the cap (exhaustive, small corpora only).
     """
-    sh = ensure_parallelism(df.filter(F.size(F.split(text_col, " ")) >= n)).select(
-        id_col, hashed_shingles(text_col, n).alias("shh")
+    sh = _shingle_table(df, id_col, text_col, n)
+    lists = _capped_lists(
+        band_buckets(sh, id_col, bands, rows_per_band),
+        ["band", "key"],
+        id_col,
+        max_bucket,
     )
-    buckets = band_buckets(sh, id_col, bands, rows_per_band)
-    if max_bucket is not None:
-        # Cap bucket membership at max_bucket+1 rows BEFORE collect_list
-        # (row_number compiles to WindowGroupLimit on the same
-        # (band, key) partitioning the groupBy needs — no extra
-        # exchange): without it, a mega-cluster's ENTIRE bucket list is
-        # materialized in one aggregation buffer per band before the
-        # size filter drops it — the containment_pairs OOM class. A
-        # capped bucket keeps max_bucket+1 members and fails the same
-        # size filter the uncapped list would have: identical pairs.
-        from pyspark.sql import Window
-
-        wb = Window.partitionBy("band", "key").orderBy(id_col)
-        buckets = (
-            buckets.withColumn("_rn", F.row_number().over(wb))
-            .filter(F.col("_rn") <= max_bucket + 1)
-            .drop("_rn")
-        )
-    grp = buckets.groupBy("band", "key").agg(F.collect_list(id_col).alias("ids"))
-    size_ok = F.size("ids") >= 2
-    if max_bucket is not None:
-        size_ok = size_ok & (F.size("ids") <= max_bucket)
-    cand = (
-        grp.filter(size_ok)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, a -> filter(transform(ids, "
-                    "b -> if(a < b, struct(a as doc_a, b as doc_b), null)), "
-                    "p -> p is not null)))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-    a = sh.select(F.col(id_col).alias("doc_a"), F.col("shh").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("doc_b"), F.col("shh").alias("sh_b"))
+    cand = _list_pairs(lists).distinct()
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                4,
-            ).alias("jaccard"),
-        )
+        _overlap(cand, "doc_a", "doc_b", sh, sh, id_col)
+        .select("doc_a", "doc_b", _jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= min_jaccard)
     )
 
@@ -480,6 +533,8 @@ def dup_clusters(
     return labels.select(F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 
 
+# ------------------------------------------------- exact token Jaccard
+
 def jaccard_prefix_join(
     docs: DataFrame,
     threshold: float = 0.5,
@@ -545,10 +600,8 @@ def _jaccard_ptj_path(
 
     Plan shape (all shuffles on bounded keys, no cross join):
 
-    1. Tokens recode to ``xxhash64`` longs with the min/max collision
-       tripwire (a 64-bit collision between distinct spellings raises
-       instead of silently merging intersections — bijection is what
-       makes code-array equality equal set equality).
+    1. Tokens recode to ``xxhash64`` longs (:func:`_token_codes`; its
+       bijection check is what makes code-array equality set equality).
     2. One groupBy(id) builds the m per-part SORTED code subarrays as
        plain columns s0..s{m-1} (m is a plan-time constant — the whole
        verify unrolls into codegen'd expressions, no interpreted HOF
@@ -556,24 +609,18 @@ def _jaccard_ptj_path(
        both join sides read the columnar cache.
     3. Each doc emits m signature rows (pid, sub = its part subarray);
        candidates come from ONE equi-join on (pid, sub) — subset
-       equality IS the join key, hashed by Spark over the long arrays,
-       no token-level fan-out. The join is pinned ``shuffle_hash``: the
-       build side is the full signature table (every doc × m rows), so
-       letting size mis-estimates pick BroadcastHashJoin would ship the
-       corpus to every executor at cluster scale (the round-10 verdict's
-       q_containment/q_jaccard broadcast hazard).
+       equality IS the join key. The join is pinned ``shuffle_hash``:
+       its build side is the full signature table (every doc × m rows),
+       which a broadcast would ship to every executor.
     4. FIRST-MATCH dedup as a join residual: a pair sharing several
        part-subsets matches once per shared part; keeping only the
        smallest matching pid (cheap array inequality on the earlier
-       parts, exact — no hashes) makes each pair appear EXACTLY once,
-       so the old post-verify 123 M-row ``distinct`` disappears.
+       parts, exact — no hashes) makes each pair appear EXACTLY once.
     5. Exact verify in the projection: |A∩B| = Σ_p (a_p == b_p ?
        |a_p| : |a_p ∩ b_p|) — parts partition the domain, so the sum is
        the exact integer intersection; intersects only run on the ≤ H
-       differing parts. ``rand(42)*0.0 + jac`` keeps the optimizer from
-       pushing the jac filter into the join condition where the
-       subexpression would evaluate per candidate twice (bit-identical:
-       rand ∈ [0,1) ⇒ rand*0.0 is exactly +0.0 and jac ≥ 0).
+       differing parts. ``rand(42)*0.0 + jac`` keeps the jac filter out
+       of the join condition, as in :func:`_overlap`.
     """
     from functools import reduce
     from operator import add, and_
@@ -581,30 +628,9 @@ def _jaccard_ptj_path(
     from pyspark import StorageLevel
 
     from ..plans.cache_registry import persist_slot
+    from ..plans.parallelism import keyed_fanout
 
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(F.split(text_col, " "))).alias("tok"),
-    )
-    codes = toks.groupBy(F.xxhash64("tok").alias("code")).agg(
-        F.min("tok").alias("_lo"), F.max("tok").alias("_hi")
-    )
-    # Bijection tripwire: assert_true returns NULL when the slot held a
-    # single distinct token; a collision raises with both spellings.
-    code_checked = F.when(
-        F.assert_true(
-            F.col("_lo") == F.col("_hi"),
-            F.concat(
-                F.lit("jaccard_prefix_join: xxhash64 token collision: "),
-                F.col("_lo"),
-                F.lit(" / "),
-                F.col("_hi"),
-            ),
-        ).isNull(),
-        F.col("code"),
-    )
-    codes = codes.select(F.col("code").alias("_jc"), code_checked.alias("code"))
-    rec = toks.join(codes, F.xxhash64("tok") == F.col("_jc")).select(
+    rec = _token_codes(docs, id_col, text_col).select(
         "id", "code", F.pmod("code", F.lit(m)).cast("int").alias("pid")
     )
     subs = [f"s{p}" for p in range(m)]
@@ -623,50 +649,26 @@ def _jaccard_ptj_path(
         *[F.xxhash64(s).alias(f"h{p}") for p, s in enumerate(subs)],
         reduce(add, [F.size(s) for s in subs]).alias("n"),
     )
-    # int64 code subarrays: ~9× smaller than the string arrays that
-    # forced the old prefix path to DISK_ONLY; measured at sf10 the
-    # columnar MEMORY_AND_DISK cache fits the default 8 GB heap.
+    # int64 code subarrays: measured at sf10, the columnar
+    # MEMORY_AND_DISK cache fits the default 8 GB heap.
     sets = persist_slot(sets, "jaccard_ptj_sets", StorageLevel.MEMORY_AND_DISK)
-    nsz = [f"n{p}" for p in range(m)]
-    hsh = [f"h{p}" for p in range(m)]
-    sig = sets.select(
-        "id",
-        "n",
-        *subs,
-        *nsz,
-        *hsh,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(p).alias("pid"), F.col(f"s{p}").alias("sub")
-                    )
-                    for p in range(m)
-                ]
-            )
-        ).alias("e"),
-    ).select(
-        "id",
-        "n",
-        *subs,
-        *nsz,
-        *hsh,
-        F.col("e.pid").alias("pid"),
-        F.col("e.sub").alias("sub"),
+    parts = F.array(
+        *[
+            F.struct(F.lit(p).alias("pid"), F.col(s).alias("sub"))
+            for p, s in enumerate(subs)
+        ]
     )
-    # The candidate join's cost is per-CANDIDATE compute, not bytes: at
-    # sf10 the signature exchange is ~340 MB feeding ~10 CPU-minutes of
-    # verify, so byte-based AQE sizing would leave it on |shuffle
-    # partitions| coarse tasks and the hottest buckets straggle
-    # (measured: 33 % idle slot time at 32 tasks). Partition the ONE
-    # exchange both sides share by the join key at the input-derived
-    # fan-out (keyed_fanout: 8× the corpus scan's split count clamped to
-    # [cores, 8× cores] — hits the 8×-core ceiling at audit scale and
-    # above, degrades to the core count on small inputs where a flat
-    # constant paid hundreds of near-empty task launches); an explicit
-    # repartition count also keeps AQE from re-coalescing.
-    from ..plans.parallelism import keyed_fanout
-
+    sig = (
+        sets.withColumn("e", F.explode(parts))
+        .select("*", "e.pid", "e.sub")
+        .drop("e")
+    )
+    # The candidate join's cost is per-CANDIDATE compute, not bytes, so
+    # byte-based AQE sizing would leave it on a few coarse tasks whose
+    # hottest buckets straggle (measured at sf10: 33 % idle slot time at
+    # 32 tasks). The ONE exchange both sides share is partitioned by the
+    # join key at the input-derived fan-out of :func:`keyed_fanout`; an
+    # explicit count also keeps AQE from re-coalescing it.
     sig = sig.repartition(keyed_fanout(docs), "pid", "sub")
 
     na, nb = F.col("a.n"), F.col("b.n")
@@ -710,7 +712,7 @@ def _jaccard_ptj_path(
         & (i_ub >= F.lit(t) * (na + nb) / F.lit(1.0 + t) - F.lit(eps))
         & first_match
     )
-    # tks hold DISTINCT tokens, so |A ∪ B| = n_a + n_b − |A ∩ B| exactly.
+    # The subarrays hold DISTINCT codes, so |A ∪ B| = n_a + n_b − |A ∩ B|.
     inter = reduce(
         add,
         [
@@ -747,19 +749,18 @@ def _jaccard_prefix_path(
     pigeonhole partitioning degenerates.
 
     Prefix-filter principle: order every document's distinct tokens
-    by ONE global canonical order (document frequency ascending, token as
-    tiebreak — rarest first); if ``J(a,b) >= t`` then the first
-    ``|d| - ceil(t*|d|) + 1`` tokens of each side must share at least one
-    token. Candidate pairs therefore come from a self-join on PREFIX
-    tokens only — and because prefixes lead with the rarest tokens,
-    bucket sizes stay small where a full token inverted index would put
-    every stopword-sharing pair in one bucket.
+    by ONE global total order (document frequency ascending, token code
+    as tiebreak — rarest first; any consistent order is complete); if
+    ``J(a,b) >= t`` then the first ``|d| - ceil(t*|d|) + 1`` tokens of
+    each side must share at least one token. Candidate pairs therefore
+    come from a self-join on PREFIX tokens only — and because prefixes
+    lead with the rarest tokens, bucket sizes stay small where a full
+    token inverted index would put every stopword-sharing pair in one
+    bucket.
 
-    Two further PPJoin filters prune candidates BEFORE the distinct and
-    the verify joins — the defense against natural-text corpora where a
-    common token lands in the prefix of many short documents (the
-    round-9 scale audit's costliest entry, 494 s at sf10, was governed
-    by exactly that bucket-size hazard):
+    Two further PPJoin filters prune candidates inside the join — the
+    defense against natural-text corpora where a common token lands in
+    the prefix of many short documents:
 
     - LENGTH filter: ``J(a,b) >= t`` forces ``min(n_a, n_b) >=
       t * max(n_a, n_b)`` (overlap is at most the smaller set), so
@@ -771,91 +772,25 @@ def _jaccard_prefix_path(
       pair is kept if ANY shared prefix token passes — the first shared
       token always does for a true pair, so no recall loss.
 
-    Exact verification then removes the surviving false candidates, so
-    the result is identical to the naive O(n²) join (that identity IS
-    the oracle and is pinned in tests/test_extensions.py).
+    Prefix rows carry their doc's full code array, so the filters and
+    the exact verify all evaluate in the ONE candidate join, reading the
+    arrays in place; a join-output row only materializes for accepted
+    pairs. A pair appears once per shared prefix token, and every copy
+    is the same (doc_a, doc_b, jaccard) row — same arrays, same integer
+    counts, same double — so the final ``distinct`` returns exactly the
+    naive join. All copies of a pair come from one doc_a partition, so
+    the partial aggregate removes them map-side.
 
-    Shuffles: token-df aggregation, the df join-back, the per-doc sort
-    (id-keyed), the prefix-token candidate join (whose condition IS the
-    exact verify — see below), and the final output dedup — all on
-    bounded keys, no cross join anywhere.
-
-    Two round-10 measured rewrites (sf10 stage profile, guide §1):
-
-    - **64-bit token recode.** Tokens are recoded to ``xxhash64`` codes
-      before the per-doc sort: the canonical order becomes (df, code) —
-      a different but still CONSISTENT total order, which is all the
-      prefix-filter completeness theorem needs — and every downstream
-      structure (the DISK_ONLY cache, the candidate-join key, the two
-      verify broadcasts, the per-pair ``array_intersect``) carries longs
-      instead of strings. ``array_intersect`` on primitive longs skips
-      per-element UTF8String hashing/equality, and the verify broadcast
-      shrinks ~3×(measured GC-pressure source at sf10). Output identity
-      needs the recode to be a BIJECTION, so the df aggregate carries a
-      min/max-token tripwire: a 64-bit collision between two distinct
-      tokens raises instead of silently merging intersections (birthday
-      bound ~2.7% at a 10⁹-token vocabulary; on a corpus that trips it,
-      drop back to string tokens — correctness never degrades quietly).
-    - **Dedup moved AFTER the verify.** A candidate pair appears once
-      per shared prefix token; at threshold 0.9 the measured duplication
-      is only 1.27× (418 M → 328 M at sf10) while the pre-verify
-      ``distinct`` was the single most expensive stage (~80 s: a full
-      exchange + hash-agg of every candidate row). Verifying the raw
-      candidate stream (+27 % intersect work, no exchange) and deduping
-      the FAR smaller accepted-pair output is strictly cheaper;
-      duplicates of a pair produce the same (doc_a, doc_b, jaccard)
-      row — same arrays, same integer counts, same double — so the
-      final ``distinct`` returns exactly the old result. All dups of
-      one pair also originate from one doc_a cache partition, so the
-      partial aggregate removes them map-side and the exchange carries
-      ≈ the true output.
-    - **Verify fused into the candidate join.** Prefix rows carry their
-      doc's full recoded token array, so length filter, positional
-      filter and the exact Jaccard test all evaluate inside the ONE
-      join's condition, reading the arrays in place; a join-output row
-      only materializes for accepted pairs. The old ids-only candidate
-      stream re-joined the token table twice, copying a ~200 B array
-      into every one of 418 M candidate rows before the verify could
-      reject 70 % of them — the dominant CPU cost (2720 CPU-s) of the
-      sf10 stage profile after the first two fixes.
-
-    The canonically-ordered token table feeds the two sides of the
-    verify-fused candidate join; left lazy, each branch re-tokenizes
-    the corpus and re-runs the token-df shuffle — the dominant cost of
-    the first sf10 reading. It is persisted through the session cache
-    registry (one generation per session, shallow lineage on release —
-    the ``containment_pairs`` pattern), so the build runs once and the
-    branches read the columnar cache.
+    The ordered token table feeds both sides of the join; it persists
+    through the session cache registry so the build runs once.
     """
+    from pyspark import StorageLevel
+
     from ..plans.cache_registry import persist_slot
 
     t = float(threshold)
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(F.split(text_col, " "))).alias("tok"),
-    )
-    dfreq = toks.groupBy(F.xxhash64("tok").alias("code")).agg(
-        F.count(F.lit(1)).alias("df"),
-        F.min("tok").alias("_lo"),
-        F.max("tok").alias("_hi"),
-    )
-    # Bijection tripwire: assert_true returns NULL when the slot held a
-    # single distinct token; a collision raises with both spellings.
-    df_checked = F.when(
-        F.assert_true(
-            F.col("_lo") == F.col("_hi"),
-            F.concat(
-                F.lit("jaccard_prefix_join: xxhash64 token collision: "),
-                F.col("_lo"),
-                F.lit(" / "),
-                F.col("_hi"),
-            ),
-        ).isNull(),
-        F.col("df"),
-    )
-    dfreq = dfreq.select("code", df_checked.alias("df"))
     ordered = (
-        toks.join(dfreq, F.xxhash64("tok") == F.col("code"))
+        _token_codes(docs, id_col, text_col)
         .select("id", F.struct("df", "code").alias("k"))
         .groupBy("id")
         .agg(F.sort_array(F.collect_list("k")).alias("ks"))
@@ -865,28 +800,13 @@ def _jaccard_prefix_path(
             F.size("ks").alias("n"),
         )
     )
-    # DISK_ONLY: the MEMORY_AND_DISK unroll across all concurrent tasks
-    # OOM'd the sf10 sweep at the default 8 GB heap when this table held
-    # wide STRING token arrays; the round-10 xxhash64 recode made the
-    # payload int64 arrays (~9× narrower — the PTJ path's sibling cache
-    # measures fine at MEMORY_AND_DISK), but this fallback path no
-    # longer runs at audited scale (the registered t=0.9 query takes the
-    # PTJ path), so the proven-safe level is kept rather than
-    # re-measured.
-    from pyspark import StorageLevel
-
+    # DISK_ONLY: proven safe at sf10 back when the arrays held strings;
+    # the registered t=0.9 query takes the PTJ path, so the level of
+    # this fallback is not re-measured.
     ordered = persist_slot(
         ordered, "jaccard_prefix_ordered", StorageLevel.DISK_ONLY
     )
     prefix_len = (F.col("n") - F.ceil(F.col("n") * F.lit(t)) + 1).cast("int")
-    # Prefix rows CARRY their doc's full (recoded) token array, so the
-    # exact verify evaluates inside the candidate join's own condition —
-    # the arrays are read in place from the stream/build rows and a
-    # join-output row only materializes for pairs that PASS. The old
-    # shape (ids-only candidates, then two id-keyed joins back to the
-    # token table) copied tks_a into 418 M join rows before the verify
-    # could reject 70 % of them — measured as the dominant CPU cost of
-    # the sf10 stage profile after the dedup move (2720 CPU-s).
     prefixes = ordered.select(
         "id",
         "n",
@@ -904,27 +824,12 @@ def _jaccard_prefix_path(
     # loose, the exact verify removes anything the slack admits.
     eps = 1e-6
     min_overlap = F.lit(t) * (na + nb) / F.lit(1.0 + t) - F.lit(eps)
-    # tks holds DISTINCT tokens, so |a ∪ b| = n_a + n_b − |a ∩ b|
-    # exactly — same integer, same double after the division — and the
-    # verify does one array walk per pair instead of two.
+    # tks holds DISTINCT codes, so |a ∪ b| = n_a + n_b − |a ∩ b|; the
+    # rand barrier of :func:`_overlap` keeps the intersect to one
+    # evaluation per candidate while the cheap length, positional and
+    # id filters still push into the join condition.
     inter = F.size(F.array_intersect("a.tks", "b.tks"))
-    jac = inter / (na + nb - inter)
-    # ONE intersect per candidate, total. Written plainly, the
-    # deterministic `jac >= t` filter gets pushed into the join
-    # condition, where the intersect is evaluated TWICE per candidate
-    # (numerator and denominator — join conditions get no
-    # subexpression elimination) and twice more in the projection for
-    # every accepted pair: ~1 B intersect calls at sf10, the measured
-    # residual cost of this query. The guide-§4.4 nondeterministic
-    # marker, applied at expression level: `rand()*0.0` is exactly
-    # +0.0 for every draw (rand ∈ [0,1), finite) and jac ≥ 0, so
-    # `rand()*0.0 + jac` is BIT-IDENTICAL to jac — but the alias is
-    # now nondeterministic, the filter cannot be pushed past it, and
-    # the single projection evaluates the intersect once (project
-    # lists DO get subexpression elimination). The cheap length/
-    # positional/id filters above stay deterministic and still push
-    # into the join condition where they belong.
-    jac_nd = F.rand(42) * F.lit(0.0) + jac
+    jac_nd = F.rand(42) * F.lit(0.0) + inter / (na + nb - inter)
     return (
         prefixes.alias("a")
         .join(prefixes.alias("b"), "ptok")
@@ -943,6 +848,8 @@ def _jaccard_prefix_path(
         .distinct()
     )
 
+
+# ---------------------------------------------------------- containment
 
 def containment_pairs(
     df: DataFrame,
@@ -966,122 +873,44 @@ def containment_pairs(
     is itself non-boilerplate, and candidate cost is bounded by
     Σ df² over kept shingles ≤ max_df · |postings| — never |corpus|².
     High-df shingles are exactly the boilerplate the containment verify
-    would reject anyway. Verify is one exact set intersection per
-    candidate pair; both joins key on 8-byte ids.
+    would reject anyway. A count-only bound prunes the candidates before
+    any array is attached; :func:`_overlap` verifies the survivors.
+    Output: (doc_a, doc_b, containment ≥ ``min_containment``, jaccard),
+    both rounded to 4 places.
     """
-    sh = ensure_parallelism(
-        df.filter(F.size(F.split(text_col, " ")) >= n)
-    ).select(id_col, hashed_shingles(text_col, n).alias("shh"))
-    # The shingle table feeds THREE branches (inverted index + both verify
-    # sides); without materialization each branch re-tokenizes and re-hashes
-    # the corpus. persist() computes each partition once and — unlike the
-    # former localCheckpoint, whose lineage-free blocks die with their
-    # executor — keeps the (shallow: scan + project) lineage, so a lost
-    # block recomputes instead of failing the query. Payload is
-    # |docs| × ~|shingles| int64s, memory-and-disk. The return value is
-    # lazy, so the blocks must outlive this function; the session-scoped
-    # cache slot bounds pinned storage to ONE shingle table per session
-    # (each pass releases the previous pass's blocks; a stale earlier
-    # result recomputes its shallow lineage instead of failing). Explicit
-    # release: plans.cache_registry.release_slot(spark, "containment_shingles").
     from ..plans.cache_registry import persist_slot
-
-    sh = persist_slot(sh, "containment_shingles")
-    inv = sh.select(F.col(id_col), F.explode("shh").alias("g"))
-    # Candidate pairs from ONE pass over the inverted index. The former
-    # UNCAPPED collect_list posting build materialized each gram's
-    # ENTIRE id list in ObjectHashAggregate buffers (a mega-hot gram's
-    # full posting before the df filter could discard it) and OOM'd the
-    # sf10 sweep at the default heap; the round-10 fix replaced lists
-    # with a row_number cap + count window + gram-keyed SELF-JOIN — but
-    # that executed the whole explode+window pipeline TWICE (once per
-    # join side, the measured twin ~830 CPU-s stages) and re-shuffled
-    # the pool into the join. Now:
-    #   1. row_number cap at max_df+1 per gram — compiles to
-    #      WindowGroupLimit, so a hot gram's postings are pruned
-    #      map-side BEFORE the exchange (a boilerplate gram shared by
-    #      1% of a 100 TB corpus barely shuffles);
-    #   2. collect_list per gram on the SAME g-partitioning (no second
-    #      exchange, and now provably bounded at max_df+1 ids — the
-    #      hazard that forbade lists is gone);
-    #   3. grams whose CAPPED list exceeds max_df are dropped (they had
-    #      df > max_df — identical survivor set to the count-window
-    #      form) and the ≤ C(max_df, 2) in-list pair combinations are
-    #      emitted map-side; sort_array makes doc_a < doc_b by
-    #      construction. One window pipeline execution total, no join.
-    from pyspark.sql import Window
-
-    wg = Window.partitionBy("g").orderBy(id_col)
-    posting = (
-        inv.withColumn("_rn", F.row_number().over(wg))
-        .filter(F.col("_rn") <= max_df + 1)
-        .groupBy("g")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_df))
-    )
-    ids = F.col("ids")
-    combos = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    # (A distinct-posting-list dedup before the explode was measured
-    # here and reverted: at sf10 the 536 k kept lists held 2.7 M
-    # distinct values and the duplicated pair stream only dropped
-    # 124 M → 112 M — the extra list exchange cost more than the 10 %
-    # pair reduction saved.)
-    # (Fusing the pair dedup onto the join-1 exchange — repartition by
-    # doc_a BEFORE the distinct, whose (doc_a, doc_b) clustering a
-    # doc_a-hash layout satisfies — measured noise-equivalent at sf10
-    # (57-65 s warm both ways); this form keeps the dedup ahead of the
-    # wider fan-out exchange, so the join-1 exchange carries 112 M
-    # deduped rows instead of 124 M.)
-    #
-    # Round 11: the dedup aggregates COUNT instead of distinct (same
-    # exchange, same surviving pairs) because the multiplicity is an
-    # exact intersection statistic: a pair is emitted from gram g's
-    # kept list iff g ∈ A∩B and 2 ≤ df(g) ≤ max_df (kept lists are
-    # complete below the cap, and df ≥ 2 is automatic for a SHARED
-    # gram), so c_ab = |A∩B ∩ R| exactly, R = grams with df ≤ max_df.
-    # Every shared gram is in R or HOT (df > max_df), and the hot part
-    # is bounded by either doc's hot-gram count:
-    #   |A∩B| = c_ab + |A∩B∖R| ≤ c_ab + min(h_a, h_b) = I_ub.
-    # Pairs with I_ub < t·min(na, nb) can never verify, so this
-    # count-only prune runs BEFORE the shingle arrays are attached —
-    # the verify joins carry ~400 B arrays per row, the prune joins
-    # 2 ints. A hash collision inside hashed_shingles affects c_ab and
-    # the verify identically (both operate on the hashed sets), so the
-    # bound is exact w.r.t. the operator's declared semantics. Per-doc
-    # h comes from a full per-gram count aggregate and a gram-keyed
-    # semi-join back onto the index; their partial aggregates sit below
-    # the exchange so the window's g-exchange is NOT structurally
-    # reusable (checked in the executed plan) — both passes instead
-    # re-read the session-cached shingle table, never re-tokenizing
-    # the corpus, and the hot-gram side shuffles only per-gram partial
-    # counts.
     from ..plans.parallelism import keyed_fanout
 
-    # Input-derived fan-out (8× the corpus scan's split count clamped
-    # to [cores, 8× cores] — see keyed_fanout): the flat 8×-core
-    # constant paid ~hundreds of near-empty task launches at sf0.1.
+    # The shingle table feeds the inverted index, the hot-gram counts,
+    # the per-doc stats and both verify sides. The session cache slot
+    # computes it once and keeps its shallow lineage (a lost block
+    # recomputes), and bounds pinned storage to ONE shingle table per
+    # session. Explicit release:
+    # plans.cache_registry.release_slot(spark, "containment_shingles").
+    sh = persist_slot(
+        _shingle_table(df, id_col, text_col, n), "containment_shingles"
+    )
+    inv = sh.select(F.col(id_col), F.explode("shh").alias("g"))
+    # The pair stream is ~10⁸ nearly-all-distinct rows at sf10, so
+    # byte-based AQE sizing would coalesce its aggregate onto a few fat
+    # tasks; it is repartitioned on doc_a at the input-derived fan-out.
+    # doc_a alone clusters every (doc_a, doc_b) group and is the layout
+    # the st_a join needs, so ONE exchange serves the count and that
+    # join. Per-doc_a fan-in is bounded by the doc's kept-gram count ×
+    # max_df.
+    #
+    # The count is an exact intersection statistic: a pair is emitted
+    # from gram g's list iff g ∈ A∩B and df(g) ≤ max_df (kept lists are
+    # complete), so c_ab = |A∩B ∩ R|, R = grams with df ≤ max_df. Every
+    # shared gram is in R or HOT (df > max_df), and the hot part is
+    # bounded by either doc's hot-gram count:
+    #   |A∩B| = c_ab + |A∩B∖R| ≤ c_ab + min(h_a, h_b) = I_ub.
+    # A hash collision inside hashed_shingles affects c_ab and the
+    # verify alike (both see the hashed sets), so the bound is exact
+    # for the operator's declared semantics.
     fanout = keyed_fanout(df)
-    # The explicit key repartition sits BELOW the aggregate: the pair
-    # stream is ~10⁸ nearly-all-distinct rows, so byte-based AQE sizing
-    # would coalesce the count onto few fat reduce tasks (the
-    # basket_pairs finding). Partitioning on doc_a ALONE both satisfies
-    # the (doc_a, doc_b) clustered distribution (a subset hash
-    # partitioning clusters every group) AND is exactly the layout the
-    # st_a prune join needs — ONE fan-out exchange serves the count
-    # aggregate and the first stats join; only the st_b join re-keys
-    # the stream. Per-doc_a fan-in is bounded by the doc's kept-gram
-    # count × max_df, so no single task inherits a mega-key.
     cand = (
-        posting.select(F.explode(combos).alias("pr"))
-        .select("pr.doc_a", "pr.doc_b")
+        _list_pairs(_capped_lists(inv, ["g"], id_col, max_df))
         .repartition(fanout, "doc_a")
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("_cab"))
@@ -1097,10 +926,8 @@ def containment_pairs(
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("_h"))
     )
-    # h is docs-with-hot-grams-sized — |corpus|-scale in the worst
-    # case, so the stats attach is pinned shuffle_hash like every other
-    # per-doc join here (the planner's estimate picks a broadcast that
-    # cannot fit at cluster scale).
+    # h is |corpus|-sized in the worst case, so the stats attach is
+    # pinned shuffle_hash like every other per-doc join here.
     stats = (
         sh.select(F.col(id_col), F.size("shh").alias("_n"))
         .join(h.hint("shuffle_hash"), id_col, "left")
@@ -1138,52 +965,13 @@ def containment_pairs(
         .select("doc_a", "doc_b")
         .repartition(fanout, "doc_a")
     )
-    # The pair stream is ~10⁸ rows of two longs at sf10 while each doc's
-    # shingle array is ~400 B, so the verify must (a) never broadcast
-    # the array table — the planner's size estimate picks exactly that
-    # and dies building a multi-GB HashedRelation at the default 8 GB
-    # heap (the round-10 audit's flagged hazard, reproduced live this
-    # round) — and (b) never SORT the pair stream once arrays are
-    # attached (a merge-join variant measured 381 s: an 8.5 GB sorted
-    # exchange spilling 50 GB). Pinned shape: shuffled-hash joins at a
-    # core-count-derived fan-out, building the BOUNDED side per
-    # partition — the ids-only pair stream in join 1 (~7 MB/partition),
-    # the per-doc array table in join 2 (~1 MB/partition); the array
-    # payload crosses the wire once per side and is never collected.
-    a = sh.select(F.col(id_col).alias("doc_a"), F.col("shh").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("doc_b"), F.col("shh").alias("sh_b"))
-    # shh is array_distinct by construction, so |A∪B| = |A|+|B|−|A∩B|
-    # exactly — one hash-set pass per pair instead of intersect + union.
-    # The intersect rides the jaccard_prefix_join rand-barrier: written
-    # plainly, the containment filter collapses into the verify join's
-    # condition where the intersect would evaluate again per candidate
-    # (join conditions get no subexpression elimination); rand(42)*0.0
-    # is exactly +0.0 (rand ∈ [0,1), inter ≥ 0), the alias is
-    # nondeterministic, and the single projection evaluates the
-    # intersect once.
-    inter_nd = F.rand(42) * F.lit(0.0) + F.size(
-        F.array_intersect("sh_a", "sh_b")
-    )
     return (
-        cand.hint("shuffle_hash")
-        .join(a, "doc_a")
-        .join(b.hint("shuffle_hash"), "doc_b")
+        _overlap(cand, "doc_a", "doc_b", sh, sh, id_col)
         .select(
             "doc_a",
             "doc_b",
-            F.size("sh_a").alias("_na"),
-            F.size("sh_b").alias("_nb"),
-            inter_nd.alias("_i"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("_i") / F.least("_na", "_nb"), 4).alias(
-                "containment"
-            ),
-            F.round(
-                F.col("_i") / (F.col("_na") + F.col("_nb") - F.col("_i")), 4
-            ).alias("jaccard"),
+            F.round(F.col("i") / F.least("na", "nb"), 4).alias("containment"),
+            _jaccard().alias("jaccard"),
         )
         .filter(F.col("containment") >= min_containment)
     )
@@ -1201,10 +989,10 @@ def build_band_index(
     max_posting: int = 1000,
 ) -> DataFrame:
     """Persisted-form MinHash band index over a corpus: one row per
-    (band, key) bucket with the posting list of corpus ids. THE artifact
-    an incremental ingestion pipeline stores (write it partitioned by
-    ``band``) so each new batch probes the index instead of re-banding
-    the accumulated 100 TB corpus.
+    (band, key) bucket with the sorted posting list of corpus ids. THE
+    artifact an incremental ingestion pipeline stores (write it
+    partitioned by ``band``) so each new batch probes the index instead
+    of re-banding the accumulated 100 TB corpus.
 
     ``max_posting`` drops hot buckets at BUILD time (same rationale and
     default as :func:`banded_minhash_pairs`' ``max_bucket``: a bucket of
@@ -1215,33 +1003,15 @@ def build_band_index(
     METADATA — they travel with the artifact through persist/checkpoint
     and through a parquet round trip — so :func:`delta_dedup_pairs` can
     validate a probe's parameters against the index without launching a
-    scan (the earlier ``max(band)`` guard ran a full index scan on every
-    probe call)."""
-    from pyspark.sql import Window
-
-    sh = ensure_parallelism(
-        corpus.filter(F.size(F.split(text_col, " ")) >= n)
-    ).select(id_col, hashed_shingles(text_col, n).alias("shh"))
-    # Pre-cap bucket membership at max_posting+1 (WindowGroupLimit on
-    # the same (band, key) partitioning — no extra exchange) so a
-    # mega-cluster's full bucket never materializes in one collect_list
-    # buffer; a capped bucket fails the same size filter the uncapped
-    # list would have, so the surviving index is identical.
-    wb = Window.partitionBy("band", "key").orderBy(id_col)
-    capped = (
-        band_buckets(sh, id_col, bands, rows_per_band)
-        .withColumn("_rn", F.row_number().over(wb))
-        .filter(F.col("_rn") <= max_posting + 1)
-        .drop("_rn")
-    )
-    return (
-        capped.groupBy("band", "key")
-        .agg(F.collect_list(id_col).alias("ids"))
-        .filter(F.size("ids") <= max_posting)
-        .withMetadata(
-            "band",
-            {"bands": bands, "rows_per_band": rows_per_band, "n": n},
-        )
+    scan."""
+    sh = _shingle_table(corpus, id_col, text_col, n)
+    return _capped_lists(
+        band_buckets(sh, id_col, bands, rows_per_band),
+        ["band", "key"],
+        id_col,
+        max_posting,
+    ).withMetadata(
+        "band", {"bands": bands, "rows_per_band": rows_per_band, "n": n}
     )
 
 
@@ -1285,9 +1055,7 @@ def delta_dedup_pairs(
 
     Output: (delta_id, corpus_id, jaccard ≥ ``min_jaccard``).
     """
-    sh_d = ensure_parallelism(
-        delta.filter(F.size(F.split(text_col, " ")) >= n)
-    ).select(id_col, hashed_shingles(text_col, n).alias("shh"))
+    sh_d = _shingle_table(delta, id_col, text_col, n)
     if index is None:
         index = build_band_index(
             corpus, id_col, text_col, n, bands, rows_per_band,
@@ -1340,23 +1108,11 @@ def delta_dedup_pairs(
         # prune to candidate ids BEFORE hashing shingles, so the ad-hoc
         # path shingle-hashes only colliding corpus docs
         cand_ids = cand.select(F.col("corpus_id").alias(id_col)).distinct()
-        sh_c = ensure_parallelism(
-            corpus.join(cand_ids, id_col, "semi")
-            .filter(F.size(F.split(text_col, " ")) >= n)
-        ).select(id_col, hashed_shingles(text_col, n).alias("shh"))
-    d = sh_d.select(F.col(id_col).alias("delta_id"), F.col("shh").alias("sh_d"))
-    c = sh_c.select(F.col(id_col).alias("corpus_id"), F.col("shh").alias("sh_c"))
-    return (
-        cand.join(d, "delta_id")
-        .join(c, "corpus_id")
-        .select(
-            "delta_id",
-            "corpus_id",
-            F.round(
-                F.size(F.array_intersect("sh_d", "sh_c"))
-                / F.size(F.array_union("sh_d", "sh_c")),
-                4,
-            ).alias("jaccard"),
+        sh_c = _shingle_table(
+            corpus.join(cand_ids, id_col, "semi"), id_col, text_col, n
         )
+    return (
+        _overlap(cand, "delta_id", "corpus_id", sh_d, sh_c, id_col)
+        .select("delta_id", "corpus_id", _jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= min_jaccard)
     )

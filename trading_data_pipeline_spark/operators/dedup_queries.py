@@ -1,9 +1,11 @@
 """Declared dedup queries (extension ops E1/E2 + north-star dedup family).
 
-Exact, SimHash, and n-gram Jaccard have bit-exact DuckDB oracles (md5 and
-fold order agree across engines); MinHashLSH is rows-only (hash-sketch
-banding is engine-specific) with recall asserted against the exact Jaccard
-in tests/test_dedup.py.
+Exact, SimHash, n-gram Jaccard and the exact token-Jaccard join have
+bit-exact DuckDB oracles (md5 and fold order agree across engines); the
+banded-MinHash queries are rows-only (hash-sketch banding is
+engine-specific), with recall asserted against the exact Jaccard in
+tests/test_extensions.py and the shared pair-join stages pinned against a
+Python brute force in tests/test_dedup.py.
 """
 
 from __future__ import annotations
@@ -128,10 +130,9 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_dedup_near",
     None,  # MinHash banding is engine-specific → rows-only; recall tested
     doc="Banded-MinHash near-dup pairs (shingle → seeded-xxhash64 minhash "
-    "signature → band bucket self-join → exact-Jaccard verify) — the "
-    "sub-quadratic 100 TB near-dup path, all JVM-side; recall vs exact "
-    "Jaccard asserted in tests/test_extensions.py. MLlib MinHashLSH "
-    "variant kept as operators.dedup.minhash_lsh_pairs",
+    "signature → capped band-bucket lists → in-list pairs → exact-Jaccard "
+    "verify) — the sub-quadratic 100 TB near-dup path, all JVM-side; "
+    "recall vs exact Jaccard asserted in tests/test_extensions.py",
 )
 def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     return banded_minhash_pairs(load(spark, sf_dir, "documents"))
@@ -290,8 +291,7 @@ def band_index_for(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     still validate without a scan."""
     import tempfile
 
-    from ..plans import ensure_parallelism
-    from .dedup import build_band_index, hashed_shingles
+    from .dedup import _shingle_table, build_band_index
 
     key = (spark.sparkContext.applicationId, sf_dir)
     entry = _BAND_INDEX_CACHE.get(key)
@@ -303,14 +303,9 @@ def band_index_for(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
         build_band_index(corpus).write.mode("overwrite").parquet(
             f"{root}/postings"
         )
-        (
-            ensure_parallelism(
-                corpus.filter(F.size(F.split("text", " ")) >= 3)
-            )
-            .select("doc_id", hashed_shingles("text", 3).alias("shh"))
-            .write.mode("overwrite")
-            .parquet(f"{root}/shingles")
-        )
+        _shingle_table(corpus, "doc_id", "text", 3).write.mode(
+            "overwrite"
+        ).parquet(f"{root}/shingles")
         entry = (
             spark.read.parquet(f"{root}/postings"),
             spark.read.parquet(f"{root}/shingles"),

@@ -221,11 +221,13 @@ def dollar_bars(
     floor((offset + within-day cum − this trade) / threshold): a bar
     is identified by the dollars accumulated BEFORE the trade, so the
     trade that crosses the threshold still belongs to the bar it
-    closes. OHLC per bar in exact integer cents."""
+    closes. OHLC per bar in exact integer cents. A NULL-priced trade
+    has no dollars and so belongs to no bar (the stream leaves it out
+    the same way); dropping it moves no other trade's running sum."""
     qty = F.coalesce(
         F.get_json_object("props", "$.k").cast("long"), F.lit(0)
     )
-    base = events.select(
+    base = events.filter(F.col("value").isNotNull()).select(
         "event_type",
         F.col("ts").cast("date").alias("day"),
         "ts",
@@ -287,7 +289,7 @@ def dollar_bars(
              {_CENTS} AS cents,
              {_CENTS} * coalesce(json_extract_string(props, '$.k')::BIGINT, 0)
                AS dollars
-      FROM events
+      FROM events WHERE value IS NOT NULL
     ), g AS (
       SELECT event_type, ts, event_id, cents, dollars,
              CAST(sum(dollars) OVER (PARTITION BY event_type

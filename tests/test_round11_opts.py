@@ -9,8 +9,9 @@ pass and pins the property that makes the rewrite EXACT:
   nor a pair whose raw ratio sits just below the threshold but rounds
   up to it (the output's 4-place rounding is the semantics);
 - spearman's distinct-value rank tables must reproduce the row-window
-  mid-ranks exactly, including NULL values (ranked first, ascending) and
-  ties — pinned by computing the OLD row-window formulation inline;
+  mid-ranks exactly, with ties, over the rows whose x and y are both
+  non-NULL (a NULL value is not an observation) — pinned by computing
+  the OLD row-window formulation inline;
 - keyed_fanout's clamp behavior at both ends.
 """
 
@@ -99,11 +100,12 @@ def test_containment_prune_keeps_pairs_that_round_up_to_threshold(spark):
 
 @pytest.mark.parametrize("with_nulls", [False, True, "null_group"])
 def test_spearman_distinct_rank_equals_row_window(spark, with_nulls):
-    """The round-11 two-pass rank (distinct-value cumsum + join-back)
-    must be integer-identical to the original row-window formulation
-    2·rank() + count(ties) − 3, for ties AND null values — and it must
-    keep a NULL group, which the row window partitions like any other
-    (an equi-join on the group key would drop its rows)."""
+    """The two-pass rank (distinct-value histogram + join-back) must
+    give the ρ of the original row-window formulation
+    2·rank() + count(ties) − 3 over the rows whose x and y are both
+    non-NULL, with ties — and it must keep a NULL group, which the row
+    window partitions like any other (an equi-join on the group key
+    would drop its rows)."""
     from pyspark.sql import Window
 
     from trading_data_pipeline_spark.operators.stattests_queries import (
@@ -131,7 +133,8 @@ def test_spearman_distinct_rank_equals_row_window(spark, with_nulls):
         for r in spearman(df, "g", F.col("x"), F.col("y")).collect()
     }
 
-    # reference: the pre-round-11 row-window formulation, verbatim
+    # reference: the pre-round-11 row-window formulation, verbatim, over
+    # the pairwise-complete rows
     def ranks2(col):
         wr = Window.partitionBy("g").orderBy(col)
         wt = Window.partitionBy("g", col)
@@ -139,7 +142,8 @@ def test_spearman_distinct_rank_equals_row_window(spark, with_nulls):
             F.lit(2) * F.rank().over(wr) + F.count(F.lit(1)).over(wt) - 3
         ).cast("long")
 
-    r = df.withColumn("rx", ranks2("x")).withColumn("ry", ranks2("y"))
+    complete = df.filter(F.col("x").isNotNull() & F.col("y").isNotNull())
+    r = complete.withColumn("rx", ranks2("x")).withColumn("ry", ranks2("y"))
     _dec = "decimal(38,0)"
     agg = r.groupBy("g").agg(
         F.count(F.lit(1)).alias("n"),
@@ -174,7 +178,7 @@ def test_spearman_distinct_rank_equals_row_window(spark, with_nulls):
         ).collect()
     }
     if with_nulls == "null_group":
-        assert None in want and want[None][0] == 4
+        assert None in want and want[None][0] == 3
     assert got == want
 
 

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
-from ..plans.global_rank import global_cumsum, global_row_number
+from ..plans.global_rank import doubled_midranks, global_row_number
 from ..registry import load, register
 from .bars import _CENTS, cents
 
@@ -647,11 +647,12 @@ def auc_exact(events: DataFrame) -> DataFrame:
     evaluation that at 100 TB cannot run through sklearn on a driver.
 
     Shape: group scores by exact value (ties collapse to one row with
-    pos/total counts), a two-pass :func:`plans.global_rank.global_cumsum`
-    for each value's preceding-count (no SinglePartition window), then
-    ONE scalar aggregate of the tie-corrected rank sum. Everything stays
-    integral until the final division: 2·ranksum = Σ p·(2·cum_before +
-    g + 1) accumulates in DECIMAL(38,0). The single lossy step is the
+    pos/total counts; a NULL value is not an observation), the doubled
+    mid-rank of each value from :func:`plans.global_rank.doubled_midranks`
+    (two-pass global cumsum, no SinglePartition window), then ONE scalar
+    aggregate of the tie-corrected rank sum. Everything stays integral
+    until the final division: 2·ranksum = Σ p·(2·cum_before + g + 1)
+    accumulates in DECIMAL(38,0). The single lossy step is the
     final ``rs2 :: DOUBLE`` before dividing (both engines do the same),
     so bit-identity across engines holds while 2·ranksum fits a double
     mantissa — i.e. rs2 < 2^53, roughly 10^8–10^9 rows with ties.
@@ -660,18 +661,16 @@ def auc_exact(events: DataFrame) -> DataFrame:
     implementation property, not a contract — treat cross-engine
     comparison above 2^53 as float-close, not bit-exact.
     """
-    s = events.filter(F.col("value").isNotNull()).select(
+    s = events.select(
         F.col("value").alias("v"),
         (F.col("event_type") == POS_TYPE).cast("long").alias("pos"),
     )
     g = s.groupBy("v").agg(
         F.count(F.lit(1)).alias("g"), F.sum("pos").alias("p")
     )
-    cum, _total = global_cumsum(g, ["v"], "g")
-    term = F.col("p").cast("decimal(19,0)") * (
-        F.lit(2) * (F.col("_gcum") - F.col("g")) + F.col("g") + F.lit(1)
-    ).cast("decimal(19,0)")
-    agg = cum.agg(
+    ranked = doubled_midranks(g, [], "v", "g")
+    term = F.col("p").cast("decimal(19,0)") * F.col("_mid2").cast("decimal(19,0)")
+    agg = ranked.agg(
         F.sum(term).alias("rs2"),
         F.sum("p").alias("np"),
         (F.sum("g") - F.sum("p")).alias("nn"),
@@ -695,7 +694,7 @@ def auc_exact(events: DataFrame) -> DataFrame:
     WITH s AS (
       SELECT value AS v,
              CASE WHEN event_type = '{POS_TYPE}' THEN 1 ELSE 0 END AS pos
-      FROM events
+      FROM events WHERE value IS NOT NULL
     ), g AS (
       SELECT v, CAST(count(*) AS BIGINT) AS g, CAST(sum(pos) AS BIGINT) AS p
       FROM s GROUP BY v
@@ -795,7 +794,7 @@ def decile_lift(events: DataFrame) -> DataFrame:
     WITH s AS (
       SELECT event_id, value,
              CASE WHEN event_type = '{POS_TYPE}' THEN 1 ELSE 0 END AS pos
-      FROM events
+      FROM events WHERE value IS NOT NULL
     ), tiled AS (
       SELECT pos, {N_DECILES + 1} - ntile({N_DECILES})
                OVER (ORDER BY value, event_id) AS decile

@@ -7,18 +7,20 @@ chain, quantized (functions/quantize.py):
 
 - **q_kruskal_wallis**: Kruskal–Wallis H across event types over
   integer-cent prices, with mid-rank ties and the tie correction.
-  Pooled mid-ranks come DOUBLED from the value-histogram cumulative
-  (``2·cum − cnt + 1`` — exact BIGINTs, the q_spearman trick on a
-  grid), the per-group rank sums square in DECIMAL(38,0) (HUGEINT on
-  the DuckDB side), and the tie term Σ(t³−t) is a BIGINT.
+  Pooled mid-ranks come DOUBLED from ``plans/global_rank.
+  doubled_midranks`` over the value histogram (exact BIGINTs, the
+  q_spearman primitive), the per-group rank sums square in
+  DECIMAL(38,0) (HUGEINT on the DuckDB side), and so does the tie term
+  Σ(t³−t). A NULL price is not an observation.
 - **q_brown_forsythe**: Brown–Forsythe (median-centered Levene) equal-
   variance test across types on daily close moves. Group medians are
   exact DOUBLED order statistics (lo+hi middle, no interpolation), the
   absolute deviations stay integral, and W's numerator/denominator are
   rationals of BIGINT sums.
 - **q_cramers_v**: Cramér's V effect size for event_type × weekday —
-  the χ² recipe (exact (O·T−R·C)²/(T·R·C) cell terms fixed to 1e-9
-  BIGINTs) normalized by N·(min(r,c)−1) with one final sqrt.
+  q_chi_square's cell table (``_chi2_terms`` / ``_CHI2_SQL``: exact
+  (O·T−R·C)²/(T·R·C) terms fixed to 1e-9 BIGINTs) normalized by
+  N·(min(r,c)−1) with one final sqrt.
 - **q_jackknife_sharpe**: leave-one-day-out jackknife standard error of
   the per-type Sharpe ratio. Each deleted-day Sharpe is a closed form
   of (Σx−x_i, Σx²−x_i², n−1) — one pass builds the totals, one row-
@@ -32,8 +34,8 @@ chain, quantized (functions/quantize.py):
   closed forms of the integer (n₊, n₋); one double chain.
 
 Scale notes: KW is the only query that touches raw-event values — its
-ranks run over the distinct-value grid via ``plans/global_rank.
-global_cumsum`` (quantile-bucketed two-pass, NO SinglePartition
+ranks run over the distinct-value grid via ``doubled_midranks``'s
+unkeyed path (quantile-bucketed two-pass cumsum, NO SinglePartition
 window), and every other input is the calendar-bounded daily-bar
 table. Group count k is small (|event_type| ≈ 5): the final k-row
 double folds are quantization-safe.
@@ -45,11 +47,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
-from ..plans.global_rank import global_cumsum
+from ..plans.global_rank import doubled_midranks
 from ..registry import load, register
 from .bars import _BARS_SQL, _CENTS, cents, daily_bars
+from .stattests_queries import _CHI2_SQL, CHI2_SCALE, _chi2_terms
 
-CHI2_SCALE = 10**9
 JK_SCALE = 10**6
 
 
@@ -57,24 +59,21 @@ JK_SCALE = 10**6
 
 
 def kruskal_wallis(df: DataFrame, group_col: str, value_col) -> DataFrame:
-    """H across groups with mid-rank ties: doubled pooled mid-ranks from
-    the value-grid cumulative (2·cum − cnt + 1), per-group doubled rank
-    sums squared in DECIMAL(38,0), tie correction Σ(t³−t)/(N³−N)."""
+    """H across groups with mid-rank ties: doubled pooled mid-ranks and
+    tie terms t³−t from :func:`doubled_midranks` over the value grid,
+    per-group doubled rank sums squared in DECIMAL(38,0), tie correction
+    Σ(t³−t)/(N³−N). A NULL value is not an observation."""
     cells = df.groupBy(
         F.col(group_col).alias("g"), value_col.alias("c")
     ).agg(F.count(F.lit(1)).alias("cnt"))
     grid = cells.groupBy("c").agg(F.sum("cnt").alias("tot"))
-    cum, n = global_cumsum(grid, ["c"], "tot")
-    # doubled mid-rank of value c: 2·(cum before c) + cnt + 1
-    mid2 = cum.select(
-        "c", (2 * F.col("_gcum") - F.col("tot") + 1).alias("mid2")
-    )
+    ranked = doubled_midranks(grid, [], "c", "tot")
     r2 = (
-        cells.join(mid2, "c")
+        cells.join(ranked.select("c", "_mid2"), "c")
         .groupBy("g")
         .agg(
             F.sum("cnt").alias("n_g"),
-            F.sum(F.col("cnt") * F.col("mid2")).alias("r2"),
+            F.sum(F.col("cnt") * F.col("_mid2")).alias("r2"),
         )
     )
     # Σ_j R_j²/n_j on doubled ranks = Σ_j R2_j²/(4·n_j); H = 12/(N(N+1))·
@@ -84,22 +83,17 @@ def kruskal_wallis(df: DataFrame, group_col: str, value_col) -> DataFrame:
         .cast("double")
         / F.col("n_g")
     )
-    ties = grid.agg(
-        F.sum(F.col("tot") * F.col("tot") * F.col("tot") - F.col("tot")).alias(
-            "t3"
-        )
-    )
+    ties = ranked.agg(F.sum("_tie3").alias("t3"))
     agg = r2.agg(
+        F.sum("n_g").alias("n"),
         F.count(F.lit(1)).alias("k"),
         F.sum(term).alias("s_term"),
     ).crossJoin(F.broadcast(ties))
-    nn = float(n)
-    h = F.lit(3.0) / F.lit(nn * (nn + 1.0)) * F.col("s_term") - F.lit(
-        3.0 * (nn + 1.0)
-    )
-    corr = F.lit(1.0) - F.col("t3") / F.lit(nn**3 - nn)
+    nn = F.col("n").cast("double")
+    h = F.lit(3.0) / (nn * (nn + 1.0)) * F.col("s_term") - 3.0 * (nn + 1.0)
+    corr = F.lit(1.0) - F.col("t3").cast("double") / (nn * nn * nn - nn)
     return agg.select(
-        F.lit(n).cast("long").alias("n"),
+        F.col("n").cast("long").alias("n"),
         F.col("k").cast("long").alias("k_groups"),
         (F.col("k") - 1).cast("long").alias("dof"),
         _q(h, 10000).alias("h"),
@@ -113,7 +107,7 @@ def kruskal_wallis(df: DataFrame, group_col: str, value_col) -> DataFrame:
     WITH cells AS (
       SELECT event_type AS g, {_CENTS} AS c,
              CAST(count(*) AS BIGINT) AS cnt
-      FROM events GROUP BY 1, 2
+      FROM events WHERE value IS NOT NULL GROUP BY 1, 2
     ), grid AS (
       SELECT c, CAST(sum(cnt) AS BIGINT) AS tot FROM cells GROUP BY c
     ), mid AS (
@@ -127,8 +121,7 @@ def kruskal_wallis(df: DataFrame, group_col: str, value_col) -> DataFrame:
              CAST(sum(cnt * mid2) AS BIGINT) AS r2
       FROM cells JOIN mid USING (c) GROUP BY g
     ), tt AS (
-      SELECT CAST(sum(CAST(tot AS HUGEINT) * tot * tot - tot) AS BIGINT)
-               AS t3,
+      SELECT sum(CAST(tot AS HUGEINT) * tot * tot - tot) AS t3,
              CAST(sum(tot) AS BIGINT) AS n
       FROM grid
     ), agg AS (
@@ -273,37 +266,10 @@ def q_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cramers_v(df: DataFrame, row_col, col_col) -> DataFrame:
-    """χ² of the row×col contingency (exact 1e-9-fixed cell terms, the
-    q_chi_square recipe) normalized to Cramér's V = sqrt(χ²/(N·(min(r,c)−1)))."""
-    cells = df.groupBy(
-        row_col.alias("r"), col_col.alias("c")
-    ).agg(F.count(F.lit(1)).alias("o"))
-    rt = cells.groupBy("r").agg(F.sum("o").alias("rn"))
-    ct = cells.groupBy("c").agg(F.sum("o").alias("cn"))
-    tt = cells.agg(
-        F.sum("o").alias("t"),
-        F.countDistinct("r").alias("nr"),
-        F.countDistinct("c").alias("nc"),
-    )
-    j = cells.join(rt, "r").join(ct, "c").crossJoin(F.broadcast(tt))
-    # square + t*rn*cn denominator in double (identical chain on both
-    # engines): the integer forms overflow int64 near 1e7 input rows —
-    # caught by the ANSI engine in the 100x-scale sweep; values are
-    # unchanged at driver scales (all operands < 2^53)
-    dev = (F.col("o") * F.col("t") - F.col("rn") * F.col("cn")).cast(
-        "double"
-    )
-    qterm = F.floor(
-        (dev * dev)
-        / (
-            F.col("t").cast("double")
-            * F.col("rn").cast("double")
-            * F.col("cn").cast("double")
-        )
-        * CHI2_SCALE
-        + 0.5
-    ).cast("long")
-    agg = j.groupBy("nr", "nc", "t").agg(F.sum(qterm).alias("qsum"))
+    """χ² of the row×col contingency (the :func:`_chi2_terms` cells of
+    q_chi_square) normalized to Cramér's V = sqrt(χ²/(N·(min(r,c)−1)))."""
+    terms = _chi2_terms(df, row_col, col_col)
+    agg = terms.groupBy("nr", "nc", "t").agg(F.sum("q").alias("qsum"))
     chi2 = F.col("qsum") / F.lit(float(CHI2_SCALE))
     v = F.sqrt(
         chi2
@@ -324,28 +290,7 @@ def cramers_v(df: DataFrame, row_col, col_col) -> DataFrame:
 @register(
     "q_cramers_v",
     f"""
-    WITH cells AS (
-      SELECT event_type AS r, dayofweek(ts) + 1 AS c,
-             CAST(count(*) AS BIGINT) AS o
-      FROM events GROUP BY 1, 2
-    ), rt AS (
-      SELECT r, CAST(sum(o) AS BIGINT) AS rn FROM cells GROUP BY r
-    ), ct AS (
-      SELECT c, CAST(sum(o) AS BIGINT) AS cn FROM cells GROUP BY c
-    ), tt AS (
-      SELECT CAST(sum(o) AS BIGINT) AS t,
-             CAST(count(DISTINCT r) AS BIGINT) AS nr,
-             CAST(count(DISTINCT c) AS BIGINT) AS nc
-      FROM cells
-    ), terms AS (
-      SELECT CAST(floor(
-               CAST(o * t - rn * cn AS DOUBLE)
-                 * CAST(o * t - rn * cn AS DOUBLE)
-               / (CAST(t AS DOUBLE) * CAST(rn AS DOUBLE)
-                  * CAST(cn AS DOUBLE)) * {CHI2_SCALE} + 0.5)
-             AS BIGINT) AS q, nr, nc, t
-      FROM cells JOIN rt USING (r) JOIN ct USING (c), tt
-    ), agg AS (
+    WITH {_CHI2_SQL}, agg AS (
       SELECT nr, nc, t, CAST(sum(q) AS BIGINT) AS qsum
       FROM terms GROUP BY nr, nc, t
     )

@@ -18,9 +18,16 @@ STATISTIC is exact integer arithmetic until one final division:
   to 1e-9 BIGINTs per cell, and cells sum as integers — one final
   division. dof = (R−1)(C−1).
 - **q_spearman**: Spearman rank correlation between price and trade
-  size per type, with mid-rank ties. DOUBLED average ranks
-  (2·rank + tie_count − 1) keep every rank integral, so the Pearson
-  sums over them are exact BIGINTs; one division + two IEEE sqrts.
+  size per type, with mid-rank ties. DOUBLED average ranks from
+  ``plans/global_rank.doubled_midranks`` keep every rank integral, so
+  the Pearson sums over them are exact; one division + two IEEE sqrts.
+
+One NULL rule for every test here that reads raw values (KS, Spearman,
+variance ratio, Mann–Whitney): a NULL value is not an observation. Its
+row is left out of every count, sum and rank, on both engines, so the
+result does not depend on where an engine sorts NULL. The χ² cells of
+q_chi_square and q_cramers_v are written once, ``_chi2_terms`` /
+``_CHI2_SQL``.
 
 Scale notes: KS aggregates each side to its distinct-value grid first
 (cardinality = price grid, not row count); χ² works on a
@@ -31,11 +38,11 @@ DECIMAL(38,0) / HUGEINT (BIGINT held only to ~10⁶ rows/group — the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
-from ..plans.global_rank import global_cumsum
+from ..plans.global_rank import doubled_midranks, global_cumsum
 from ..registry import load, register
 from .bars import _BARS_SQL, _CENTS, cents, daily_bars
 
@@ -55,6 +62,7 @@ def ks_test(
     counts = (
         df.filter(F.col(group_col).isin([group_a, group_b]))
         .select(F.col(group_col).alias("g"), cents(value_col).alias("c"))
+        .filter(F.col("c").isNotNull())
         .groupBy("c")
         .agg(
             F.sum(F.when(F.col("g") == group_a, 1).otherwise(0)).alias("a"),
@@ -81,7 +89,7 @@ def ks_test(
     f"""
     WITH v AS (
       SELECT event_type AS g, {_CENTS} AS c FROM events
-      WHERE event_type IN ('click', 'view')
+      WHERE event_type IN ('click', 'view') AND value IS NOT NULL
     ), counts AS (
       SELECT c,
              CAST(sum(CASE WHEN g = 'click' THEN 1 ELSE 0 END) AS BIGINT)
@@ -117,11 +125,12 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def chi_square(df: DataFrame, row_col: str, col_expr: F.Column) -> DataFrame:
-    """χ² independence of ``row_col`` × ``col_expr`` categories. Exact
-    rational per-cell terms fixed to 1e-9 BIGINTs before the sum."""
+def _chi2_terms(df: DataFrame, row: F.Column, col: F.Column) -> DataFrame:
+    """The χ² cell table of ``row`` × ``col``: one row per cell with its
+    term (O·T − R·C)²/(T·R·C) fixed to a 1e-9 BIGINT ``q``, next to the
+    table's ``nr``, ``nc`` and total ``t`` (SQL twin: ``_CHI2_SQL``)."""
     cells = (
-        df.select(F.col(row_col).alias("r"), col_expr.alias("c"))
+        df.select(row.alias("r"), col.alias("c"))
         .groupBy("r", "c")
         .agg(F.count(F.lit(1)).alias("o"))
     )
@@ -154,17 +163,11 @@ def chi_square(df: DataFrame, row_col: str, col_expr: F.Column) -> DataFrame:
         * F.lit(CHI2_SCALE)
         + F.lit(0.5)
     ).cast("long")
-    return j.select(term_q.alias("q"), "nr", "nc").groupBy("nr", "nc").agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        ((F.col("nr") - 1) * (F.col("nc") - 1)).alias("dof"),
-        (F.sum("q") / F.lit(float(CHI2_SCALE))).alias("chi2"),
-    ).select("n_cells", "dof", "chi2")
+    return j.select(term_q.alias("q"), "nr", "nc", "t")
 
 
-@register(
-    "q_chi_square",
-    f"""
-    WITH cells AS (
+_CHI2_SQL = f"""
+    cells AS (
       SELECT event_type AS r, dayofweek(ts) + 1 AS c,
              CAST(count(*) AS BIGINT) AS o
       FROM events GROUP BY 1, 2
@@ -183,9 +186,26 @@ def chi_square(df: DataFrame, row_col: str, col_expr: F.Column) -> DataFrame:
                  * CAST(o * t - rn * cn AS DOUBLE)
                / (CAST(t AS DOUBLE) * CAST(rn AS DOUBLE)
                   * CAST(cn AS DOUBLE)) * {CHI2_SCALE} + 0.5)
-             AS BIGINT) AS q, nr, nc
+             AS BIGINT) AS q, nr, nc, t
       FROM cells JOIN rt USING (r) JOIN ct USING (c), tt
-    )
+    )"""
+
+
+def chi_square(df: DataFrame, row_col: str, col_expr: F.Column) -> DataFrame:
+    """χ² independence of ``row_col`` × ``col_expr`` categories: the
+    :func:`_chi2_terms` cells summed as integers, one final division."""
+    terms = _chi2_terms(df, F.col(row_col), col_expr)
+    return terms.groupBy("nr", "nc").agg(
+        F.count(F.lit(1)).alias("n_cells"),
+        ((F.col("nr") - 1) * (F.col("nc") - 1)).alias("dof"),
+        (F.sum("q") / F.lit(float(CHI2_SCALE))).alias("chi2"),
+    ).select("n_cells", "dof", "chi2")
+
+
+@register(
+    "q_chi_square",
+    f"""
+    WITH {_CHI2_SQL}
     SELECT CAST(count(*) AS BIGINT) AS n_cells,
            CAST((nr - 1) * (nc - 1) AS BIGINT) AS dof,
            CAST(sum(q) AS BIGINT) / {float(CHI2_SCALE)} AS chi2
@@ -207,59 +227,34 @@ def spearman(
     df: DataFrame, group_col: str, x_col: F.Column, y_col: F.Column
 ) -> DataFrame:
     """Spearman ρ per group with mid-rank ties, on DOUBLED integer ranks
-    (2·rank + ties − 1) so all Pearson sums are exact BIGINTs.
+    (:func:`doubled_midranks`) so all Pearson sums are exact integers.
 
-    Ranks come from the DISTINCT-value tables, not row-level windows
-    (round 11): ``rank() over (partition by g order by x)`` on the raw
-    rows sorts the whole fact under one task per group — 5 event types
-    pinned 10 M rows onto 5 serial sorts at the 100× audit scale. The
-    mid-rank of every row sharing (g, x) is determined by the per-value
-    count alone: with c = count(g, x) and cum = Σ c over values < x,
-    doubled rank 2·rank_min + c − 3 = 2·cum + c − 1. The window that
-    computes cum runs over the distinct-(g, x) table (49 k rows here vs
-    10 M — and value-bounded, it does NOT grow with row count), and the
-    fact stream attaches rx/ry by two hash joins instead of sorting.
-    Bit-identical: same integer ranks, same aggregate expressions; ties
-    and null ordering follow the same asc_nulls_first the row window
-    used."""
-    d = df.select(F.col(group_col).alias("g"), x_col.alias("x"), y_col.alias("y"))
+    A row whose x or y is NULL is not an observation (pairwise-complete,
+    like SQL ``corr``); a NULL group stays a group. Ranks come from the
+    distinct-(g, value) histograms, not row-level windows: the window
+    runs over the value-bounded histogram (49 k rows against 10 M at the
+    100× audit scale, where the row window pinned 5 groups onto 5 serial
+    sorts), and each row picks up rx/ry by a hash join.
 
-    def rank_table(col: str) -> DataFrame:
-        wv = (
-            Window.partitionBy("_rg")
-            .orderBy(F.asc_nulls_first("_rv"))
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        return (
-            d.groupBy(F.col("g").alias("_rg"), F.col(col).alias("_rv"))
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .select(
-                "_rg",
-                "_rv",
-                (
-                    F.lit(2) * F.coalesce(F.sum("_c").over(wv), F.lit(0))
-                    + F.col("_c")
-                    - 1
-                ).cast("long").alias(f"r{col}"),
-            )
-        )
+    The doubled mid-rank ``2·below + c + 1`` is 2 more than the textbook
+    ``2·rank_min + c − 3``; ρ does not move: with r' = r + 2,
+    n·Σx'y' − Σx'·Σy' = n·Σxy − Σx·Σy and
+    n·Σx'² − (Σx')² = n·Σx² − (Σx)², and both run exactly in
+    decimal(38,0)."""
+    d = df.select(
+        F.col(group_col).alias("g"), x_col.alias("x"), y_col.alias("y")
+    ).filter(F.col("x").isNotNull() & F.col("y").isNotNull())
 
-    # eqNullSafe on both keys: the row window ranked NULL values (first in
-    # asc) and kept the NULL group; an equi-join would silently drop those
-    # rows instead.
-    rx_t, ry_t = rank_table("x"), rank_table("y")
-    r = (
-        d.join(
-            rx_t,
-            F.col("g").eqNullSafe(F.col("_rg")) & F.col("x").eqNullSafe(F.col("_rv")),
+    def attach(rows: DataFrame, col: str) -> DataFrame:
+        hist = d.groupBy(F.col("g").alias("_rg"), F.col(col).alias("_rv")).agg(
+            F.count(F.lit(1)).alias("_c")
         )
-        .drop("_rg", "_rv")
-        .join(
-            ry_t,
-            F.col("g").eqNullSafe(F.col("_rg")) & F.col("y").eqNullSafe(F.col("_rv")),
-        )
-        .drop("_rg", "_rv")
-    )
+        ranks = doubled_midranks(hist, ["_rg"], "_rv", "_c")
+        on = F.col("g").eqNullSafe(F.col("_rg")) & (F.col(col) == F.col("_rv"))
+        rank = F.col("_mid2").alias(f"r{col}")
+        return rows.join(ranks, on).select(*rows.columns, rank)
+
+    r = attach(attach(d, "x"), "y")
     # product sums and the m2 numerators overflow int64 past ~2e6 rows
     # per group (doubled ranks reach 2n; the 100x audit caught the sum),
     # so they run in decimal(38,0) — exact to ~1e38 — mirrored by
@@ -299,7 +294,7 @@ def spearman(
     WITH d AS (
       SELECT event_type AS g, {_CENTS} AS x,
              coalesce(json_extract_string(props, '$.k')::BIGINT, 0) AS y
-      FROM events
+      FROM events WHERE value IS NOT NULL
     ), r AS (
       SELECT g,
              CAST(2 * rank() OVER (PARTITION BY g ORDER BY x)
@@ -354,6 +349,7 @@ def variance_ratio(events: DataFrame) -> DataFrame:
     """
     agg = (
         events.select("event_type", cents().alias("c"))
+        .filter(F.col("c").isNotNull())
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -411,9 +407,8 @@ def variance_ratio(events: DataFrame) -> DataFrame:
       SELECT event_type, CAST(count(*) AS BIGINT) AS n,
              CAST(sum(c) AS BIGINT) AS sx,
              CAST(sum(c * c) AS BIGINT) AS sxx
-      FROM (SELECT event_type,
-                   {_CENTS} AS c
-            FROM events)
+      FROM (SELECT event_type, {_CENTS} AS c
+            FROM events WHERE value IS NOT NULL)
       GROUP BY event_type HAVING count(*) > 1
     )
     SELECT a.event_type AS type_a, b.event_type AS type_b,
@@ -456,8 +451,6 @@ def kendall_tau(events: DataFrame) -> DataFrame:
     n(n−1)/2 day pairs per type pair regardless of event volume), after
     the moves reduce to the (type, day) bar table.
     """
-    from pyspark.sql import Window  # noqa: F401  (parity with siblings)
-
     mv = daily_bars(events).filter(F.col("dc").isNotNull()).select(
         "event_type", "day", "dc"
     )
@@ -577,8 +570,11 @@ def mann_whitney(events: DataFrame) -> DataFrame:
     pair table. The per-pair cumsum windows over the merged histogram —
     never over raw events.
     """
+    # filtered here, not only by doubled_midranks: a type without a
+    # priced row forms no pair
     hist = (
         events.select("event_type", cents().alias("c"))
+        .filter(F.col("c").isNotNull())
         .groupBy("event_type", "c")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -598,25 +594,14 @@ def mann_whitney(events: DataFrame) -> DataFrame:
         pa.unionByName(pb)
         .groupBy("type_a", "type_b", "c")
         .agg(F.sum("cnt_a").alias("cnt_a"), F.sum("cnt_b").alias("cnt_b"))
+        .withColumn("cnt", F.col("cnt_a") + F.col("cnt_b"))
     )
-    wv = (
-        Window.partitionBy("type_a", "type_b")
-        .orderBy("c")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    t = F.col("cnt_a") + F.col("cnt_b")
-    ranked = merged.withColumn("_cum", F.sum(t).over(wv)).withColumn(
-        "_2mid", 2 * (F.col("_cum") - t) + t + 1
-    )
-    t3 = (
-        t.cast("decimal(38,0)") * t.cast("decimal(38,0)") * t.cast("decimal(38,0)")
-        - t.cast("decimal(38,0)")
-    )
+    ranked = doubled_midranks(merged, ["type_a", "type_b"], "c", "cnt")
     agg = ranked.groupBy("type_a", "type_b").agg(
         F.sum("cnt_a").alias("na"),
         F.sum("cnt_b").alias("nb"),
-        F.sum(F.col("cnt_a") * F.col("_2mid")).alias("r2a"),
-        F.sum(t3).alias("tie3"),
+        F.sum(F.col("cnt_a") * F.col("_mid2")).alias("r2a"),
+        F.sum("_tie3").alias("tie3"),
     )
     na, nb = F.col("na"), F.col("nb")
     n = na + nb
@@ -644,7 +629,7 @@ def mann_whitney(events: DataFrame) -> DataFrame:
     f"""
     WITH hist AS (
       SELECT event_type, {_CENTS} AS c, CAST(count(*) AS BIGINT) AS cnt
-      FROM events GROUP BY 1, 2
+      FROM events WHERE value IS NOT NULL GROUP BY 1, 2
     ), types AS (SELECT DISTINCT event_type FROM hist),
     pairs AS (
       SELECT a.event_type AS type_a, b.event_type AS type_b

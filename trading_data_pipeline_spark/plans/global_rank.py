@@ -161,6 +161,49 @@ def global_cumsum(
     )
 
 
+def doubled_midranks(
+    hist: DataFrame, keys: list[str], value: str, cnt: str
+) -> DataFrame:
+    """Doubled mid-ranks of a value histogram, the one rank primitive of
+    every rank statistic (Spearman, Mann–Whitney, Kruskal–Wallis, AUC).
+
+    ``hist`` holds one row per ``(keys…, value)``; ``cnt`` rows stand
+    behind each. A NULL ``value`` is not an observation: its rows are
+    dropped, so both engines rank the same rows whatever their NULL sort
+    order. Adds two columns:
+
+    - ``_mid2 = 2·(rows below value within keys) + cnt + 1`` (long);
+    - ``_tie3 = cnt³ − cnt`` (decimal(38,0)), the tie-correction term.
+
+    Exactness: the tied rows of a value occupy ranks below+1 … below+cnt,
+    whose mean is below + (cnt + 1)/2, so twice the mid-rank is the
+    integer above, exact in a long for any row count a long can hold.
+    ``cnt³`` overflows a long once one value holds more than 2²¹ rows, so
+    the tie term runs in decimal(38,0), exact to ~5·10¹² rows per value.
+
+    With ``keys``, the rows below come from one keyed window per key
+    (NULL keys form a group of their own). With ``keys=[]`` the order is
+    global, so they come from :func:`global_cumsum` (inclusive, minus the
+    row's own ``cnt``) and no window runs in a single partition.
+    """
+    hist = hist.filter(F.col(value).isNotNull())
+    c = F.col(cnt)
+    if keys:
+        w = (
+            Window.partitionBy(*keys)
+            .orderBy(value)
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        below = F.coalesce(F.sum(c).over(w), F.lit(0))
+        ranked = hist.withColumn("_mid2", (2 * below + c + 1).cast("long"))
+    else:
+        cum, _ = global_cumsum(hist, [value], cnt)
+        mid2 = (2 * F.col("_gcum") - c + 1).cast("long")
+        ranked = cum.withColumn("_mid2", mid2).drop("_gcum")
+    t = c.cast("decimal(38,0)")
+    return ranked.withColumn("_tie3", t * t * t - t)
+
+
 def global_running_max(
     df: DataFrame,
     order_cols: list[str],

@@ -173,7 +173,6 @@ def test_ann_recall_curve_is_monotone_and_reaches_09(spark, sf_dir):
     n_probe = 6 of 8 cells on the sf0.001 corpus; exact arm == approx
     arm when every cell is probed."""
     from trading_data_pipeline_spark.operators.similarity_queries import (
-        ann_recall,
         ann_recall_curve,
         ivf_index_for,
     )

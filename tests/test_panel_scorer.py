@@ -1,51 +1,41 @@
 """panel_topk_exact — the Arrow-batched exact panel scorer (round 10).
 
-The scorer's contract is BIT-IDENTITY with the join formulations: the
-per-dimension numpy accumulation is the same sequential left fold as
+The scorer's contract is BIT-IDENTITY with the JVM: the per-dimension
+numpy accumulation is the same sequential left fold as
 ``functions.vector.dot_product``, so every pair's cosine (and therefore
-every rank, vote, and metric) must equal the IVF knn_join_exact arm and
-the broadcast brute-force arm exactly. These tests pin that equality on
-the driver testdata and on crafted tie/edge cases.
+every rank, vote, and metric) must equal a brute-force window over the
+JVM fold exactly. These tests pin that equality on the sf testdata
+and on crafted tie/edge cases, check the three embedding evals against
+their DuckDB oracles with and without NULL embeddings, and keep each eval
+on its one retrieval plan.
 """
 
 from __future__ import annotations
 
+import inspect
+import os
+import pathlib
+import shutil
+import sys
+
+import duckdb
+import parity
 import pytest
 from pyspark.sql import functions as F
 
-from trading_data_pipeline_spark.operators.similarity import (
-    build_ivf_index,
-    knn_label_eval,
-    panel_topk_exact,
+import trading_data_pipeline_spark
+import trading_data_pipeline_spark.session as session
+from trading_data_pipeline_spark.operators import (
+    retrieval_queries,
+    similarity,
+    similarity_queries,
 )
+from trading_data_pipeline_spark.operators.similarity import panel_topk_exact
 from trading_data_pipeline_spark.registry import load
 
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
-
-
-def test_knn_eval_arrow_equals_brute_and_ivf(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings")
-    brute = _rows(knn_label_eval(emb, max_eval=200))
-    arrow = _rows(knn_label_eval(emb, max_eval=200, arrow_panel=True))
-    assert arrow == brute
-    idx = build_ivf_index(emb, n_cells=8)
-    ivf = _rows(knn_label_eval(emb, index=idx, n_probe=2, max_eval=200))
-    assert arrow == ivf
-
-
-def test_retrieval_and_ndcg_arrow_equal_brute(spark, sf_dir):
-    from trading_data_pipeline_spark.operators.retrieval_queries import (
-        ndcg_eval,
-        retrieval_eval,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    assert _rows(retrieval_eval(emb, arrow_panel=True)) == _rows(
-        retrieval_eval(emb)
-    )
-    assert _rows(ndcg_eval(emb, arrow_panel=True)) == _rows(ndcg_eval(emb))
 
 
 def test_panel_topk_boundary_ties_break_on_id(spark):
@@ -189,3 +179,64 @@ def test_empty_panel_yields_empty_frame(spark):
     out = panel_topk_exact(corpus, queries, k=3)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["qid", "vec_id", "_sim"]
+
+
+EMBEDDING_EVALS = (
+    "q_knn_eval",
+    "q_retrieval_eval",
+    "q_ndcg",
+    "q_hard_negatives",
+    "q_centroid_classify",
+    "q_silhouette",
+)
+
+
+@pytest.mark.parametrize("null_vectors", [False, True], ids=["as_is", "null_vectors"])
+def test_embedding_evals_match_their_oracles(
+    monkeypatch, spark, sf_dir, tmp_path, capsys, null_vectors
+):
+    """A NULL embedding is not an observation: with every 37th vector
+    NULL, neither engine scores it, ranks it, counts it as relevant or
+    fits an IVF centroid on it."""
+    data = sf_dir
+    if null_vectors:
+        for f in os.listdir(sf_dir):
+            shutil.copy(os.path.join(sf_dir, f), tmp_path / f)
+        duckdb.execute(
+            "COPY (SELECT * REPLACE (CASE WHEN vec_id % 37 <> 1 THEN embedding END"
+            f" AS embedding) FROM read_parquet('{sf_dir}/embeddings.parquet'))"
+            f" TO '{tmp_path}/embeddings.parquet' (FORMAT parquet)"
+        )
+        data = str(tmp_path)
+        [(n_null,)] = duckdb.execute(
+            f"SELECT count(*) FROM read_parquet('{data}/embeddings.parquet')"
+            " WHERE embedding IS NULL"
+        ).fetchall()
+        assert n_null > 0
+    monkeypatch.setattr(session, "build_session", lambda *args, **kwargs: spark)
+    monkeypatch.setattr(sys, "argv", ["parity.py", data, *EMBEDDING_EVALS])
+    assert parity.main() == 0
+    n = len(EMBEDDING_EVALS)
+    assert f"\n{n}/{n} parity-clean" in capsys.readouterr().out
+
+
+def test_embedding_evals_have_one_retrieval_plan():
+    """Each eval scores its panel with panel_topk_exact alone, and the
+    numpy cosine fold and the centroid distance are each written once: a
+    second arm or a second copy fails here."""
+    package = pathlib.Path(trading_data_pipeline_spark.__file__).parent
+    srcs = [p.read_text() for p in package.rglob("*.py")]
+    assert not any("arrow_panel" in s for s in srcs)
+    for fn in (
+        similarity.knn_label_eval,
+        retrieval_queries.retrieval_eval,
+        retrieval_queries.ndcg_eval,
+        retrieval_queries._ranked_panel,
+    ):
+        src = inspect.getsource(fn)
+        assert "crossJoin(" not in src and "knn_join_exact(" not in src, fn.__name__
+    fold = inspect.getsource(similarity._fold)
+    assert sum(s.count("Q[:, d]") for s in srcs) == fold.count("Q[:, d]") > 0
+    dist = inspect.getsource(similarity_queries._centroid_dists)
+    pattern = 'F.col("n") * F.col("qx")'
+    assert sum(s.count(pattern) for s in srcs) == dist.count(pattern) > 0

@@ -535,24 +535,6 @@ def test_knn_eval_separable_clusters_score_perfectly(spark):
         assert r.accuracy == 1.0 and r.n_correct == r.n_eval > 0
 
 
-def test_knn_eval_index_path_equals_brute_force(spark, sf_dir):
-    """The registered q_knn_eval routes through IvfIndex.knn_join_exact —
-    its EXACTNESS claim means byte-identical output to the brute-force
-    broadcast path on the same data, including rank and vote tiebreaks."""
-    from trading_data_pipeline_spark.operators.similarity import (
-        build_ivf_index,
-        knn_label_eval,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    idx = build_ivf_index(emb, n_cells=8)
-    brute = sorted(map(tuple, knn_label_eval(emb).collect()))
-    pruned = sorted(
-        map(tuple, knn_label_eval(emb, index=idx, n_probe=2).collect())
-    )
-    assert brute == pruned
-
-
 def test_knn_join_exact_topk_matches_per_query_brute(spark):
     """knn_join_exact's per-query (id, sim) top-k — not just the label
     rollup — must match an exhaustive cross-join ranking, on data crafted
@@ -572,18 +554,15 @@ def test_knn_join_exact_topk_matches_per_query_brute(spark):
         a = 2 * math.pi * i / 60
         rows.append((i, [math.cos(a), math.sin(a)]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    idx = build_ivf_index(emb, n_cells=6)
+    corpus = emb.filter(F.col("vec_id") % 4 != 0)
+    idx = build_ivf_index(corpus, n_cells=6)
     queries_df = emb.select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     ).filter(F.col("qid") % 4 == 0)
     got = {
         (r.qid, r.vec_id)
-        for r in idx.knn_join_exact(
-            queries_df, k=3, n_probe=1,
-            corpus_filter=F.col("vec_id") % 4 != 0,
-        ).collect()
+        for r in idx.knn_join_exact(queries_df, k=3, n_probe=1).collect()
     }
-    corpus = emb.filter(F.col("vec_id") % 4 != 0)
     crossed = corpus.join(
         queries_df.withColumnRenamed("qvec", "_qv"), F.lit(True)
     ).select(

@@ -1,7 +1,7 @@
-"""Round-7 exactness guards: the de-quadratified IVF routings of
-q_retrieval_eval and q_hard_negatives must be byte-identical to their
-brute-force twins (the EXACTNESS claim of knn_join_exact extended to
-max_sim / exclude_self pruning)."""
+"""Round-7 exactness guards: the de-quadratified IVF routing of
+q_hard_negatives must be byte-identical to its brute-force twin (the
+EXACTNESS claim of knn_join_exact extended to max_sim / exclude_self
+pruning)."""
 
 from __future__ import annotations
 
@@ -9,27 +9,11 @@ import math
 
 from pyspark.sql import functions as F
 
-from trading_data_pipeline_spark.operators.retrieval_queries import (
-    retrieval_eval,
-)
 from trading_data_pipeline_spark.operators.similarity import (
     build_ivf_index,
     hard_negatives,
 )
 from trading_data_pipeline_spark.registry import load
-
-
-def test_retrieval_eval_index_path_equals_brute_force(spark, sf_dir):
-    """The registered q_retrieval_eval routes through knn_join_exact —
-    exactness means identical MAP/MRR rows to the brute-force broadcast
-    path, including rank tiebreaks (sim DESC, id ASC)."""
-    emb = load(spark, sf_dir, "embeddings")
-    idx = build_ivf_index(emb, n_cells=8)
-    brute = sorted(map(tuple, retrieval_eval(emb).collect()))
-    pruned = sorted(
-        map(tuple, retrieval_eval(emb, index=idx, n_probe=2).collect())
-    )
-    assert brute == pruned
 
 
 def test_hard_negatives_index_path_equals_brute_force(spark, sf_dir):

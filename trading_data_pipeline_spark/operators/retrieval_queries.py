@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ..functions.quantize import q as _q
 from ..functions.vector import cosine_similarity
 from ..registry import load, register
+from .similarity import panel_topk_exact
 
 QUERY_DOC = 0
 RRF_K = 60
@@ -313,42 +314,25 @@ EVAL_SCALE = 10**9
 EVAL_PANEL_BOUND = EVAL_QMOD * EVAL_MAX_QUERIES
 
 
-def retrieval_eval(
+def _ranked_panel(
     emb: DataFrame,
-    qmod: int = EVAL_QMOD,
-    k: int = EVAL_K,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    index=None,
-    n_probe: int = 2,
-    arrow_panel: bool = False,
-) -> DataFrame:
-    """Per-query MAP@k and MRR@k of cosine retrieval, with relevance =
-    "candidate shares the query's label".
+    qmod: int,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The retrieval evals' shared first half: ``(ranked, rel_counts)``.
 
-    Plan (index given — the 100 TB path and the registered default): the
-    1/qmod holdout routes through :meth:`IvfIndex.knn_join_exact` —
-    radius-bounded candidate equi-joins on ``__cell`` replace the
-    corpus × holdout product; EXACT by construction, so the metric (and
-    hash) is identical to the brute-force form. Ranking is on the raw
-    cosine (desc, id asc) on both engines — the same tie discipline
-    ``q_knn_eval`` proved cross-engine-stable.
-
-    Plan (index=None, small-corpus / oracle-twin fallback): broadcast the
-    holdout into a corpus-side scoring pass (the corpus never shuffles);
-    the per-query rank window runs after a rank-limit pushdown on the
-    single qid exchange.
-
-    Precision@i terms fix to integers (``(hits·S) div i``) before the
-    order-free per-query sum; the one double division per metric happens
-    on exact operands. AP@k normalizes by min(R, k), R = relevant corpus
-    rows.
+    ``ranked`` holds each panel query's top-k corpus rows (qid, id, _sim,
+    label, qlabel, _r, rel), ranked (cosine DESC, id ASC) — the tie
+    discipline ``q_knn_eval`` proved cross-engine-stable — by ONE
+    Arrow-batched corpus pass (:func:`panel_topk_exact`: exact cosines,
+    bit-identical to the JVM fold; the corpus never shuffles).
+    ``rel_counts`` is the relevant-row count R per label over the same
+    corpus. A row whose vector is NULL is not an observation: the scorer
+    neither asks nor returns it, and R does not count it either.
     """
-    from pyspark.sql import Window
-
-    from ..functions.vector import cosine_similarity
-
     queries = emb.filter(
         (F.col(id_col) % qmod == 0)
         & (F.col(id_col) < qmod * EVAL_MAX_QUERIES)
@@ -357,58 +341,47 @@ def retrieval_eval(
         F.col(vec_col).cast("array<double>").alias("qvec"),
         F.col(label_col).alias("qlabel"),
     )
-    corpus = emb.filter(F.col(id_col) % qmod != 0).select(
-        id_col,
-        F.col(vec_col).cast("array<double>").alias("vec"),
-        label_col,
+    corpus = emb.filter(
+        (F.col(id_col) % qmod != 0) & F.col(vec_col).isNotNull()
+    )
+    topk = panel_topk_exact(
+        corpus,
+        queries.select("qid", "qvec"),
+        k=k,
+        id_col=id_col,
+        vec_col=vec_col,
+        keep_cols=(label_col,),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("_sim"), F.asc(id_col))
-    if arrow_panel or index is not None:
-        if arrow_panel:
-            # One Arrow-batched corpus pass; cosines bit-identical to
-            # both join arms — see similarity.panel_topk_exact.
-            from .similarity import panel_topk_exact
+    ranked = (
+        topk.join(F.broadcast(queries.select("qid", "qlabel")), "qid")
+        .withColumn("_r", F.row_number().over(w))
+        .withColumn("rel", (F.col(label_col) == F.col("qlabel")).cast("long"))
+    )
+    rel_counts = corpus.groupBy(F.col(label_col).alias("qlabel")).agg(
+        F.count(F.lit(1)).alias("n_rel")
+    )
+    return ranked, rel_counts
 
-            topk = panel_topk_exact(
-                emb.filter(F.col(id_col) % qmod != 0),
-                queries.select("qid", "qvec"),
-                k=k,
-                id_col=id_col,
-                vec_col=vec_col,
-                keep_cols=(label_col,),
-            )
-        else:
-            topk = index.knn_join_exact(
-                queries.select("qid", "qvec"),
-                k=k,
-                n_probe=n_probe,
-                corpus_filter=F.col(id_col) % qmod != 0,
-                keep_cols=(label_col,),
-            )
-        ranked = (
-            topk.join(
-                F.broadcast(queries.select("qid", "qlabel")), "qid"
-            )
-            .withColumn("_r", F.row_number().over(w))
-            .withColumn(
-                "rel", (F.col(label_col) == F.col("qlabel")).cast("long")
-            )
-        )
-    else:
-        pairs = corpus.crossJoin(F.broadcast(queries)).select(
-            "qid",
-            "qlabel",
-            id_col,
-            label_col,
-            cosine_similarity(F.col("vec"), F.col("qvec")).alias("_sim"),
-        )
-        ranked = (
-            pairs.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= k)
-            .withColumn(
-                "rel", (F.col(label_col) == F.col("qlabel")).cast("long")
-            )
-        )
+
+def retrieval_eval(
+    emb: DataFrame,
+    qmod: int = EVAL_QMOD,
+    k: int = EVAL_K,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    label_col: str = "label",
+) -> DataFrame:
+    """Per-query MAP@k and MRR@k of cosine retrieval, with relevance =
+    "candidate shares the query's label".
+
+    Plan: the panel's top-k come from :func:`_ranked_panel` — one
+    Arrow-batched corpus pass, no corpus × panel product. Precision@i
+    terms fix to integers (``(hits·S) div i``) before the order-free
+    per-query sum; the one double division per metric happens on exact
+    operands. AP@k normalizes by min(R, k), R = relevant corpus rows.
+    """
+    ranked, rel_counts = _ranked_panel(emb, qmod, k, id_col, vec_col, label_col)
     wc = (
         Window.partitionBy("qid")
         .orderBy("_r")
@@ -424,9 +397,6 @@ def retrieval_eval(
             * F.expr(f"(hits * CAST({EVAL_SCALE} AS BIGINT)) div _r")
         ).alias("_ap_term"),
         F.when(F.col("rel") == 1, F.col("_r")).alias("_hit_rank"),
-    )
-    rel_counts = corpus.groupBy(F.col(label_col).alias("qlabel")).agg(
-        F.count(F.lit(1)).alias("n_rel")
     )
     per_q = terms.groupBy("qid", "qlabel").agg(
         F.sum("_ap_term").alias("_ap_sum"),
@@ -467,9 +437,11 @@ def retrieval_eval(
       SELECT vec_id AS qid, embedding::DOUBLE[] AS qvec, label AS qlabel
       FROM embeddings
       WHERE vec_id % {EVAL_QMOD} = 0 AND vec_id < {EVAL_PANEL_BOUND}
+        AND embedding IS NOT NULL
     ), corpus AS (
       SELECT vec_id, embedding::DOUBLE[] AS vec, label
-      FROM embeddings WHERE vec_id % {EVAL_QMOD} <> 0
+      FROM embeddings
+      WHERE vec_id % {EVAL_QMOD} <> 0 AND embedding IS NOT NULL
     ), ranked AS (
       SELECT q.qid, q.qlabel, c.vec_id, c.label,
              row_number() OVER (
@@ -513,18 +485,15 @@ def retrieval_eval(
     doc="Retrieval-quality eval: MAP@10 and MRR@10 of cosine retrieval "
     "against same-label relevance — the log-free IR metrics (AP and RR "
     "are exact rationals; NDCG's log2 discount would cross the libm "
-    "boundary). Registered on the EXACT Arrow-batched panel scorer "
-    "(panel_topk_exact: one corpus pass, per-dimension numpy "
-    "accumulation == the JVM sequential fold — no corpus×holdout "
-    "product, no per-pair fold); result bit-identical to the IVF and "
-    "brute-force arms by construction; precision@i fixed to integers "
-    "before the order-free sum",
+    "boundary). The panel's top-10 come from the EXACT Arrow-batched "
+    "panel scorer (panel_topk_exact: one corpus pass, per-dimension "
+    "numpy accumulation == the JVM sequential fold, so cosines and ranks "
+    "are the JVM's — no corpus×panel product, no per-pair fold); "
+    "precision@i fixed to integers before the order-free sum; NULL "
+    "embeddings are neither queries nor corpus rows",
 )
 def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return retrieval_eval(
-        load(spark, sf_dir, "embeddings"),
-        arrow_panel=True,
-    )
+    return retrieval_eval(load(spark, sf_dir, "embeddings"))
 
 
 # ----------------------------------------------------------- nDCG@k
@@ -554,9 +523,6 @@ def ndcg_eval(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    index=None,
-    n_probe: int = 2,
-    arrow_panel: bool = False,
 ) -> DataFrame:
     """Per-query nDCG@k of cosine retrieval with binary same-label
     relevance: DCG = Σ rel_i·disc_i over ranks, IDCG = the best
@@ -564,73 +530,10 @@ def ndcg_eval(
     (0.0 when R = 0, never a 0/0). Discounts are the injected
     fixed-point literals above — identical BIGINTs on both engines.
 
-    Plan: same retrieval arm as :func:`retrieval_eval` — the exact
-    cell-pruned :meth:`IvfIndex.knn_join_exact` when an index is given
-    (no corpus × holdout product), broadcast-holdout scoring otherwise;
-    same (cosine desc, id asc) tie discipline.
+    Plan: the same :func:`_ranked_panel` as :func:`retrieval_eval` — one
+    Arrow-batched corpus pass, same (cosine desc, id asc) tie discipline.
     """
-    from pyspark.sql import Window
-
-    from ..functions.vector import cosine_similarity
-
-    queries = emb.filter(
-        (F.col(id_col) % qmod == 0)
-        & (F.col(id_col) < qmod * EVAL_MAX_QUERIES)
-    ).select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-        F.col(label_col).alias("qlabel"),
-    )
-    corpus = emb.filter(F.col(id_col) % qmod != 0).select(
-        id_col,
-        F.col(vec_col).cast("array<double>").alias("vec"),
-        label_col,
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("_sim"), F.asc(id_col))
-    if arrow_panel or index is not None:
-        if arrow_panel:
-            # One Arrow-batched corpus pass; cosines bit-identical to
-            # both join arms — see similarity.panel_topk_exact.
-            from .similarity import panel_topk_exact
-
-            topk = panel_topk_exact(
-                emb.filter(F.col(id_col) % qmod != 0),
-                queries.select("qid", "qvec"),
-                k=k,
-                id_col=id_col,
-                vec_col=vec_col,
-                keep_cols=(label_col,),
-            )
-        else:
-            topk = index.knn_join_exact(
-                queries.select("qid", "qvec"),
-                k=k,
-                n_probe=n_probe,
-                corpus_filter=F.col(id_col) % qmod != 0,
-                keep_cols=(label_col,),
-            )
-        ranked = (
-            topk.join(F.broadcast(queries.select("qid", "qlabel")), "qid")
-            .withColumn("_r", F.row_number().over(w))
-            .withColumn(
-                "rel", (F.col(label_col) == F.col("qlabel")).cast("long")
-            )
-        )
-    else:
-        pairs = corpus.crossJoin(F.broadcast(queries)).select(
-            "qid",
-            "qlabel",
-            id_col,
-            label_col,
-            cosine_similarity(F.col("vec"), F.col("qvec")).alias("_sim"),
-        )
-        ranked = (
-            pairs.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= k)
-            .withColumn(
-                "rel", (F.col(label_col) == F.col("qlabel")).cast("long")
-            )
-        )
+    ranked, rel_counts = _ranked_panel(emb, qmod, k, id_col, vec_col, label_col)
     disc = F.element_at(
         F.array(*[F.lit(d) for d in NDCG_DISC]), F.col("_r").cast("int")
     )
@@ -638,9 +541,6 @@ def ndcg_eval(
         "qid", "qlabel", (F.col("rel") * disc).alias("_g")
     ).groupBy("qid", "qlabel").agg(
         F.sum("_g").alias("_dcg"), F.count(F.lit(1)).alias("_nk")
-    )
-    rel_counts = corpus.groupBy(F.col(label_col).alias("qlabel")).agg(
-        F.count(F.lit(1)).alias("n_rel")
     )
     ideal = F.element_at(
         F.array(*[F.lit(v) for v in NDCG_IDEAL]),
@@ -675,9 +575,11 @@ def _ndcg_ideal_sql() -> str:
       SELECT vec_id AS qid, embedding::DOUBLE[] AS qvec, label AS qlabel
       FROM embeddings
       WHERE vec_id % {EVAL_QMOD} = 0 AND vec_id < {EVAL_PANEL_BOUND}
+        AND embedding IS NOT NULL
     ), corpus AS (
       SELECT vec_id, embedding::DOUBLE[] AS vec, label
-      FROM embeddings WHERE vec_id % {EVAL_QMOD} <> 0
+      FROM embeddings
+      WHERE vec_id % {EVAL_QMOD} <> 0 AND embedding IS NOT NULL
     ), ranked AS (
       SELECT q.qid, q.qlabel, c.label,
              row_number() OVER (
@@ -712,13 +614,10 @@ def _ndcg_ideal_sql() -> str:
     "discounts are fixed-point BIGINT literals computed once in Python "
     "and injected into BOTH plans (the MACD literal-weights trick), so "
     "no engine evaluates libm at query time and the per-query sums are "
-    "order-free integer sums. Registered on the EXACT Arrow-batched "
-    "panel scorer (panel_topk_exact — one corpus pass, bit-identical "
-    "cosines), identical to the IVF and brute-force arms by "
-    "construction",
+    "order-free integer sums. The panel's top-10 come from the same "
+    "EXACT Arrow-batched panel scorer as q_retrieval_eval "
+    "(panel_topk_exact — one corpus pass, cosines bit-identical to the "
+    "JVM fold); NULL embeddings are neither queries nor corpus rows",
 )
 def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ndcg_eval(
-        load(spark, sf_dir, "embeddings"),
-        arrow_panel=True,
-    )
+    return ndcg_eval(load(spark, sf_dir, "embeddings"))

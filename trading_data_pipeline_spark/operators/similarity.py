@@ -281,17 +281,12 @@ class IvfIndex:
         ``cos_sim(q, v) <= cos(max(0, angle(q, c) - R_c))`` — a provable
         per-cell upper bound on any member's cosine similarity."""
         if getattr(self, "_radii", None) is None:
-            from ..functions.vector import l2_norm
+            from ..functions.vector import dot_product, l2_norm
 
             cents = F.array(*[F.lit([float(x) for x in c]) for c in self.centroids])
             v = F.col(self.vec_col).cast("array<double>")
             cent = F.element_at(cents, F.col("__cell") + 1)
-            dot = F.aggregate(
-                F.zip_with(v, cent, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            cos = dot / l2_norm(v)
+            cos = dot_product(v, cent) / l2_norm(v)
             ang = F.acos(F.least(F.lit(1.0), F.greatest(F.lit(-1.0), cos)))
             rows = (
                 self.assigned.groupBy("__cell")
@@ -311,8 +306,6 @@ class IvfIndex:
         n_probe: int = 2,
         qid_col: str = "qid",
         qvec_col: str = "qvec",
-        corpus_filter: Column | None = None,
-        keep_cols: tuple[str, ...] = (),
         exclude_self: bool = False,
         max_sim: float | None = None,
     ) -> DataFrame:
@@ -340,25 +333,23 @@ class IvfIndex:
         top-k (dropping super-threshold rows only ever removes
         non-qualifying candidates, never changes the bound's validity).
 
-        Returns (qid, id, _sim [, keep_cols...]) rows, exactly the top-k
-        per query, ties broken (sim DESC, id ASC).
+        Returns (qid, id, _sim) rows, exactly the top-k per query, ties
+        broken (sim DESC, id ASC).
         """
         from pyspark.sql import Window
 
-        from ..functions.vector import l2_norm
+        from ..functions.vector import dot_product, l2_norm
 
         radii = self.cell_radii()
         n_cells = len(self.centroids)
         n_probe = min(n_probe, n_cells)
         rad_lit = F.lit([float(r) for r in radii])
 
-        corpus = self.assigned
-        if corpus_filter is not None:
-            corpus = corpus.filter(corpus_filter)
-        sel = [F.col("__cell"), F.col(self.id_col)]
-        sel.append(F.col(self.vec_col).cast("array<double>").alias("__cv"))
-        sel += [F.col(c) for c in keep_cols]
-        corpus = corpus.select(*sel).withColumn("__cn", l2_norm(F.col("__cv")))
+        corpus = self.assigned.select(
+            F.col("__cell"),
+            F.col(self.id_col),
+            F.col(self.vec_col).cast("array<double>").alias("__cv"),
+        ).withColumn("__cn", l2_norm(F.col("__cv")))
 
         # Per-query cell geometry, one codegen'd pass: angle to every
         # centroid, sorted ascending -> probed prefix / bounded suffix.
@@ -387,17 +378,10 @@ class IvfIndex:
         def scored(joined: DataFrame) -> DataFrame:
             if exclude_self:
                 joined = joined.filter(F.col(self.id_col) != F.col("__qid"))
-            sim = F.aggregate(
-                F.zip_with(F.col("__cv"), F.col("__qv"), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ) / (F.col("__cn") * F.col("__qn"))
-            out = joined.select(
-                "__qid",
-                F.col(self.id_col),
-                sim.alias("_sim"),
-                *[F.col(c) for c in keep_cols],
+            sim = dot_product(F.col("__cv"), F.col("__qv")) / (
+                F.col("__cn") * F.col("__qn")
             )
+            out = joined.select("__qid", F.col(self.id_col), sim.alias("_sim"))
             if max_sim is not None:
                 out = out.filter(F.col("_sim") < max_sim)
             return out
@@ -456,12 +440,7 @@ class IvfIndex:
             cand1.unionByName(cand2)
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
-            .select(
-                F.col("__qid").alias(qid_col),
-                self.id_col,
-                "_sim",
-                *keep_cols,
-            )
+            .select(F.col("__qid").alias(qid_col), self.id_col, "_sim")
         )
 
     def append(self, new_df: DataFrame) -> "IvfIndex":
@@ -538,7 +517,12 @@ def build_ivf_index(
 ) -> IvfIndex:
     """Build an IVF index: sample-fit centroids (driver numpy) + one-pass
     JVM cell assignment. The assigned table is cached so repeated probes
-    reuse it — ``IvfIndex.save`` is the durable cell-partitioned form."""
+    reuse it — ``IvfIndex.save`` is the durable cell-partitioned form.
+
+    A row whose vector is NULL is not an observation: it is dropped before
+    the fit and the assignment, so it lands in no cell and no search,
+    exact or approximate, ever returns it."""
+    df = df.filter(F.col(vec_col).isNotNull())
     centroids = fit_centroids(df, n_cells, id_col, vec_col, sample_size, seed=seed)
     assigned = assign_cells(df, centroids, vec_col).persist()
     return IvfIndex(assigned, centroids, id_col, vec_col)
@@ -658,10 +642,90 @@ def hard_negatives(
     )
 
 
-# Bounded-panel contract for panel_topk_exact: registered eval panels are a
-# few hundred rows by construction; anything larger than this is a misuse
-# (an unbounded query side belongs on IvfIndex.knn_join_exact).
+# Bounded-panel contract for the Arrow panel scorers: registered eval
+# panels are a few hundred rows by construction; anything larger than this
+# is a misuse (an unbounded query side belongs on IvfIndex.knn_join_exact).
 PANEL_SCORER_MAX = 4096
+
+
+def _fold(X, Q):
+    """``(acc, sq)`` with ``acc[i, j] = Σ_d X[i, d]·Q[j, d]`` and
+    ``sq[i] = Σ_d X[i, d]²`` — the one numpy copy of the cosine fold.
+
+    Why it is bit-identical to the JVM: ``functions.vector.dot_product``
+    is the sequential left fold ``((0 + a₀b₀) + a₁b₁) + …`` over
+    ``d = 0 .. dim-1``. Here each step is the same IEEE-754 double
+    multiply, then the same double add onto the running sum, on the same
+    operands in the same order (numpy's elementwise ``*`` and ``+=`` round
+    once per element: no fused multiply-add, no pairwise summation across
+    ``d``). ``l2_norm`` is that fold of squares under one ``sqrt``, and
+    callers divide ``dot / (xn · qn)`` exactly as the hoisted JVM form
+    does, so every cosine — and therefore every rank and tie — is the
+    JVM's. float32 inputs widen to double exactly, like the
+    ``cast("array<double>")`` in front of the JVM fold.
+    """
+    import numpy as np
+
+    n, dim = X.shape
+    acc = np.zeros((n, len(Q)))
+    sq = np.zeros(n)
+    for d in range(dim):
+        xd = X[:, d]
+        acc += xd[:, None] * Q[:, d][None, :]
+        sq += xd * xd
+    return acc, sq
+
+
+def _collect_panel(
+    queries: DataFrame,
+    qid_col: str = "qid",
+    qvec_col: str = "qvec",
+    max_panel: int = PANEL_SCORER_MAX,
+):
+    """Collect a bounded query panel to the driver as ``(qids, Q, qn)``:
+    sorted by qid (collect order is not deterministic), at most
+    ``max_panel`` rows (more raises), the query norms folded by
+    :func:`_fold`. A row whose vector is NULL is not an observation and is
+    dropped here, so it never becomes a query."""
+    import numpy as np
+
+    rows = (
+        queries.select(
+            F.col(qid_col).cast("long").alias("q"),
+            F.col(qvec_col).cast("array<double>").alias("v"),
+        )
+        .filter(F.col("v").isNotNull())
+        .limit(max_panel + 1)
+        .collect()
+    )
+    if len(rows) > max_panel:
+        raise ValueError(
+            f"> {max_panel} query rows — the panel scorers are for bounded "
+            "eval panels; route corpus-fraction query sides through "
+            "IvfIndex.knn_join_exact"
+        )
+    rows.sort(key=lambda r: r.q)
+    qids = np.asarray([r.q for r in rows], dtype=np.int64)
+    Q = np.asarray([list(r.v) for r in rows], dtype=np.float64)
+    if not rows:
+        Q = Q.reshape(0, 0)
+    _, qsq = _fold(Q, Q[:0])
+    return qids, Q, np.sqrt(qsq)
+
+
+def _batch_cosines(emb, Q, qn):
+    """Decode one Arrow batch's embedding column and return its
+    (rows × panel) cosine matrix against the collected panel — the
+    per-batch half of the panel scorers. A NULL or wrong-length vector
+    raises: callers drop NULL vectors before the batch is cut."""
+    import numpy as np
+
+    n, dim = len(emb), Q.shape[1]
+    vals = np.asarray(emb.flatten(), dtype=np.float64)
+    if emb.null_count or vals.size != n * dim:
+        raise ValueError(f"null or ragged embeddings (expected dim {dim})")
+    acc, xn = _fold(vals.reshape(n, dim), Q)
+    return acc / (np.sqrt(xn)[:, None] * qn[None, :])
 
 
 def panel_topk_exact(
@@ -679,34 +743,26 @@ def panel_topk_exact(
     corpus, in ONE Arrow-batched corpus pass (the guide-§4.2 shape: Spark
     does distribution and I/O, numpy does the per-batch math).
 
-    Why: the join formulations (``knn_join_exact``, the broadcast brute
-    arm) score each (corpus row, query) pair with a ``zip_with`` +
-    ``aggregate`` fold that allocates a dim-wide zipped array and
-    interprets a lambda per element — measured ~5 µs/pair, which at
-    |panel|=200 × |corpus| pairs is the entire cost of q_knn_eval at
-    sf10 (186 s warm). Here each Arrow batch computes the same sums as
-
-        acc[i, j] += X[i, d] * Q[j, d]   for d = 0 .. dim-1, in order
-
-    i.e. the SAME sequential left fold as ``functions.vector.dot_product``
-    (and the norms are the same fold of squares under one sqrt, the final
-    division the same ``dot / (cn * qn)``). Every step is an IEEE-754
-    double operation on identical operands, so each pair's cosine is
-    BIT-IDENTICAL to the JVM expression and rankings cannot drift
-    (equality is pinned in tests/test_panel_scorer.py; oracle parity is
-    unchanged).
+    Why: a join formulation scores each (corpus row, query) pair with a
+    ``zip_with`` + ``aggregate`` fold that allocates a dim-wide zipped
+    array and interprets a lambda per element — measured ~5 µs/pair,
+    which at |panel|=200 × |corpus| pairs was the entire cost of
+    q_knn_eval at sf10 (186 s warm). Here each Arrow batch computes the
+    same sums with :func:`_fold`, so each pair's cosine is BIT-IDENTICAL
+    to ``functions.vector.cosine_similarity`` and the DuckDB oracles
+    still verify the result.
 
     Exactness of the batch-local cut: a batch emits its per-query top-k
     INCLUDING boundary ties (every non-emitted row is strictly below the
     batch's k-th-best similarity for that query) plus any NaN scores (so
-    the global window applies Spark's own NaN ordering, as the join
-    formulations did). The union over batches is therefore a provable
-    superset of the true per-query top-k; the global rank window runs
-    over ≈ batches × |panel| × k candidate rows — the corpus itself
-    never shuffles.
+    the global window applies Spark's own NaN ordering). The union over
+    batches is therefore a provable superset of the true per-query top-k;
+    the global rank window runs over ≈ batches × |panel| × k candidate
+    rows — the corpus itself never shuffles.
 
-    The panel is collected to the driver (sorted by qid; collect order is
-    not deterministic) exactly like ``fit_centroids``' bounded sample —
+    A NULL vector is not an observation, on either side: such a corpus
+    row is never a neighbour and such a query row is never scored. The
+    panel is collected to the driver by :func:`_collect_panel`;
     ``max_panel`` guards against an unbounded query side being routed
     here. Returns (qid_col, id_col, _sim [, keep_cols...]) with the ids
     as BIGINT, exactly the top-k per query, ties broken
@@ -716,26 +772,8 @@ def panel_topk_exact(
     from pyspark.sql import Window
     from pyspark.sql import types as T
 
-    prows = (
-        queries.select(
-            F.col(qid_col).cast("long").alias("q"),
-            F.col(qvec_col).cast("array<double>").alias("v"),
-        )
-        .limit(max_panel + 1)
-        .collect()
-    )
-    if len(prows) > max_panel:
-        raise ValueError(
-            f"panel_topk_exact: > {max_panel} query rows — this scorer is "
-            "for bounded eval panels; route corpus-fraction query sides "
-            "through IvfIndex.knn_join_exact"
-        )
-    prows.sort(key=lambda r: r.q)
-    qids = np.asarray([r.q for r in prows], dtype=np.int64)
-    Q = np.asarray([list(r.v) for r in prows], dtype=np.float64)
-    nq = len(prows)
-
-    src = corpus.select(
+    qids, Q, qn = _collect_panel(queries, qid_col, qvec_col, max_panel)
+    src = corpus.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).cast("long").alias("__id"),
         F.col(vec_col).alias("__v"),
         *[F.col(c) for c in keep_cols],
@@ -754,43 +792,20 @@ def panel_topk_exact(
         F.col("_sim"),
         *[F.col(c) for c in keep_cols],
     ]
-    if nq == 0:
+    if len(qids) == 0:
         return corpus.sparkSession.createDataFrame([], out_schema).select(*final)
 
-    dim = Q.shape[1]
-    qn = np.zeros(nq)
-    for d in range(dim):
-        qn += Q[:, d] * Q[:, d]
-    qn = np.sqrt(qn)
     names = [f.name for f in out_schema.fields]
     n_keep = len(keep_cols)
 
     def score(batches):
-        import numpy as np
         import pyarrow as pa
 
         for b in batches:
             n = b.num_rows
             if n == 0:
                 continue
-            ids = b.column(0)
-            emb = b.column(1)
-            if emb.null_count:
-                raise ValueError("panel_topk_exact: null embedding row")
-            vals = np.asarray(emb.flatten(), dtype=np.float64)
-            if vals.size != n * dim:
-                raise ValueError(
-                    f"panel_topk_exact: ragged embeddings (expected dim {dim})"
-                )
-            X = vals.reshape(n, dim)
-            # Sequential per-dimension accumulation == the JVM left fold.
-            acc = np.zeros((n, nq))
-            xn = np.zeros(n)
-            for d in range(dim):
-                xd = X[:, d]
-                acc += xd[:, None] * Q[:, d][None, :]
-                xn += xd * xd
-            sim = acc / (np.sqrt(xn)[:, None] * qn[None, :])
+            sim = _batch_cosines(b.column(1), Q, qn)
             m = min(k, n)
             if n > m:
                 thr = np.partition(sim, n - m, axis=0)[n - m]
@@ -801,7 +816,7 @@ def panel_topk_exact(
             take = pa.array(rows)
             arrs = [
                 pa.array(qids[cols]),
-                ids.take(take),
+                b.column(0).take(take),
                 pa.array(sim[rows, cols]),
             ] + [b.column(2 + i).take(take) for i in range(n_keep)]
             yield pa.RecordBatch.from_arrays(arrs, names=names)
@@ -822,10 +837,7 @@ def knn_label_eval(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    index: "IvfIndex | None" = None,
-    n_probe: int = 2,
     max_eval: int | None = None,
-    arrow_panel: bool = False,
 ) -> DataFrame:
     """Embedding-quality evaluation via k-NN label prediction: hold out
     every ``holdout_mod``-th vector, predict its label by majority vote
@@ -834,31 +846,14 @@ def knn_label_eval(
     embeddings actually encode the thing we care about" run before a
     corpus-wide similarity pass is trusted.
 
-    Plan (index=None, eval-scale default): broadcast the holdout set
-    (1/holdout_mod of the corpus) into a local scoring pass — the corpus
-    never shuffles; per-query top-k gets rank-limit pushdown on the single
-    qid exchange; votes and accuracy are tiny aggregates. This scoring is
-    O(|corpus|·|holdout|) — fine for a bounded eval probe, quadratic as a
-    corpus-wide job.
-
-    Plan (index given, the 100 TB path): route the holdout through
-    :meth:`IvfIndex.knn_join_exact` — two ``__cell`` equi-joins with
-    radius-bound pruning. EXACT, not approximate: the result (and hash)
-    is identical to the brute-force path by construction, verified per
-    round by the unchanged DuckDB oracle; the quadratic product is
-    replaced by candidate joins that touch only cells whose bound admits
-    a top-k member.
-
-    Plan (``arrow_panel=True``, the registered default): score the fixed
-    panel in ONE Arrow-batched corpus pass (:func:`panel_topk_exact`) —
-    per-pair cosines are bit-identical to both other arms (same
-    sequential fold), so results and oracle hashes are unchanged; the
-    corpus never shuffles and the per-pair JVM fold cost disappears
-    (q_knn_eval sf10 warm: 186.5 s → see BASELINE.md round-10 table).
+    Plan: score the holdout panel in ONE Arrow-batched corpus pass
+    (:func:`panel_topk_exact`) — exact cosines, bit-identical to the JVM
+    fold; the corpus never shuffles. Votes and accuracy are tiny
+    aggregates over the ≤ |holdout|·k neighbour rows. A vector whose
+    embedding is NULL is neither evaluated nor a neighbour.
 
     Ties are deterministic WITHIN this engine: neighbour rank breaks on
-    (cosine DESC, id ASC) — both paths compute cosine with the identical
-    sequential JVM fold — and the vote breaks on (count DESC, label ASC).
+    (cosine DESC, id ASC) and the vote breaks on (count DESC, label ASC).
     Cross-engine (the DuckDB oracle computes ``list_cosine_similarity``
     with its own float evaluation order) the comparison is only
     float-close: two DISTINCT but near-equal cosines straddling the
@@ -868,8 +863,6 @@ def knn_label_eval(
     sides rather than loosening the tiebreak.
     """
     from pyspark.sql import Window
-
-    from ..functions.vector import dot_product, l2_norm
 
     # With max_eval, the holdout is a FIXED id-range panel rather than a
     # corpus fraction: an uncapped 1/holdout_mod sample makes the eval's
@@ -882,70 +875,25 @@ def knn_label_eval(
     if max_eval is not None:
         _hold = _hold & (F.col(id_col) < holdout_mod * max_eval)
 
-    if arrow_panel or index is not None:
-        holdq = emb.filter(_hold).select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).alias("qvec"),
-        )
-        if arrow_panel:
-            # One Arrow-batched corpus pass (guide §4.2); bit-identical
-            # cosines and ranks — see panel_topk_exact.
-            topk = panel_topk_exact(
-                emb.filter(F.col(id_col) % holdout_mod != 0),
-                holdq,
-                k=k,
-                id_col=id_col,
-                vec_col=vec_col,
-                keep_cols=(label_col,),
-            )
-        else:
-            topk = index.knn_join_exact(
-                holdq,
-                k=k,
-                n_probe=n_probe,
-                corpus_filter=F.col(id_col) % holdout_mod != 0,
-                keep_cols=(label_col,),
-            )
-        labels = emb.filter(_hold).select(
-            F.col(id_col).alias("qid"),
-            F.col(label_col).alias("true_label"),
-        )
-        votes = (
-            topk.join(F.broadcast(labels), "qid")
-            .groupBy("qid", "true_label", label_col)
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-        )
-    else:
-        # Per-row norm projections before the pairwise join (see
-        # hard_negatives): |corpus| + |holdout| norm folds total instead
-        # of 2·|corpus|·|holdout|, bit-identical cosine values.
-        holdout = emb.filter(_hold).select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).cast("array<double>").alias("qvec"),
-            F.col(label_col).alias("true_label"),
-        ).withColumn("_nq", l2_norm(F.col("qvec")))
-        corpus = emb.filter(F.col(id_col) % holdout_mod != 0).select(
-            F.col(label_col),
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("_cv"),
-        ).withColumn("_nc", l2_norm(F.col("_cv")))
-        scored = corpus.join(F.broadcast(holdout), F.lit(True)).select(
-            "qid",
-            "true_label",
-            F.col(label_col),
-            (
-                dot_product(F.col("_cv"), F.col("qvec"))
-                / (F.col("_nc") * F.col("_nq"))
-            ).alias("_sim"),
-            F.col(id_col),
-        )
-        wk = Window.partitionBy("qid").orderBy(F.desc("_sim"), F.asc(id_col))
-        votes = (
-            scored.withColumn("_rn", F.row_number().over(wk))
-            .filter(F.col("_rn") <= k)
-            .groupBy("qid", "true_label", label_col)
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-        )
+    topk = panel_topk_exact(
+        emb.filter(F.col(id_col) % holdout_mod != 0),
+        emb.filter(_hold).select(
+            F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
+        ),
+        k=k,
+        id_col=id_col,
+        vec_col=vec_col,
+        keep_cols=(label_col,),
+    )
+    labels = emb.filter(_hold).select(
+        F.col(id_col).alias("qid"),
+        F.col(label_col).alias("true_label"),
+    )
+    votes = (
+        topk.join(F.broadcast(labels), "qid")
+        .groupBy("qid", "true_label", label_col)
+        .agg(F.count(F.lit(1)).alias("_cnt"))
+    )
     wv = Window.partitionBy("qid").orderBy(
         F.desc("_cnt"), F.asc(label_col)
     )

@@ -7,7 +7,15 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q as _q
 from ..registry import load, register
-from .similarity import IvfIndex, brute_force_topk, build_ivf_index, lsh_topk
+from .similarity import (
+    IvfIndex,
+    _batch_cosines,
+    _collect_panel,
+    _fold,
+    brute_force_topk,
+    build_ivf_index,
+    lsh_topk,
+)
 
 QUERY_VEC_ID = 0
 TOP_K = 10
@@ -310,9 +318,11 @@ KNN_MAX_EVAL = 200
       FROM embeddings
       WHERE vec_id % {KNN_HOLDOUT_MOD} = 0
         AND vec_id < {KNN_HOLDOUT_MOD * KNN_MAX_EVAL}
+        AND embedding IS NOT NULL
     ), c AS (
       SELECT vec_id, embedding::DOUBLE[] AS e, label
-      FROM embeddings WHERE vec_id % {KNN_HOLDOUT_MOD} != 0
+      FROM embeddings
+      WHERE vec_id % {KNN_HOLDOUT_MOD} != 0 AND embedding IS NOT NULL
     ), s AS (
       SELECT h.qid, h.tl, c.label, c.vec_id,
              list_cosine_similarity(c.e, h.qe) AS sim
@@ -341,13 +351,13 @@ KNN_MAX_EVAL = 200
     "FIXED 200-id-slot panel (covers the whole sf0.01 corpus; keeps "
     "the eval corpus-linear at any scale), predict "
     "its label by majority vote of its 5 cosine-nearest neighbours, "
-    "report per-label accuracy. Registered as the EXACT Arrow-batched "
-    "panel scorer (panel_topk_exact: one corpus pass, per-dimension "
-    "numpy accumulation == the JVM sequential fold, batch-local top-k "
-    "with boundary ties — no corpus×holdout product, no per-pair fold); "
-    "result bit-identical to the IVF and brute-force arms by "
-    "construction, deterministic ties (cosine DESC, id; then count "
-    "DESC, label) on both engines",
+    "report per-label accuracy. Neighbours come from the EXACT "
+    "Arrow-batched panel scorer (panel_topk_exact: one corpus pass, "
+    "per-dimension numpy accumulation == the JVM sequential fold, so "
+    "cosines and ranks are the JVM's; batch-local top-k with boundary "
+    "ties — no corpus×holdout product, no per-pair fold); deterministic "
+    "ties (cosine DESC, id; then count DESC, label) on both engines; a "
+    "NULL embedding is neither evaluated nor a neighbour",
 )
 def q_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import knn_label_eval
@@ -357,7 +367,6 @@ def q_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         holdout_mod=KNN_HOLDOUT_MOD,
         k=KNN_K,
         max_eval=KNN_MAX_EVAL,
-        arrow_panel=True,
     )
 
 
@@ -366,46 +375,41 @@ def q_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 CC_SCALE = 10_000  # per-component fixing: 1e-4 on unit-scale floats
 
 
-def centroid_classify(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    scale: int = CC_SCALE,
-) -> DataFrame:
-    """Nearest-centroid classification accuracy per label — the cheap
-    linear-probe twin of q_knn_eval (one pass + a label-count-bounded
-    join instead of a neighbour search).
-
-    Exactness discipline: components fix to integers (``floor(x·s+.5)``),
-    per-(label, dim) centroid SUMS stay integer, and the squared distance
-    to label ℓ is compared via the EXACT integer numerator
-    ``Σ_d (n_ℓ·x_d − S_{ℓ,d})²`` divided by ``n_ℓ²`` — the division's
-    operands are exact integers below 2^53, so the double quotient (and
-    therefore the argmin, tie-broken on label) is bit-identical on any
-    engine. No floating-point accumulation anywhere.
-    """
-    from pyspark.sql import Window
-
-    # posexplode of the CAST array: indexing the cast inside the
-    # per-dimension projection would re-cast the whole vector per
-    # exploded row (O(dim²) per vector — the HOF-inlining hazard)
-    comps = emb.select(
-        id_col,
-        F.col(label_col).alias("true_label"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("p", "v"),
+def _comps(emb: DataFrame, scale: int = CC_SCALE):
+    """(vec_id, label, d, qx): integer-fixed per-dimension components —
+    the shared explode the centroid family builds on. posexplode of the
+    CAST array, not element_at(cast(...), d) per exploded row — the
+    latter re-casts the whole vector per dimension (O(dim²)/vector)."""
+    return emb.select(
+        "vec_id",
+        "label",
+        F.posexplode(F.col("embedding").cast("array<double>")).alias(
+            "p", "v"
+        ),
     ).select(
-        id_col,
-        "true_label",
+        "vec_id",
+        "label",
         (F.col("p") + 1).alias("d"),
         F.floor(F.col("v") * scale + F.lit(0.5)).cast("long").alias("qx"),
     )
-    cents = comps.groupBy(F.col("true_label").alias("c_label"), "d").agg(
+
+
+def _centroid_dists(comps: DataFrame) -> DataFrame:
+    """(vec_id, label, c_label, dist): each vector's squared distance to
+    every label centroid, from :func:`_comps` rows.
+
+    Per-(label, dim) centroid SUMS stay integer, and the distance to
+    label ℓ is the EXACT integer numerator ``Σ_d (n_ℓ·qx_d − S_{ℓ,d})²``
+    divided by ``n_ℓ²`` — the division's operands are exact integers
+    below 2^53, so the double quotient is bit-identical on any engine. No
+    floating-point accumulation anywhere. The centroid table is
+    labels × dims rows, so it broadcasts."""
+    cents = comps.groupBy(F.col("label").alias("c_label"), "d").agg(
         F.sum("qx").alias("s"), F.count(F.lit(1)).alias("n")
     )
-    scored = (
-        comps.join(cents, "d")
-        .groupBy(id_col, "true_label", "c_label")
+    return (
+        comps.join(F.broadcast(cents), "d")
+        .groupBy("vec_id", "label", "c_label")
         .agg(
             F.sum(
                 (F.col("n") * F.col("qx") - F.col("s"))
@@ -414,21 +418,36 @@ def centroid_classify(
             F.max("n").alias("n"),
         )
         .select(
-            id_col,
-            "true_label",
+            "vec_id",
+            "label",
             "c_label",
             (F.col("num") / (F.col("n") * F.col("n"))).alias("dist"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.asc("dist"), F.asc("c_label"))
-    picked = scored.withColumn("_r", F.row_number().over(w)).filter(
-        F.col("_r") == 1
+
+
+def centroid_classify(emb: DataFrame) -> DataFrame:
+    """Nearest-centroid classification accuracy per label — the cheap
+    linear-probe twin of q_knn_eval (one pass + a label-count-bounded
+    join instead of a neighbour search).
+
+    Exactness: the distances are :func:`_centroid_dists`' exact-operand
+    quotients, so the argmin (tie-broken on label) is bit-identical on
+    any engine.
+    """
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("c_label"))
+    picked = (
+        _centroid_dists(_comps(emb))
+        .withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") == 1)
     )
     return (
-        picked.groupBy("true_label")
+        picked.groupBy(F.col("label").alias("true_label"))
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
-            F.sum((F.col("c_label") == F.col("true_label")).cast("long")).alias(
+            F.sum((F.col("c_label") == F.col("label")).cast("long")).alias(
                 "n_correct"
             ),
         )
@@ -676,59 +695,18 @@ SIL_SCALE = 10**6
 KMEANS_K = 8
 
 
-def _comps(emb: DataFrame, scale: int = CC_SCALE):
-    """(vec_id, label, d, qx): integer-fixed per-dimension components —
-    the shared explode the centroid family builds on. posexplode of the
-    CAST array, not element_at(cast(...), d) per exploded row — the
-    latter re-casts the whole vector per dimension (O(dim²)/vector)."""
-    return emb.select(
-        "vec_id",
-        "label",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias(
-            "p", "v"
-        ),
-    ).select(
-        "vec_id",
-        "label",
-        (F.col("p") + 1).alias("d"),
-        F.floor(F.col("v") * scale + F.lit(0.5)).cast("long").alias("qx"),
-    )
-
-
 def silhouette_by_label(emb: DataFrame) -> DataFrame:
     """Simplified (centroid-based) silhouette per label: for each point,
     a = distance² to its own label centroid, b = min distance² to any
     other centroid, s = (b − a)/max(a, b) ∈ [−1, 1].
 
-    Exactness: distances are the centroid_classify integer numerators
-    ``Σ_d (n·qx − S)² / n²`` — exact-operand double quotients — and
-    per-point s is fixed to 1e-6 BIGINTs before the per-label MEAN, so
-    nothing float ever accumulates. The full-pairwise silhouette is
-    O(n²); the centroid form is the one that survives 100 TB (one
-    explode + a |labels|-bounded join).
+    Exactness: distances are :func:`_centroid_dists`' exact-operand
+    double quotients, and per-point s is fixed to 1e-6 BIGINTs before the
+    per-label MEAN, so nothing float ever accumulates. The full-pairwise
+    silhouette is O(n²); the centroid form is the one that survives
+    100 TB (one explode + a |labels|-bounded join).
     """
-    comps = _comps(emb)
-    cents = comps.groupBy(F.col("label").alias("c_label"), "d").agg(
-        F.sum("qx").alias("s"), F.count(F.lit(1)).alias("n")
-    )
-    scored = (
-        comps.join(F.broadcast(cents), "d")
-        .groupBy("vec_id", "label", "c_label")
-        .agg(
-            F.sum(
-                (F.col("n") * F.col("qx") - F.col("s"))
-                * (F.col("n") * F.col("qx") - F.col("s"))
-            ).alias("num"),
-            F.max("n").alias("n"),
-        )
-        .select(
-            "vec_id",
-            "label",
-            "c_label",
-            (F.col("num") / (F.col("n") * F.col("n"))).alias("dist"),
-        )
-    )
-    per_point = scored.groupBy("vec_id", "label").agg(
+    per_point = _centroid_dists(_comps(emb)).groupBy("vec_id", "label").agg(
         F.min(F.when(F.col("c_label") == F.col("label"), F.col("dist"))).alias("a"),
         F.min(F.when(F.col("c_label") != F.col("label"), F.col("dist"))).alias("b"),
     )
@@ -1296,114 +1274,10 @@ def _recall_qmod(emb: DataFrame, qmod: int, max_queries: int) -> int:
 
 
 def _recall_queries(emb: DataFrame, qmod: int) -> DataFrame:
-    """The deterministic id-modulo probe sample shared by both eval arms."""
+    """The deterministic id-modulo probe sample of the recall curve."""
     return emb.filter(F.col("vec_id") % qmod == 0).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").cast("array<double>").alias("qvec"),
-    )
-
-
-def _exact_topk(emb: DataFrame, queries: DataFrame, k: int) -> DataFrame:
-    """Exact brute-force top-k per probe query — the recall ground truth.
-
-    The corpus x sample product is BY DESIGN (exact truth is the
-    measurand) with the sample capped, so this is the eval's one
-    corpus-linear pass; callers evaluating several probe widths should
-    compute it ONCE and share it (:func:`ann_recall_curve` persists the
-    <= |sample|*k-row result instead of re-scanning the corpus per
-    width)."""
-    from pyspark.sql import Window
-
-    from ..functions.vector import dot_product, l2_norm
-
-    corpus = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    ).withColumn("_vn", l2_norm(F.col("vec")))
-    qn = queries.withColumn("_qn", l2_norm(F.col("qvec")))
-    pairs = corpus.crossJoin(F.broadcast(qn)).filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    return (
-        pairs.select(
-            "qid",
-            "vec_id",
-            F.round(
-                dot_product(F.col("vec"), F.col("qvec"))
-                / (F.col("_vn") * F.col("_qn")),
-                4,
-            ).alias("_s"),
-        )
-        .withColumn(
-            "_r",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(
-                    F.desc("_s"), F.asc("vec_id")
-                )
-            ),
-        )
-        .filter(F.col("_r") <= k)
-    )
-
-
-def ann_recall(
-    emb: DataFrame,
-    index: IvfIndex,
-    k: int = TOP_K,
-    qmod: int = ANN_RECALL_QMOD,
-    n_probe: int = ANN_RECALL_NPROBE,
-    exact: DataFrame | None = None,
-) -> DataFrame:
-    """Recall@k of the IVF probe against exact brute force, per query —
-    the ANN quality dial every index deployment monitors: recall rises
-    with ``n_probe`` while probe cost stays ~n_probe/n_cells of a scan.
-    Measured curve on this corpus (sf0.01, 8 cells, k=10): mean recall
-    0.66 / 0.79 / 0.86 / 0.92 at n_probe 3/4/5/6 — the 10-label
-    structure spreads a query's top-10 across several cells, so the
-    dial genuinely matters here (monotonicity pinned in tests).
-
-    Both arms run as bounded eval probes (broadcast 1/qmod holdout,
-    corpus never shuffles — the q_knn_eval shape); the approx arm goes
-    through :meth:`IvfIndex.probe_batch` so the measured plan IS the
-    production probe plan. Rows-only by nature (cell assignment is
-    index-specific).
-    """
-    from pyspark.sql import Window
-
-    queries = _recall_queries(emb, qmod)
-    approx = index.probe_batch(queries, k=k + 1, n_probe=n_probe).filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    aset = approx.withColumn(
-        "_r",
-        F.row_number().over(
-            Window.partitionBy("qid").orderBy(
-                F.desc("cosine"), F.asc("vec_id")
-            )
-        ),
-    ).filter(F.col("_r") <= k)
-
-    if exact is None:
-        exact = _exact_topk(emb, queries, k)
-
-    hits = aset.select("qid", "vec_id").join(
-        exact.select("qid", "vec_id"), ["qid", "vec_id"]
-    )
-    return (
-        exact.groupBy("qid")
-        .agg(F.count(F.lit(1)).alias("k_exact"))
-        .join(
-            hits.groupBy("qid").agg(F.count(F.lit(1)).alias("n_hit")),
-            "qid",
-            "left",
-        )
-        .select(
-            "qid",
-            F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-            _q(F.coalesce("n_hit", F.lit(0)) / F.col("k_exact"), 10000).alias(
-                "recall"
-            ),
-        )
-        .orderBy("qid")
     )
 
 
@@ -1427,32 +1301,25 @@ def _recall_candidates(
     re-scanned the corpus per width with full 3-fold cosines; the
     round-9 judge re-measure put that plan at 452 s warm at sf10.
 
-    Round-10 second pass: the scoring itself is now the Arrow-batched
-    per-dimension numpy accumulation of ``panel_topk_exact`` (the
-    broadcast-product formulation still paid the ~5 µs/pair JVM
-    ``zip_with``+``aggregate`` fold — ~40 folds per corpus row was the
-    remaining 127 s at sf10). The accumulation order is the same
-    sequential left fold, the centroid ranking is the same dot values
-    compared the same way, and each batch emits its per-(query,
-    cell-rank) top-k with a one-rounding-quantum margin (a row only
-    dropped when its ROUNDED cosine provably cannot reach the group's
-    rounded k-th best), so the global rank window sees a provable
-    superset and the final table is row-identical to the join
-    formulation (pinned in tests/test_plans.py and
-    tests/test_extensions.py)."""
+    Round-10 second pass: the scoring itself is the Arrow-batched
+    panel fold of ``panel_topk_exact`` (:func:`_collect_panel`,
+    :func:`_batch_cosines`; the broadcast-product formulation still paid
+    the ~5 µs/pair JVM ``zip_with``+``aggregate`` fold — ~40 folds per
+    corpus row was the remaining 127 s at sf10). Cosines are the JVM's
+    bit for bit, the centroid ranking is the same dot values compared
+    the same way, and each batch emits its per-(query, cell-rank) top-k
+    with a one-rounding-quantum margin (a row only dropped when its
+    ROUNDED cosine provably cannot reach the group's rounded k-th best),
+    so the global rank window sees a provable superset and the final
+    table is row-identical to the join formulation (pinned in
+    tests/test_panel_scorer.py and tests/test_plans.py)."""
     import numpy as np
 
     from pyspark.sql import Window
     from pyspark.sql import types as T
 
-    prows = queries.select(
-        F.col("qid").cast("long").alias("q"),
-        F.col("qvec").cast("array<double>").alias("v"),
-    ).collect()
-    prows.sort(key=lambda r: r.q)
-    qids = np.asarray([r.q for r in prows], dtype=np.int64)
-    Q = np.asarray([list(r.v) for r in prows], dtype=np.float64)
-    nq = len(prows)
+    qids, Q, qn = _collect_panel(queries)
+    nq = len(qids)
     C = np.asarray(index.centroids, dtype=np.float64)
     n_cells = C.shape[0]
 
@@ -1472,16 +1339,10 @@ def _recall_candidates(
     if nq == 0:
         return queries.sparkSession.createDataFrame([], out_schema)
 
-    dim = Q.shape[1]
-    # Per-query L2 norm and centroid ranking, both as the sequential
-    # fold the JVM expressions used (bit-identical dots -> same order;
-    # ties prefer the higher cell id, as reverse(array_sort) did).
-    qn = np.zeros(nq)
-    qc = np.zeros((nq, n_cells))
-    for d in range(dim):
-        qn += Q[:, d] * Q[:, d]
-        qc += Q[:, d][:, None] * C[:, d][None, :]
-    qn = np.sqrt(qn)
+    # Per-query centroid ranking from the same fold the JVM probe used
+    # (bit-identical dots -> same order; ties prefer the higher cell id,
+    # as reverse(array_sort) did).
+    qc, _ = _fold(Q, C)
     rank_lut = np.empty((nq, n_cells), dtype=np.int64)
     for j in range(nq):
         order = np.lexsort((-np.arange(n_cells), -qc[j]))
@@ -1496,21 +1357,8 @@ def _recall_candidates(
             if n == 0:
                 continue
             ids = np.asarray(b.column(0), dtype=np.int64)
-            emb = b.column(1)
             cells = np.asarray(b.column(2), dtype=np.int64)
-            vals = np.asarray(emb.flatten(), dtype=np.float64)
-            if vals.size != n * dim:
-                raise ValueError(
-                    f"_recall_candidates: ragged embeddings (dim {dim})"
-                )
-            X = vals.reshape(n, dim)
-            acc = np.zeros((n, nq))
-            xn = np.zeros(n)
-            for d in range(dim):
-                xd = X[:, d]
-                acc += xd[:, None] * Q[:, d][None, :]
-                xn += xd * xd
-            sim = acc / (np.sqrt(xn)[:, None] * qn[None, :])
+            sim = _batch_cosines(b.column(1), Q, qn)
             oq, oi, os_, oc = [], [], [], []
             for j in range(nq):
                 s = sim[:, j].copy()
